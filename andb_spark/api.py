@@ -1338,6 +1338,7 @@ class AnalyticsEngine:
         name: str,
         df: DataFrame,
         base: list[str] | str | None = None,
+        changed: set[str] | None = None,
     ) -> int:
         """Phase 1 of a versioned write: land ``df`` in a fresh segment
         dir on disk and record the staged manifest. Nothing references
@@ -1347,7 +1348,19 @@ class AnalyticsEngine:
         ``base`` is the manifest prefix the new segment extends:
         None → [] (full rewrite), "current" → the live manifest
         (append), or an explicit entry list (copy-on-write DML keeps
-        the untouched files)."""
+        the untouched files).
+
+        ``changed`` names the columns whose values the statement may
+        have changed in rows that already existed (None = every
+        column — new rows, or a rewrite of unknown shape): DELETE and
+        compaction pass an empty set, UPDATE its SET targets. The
+        PK/UNIQUE/CHECK probes skip every constraint on unchanged
+        columns. That is sound because a committed version always
+        satisfies its constraints: they are declared only at CREATE
+        TABLE (ALTER ... ADD COLUMN with a constraint is refused), and
+        every later write is probed here. A future ALTER ... ADD
+        CONSTRAINT must therefore validate the existing rows before
+        it commits."""
         meta = self._meta(name)
         new_version = "v-" + uuid.uuid4().hex[:12]
         new_dir = os.path.join(self.warehouse, name, new_version)
@@ -1406,26 +1419,20 @@ class AnalyticsEngine:
         self._check_staged_notnull(name, new_dir)
         if base == "current":
             base = self._segments_of(meta)
-        # ONE schema-pinned reader over the staged files, shared by
-        # every probe below: we just WROTE the segment, so its schema
-        # is df's — re-inferring it per probe cost a listing +
-        # footer-read driver job each (r15 job trace: 2-3 extra
-        # `parquet at` jobs per statement).
-        staged_df = self.spark.read.schema(df.schema).parquet(new_dir)
-        self._check_staged_pk(name, new_dir, base, staged_df)
-        self._check_staged_unique(name, new_dir, base, staged_df)
-        self._check_staged_checks(name, new_dir, staged_df)
         # Harvest the segment's row count and per-column min/max ZONE
         # MAPS straight from the parquet FOOTERS the write just
         # produced — a driver-side metadata read (O(files), zero Spark
         # jobs, zero data I/O). The zone maps live in the manifest and
         # let later DML planning skip whole segments without opening
         # them (the Iceberg manifest-stats economics) — see
-        # _zone_scan_entries. Harvest happens BEFORE marking the stage:
-        # if it raises, no stray '_staged' key survives in the
-        # in-memory catalog to be persisted by a later unrelated
-        # _save_catalog.
+        # _zone_scan_entries — and bound the constraint probes' base
+        # scan below. Harvest happens BEFORE marking the stage: if it
+        # raises, no stray '_staged' key survives in the in-memory
+        # catalog to be persisted by a later unrelated _save_catalog.
         count, stats = _footer_stats(new_dir)
+        self._check_staged_constraints(
+            name, new_dir, base, df.schema, count, stats, changed
+        )
         stats["__rows"] = count  # zero-row segments prune unconditionally
         meta["_staged"] = {
             "version": new_version,
@@ -6154,231 +6161,166 @@ class AnalyticsEngine:
                 f"column {culprit} of {name} violates NOT NULL"
             )
 
-    def _check_staged_pk(
+    def _check_staged_constraints(
         self,
         name: str,
         new_dir: str,
-        base: list[str] | str | None,
-        staged_df: DataFrame | None = None,
+        base: list[str] | None,
+        schema: T.StructType,
+        rows: int,
+        stats: dict[str, list],
+        changed: set[str] | None,
     ) -> None:
-        """PRIMARY KEY enforcement at the versioned-write choke point
-        (every INSERT/UPDATE/MERGE/COPY lands through _stage_version):
-        (1) the staged segment must hold no duplicate key, (2) no
-        staged key may already exist in the manifest prefix the
-        segment EXTENDS — for appends that is the live table, for
-        copy-on-write DML the untouched files (the rewritten rows left
-        that set, so an UPDATE that moves a key onto an existing row
-        is caught, while rewriting a row in place is not a
-        collision). Both checks are bounded early-exit probes
-        (groupBy(pk) + limit 1, left-semi join + limit 1) over the
-        staged files — never a re-execution of the source plan — the
-        batch-oriented analog of DuckDB's per-row ART-index probe
-        (Constraint Error parity). NULL keys are the NOT NULL check's
-        job (PRIMARY KEY implies NOT NULL at parse). A violation
+        """PRIMARY KEY / UNIQUE / CHECK enforcement at the versioned-
+        write choke point, over the STAGED files only (never a
+        re-execution of the source plan) — the batch-oriented analog
+        of DuckDB's per-row index probe (Constraint Error parity).
+
+        Only what the statement could have broken is probed: the
+        table's committed version already satisfies every constraint
+        (see ``_stage_version``), so a PK/UNIQUE set is probed only
+        when it includes a ``changed`` column and a CHECK only when
+        its text names one (case-insensitive identifier match —
+        conservative). ``changed=None`` means every column.
+
+        What remains costs at most two Spark actions:
+          1. ONE aggregate over the staged rows: per key set,
+             ``count(DISTINCT keys)`` against the count of rows whose
+             keys are all non-NULL (a NULL-keyed UNIQUE row is exempt —
+             two ``(1, NULL)`` rows coexist; PK columns are NOT NULL,
+             checked from the footers before this), plus every CHECK
+             folded into one OR (NULL passes, only FALSE violates). A
+             staged segment of at most one row skips the duplicate
+             part.
+          2. ONE union of per-key-set left-semi joins against the
+             manifest prefix the segment extends (appends: the live
+             table; copy-on-write DML: the untouched files, so moving
+             a key onto an existing row is caught while rewriting a
+             row in place is not), ``limit(1)``. Base files are first
+             pruned by intersecting the staged footer min/max (the
+             zone maps the write already produced) with the per-
+             segment zones, so a key-disjoint append reads zero base
+             files.
+        Violations report in declaration order (PK in-batch, PK base,
+        then each UNIQUE set the same way, CHECK last). A violation
         removes the staged dir and raises before anything references
-        it, the same crash contract as _check_staged_notnull."""
+        it, the same crash contract as ``_check_staged_notnull``."""
         meta = self._meta(name)
-        pk = [
-            c["name"] for c in meta.get("columns", []) if c.get("pk")
+        if not rows:
+            return
+        low = None if changed is None else {c.lower() for c in changed}
+
+        def touched(cols) -> bool:
+            return low is None or any(c.lower() in low for c in cols)
+
+        pk = [c["name"] for c in meta.get("columns", []) if c.get("pk")]
+        keysets = [(pk, True)] if pk and touched(pk) else []
+        keysets += [
+            (list(uq), False)
+            for uq in meta.get("uniques") or []
+            if touched(uq)
         ]
-        if not pk:
-            return
-        staged = (
-            staged_df
-            if staged_df is not None
-            else self.spark.read.parquet(new_dir)
-        ).select(*pk)
-        violation = None
-        # ONE aggregation pass yields both the duplicate probe (max
-        # per-key count) and the zone-prefilter key bounds (min/max
-        # over group keys == min/max over rows) — these were two
-        # separate jobs over the same staged files (guide §1.2: one
-        # pass where one pass suffices).
-        probe = (
-            staged.groupBy(*pk)
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .agg(
-                F.max("_c").alias("_mx"),
-                *[
-                    a
-                    for i, c in enumerate(pk)
-                    for a in (
-                        F.min(c).alias(f"_lo{i}"),
-                        F.max(c).alias(f"_hi{i}"),
-                    )
-                ],
-            )
-            .collect()[0]
-        )
-        if (probe["_mx"] or 0) > 1:
-            violation = (
-                f"PRIMARY KEY constraint violated on {name}:"
-                f" duplicate key ({', '.join(pk)}) in the written rows"
-            )
-        elif base and probe["_mx"] is not None:
-            # zone-map prefilter (r11 verdict #3): intersect the
-            # staged keys' min/max with the manifest's per-segment
-            # zones — a key-disjoint append (sorted/Z-ordered load
-            # pattern) proves absence from metadata and reads ZERO
-            # base files; otherwise only the overlapping ones
-            bounds = (
-                None
-                if all(
-                    probe[f"_lo{i}"] is None for i in range(len(pk))
-                )
-                else {
-                    c: (
-                        self._zone_bound_value(probe[f"_lo{i}"]),
-                        self._zone_bound_value(probe[f"_hi{i}"]),
-                    )
-                    for i, c in enumerate(pk)
-                }
-            )
-            entries = self._zone_overlap_entries(
-                name, base, bounds
-            ) if bounds else []
-            self.session_vars["andb.last_pk_probe_files"] = len(
-                entries
-            )
-            if entries:
-                paths = [
-                    os.path.join(self.warehouse, name, seg)
-                    for seg in entries
-                ]
-                existing = self.spark.read.parquet(*paths).select(*pk)
-                if staged.join(
-                    existing, pk, "left_semi"
-                ).limit(1).collect():
-                    violation = (
-                        f"duplicate key violates primary key"
-                        f" constraint on {name} ({', '.join(pk)})"
-                    )
-        if violation:
-            meta.pop("_staged", None)
-            shutil.rmtree(new_dir, ignore_errors=True)
-            raise EngineError(violation)
 
-    def _check_staged_unique(
-        self,
-        name: str,
-        new_dir: str,
-        base: list[str] | str | None,
-        staged_df: DataFrame | None = None,
-    ) -> None:
-        """UNIQUE constraint enforcement at the same versioned-write
-        choke point as ``_check_staged_pk``, with the one semantic
-        difference SQL gives UNIQUE over PRIMARY KEY: a row whose key
-        contains ANY NULL component is exempt (DuckDB-probed — two
-        ``(1, NULL)`` rows coexist under ``UNIQUE (a, b)``). Bounded
-        early-exit probes over the staged files only, one pair per
-        declared unique set."""
-        meta = self._meta(name)
-        uniques = meta.get("uniques") or []
-        if not uniques:
-            return
-        staged_all = (
-            staged_df
-            if staged_df is not None
-            else self.spark.read.parquet(new_dir)
-        )
-        violation = None
-        for uq in uniques:
-            if violation:
-                break
-            keyed = staged_all.select(*uq)
-            for k in uq:
-                keyed = keyed.filter(F.col(k).isNotNull())
-            # one fused agg pass per unique set: dup probe + zone
-            # bounds (same fold as _check_staged_pk)
-            probe = (
-                keyed.groupBy(*uq)
-                .agg(F.count(F.lit(1)).alias("_c"))
-                .agg(
-                    F.max("_c").alias("_mx"),
-                    *[
-                        a
-                        for i, c in enumerate(uq)
-                        for a in (
-                            F.min(c).alias(f"_lo{i}"),
-                            F.max(c).alias(f"_hi{i}"),
-                        )
-                    ],
-                )
-                .collect()[0]
+        def names_changed(check: str) -> bool:
+            # over-matching only costs a probe: words include function
+            # names, and an unusual (non-word) column name falls back
+            # to a substring test
+            text = _blank_literals(check).lower()
+            words = set(re.findall(r"\w+", text))
+            return low is None or any(
+                c in words if re.fullmatch(r"\w+", c)
+                else c.strip('"`') in text
+                for c in low
             )
-            if (probe["_mx"] or 0) > 1:
-                violation = (
-                    f"duplicate key violates unique constraint on"
-                    f" {name} ({', '.join(uq)}) in the written rows"
-                )
-            elif base and probe["_mx"] is not None:
-                # the same zone-map prefilter as the PK probe; the
-                # NULL-exempt filter already ran on ``keyed``
-                bounds = (
-                    None
-                    if all(
-                        probe[f"_lo{i}"] is None
-                        for i in range(len(uq))
-                    )
-                    else {
-                        c: (
-                            self._zone_bound_value(probe[f"_lo{i}"]),
-                            self._zone_bound_value(probe[f"_hi{i}"]),
-                        )
-                        for i, c in enumerate(uq)
-                    }
-                )
-                entries = self._zone_overlap_entries(
-                    name, base, bounds
-                ) if bounds else []
-                if not entries:
-                    continue
-                paths = [
-                    os.path.join(self.warehouse, name, seg)
-                    for seg in entries
-                ]
-                existing = self.spark.read.parquet(*paths).select(*uq)
-                for k in uq:
-                    existing = existing.filter(F.col(k).isNotNull())
-                if keyed.join(
-                    existing, uq, "left_semi"
-                ).limit(1).collect():
-                    violation = (
-                        f"duplicate key violates unique constraint"
-                        f" on {name} ({', '.join(uq)})"
-                    )
-        if violation:
-            meta.pop("_staged", None)
-            shutil.rmtree(new_dir, ignore_errors=True)
-            raise EngineError(violation)
 
-    def _check_staged_checks(
-        self, name: str, new_dir: str, staged_df: DataFrame | None = None
-    ) -> None:
-        """CHECK constraint enforcement at the versioned-write choke
-        point: only rows the write actually produced are probed (a
-        CoW UPDATE's untouched files were valid before and stay
-        untouched), in ONE bounded early-exit scan — all declared
-        checks fold into a single OR so a 100-TB append pays one
-        staged-files pass regardless of how many checks exist. SQL
-        semantics: a check evaluating to NULL passes; only FALSE
-        violates (DuckDB-probed)."""
-        meta = self._meta(name)
-        checks = meta.get("checks") or []
-        if not checks:
+        checks = [c for c in meta.get("checks") or [] if names_changed(c)]
+        if not keysets and not checks:
             return
-        bad = " or ".join(
-            f"not coalesce(({c}), true)" for c in checks
+
+        def violation(i: int, in_batch: bool) -> str:
+            ks, is_pk = keysets[i]
+            cols = ", ".join(ks)
+            if is_pk and in_batch:
+                return (
+                    f"PRIMARY KEY constraint violated on {name}:"
+                    f" duplicate key ({cols}) in the written rows"
+                )
+            kind = "primary key" if is_pk else "unique"
+            return (
+                f"duplicate key violates {kind} constraint on {name}"
+                f" ({cols})" + (" in the written rows" if in_batch else "")
+            )
+
+        def keyed(ks: list[str]):
+            cond = F.lit(True)
+            for k in ks:
+                cond = cond & F.col(k).isNotNull()
+            return cond
+
+        # one schema-pinned reader over the staged files: the segment
+        # was just written from ``schema``, so re-inferring it would
+        # cost a listing + footer-read job
+        staged = self.spark.read.schema(schema).parquet(new_dir)
+        aggs = []
+        if rows > 1:
+            for i, (ks, _) in enumerate(keysets):
+                aggs += [
+                    F.count_distinct(*[F.col(k) for k in ks]).alias(f"_d{i}"),
+                    F.count(F.when(keyed(ks), 1)).alias(f"_n{i}"),
+                ]
+        if checks:
+            bad = " or ".join(f"not coalesce(({c}), true)" for c in checks)
+            aggs.append(F.count(F.when(F.expr(bad), 1)).alias("_bad"))
+        got = staged.agg(*aggs).collect()[0] if aggs else None
+        first = next(
+            (
+                i for i in range(len(keysets))
+                if rows > 1 and got[f"_d{i}"] < got[f"_n{i}"]
+            ),
+            None,
         )
-        staged = (
-            staged_df
-            if staged_df is not None
-            else self.spark.read.parquet(new_dir)
+        err = violation(first, True) if first is not None else (
+            f"CHECK constraint failed: {name}"
+            if checks and got["_bad"] else None
         )
-        if staged.filter(F.expr(bad)).limit(1).collect():
+        # base collisions of key sets declared BEFORE the first staged
+        # violation take precedence over it
+        probes = []
+        for i, (ks, is_pk) in enumerate(keysets[:first] if base else []):
+            # a key column without footer bounds simply prunes nothing
+            bounds = {k: tuple(stats[k]) for k in ks if k in stats}
+            entries = self._zone_overlap_entries(name, base, bounds)
+            if is_pk:
+                self.session_vars["andb.last_pk_probe_files"] = len(
+                    entries
+                )
+            if not entries:
+                continue
+            existing = self._read_files(
+                name,
+                [os.path.join(self.warehouse, name, e) for e in entries],
+            )
+            probes.append(
+                staged.filter(keyed(ks)).select(*ks)
+                .join(
+                    existing.filter(keyed(ks)).select(*ks),
+                    ks, "left_semi",
+                )
+                .select(F.lit(i).alias("_i"))
+            )
+        if probes:
+            hit = probes[0]
+            for p in probes[1:]:
+                hit = hit.union(p)
+            # union partitions keep branch order, so the first row
+            # limit(1) returns belongs to the earliest colliding set
+            row = hit.limit(1).collect()
+            if row:
+                err = violation(row[0]["_i"], False)
+        if err:
             meta.pop("_staged", None)
             shutil.rmtree(new_dir, ignore_errors=True)
-            raise EngineError(f"CHECK constraint failed: {name}")
+            raise EngineError(err)
 
     # ---------------------------------------------------------- execute --
     _SYSVIEW_RE = re.compile(
@@ -7219,7 +7161,8 @@ class AnalyticsEngine:
             )
         else:
             packed = self._read_files(name, affected).coalesce(target)
-        self._stage_version(name, packed, base=keep)
+        # rows move between files unchanged: no constraint to re-probe
+        self._stage_version(name, packed, base=keep, changed=set())
         self._commit_staged(name)
         return (len(affected), target)
 
@@ -13231,9 +13174,9 @@ class AnalyticsEngine:
             )
         src_df = self.spark.sql(src_sql).toDF(*collist)
         # Statement-scoped persist (released by execute()'s cache
-        # scope): the staged batch feeds the dup probe plus FOUR
-        # references inside the MERGE lowering (match split, ANSI
-        # multi-match guard, update left-join, insert anti-join) —
+        # scope): the staged batch feeds the dup probe plus THREE
+        # references inside the MERGE lowering (match split, update
+        # left-join, insert anti-join) —
         # unpinned, each re-ran the full source SELECT (guide §1.2:
         # don't recompute what you already have; the batch is
         # change-sized by design, so the pin is bounded at any scale).
@@ -13308,7 +13251,8 @@ class AnalyticsEngine:
                     f" when matched then update set {set_sql}" + clauses
                 )
             return self._merge(
-                f"merge into {target} using {view} on {cond}{clauses}"
+                f"merge into {target} using {view} on {cond}{clauses}",
+                source_unique_per_key=True,
             )
         finally:
             self.spark.catalog.dropTempView(view)
@@ -13977,7 +13921,20 @@ class AnalyticsEngine:
         five, so ANSI's cardinality concern does not apply and the
         multiple-match guard is skipped — matching Postgres and
         DuckDB, which both accept duplicate-match join deletes. A
-        user-written delete-only MERGE keeps the strict ANSI guard."""
+        user-written delete-only MERGE keeps the strict ANSI guard.
+
+        The write stages with ``changed=None``: a MERGE can insert new
+        rows and rewrite any column, so every PK/UNIQUE/CHECK is
+        probed. Only the staged rows are probed — sound because the
+        committed version already satisfies the table's constraints
+        (they are declared only at CREATE TABLE; a future ALTER ...
+        ADD CONSTRAINT must validate existing rows first). The
+        inserted-row count of ``effect_rows`` comes from the footers:
+        staged rows − affected-file rows (+ matched deletes), one
+        evaluation of the source for both the write and the count.
+        It is exact whenever no target row matches two source rows —
+        what the ANSI guard (or the ON CONFLICT lowering's own
+        duplicate-key probe) establishes before staging."""
         m = self._MERGE_RE.match(stmt)
         if not m:
             raise EngineError(f"cannot parse MERGE statement: {stmt}")
@@ -14046,6 +14003,7 @@ class AnalyticsEngine:
         # touches no existing file at all.
         n_matched = 0
         keep = self._segments_of(self._meta(target))
+        affected: list[str] = []
         t_affected = None
         if update_set or matched_delete:
             n_matched, keep, affected = self._split_by_matches(
@@ -14136,18 +14094,9 @@ class AnalyticsEngine:
                         ]
                     )
                 )
-        n_inserted = 0
-        anti = None
         if insert_vals is not None:
-            anti = s.join(t, jcond, "left_anti")  # vs the FULL target
-            # persist before counting: the count AND the staged write
-            # then consume ONE evaluation — without it a
-            # nondeterministic source view could insert rows the count
-            # never saw (and every insert-bearing MERGE paid a second
-            # scan+join purely for effect_rows)
-            anti = anti.persist()
-            n_inserted = anti.count()
-            ins = anti.select(
+            # the anti join runs against the FULL target
+            ins = s.join(t, jcond, "left_anti").select(
                 *[F.expr(v).alias(c) for c, v in zip(insert_cols, insert_vals)]
             )
             # unlisted columns take their declared DEFAULT (NULL
@@ -14183,13 +14132,22 @@ class AnalyticsEngine:
         for p in parts[1:]:
             out = out.unionByName(p)
         out = self._enforce_constraints(target, out)
-        try:
-            self._stage_version(target, out, base=keep)
-        finally:
-            if anti is not None:
-                anti.unpersist()
+        # The insert count comes from the footers, not from a second
+        # evaluation of the anti join: the staged segment holds each
+        # affected-file row once (updated or kept) minus the matched
+        # deletes, plus the inserts — so the count always agrees with
+        # what was written, even for a nondeterministic source.
+        import pyarrow.parquet as pq
+
+        affected_rows = sum(pq.read_metadata(f).num_rows for f in affected)
+        staged = self._stage_version(target, out, base=keep)
         self._commit_staged(target)
         self._maybe_auto_refresh(target)  # upsert mutated the base
+        n_inserted = 0
+        if insert_vals is not None:
+            n_inserted = staged - affected_rows + (
+                n_matched if matched_delete else 0
+            )
         return Result(effect_rows=n_matched + n_inserted)
 
     def _copy(self, stmt: str) -> Result:
@@ -14358,41 +14316,6 @@ class AnalyticsEngine:
                 continue
             keep.append(e)
         return keep
-
-    @staticmethod
-    def _zone_bound_value(v):
-        """A collected staged min/max as a zone-comparable value —
-        the stats store dates/timestamps as ISO strings and numerics
-        as plain numbers."""
-        if isinstance(v, (datetime.date, datetime.datetime)):
-            return v.isoformat()
-        from decimal import Decimal
-
-        if isinstance(v, Decimal):
-            return float(v)
-        return v
-
-    def _staged_key_bounds(
-        self, staged: DataFrame, cols: list[str]
-    ) -> dict[str, tuple] | None:
-        """min/max per key column of the staged segment — ONE bounded
-        agg job (the staged side is the small side by construction).
-        Returns None when the staged segment holds no keyed rows (no
-        collision possible)."""
-        aggs = []
-        for i, c in enumerate(cols):
-            aggs.append(F.min(c).alias(f"_lo{i}"))
-            aggs.append(F.max(c).alias(f"_hi{i}"))
-        row = staged.agg(*aggs).collect()[0]
-        if all(row[f"_lo{i}"] is None for i in range(len(cols))):
-            return None
-        return {
-            c: (
-                self._zone_bound_value(row[f"_lo{i}"]),
-                self._zone_bound_value(row[f"_hi{i}"]),
-            )
-            for i, c in enumerate(cols)
-        }
 
     def _zone_scan_entries(
         self, name: str, cond_text: str | None
@@ -14654,7 +14577,8 @@ class AnalyticsEngine:
                     )
                 return Result(effect_rows=0)  # no write at all
             kept_rows = self._read_files(name, affected).filter(~condition)
-            self._stage_version(name, kept_rows, base=keep)
+            # a DELETE only drops rows: it cannot break a constraint
+            self._stage_version(name, kept_rows, base=keep, changed=set())
             self._commit_staged(name)
             self._maybe_auto_refresh(name)  # CoW broke lineage → full
             if _returning is not None:
@@ -14832,7 +14756,7 @@ class AnalyticsEngine:
             ]
         )
         df = self._enforce_constraints(name, df)
-        n = self._stage_version(name, df, base=keep)
+        n = self._stage_version(name, df, base=keep, changed=set(assigned))
         self._commit_staged(name)
         self._maybe_auto_refresh(name)  # CoW broke lineage → full path
         eff = n_hit if n_hit is not None else n

@@ -911,8 +911,8 @@ def u_insert_or_replace(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRIMARY KEY + INSERT OR REPLACE / OR IGNORE (DuckDB's
     implicit-key upsert spellings; api.py::_insert_or_action lowers
     them onto ON CONFLICT with the table's key, api.py::
-    _check_staged_pk enforces the key at the versioned-write choke
-    point): CTAS-like keyed build via explicit PK DDL, OR REPLACE an
+    _check_staged_constraints enforces the key at the versioned-write
+    choke point): CTAS-like keyed build via explicit PK DDL, OR REPLACE an
     overlapping doubled-price slice (conflicts update, new keys
     insert), then OR IGNORE a slice that half-overlaps (conflicts
     skip). The oracle restates both steps declaratively; the
@@ -944,8 +944,8 @@ def u_insert_or_replace(spark: SparkSession, sf_dir: str) -> DataFrame:
 def u_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DEFAULT / CHECK / PRIMARY KEY constraint lifecycle
     (api.py::_parse_column_defs constraint-tail parse;
-    _check_staged_checks / _check_staged_pk enforcement at the
-    versioned-write choke point; _column_defaults applied wherever a
+    _check_staged_constraints enforcement at the versioned-write
+    choke point; _column_defaults applied wherever a
     statement omits a column; ALTER ADD COLUMN ... DEFAULT records a
     metadata-only BACKFILL — zero data I/O at any table size, Iceberg
     v3 initial-default economics — substituted at read): keyed build

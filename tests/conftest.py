@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -28,3 +29,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+def statement_jobs(spark, fn) -> int:
+    """Spark jobs submitted while ``fn()`` runs: everything submitted
+    under a fresh job group, AQE query-stage jobs included (they
+    inherit the group). Waits for the listener bus to drain so the
+    status tracker has seen every job before counting."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

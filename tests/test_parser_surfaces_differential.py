@@ -2771,8 +2771,8 @@ def test_create_macro_matches_duckdb(spark, tmp_path):
 
 def test_primary_key_matches_duckdb(spark, tmp_path):
     """PRIMARY KEY constraints (api.py::_parse_column_defs pk parse +
-    _check_staged_pk — enforcement at the versioned-write choke
-    point, as bounded early-exit probes over the staged files) and
+    _check_staged_constraints — enforcement at the versioned-write
+    choke point, as fused probes over the staged files) and
     the INSERT OR REPLACE / OR IGNORE upsert spellings
     (api.py::_insert_or_action, lowered onto ON CONFLICT with the
     table's key): the IDENTICAL statement sequence through both
@@ -2861,9 +2861,9 @@ def test_primary_key_matches_duckdb(spark, tmp_path):
 def test_default_check_unique_matches_duckdb(spark, tmp_path):
     """DEFAULT / CHECK / UNIQUE constraints (api.py::_parse_column_defs
     constraint-tail parse; enforcement at the versioned-write choke
-    point — _check_staged_unique with SQL's NULL-key exemption,
-    _check_staged_checks folding every check into ONE bounded staged
-    scan; defaults applied wherever a statement omits the column:
+    point — _check_staged_constraints, with SQL's NULL-key exemption
+    for UNIQUE and every check folded into the ONE staged aggregate;
+    defaults applied wherever a statement omits the column:
     column-list INSERT, BY NAME, the DEFAULT keyword in VALUES / SET,
     DEFAULT VALUES, and ALTER ADD COLUMN ... DEFAULT backfill): the
     IDENTICAL statement sequence through both engines; every
