@@ -559,12 +559,12 @@ class AnalyticsEngine:
         # vector access-path rewrite in _select (plans/ann.py): approximate
         # answers are strictly opt-in.
         self.session_vars: dict[str, str] = {"andb.ann_mode": "exact"}
-        # True only while plain EXPLAIN rewrites its statement: every
-        # _rewrite_quantified call at ANY composition depth (CTE body,
-        # DISTINCT ON / QUALIFY inner statement, ASOF subquery source)
-        # must then take the lazy stats-view path — EXPLAIN must never
-        # execute a job (r8 ADVICE #2; the old plan_only parameter only
-        # reached the depth-0 call).
+        # True only while a statement is planned, not run (plain
+        # EXPLAIN, DESCRIBE, plan-only view binds): every pass at ANY
+        # composition depth (CTE body, DISTINCT ON / QUALIFY inner
+        # statement, ASOF subquery source) must then stay job-free —
+        # e.g. _rewrite_quantified takes its lazy stats-view path
+        # (r8 ADVICE #2).
         self._planning = False
         self.catalog.setdefault("stats", {})
         # Logical (non-materialized) views: name -> {"sql": defining
@@ -895,9 +895,7 @@ class AnalyticsEngine:
             self._bound_views.discard(name)
         try:
             df, helpers = self._plan_engine_select(
-                self._escape_backslash_literals(
-                    self.catalog["views"][name]["sql"]
-                )
+                self._normalize_stored_sql(self.catalog["views"][name]["sql"])
             )
         except EngineError:
             raise
@@ -4148,8 +4146,9 @@ class AnalyticsEngine:
         """Dialect normalization applied to every statement class:
         the list/struct expression rewrite (``_core``) followed by
         DuckDB's default-NULLS-LAST ordering injection — one entry
-        point so the statement pipeline and every stored-body replan
-        path normalize identically."""
+        point so execute() and every stored-body replan path
+        normalize identically. Not idempotent: apply it once per
+        text."""
         out = self._inject_order_nulls_last(
             self._rewrite_duckdb_collections_core(stmt)
         )
@@ -6387,8 +6386,9 @@ class AnalyticsEngine:
                 stmt = self._expand_macros(stmt)
             # DuckDB list/struct expression dialect, normalized once
             # for EVERY statement class (INSERT VALUES, UPDATE SET,
-            # SELECT, CTAS bodies...) — idempotent, so the replan
-            # paths may apply it again to stored bodies.
+            # SELECT, CTAS bodies...) — exactly once: a second run
+            # is not a no-op. Stored bodies normalize at replan
+            # (_normalize_stored_sql).
             if not keep_pristine:
                 stmt = self._rewrite_duckdb_collections(stmt)
             # Logical views resolve LAZILY at reference time: any
@@ -7229,13 +7229,6 @@ class AnalyticsEngine:
             self._save_catalog()
 
     # ------------------------------------------------------- statements --
-    _LIMIT_OFF_N = re.compile(r"\blimit\s+(\d+)\s*,\s*(\d+)\s*$", re.I)
-
-    # Time travel: `FROM <table> VERSION AS OF <n>` reads the retained
-    # version dir — immutable version dirs make historical reads free
-    # (Delta/Iceberg snapshot semantics over plain parquet).
-    _VERSION_RE = re.compile(r"\b(\w+)\s+version\s+as\s+of\s+(\d+)", re.I)
-
     # Vector-search access-path rewrite target:
     #   SELECT <id>, cosine_distance(<vec>, array(...)) AS <d>
     #   FROM <table> ORDER BY <d> [ASC] LIMIT <k>
@@ -7635,9 +7628,7 @@ class AnalyticsEngine:
             # ON over it; injecting helper columns next to the raw
             # `* replace` select list would bind them to the SOURCE
             # columns instead (sibling aliases are not visible).
-            inner_sql, v0 = self._rewrite_select_replace(
-                f"select {sel} {src}"
-            )
+            inner_sql, v0 = self._rewrite_surfaces(f"select {sel} {src}")
             pre_views += v0
             rview = f"_donrep_{uuid.uuid4().hex[:8]}"
             try:
@@ -7669,18 +7660,13 @@ class AnalyticsEngine:
                 f" (partition by {', '.join(keys)}"
                 f" order by {', '.join(tail)}) as _don_rn, {helpers} {src}"
             )
-        # the source may itself be an engine surface (ASOF JOIN /
-        # keyed-BETWEEN range join) that Spark can't parse — run those
-        # rewrites on the inner statement BEFORE planning it (r7
-        # ADVICE #2: the old code spark.sql'd first and died with a
-        # raw ParseException on a composition that used to work)
+        # the source may itself be an engine surface (ASOF, range or
+        # POSITIONAL join) that Spark can't parse, or would parse as a
+        # different query — run the surface pipeline on the inner
+        # statement BEFORE planning it (r7 ADVICE #2)
         views: list[str] = pre_views
         try:
-            inner, v = self._rewrite_asof(inner)
-            views += v
-            inner, v = self._rewrite_range_join(inner)
-            views += v
-            inner, v = self._rewrite_quantified(inner)
+            inner, v = self._rewrite_surfaces(inner)
             views += v
             if qualify_pred is not None:
                 from pyspark.sql import Window as _W
@@ -7757,11 +7743,12 @@ class AnalyticsEngine:
         inner = f"{head[:from_at].rstrip()}, ({pred}) as _qual {head[from_at:]}"
         # a quantified comparison in the statement's WHERE (or in the
         # QUALIFY predicate itself) is an engine surface Spark can't
-        # parse — rewrite it on the inner statement BEFORE planning
-        # (same composition class as DISTINCT ON over ASOF, r7 #2)
+        # parse — run the surface pipeline on the inner statement
+        # BEFORE planning (same composition class as DISTINCT ON over
+        # ASOF, r7 #2)
         views: list[str] = []
         try:
-            inner, views = self._rewrite_quantified(inner)
+            inner, views = self._rewrite_surfaces(inner)
             df = self.spark.sql(inner).filter(F.col("_qual")).drop("_qual")
             view = f"_qualify_{uuid.uuid4().hex[:8]}"
             df.createOrReplaceTempView(view)
@@ -7786,9 +7773,7 @@ class AnalyticsEngine:
         re.I,
     )
 
-    def _rewrite_quantified(
-        self, stmt: str, plan_only: bool = False
-    ) -> tuple[str, list[str]]:
+    def _rewrite_quantified(self, stmt: str) -> tuple[str, list[str]]:
         """SQL quantified comparisons — ``x <op> ANY (subquery)`` /
         ``ALL`` / ``SOME`` (ANSI; native in DuckDB/Postgres, absent
         from Spark SQL). Rewritten onto Spark-native constructs with
@@ -7809,10 +7794,10 @@ class AnalyticsEngine:
           and broadcasts the literal, so the rewrite adds one tiny
           aggregation per quantifier, never a per-row join.
 
-        ``plan_only=True`` (the plain-EXPLAIN path) keeps the stats as
-        scalar subqueries over the LAZY set view instead of eagerly
-        aggregating — EXPLAIN must never execute a job; the executed
-        paths keep the one-scan eager aggregation.
+        Under ``self._planning`` (plain EXPLAIN, DESCRIBE) the stats
+        stay scalar subqueries over the LAZY set view instead of an
+        eager aggregation — planning must never execute a job; the
+        executed paths keep the one-scan eager aggregation.
 
         The LHS must stand alone: a match whose lhs token is really
         the tail of a larger expression (``x + 1 > any (...)`` — the
@@ -7824,7 +7809,7 @@ class AnalyticsEngine:
         (test_parser_surfaces_differential.py) pins every (op,
         quantifier) against DuckDB's native implementation, including
         empty / all-NULL / some-NULL sets and NULL probes."""
-        plan_only = plan_only or self._planning
+        plan_only = self._planning
         views: list[str] = []
         NULLB = "cast(null as boolean)"
         _blank = _blank_literals
@@ -8711,11 +8696,11 @@ class AnalyticsEngine:
         left-associative semantics. The fold is lazy — one temp view
         over the union plan, no materialization here.
 
-        Branches are full engine statements: each runs the nested
-        surface rewrites (DISTINCT ON / ASOF / range / QUALIFY /
-        quantified) before planning, so engine-only SQL composes on
-        either side. A branch after the first separator that itself
-        contains a top-level plain UNION/INTERSECT/EXCEPT is refused
+        Branches are full engine statements: each runs the surface
+        pipeline (``_rewrite_surfaces``) before planning, so
+        engine-only SQL composes on either side. A branch after the
+        first separator that itself contains a top-level plain
+        UNION/INTERSECT/EXCEPT is refused
         by name: DuckDB binds those left-associatively across the BY
         NAME boundary, which a branch-local Spark plan would silently
         mis-associate — parenthesize to disambiguate."""
@@ -8793,20 +8778,10 @@ class AnalyticsEngine:
                 # a fully parenthesized operand: strip the outer parens
                 if p.startswith("(") and self._match_paren(p, 0) == len(p) - 1:
                     p = p[1:-1].strip()
-                for rw in (
-                    # a parenthesized BY NAME sub-union re-enters this
-                    # rewrite at depth 0 after the paren strip above
-                    self._rewrite_union_by_name,
-                    self._rewrite_distinct_on,
-                    self._rewrite_asof,
-                    self._rewrite_range_join,
-                    self._rewrite_columns_projection,
-                    self._rewrite_select_replace,
-                    self._rewrite_qualify,
-                    self._rewrite_quantified,
-                ):
-                    p, v = rw(p)
-                    views += v
+                # a parenthesized BY NAME sub-union re-enters this
+                # rewrite at depth 0 after the paren strip above
+                p, v = self._rewrite_surfaces(p)
+                views += v
                 dfs.append(self.spark.sql(p))
             acc = dfs[0]
             for df, (_s, _e, is_all) in zip(dfs[1:], seps):
@@ -9811,22 +9786,14 @@ class AnalyticsEngine:
         no execution at any scale. Any OTHER derived table in the
         statement is left for Spark to plan natively (it could be
         correlated — e.g. LATERAL — where a standalone view would not
-        resolve). Subquery bodies pass through the full engine
-        rewrite pipeline, so nested ASOF / QUALIFY / DISTINCT ON
-        inside the source compose."""
+        resolve). Subquery bodies run the whole surface pipeline
+        (``_rewrite_surfaces``), so nested ASOF / QUALIFY / DISTINCT
+        ON inside the source compose."""
         _blank = _blank_literals
         views: list[str] = []
 
         def _bind_body(body: str) -> str:
-            b, v = self._rewrite_distinct_on(body)
-            views.extend(v)
-            b, v = self._rewrite_asof(b)
-            views.extend(v)
-            b, v = self._rewrite_range_join(b)
-            views.extend(v)
-            b, v = self._rewrite_qualify(b)
-            views.extend(v)
-            b, v = self._rewrite_quantified(b)
+            b, v = self._rewrite_surfaces(body)
             views.extend(v)
             view = f"_sq_{uuid.uuid4().hex[:8]}"
             self.spark.sql(b).createOrReplaceTempView(view)
@@ -11025,36 +10992,14 @@ class AnalyticsEngine:
                 for cname, vname in bound:
                     body = self._sub_ident(body, cname, vname)
                 # a CTE body may itself use the surfaces (an asof
-                # enrichment defined once, joined downstream) — its
-                # helper views live until the caller's post-fetch
-                # cleanup, exactly like main-body rewrite views. Same
-                # rewrite order as the main pipeline: DISTINCT ON →
-                # asof → range → QUALIFY (r7 ADVICE #4: a body using
-                # the engine-only QUALIFY / DISTINCT ON surfaces sits
-                # at paren depth > 0 where the depth-0 rewrites never
-                # reach, and died as a raw Spark parse error).
-                body = self._rewrite_from_first(body)
-                body, v = self._rewrite_star_exclude(body)
-                views += v
-                body, v = self._lift_engine_subqueries(body)
-                views += v
-                body, v = self._rewrite_union_by_name(body)
-                views += v
-                body, v = self._rewrite_distinct_on(body)
-                views += v
-                body, v = self._rewrite_asof(body)
-                views += v
-                body, v = self._rewrite_range_join(body)
-                views += v
-                body, v = self._rewrite_positional_join(body)
-                views += v
-                body, v = self._rewrite_columns_projection(body)
-                views += v
-                body, v = self._rewrite_select_replace(body)
-                views += v
-                body, v = self._rewrite_qualify(body)
-                views += v
-                body, v = self._rewrite_quantified(body)
+                # enrichment defined once, joined downstream), so it
+                # runs the whole surface pipeline standalone (r7
+                # ADVICE #4: a body using the engine-only QUALIFY /
+                # DISTINCT ON surfaces sits at paren depth > 0 where
+                # the depth-0 rewrites never reach). Its helper views
+                # live until the caller's post-fetch cleanup, exactly
+                # like main-body rewrite views.
+                body, v = self._rewrite_surfaces(body)
                 views += v
                 view = f"_cte_{uuid.uuid4().hex[:8]}"
                 self.spark.sql(body).createOrReplaceTempView(view)
@@ -11068,25 +11013,130 @@ class AnalyticsEngine:
             raise
         return main, views
 
-    def _select(self, stmt: str) -> Result:
-        # macros expand FIRST (idempotent re-run for execute()-routed
-        # statements; the live entry for view/matview replans and
-        # library callers), then FROM-first syntax and the
-        # star-EXCLUDE spelling normalize, so every later rewrite
-        # sees ordinary select-first SQL
-        stmt = self._expand_macros(stmt)
-        stmt = self._rewrite_from_first(stmt)
-        stmt, _ = self._rewrite_star_exclude(stmt)
-        # AnDB-dialect compat: `LIMIT off,n` (MySQL-style, parser_.py:
-        # 138-148) → standard `LIMIT n OFFSET off`.
-        stmt = self._LIMIT_OFF_N.sub(r"LIMIT \2 OFFSET \1", stmt)
-        # ANSI OFFSET n ROWS / FETCH FIRST m ROWS ONLY → LIMIT/OFFSET
-        # (global text rewrite — covers subqueries and CTE bodies too);
-        # a WITH TIES tail returns per-statement views to drop after
-        # materialization, same lifecycle as the version views below
-        stmt, ff_views = self._rewrite_fetch_first(stmt)
-        version_views: list[str] = list(ff_views)
-        # dropped after materialization
+    # ---------------------------------------------- surface pipeline --
+    # The DuckDB-surface rewrite pipeline, written down once. Every
+    # SQL-to-plan path applies these passes, in this order, through
+    # _rewrite_surfaces: SELECT, EXPLAIN [ANALYZE], DESCRIBE, CTAS /
+    # INSERT ... SELECT sources, view bodies, and the bodies the
+    # surfaces themselves plan (CTEs, ASOF subquery sources, DISTINCT
+    # ON / QUALIFY inner statements, BY NAME branches). Each entry is
+    # (pass, EXPLAIN header note). A pass maps SQL text to text, or to
+    # (text, per-statement views). EXPLAIN prints, once and in table
+    # order, the note of every entry whose pass returned views — {n}
+    # is their view count, {bucket} the session's range-join bucket
+    # width (the reference's EXPLAIN shows its plan choices in the
+    # same header position, portal.py:124-128).
+    #
+    # Each pass consumes its own spelling, so a nested run over
+    # already-rewritten text only finishes what is left. The DuckDB
+    # dialect normalization (_rewrite_duckdb_collections) is no pass
+    # because it lacks that property: it wraps skewness/kurtosis in a
+    # bias correction and names string casts, and a second run
+    # corrupts both. execute() applies it once to every statement;
+    # stored SQL gets it once from _normalize_stored_sql.
+    #
+    # Order constraints: macros and the spelling normalizations first,
+    # so every later pass sees ordinary select-first SQL; window
+    # EXCLUDE before the CTE binder, lift and QUALIFY, which plan
+    # window text with spark.sql inside their machinery; FROM-first
+    # again after the CTE binder, whose unwrapped main may be
+    # FROM-first; the source rewrites (ASOF, range, POSITIONAL) before
+    # COLUMNS() and star-REPLACE, which plan their FROM list to
+    # enumerate columns.
+    _CTE_NOTE = "-- with: {n} CTE view(s) bound for the asof/range surfaces"
+    _SURFACE_PASSES: tuple[tuple[str, str | None], ...] = (
+        ("_expand_macros", None),
+        ("_rewrite_from_first", None),
+        ("_rewrite_star_exclude", None),
+        ("_rewrite_limit_comma", None),
+        (
+            "_rewrite_fetch_first",
+            "-- fetch with ties: rank()-bounded boundary plan",
+        ),
+        ("_bind_versions", None),
+        ("_rewrite_sequence_calls", None),
+        ("_rewrite_using_sample", None),
+        ("_rewrite_pivot_statement", _CTE_NOTE),
+        ("_rewrite_window_exclude", None),
+        ("_bind_ctes_for_surfaces", _CTE_NOTE),
+        ("_rewrite_from_first", None),
+        ("_lift_engine_subqueries", _CTE_NOTE),
+        (
+            "_rewrite_union_by_name",
+            "-- union by name: lowered onto"
+            " unionByName(allowMissingColumns=true)",
+        ),
+        (
+            "_rewrite_distinct_on",
+            "-- distinct on: rewritten onto row_number()=1"
+            " + pre-projection sort view",
+        ),
+        (
+            "_rewrite_asof",
+            "-- asof join: rewritten onto union+window (one shuffle)",
+        ),
+        (
+            "_rewrite_range_join",
+            "-- range join: bucketed equi-join"
+            " (andb.range_bucket_seconds={bucket})",
+        ),
+        (
+            "_rewrite_positional_join",
+            "-- positional join: distributed zipWithIndex +"
+            " full-outer index equi-join",
+        ),
+        ("_rewrite_columns_projection", None),
+        ("_rewrite_select_replace", None),
+        (
+            "_rewrite_qualify",
+            "-- qualify: window filter via per-statement view",
+        ),
+        (
+            "_rewrite_quantified",
+            "-- any/all: quantified comparison via scalar"
+            " aggregates of a per-statement view",
+        ),
+    )
+
+    def _rewrite_surfaces(
+        self, stmt: str, fired: dict[str, int] | None = None
+    ) -> tuple[str, list[str]]:
+        """Apply ``_SURFACE_PASSES`` in order. Returns the SQL Spark
+        plans and the per-statement views bound on the way (the caller
+        drops them after materializing); if any pass raises, every
+        view bound so far is dropped first. ``fired``, when given,
+        counts the views bound under each entry note, in table order —
+        EXPLAIN's header."""
+        views: list[str] = []
+        try:
+            for name, note in self._SURFACE_PASSES:
+                out = getattr(self, name)(stmt)
+                stmt, bound = (out, []) if isinstance(out, str) else out
+                views += bound
+                if bound and note and fired is not None:
+                    fired[note] = fired.get(note, 0) + len(bound)
+        except BaseException:
+            for v in views:
+                self.spark.catalog.dropTempView(v)
+            raise
+        return stmt, views
+
+    # AnDB-dialect compat: `LIMIT off,n` (MySQL-style, parser_.py:
+    # 138-148) → standard `LIMIT n OFFSET off`.
+    _LIMIT_OFF_N = re.compile(r"\blimit\s+(\d+)\s*,\s*(\d+)\s*$", re.I)
+
+    def _rewrite_limit_comma(self, stmt: str) -> str:
+        return self._LIMIT_OFF_N.sub(r"LIMIT \2 OFFSET \1", stmt)
+
+    # Time travel: `FROM <table> VERSION AS OF <n>` reads the retained
+    # version dir — immutable version dirs make historical reads free
+    # (Delta/Iceberg snapshot semantics over plain parquet).
+    _VERSION_RE = re.compile(r"\b(\w+)\s+version\s+as\s+of\s+(\d+)", re.I)
+
+    def _bind_versions(self, stmt: str) -> tuple[str, list[str]]:
+        """Bind every ``<table> VERSION AS OF <n>`` to a per-statement
+        view over that version's files."""
+        views: list[str] = []
 
         def _version_view(m: re.Match) -> str:
             name, vnum = m.group(1), int(m.group(2))
@@ -11094,7 +11144,7 @@ class AnalyticsEngine:
             # the "same" (name, vnum) — e.g. across a RESTORE that
             # renumbered history — can never race on a shared binding
             view = f"{name}__v{vnum}_{uuid.uuid4().hex[:8]}"
-            version_views.append(view)
+            views.append(view)
             paths = self._resolve_version(name, vnum)
             # The CURRENT declared schema drives historical reads (so a
             # metadata-only DROP COLUMN cannot resurrect through time
@@ -11122,95 +11172,41 @@ class AnalyticsEngine:
             reader.parquet(*paths).createOrReplaceTempView(view)
             return view
 
-        stmt = self._VERSION_RE.sub(_version_view, stmt)
-        # every rewrite that can raise runs INSIDE the try: a failing
-        # later rewrite must not leak the views an earlier one created
-        rewrite_views: list[str] = []
         try:
-            stmt, v = self._rewrite_sequence_calls(stmt)
-            rewrite_views += v
-            stmt, v = self._rewrite_using_sample(stmt)
-            rewrite_views += v
-            stmt, v = self._rewrite_pivot_statement(stmt)
-            rewrite_views += v
-            # BEFORE the lift/qualify: those plan window text with
-            # spark.sql inside their machinery, so EXCLUDE clauses
-            # must already be plain OVER text by then (the rewrite is
-            # position-independent — it matches OVER at any depth)
-            stmt, v = self._rewrite_window_exclude(stmt)
-            rewrite_views += v
-            stmt, v = self._bind_ctes_for_surfaces(stmt)
-            rewrite_views += v
-            # a WITH statement's unwrapped main may itself be
-            # FROM-first
-            stmt = self._rewrite_from_first(stmt)
-            stmt, v = self._lift_engine_subqueries(stmt)
-            rewrite_views += v
-            stmt, v = self._rewrite_union_by_name(stmt)
-            rewrite_views += v
-            stmt, v = self._rewrite_distinct_on(stmt)
-            rewrite_views += v
-            stmt, v = self._rewrite_asof(stmt)
-            rewrite_views += v
-            stmt, v = self._rewrite_range_join(stmt)
-            rewrite_views += v
-            stmt, v = self._rewrite_positional_join(stmt)
-            rewrite_views += v
-            # after the source rewrites: COLUMNS() and star-REPLACE
-            # plan their FROM list to enumerate columns, so
-            # engine-only sources must already be plain views here
-            stmt, v = self._rewrite_columns_projection(stmt)
-            rewrite_views += v
-            stmt, v = self._rewrite_select_replace(stmt)
-            rewrite_views += v
-            stmt, v = self._rewrite_qualify(stmt)
-            rewrite_views += v
-            stmt, v = self._rewrite_quantified(stmt)
-            rewrite_views += v
+            return self._VERSION_RE.sub(_version_view, stmt), views
+        except BaseException:
+            for v in views:
+                self.spark.catalog.dropTempView(v)
+            raise
+
+    def _normalize_stored_sql(self, sql: str) -> str:
+        """View, materialized-view and macro SQL is stored as written;
+        before it is planned it gets what execute() gives every other
+        statement, in the same order and once: backslash literals,
+        macro calls, then the DuckDB dialect normalization."""
+        return self._rewrite_duckdb_collections(
+            self._expand_macros(self._escape_backslash_literals(sql))
+        )
+
+    def _select(self, stmt: str) -> Result:
+        stmt, views = self._rewrite_surfaces(stmt)
+        try:
             return self._select_resolved(stmt)
         finally:
             # bounded: no per-query leak
-            for v in version_views + rewrite_views:
+            for v in views:
                 self.spark.catalog.dropTempView(v)
 
     def _plan_engine_select(self, query: str) -> tuple[DataFrame, list[str]]:
-        """Plan a SELECT through the FULL engine surface pipeline —
-        the same rewrites `_select` applies — returning the (lazy)
-        DataFrame and the per-statement views to drop AFTER the caller
-        materializes it. This is what lets CTAS and INSERT ... SELECT
+        """Plan a SELECT through the surface pipeline ``_select`` runs,
+        returning the (lazy) DataFrame and the per-statement views to
+        drop AFTER the caller materializes it. This is what lets CTAS,
+        INSERT ... SELECT, EXPLAIN ANALYZE, DESCRIBE and view bodies
         compose with engine-only SQL (ASOF / range joins, QUALIFY,
         DISTINCT ON, quantified comparisons, UNION BY NAME,
-        star-REPLACE): before r9 both planned their query with a bare
-        ``spark.sql`` and died on a raw ParseException for statements
-        the engine itself executes."""
-        query = self._expand_macros(query)
-        query = self._rewrite_duckdb_collections(query)
-        query = self._rewrite_from_first(query)
-        views: list[str] = []
+        star-REPLACE, time travel)."""
+        query, views = self._rewrite_surfaces(query)
         try:
-            for rw in (
-                self._rewrite_sequence_calls,
-                self._rewrite_using_sample,
-                self._rewrite_pivot_statement,
-                self._rewrite_window_exclude,
-                self._rewrite_star_exclude,
-                self._rewrite_fetch_first,
-                self._bind_ctes_for_surfaces,
-                # the unwrapped WITH main may itself be FROM-first
-                lambda q: (self._rewrite_from_first(q), []),
-                self._lift_engine_subqueries,
-                self._rewrite_union_by_name,
-                self._rewrite_distinct_on,
-                self._rewrite_asof,
-                self._rewrite_range_join,
-                self._rewrite_positional_join,
-                self._rewrite_columns_projection,
-                self._rewrite_select_replace,
-                self._rewrite_qualify,
-                self._rewrite_quantified,
-            ):
-                query, v = rw(query)
-                views += v
             return self.spark.sql(query), views
         except BaseException:
             for v in views:
@@ -11327,13 +11323,8 @@ class AnalyticsEngine:
             # table — the Spark analog of the reference portal's
             # per-operator actual_rows/elapsed instrumentation
             # (portal.py:93-118, physical/base.py:22-24).
-            asof_views = []
+            df, views = self._plan_engine_select(ana.group(1))
             try:
-                # the FULL pipeline (r10 review #4: this hand-rolled
-                # chain lacked fetch-first, the subquery lift, UNION
-                # BY NAME and star-REPLACE — EXPLAIN ANALYZE refused
-                # statements the engine executes)
-                df, asof_views = self._plan_engine_select(ana.group(1))
                 t0 = time.perf_counter()
                 # Execute THIS queryExecution's physical plan without
                 # materializing rows on the driver: toRdd() runs the
@@ -11346,7 +11337,7 @@ class AnalyticsEngine:
                 dt = time.perf_counter() - t0
                 jplan = df._jdf.queryExecution().executedPlan()
             finally:
-                for v in asof_views:
+                for v in views:
                     self.spark.catalog.dropTempView(v)
             return Result(
                 columns=[
@@ -11360,130 +11351,43 @@ class AnalyticsEngine:
                 effect_rows=1,
             )
         inner = re.sub(r"^explain\s+", "", stmt, flags=re.I)
-        don_views: list[str] = []
-        asof_views: list[str] = []
-        range_views: list[str] = []
-        qual_views: list[str] = []
-        quant_views: list[str] = []
-        cte_views: list[str] = []
-        # _planning routes EVERY nested _rewrite_quantified (inside
-        # CTE bodies, DISTINCT ON / QUALIFY inner statements, ASOF
-        # subquery sources) onto the lazy stats-view path, not just
-        # the depth-0 call below (r8 ADVICE #2).
+        # _planning keeps every pass at every composition depth
+        # job-free (lazy quantified stats, peeked sequences)
+        fired: dict[str, int] = {}
+        was = self._planning
         self._planning = True
-        ubn_views: list[str] = []
-        ft_views: list[str] = []
-        pj_views: list[str] = []
         try:
-            inner = self._expand_macros(inner)
-            inner = self._rewrite_from_first(inner)
-            # late-r11 surfaces (sequence calls PEEK without advancing
-            # under _planning; pivot's value-discovery scan runs like
-            # DuckDB's binder scan)
-            inner, _sv = self._rewrite_sequence_calls(inner)
-            inner, _uv = self._rewrite_using_sample(inner)
-            inner, pv_views = self._rewrite_pivot_statement(inner)
-            cte_views += pv_views
-            inner, _wv = self._rewrite_window_exclude(inner)
-            inner, _xv = self._rewrite_star_exclude(inner)
-            inner, ft_views = self._rewrite_fetch_first(inner)
-            inner, cte_views2 = self._bind_ctes_for_surfaces(inner)
-            cte_views += cte_views2
-            inner = self._rewrite_from_first(inner)
-            inner, v = self._lift_engine_subqueries(inner)
-            cte_views += v
-            inner, ubn_views = self._rewrite_union_by_name(inner)
-            inner, don_views = self._rewrite_distinct_on(inner)
-            inner, asof_views = self._rewrite_asof(inner)
-            inner, range_views = self._rewrite_range_join(inner)
-            # positional join (r11 review #1: omitting it here made
-            # EXPLAIN silently explain a DIFFERENT query — Spark
-            # parses `l positional join r` as an alias + bare join)
-            inner, pj_views = self._rewrite_positional_join(inner)
-            inner, _cv = self._rewrite_columns_projection(inner)
-            inner, _nv = self._rewrite_select_replace(inner)
-            inner, qual_views = self._rewrite_qualify(inner)
-            inner, quant_views = self._rewrite_quantified(
-                inner, plan_only=True
-            )
-        except BaseException:
-            for v in (cte_views + ubn_views + don_views + asof_views
-                      + range_views + qual_views + quant_views
-                      + ft_views + pj_views):
-                self.spark.catalog.dropTempView(v)
-            raise
+            inner, views = self._rewrite_surfaces(inner, fired)
         finally:
-            self._planning = False
-        # Surface each SQL-surface rewrite the way zone maps / the ANN
-        # access path are surfaced — the reference's EXPLAIN shows its
-        # plan choices in the same header position (portal.py:124-128).
-        rewrites = ""
-        if cte_views:
-            rewrites += (
-                f"-- with: {len(cte_views)} CTE view(s) bound for the"
-                " asof/range surfaces\n"
-            )
-        if don_views:
-            rewrites += (
-                "-- distinct on: rewritten onto row_number()=1"
-                " + pre-projection sort view\n"
-            )
-        if asof_views:
-            rewrites += "-- asof join: rewritten onto union+window (one shuffle)\n"
-        if range_views:
-            rewrites += (
-                "-- range join: bucketed equi-join (andb."
-                f"range_bucket_seconds="
-                f"{self.session_vars.get('andb.range_bucket_seconds', 1800)})\n"
-            )
-        if qual_views:
-            rewrites += "-- qualify: window filter via per-statement view\n"
-        if quant_views:
-            rewrites += (
-                "-- any/all: quantified comparison via scalar"
-                " aggregates of a per-statement view\n"
-            )
-        if ubn_views:
-            rewrites += (
-                "-- union by name: lowered onto"
-                " unionByName(allowMissingColumns=true)\n"
-            )
-        if ft_views:
-            rewrites += (
-                "-- fetch with ties: rank()-bounded boundary plan\n"
-            )
-        if pj_views:
-            rewrites += (
-                "-- positional join: distributed zipWithIndex +"
-                " full-outer index equi-join\n"
-            )
-        asof_views += (cte_views + ubn_views + don_views + range_views
-                       + qual_views + quant_views + ft_views
-                       + pj_views)
-        mode = self.session_vars.get("andb.ann_mode", "exact")
-        ann = self._ANN_RE.match(inner) if mode != "exact" else None
-        if ann:
-            # Surface the access-path decision (the reference's EXPLAIN
-            # shows its scan choice the same way — IndexScan vs
-            # TableScan in the physical plan text).
-            from andb_spark.plans.ann import choose_topk_path
-
-            path = choose_topk_path(
-                mode, self.catalog["stats"].get(ann.group("table"))
-            )
-            header = (
-                rewrites
-                + f"-- vector access path: {path} (andb.ann_mode={mode})\n"
-            )
-        else:
-            header = rewrites
-        # EXPLAIN shows the plan _select would run — including the
-        # zone-pruned scan when data skipping applies (the reference's
-        # EXPLAIN surfaces its IndexScan-vs-TableScan choice the same
-        # way).
-        pruned = self._zone_prune_view(inner)
-        run_inner, tmp = pruned if pruned else (inner, None)
+            self._planning = was
+        bucket = self.session_vars.get("andb.range_bucket_seconds", 1800)
+        header = "".join(
+            note.format(n=n, bucket=bucket) + "\n"
+            for note, n in fired.items()
+        )
+        tmp = None
         try:
+            mode = self.session_vars.get("andb.ann_mode", "exact")
+            ann = self._ANN_RE.match(inner) if mode != "exact" else None
+            if ann:
+                # Surface the access-path decision (the reference's
+                # EXPLAIN shows its scan choice the same way —
+                # IndexScan vs TableScan in the physical plan text).
+                from andb_spark.plans.ann import choose_topk_path
+
+                path = choose_topk_path(
+                    mode, self.catalog["stats"].get(ann.group("table"))
+                )
+                header += (
+                    f"-- vector access path: {path}"
+                    f" (andb.ann_mode={mode})\n"
+                )
+            # EXPLAIN shows the plan _select would run — including the
+            # zone-pruned scan when data skipping applies (the
+            # reference's EXPLAIN surfaces its IndexScan-vs-TableScan
+            # choice the same way).
+            pruned = self._zone_prune_view(inner)
+            run_inner, tmp = pruned if pruned else (inner, None)
             if tmp:
                 header += (
                     f"-- zone maps: "
@@ -11494,9 +11398,7 @@ class AnalyticsEngine:
             logical = header + qe.optimizedPlan().toString()
             physical = qe.executedPlan().toString()
         finally:
-            if tmp:
-                self.spark.catalog.dropTempView(tmp)
-            for v in asof_views:
+            for v in views + ([tmp] if tmp else []):
                 self.spark.catalog.dropTempView(v)
         # Two-column, logical + physical — the reference's EXPLAIN output
         # shape (portal.py:124-128).
@@ -11853,9 +11755,7 @@ class AnalyticsEngine:
             # plan the normalized + dialect-rewritten text, store the
             # pristine one (the refresh paths normalize per replan)
             name,
-            self._rewrite_duckdb_collections(
-                self._escape_backslash_literals(query)
-            ),
+            self._normalize_stored_sql(query),
             matview_sql=query,
         )
 
@@ -11872,9 +11772,7 @@ class AnalyticsEngine:
 
     def _do_refresh(self, name: str, meta: dict, sql: str) -> int:
         # stored matview SQL is pristine; normalize per replan
-        sql = self._rewrite_duckdb_collections(
-            self._escape_backslash_literals(sql)
-        )
+        sql = self._normalize_stored_sql(sql)
         n = self._incremental_refresh(name, meta, sql)
         if n is None:
             # Full re-run — always sound; re-anchor the seen-file set so
@@ -12749,7 +12647,9 @@ class AnalyticsEngine:
             helpers: list[str] = []
             try:
                 probe = self._expand_macros(probe)
-                sel = f"select ({probe}) as __macro_probe"
+                sel = self._rewrite_duckdb_collections(
+                    f"select ({probe}) as __macro_probe"
+                )
                 self._bind_referenced_views(sel, plan_only=True)
                 _df, helpers = self._plan_engine_select(sel)
             except EngineError:

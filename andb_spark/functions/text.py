@@ -141,17 +141,6 @@ def ngram_density(text: Column | str) -> Column:
     return F.try_divide(total.cast("double"), F.length(t).cast("double"))
 
 
-def lang_id_ngram(text: Column | str, threshold: float = 0.08) -> Column:
-    """Character-n-gram language ID: 'en' when the density of frequent
-    English bigrams clears ``threshold``. Complements the stopword-based
-    `lang_id` (token-level evidence vs character-level evidence). On the
-    synthetic corpus (language-uniform word salad) the interesting part
-    is the oracle-checked computation, not classifier accuracy."""
-    return F.when(ngram_density(text) >= threshold, F.lit("en")).otherwise(
-        F.lit("other")
-    )
-
-
 # Rabin-Karp rolling-hash parameters. MOD is a Mersenne prime small
 # enough that acc*BASE + token_hash stays far below 2^63 (acc < 2^31,
 # token hash < 2^32 → max ~2^37), so the fold is exact in BIGINT

@@ -530,35 +530,6 @@ def extract_audio_meta(binary_df: DataFrame, fake: bool = True) -> DataFrame:
     return binary_df.mapInPandas(_extract, schema=AUDIO_META_SCHEMA)
 
 
-RESIZED_SCHEMA = IMAGE_META_SCHEMA + ", new_width int, new_height int"
-
-
-def resize_images(meta_df: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize stage: aspect-preserving clamp of the longer side to
-    ``max_side`` (no-op when already small enough). A real implementation
-    would transform the payload through a codec; the stub computes the
-    target geometry — which is the part a pipeline plans storage and
-    batch shapes around — over the same mapInPandas plumbing."""
-
-    def _resize(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            long_side = pdf[["width", "height"]].max(axis=1)
-            scale = (max_side / long_side).clip(upper=1.0)
-            out = pdf.copy()
-            # floor via int-cast, matching the oracle's integer math;
-            # clamp to >= 1 like resize_pixels — an extreme aspect
-            # ratio (1000x1 banner) must not round a side to zero
-            out["new_width"] = (
-                (pdf["width"] * scale).astype(int).clip(lower=1)
-            )
-            out["new_height"] = (
-                (pdf["height"] * scale).astype(int).clip(lower=1)
-            )
-            yield out
-
-    return meta_df.mapInPandas(_resize, schema=RESIZED_SCHEMA)
-
-
 RESIZED_PAYLOAD_SCHEMA = (
     "doc_id bigint, payload binary, format string, width int, height int"
 )

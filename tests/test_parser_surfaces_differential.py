@@ -2152,6 +2152,10 @@ def test_positional_join_matches_duckdb(spark, tmp_path):
         run("insert into pr values (7),(8)")
         run("create table pr3 (a int)")
         run("insert into pr3 values (5)")
+        run("create table r (a int, b int)")
+        run("insert into r values (1,2),(1,4),(3,5)")
+        run("create table s (c int)")
+        run("insert into s values (10),(20),(30)")
     for sql in (
         "select * from pl positional join pr order by a nulls last",
         "select a, c from pl positional join pr where c is not null"
@@ -2165,6 +2169,11 @@ def test_positional_join_matches_duckdb(spark, tmp_path):
         " order by b nulls last",
         "with z as (select a, c from pl positional join pr)"
         " select a, c from z order by a nulls last",
+        # DISTINCT ON's inner statement must see the positional
+        # rewrite too, or `r positional join s` parses as an aliased
+        # cross join and keeps an arbitrary partner row
+        "select distinct on (a) a, b, c from r positional join s"
+        " order by a, b",
     ):
         ours = eng.execute(sql)
         drows = con.execute(sql).fetchall()
