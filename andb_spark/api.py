@@ -582,6 +582,15 @@ class AnalyticsEngine:
         # swept when a rollback/restore removes the catalog entry, so
         # a stale session binding can never serve a dropped view.
         self._bound_views: set[str] = set()
+        # Helper temp views the running statement bound (rewrite
+        # passes, CTE bodies, subquery sources, time travel), in bind
+        # order. execute() notes the length on entry and drops the
+        # suffix on exit (_release_views), so nested execute() calls
+        # (EXECUTE, IMPORT DATABASE) release only their own; the
+        # streaming sinks' commit (_overwrite_all) scopes the refreshes
+        # it triggers the same way. A helper is needed only until the
+        # SQL naming it is analyzed, so statement end is never early.
+        self._stmt_views: list[str] = []
         register_all(self.spark)
         # re-register managed tables from a previous session (durability
         # across engine restarts — the reference's catalog reload,
@@ -828,6 +837,22 @@ class AnalyticsEngine:
         df.createOrReplaceTempView(name)
         return df
 
+    def _scoped_view(self, df: DataFrame, prefix: str) -> str:
+        """Bind ``df`` under a fresh ``<prefix><hex>`` temp view owned
+        by the running statement (dropped when execute() returns) and
+        return its name."""
+        name = f"{prefix}{uuid.uuid4().hex[:8]}"
+        df.createOrReplaceTempView(name)
+        self._stmt_views.append(name)
+        return name
+
+    def _release_views(self, mark: int) -> None:
+        """End of a statement scope: drop the helper views bound since
+        ``mark`` (a nested scope drops only its own suffix)."""
+        for v in self._stmt_views[mark:]:
+            self.spark.catalog.dropTempView(v)
+        del self._stmt_views[mark:]
+
     # ------------------------------------------- logical views --
     def _view_dep_order(self, roots: list[str]) -> list[str]:
         """Topological closure of the catalog views reachable from
@@ -883,7 +908,7 @@ class AnalyticsEngine:
         the FULL engine pipeline (so engine-only SQL works in view
         bodies) over the base tables' CURRENT temp views, and register
         the analyzed plan under the view's name. The pipeline's helper
-        views drop immediately — the analyzed plan embeds their
+        views drop at statement end — the analyzed plan embeds their
         logical plans, so the binding outlives them."""
         was = self._planning
         self._planning = was or plan_only
@@ -894,7 +919,7 @@ class AnalyticsEngine:
             self.spark.catalog.dropTempView(name)
             self._bound_views.discard(name)
         try:
-            df, helpers = self._plan_engine_select(
+            df = self._plan_engine_select(
                 self._normalize_stored_sql(self.catalog["views"][name]["sql"])
             )
         except EngineError:
@@ -906,40 +931,33 @@ class AnalyticsEngine:
             ) from e
         finally:
             self._planning = was
-        try:
-            aliases = self.catalog["views"][name].get("aliases")
-            if aliases:
-                # CREATE VIEW v (x, y) AS ... column aliases (DuckDB
-                # semantics, probed: a PARTIAL list renames a prefix,
-                # the rest keep their own names; duplicate aliases
-                # dedup with _N suffixes — collision-aware against
-                # the whole final set (review r11 #6); more aliases
-                # than columns errors)
-                cur = df.columns
-                if len(aliases) > len(cur):
-                    raise EngineError(
-                        f"view {name}: more VIEW aliases than columns"
-                        " in the defining query's result"
-                    )
-                renamed = list(aliases) + cur[len(aliases):]
-                used: set[str] = set()
-                out = []
-                for c in renamed:
-                    cand, i = c, 0
-                    while cand in used:
-                        i += 1
-                        cand = f"{c}_{i}"
-                    used.add(cand)
-                    out.append(cand)
-                df = df.toDF(*out)
-            df.createOrReplaceTempView(name)
-            self._bound_views.add(name)
-        finally:
-            # the analyzed plan embeds the helpers' logical plans —
-            # drop them on success AND on any post-plan failure
-            # (review r11 #5: the alias-count error leaked them)
-            for h in helpers:
-                self.spark.catalog.dropTempView(h)
+        aliases = self.catalog["views"][name].get("aliases")
+        if aliases:
+            # CREATE VIEW v (x, y) AS ... column aliases (DuckDB
+            # semantics, probed: a PARTIAL list renames a prefix,
+            # the rest keep their own names; duplicate aliases
+            # dedup with _N suffixes — collision-aware against
+            # the whole final set (review r11 #6); more aliases
+            # than columns errors)
+            cur = df.columns
+            if len(aliases) > len(cur):
+                raise EngineError(
+                    f"view {name}: more VIEW aliases than columns"
+                    " in the defining query's result"
+                )
+            renamed = list(aliases) + cur[len(aliases):]
+            used: set[str] = set()
+            out = []
+            for c in renamed:
+                cand, i = c, 0
+                while cand in used:
+                    i += 1
+                    cand = f"{c}_{i}"
+                used.add(cand)
+                out.append(cand)
+            df = df.toDF(*out)
+        df.createOrReplaceTempView(name)
+        self._bound_views.add(name)
         return df
 
     def _bind_referenced_views(
@@ -1721,9 +1739,15 @@ class AnalyticsEngine:
             shutil.rmtree(d, ignore_errors=True)
         for name in list(updates) + list(appends):
             self._view(name)
-        for name in appends:  # refresh-then-compact, as in _append
-            self._maybe_auto_refresh(name)
-            self._maybe_auto_compact(name)
+        # the streaming sinks commit here outside execute(), so this
+        # commit is the statement scope of the refreshes it triggers
+        vmark = len(self._stmt_views)
+        try:
+            for name in appends:  # refresh-then-compact, as in _append
+                self._maybe_auto_refresh(name)
+                self._maybe_auto_compact(name)
+        finally:
+            self._release_views(vmark)
         return counts
 
     def _schema(self, name: str) -> T.StructType:
@@ -2021,9 +2045,7 @@ class AnalyticsEngine:
             n,
         )
 
-    def _rewrite_sequence_calls(
-        self, stmt: str
-    ) -> tuple[str, list[str]]:
+    def _rewrite_sequence_calls(self, stmt: str) -> str:
         """Scalar sequence-call substitution in the SELECT pipeline:
         nextval/currval over a no-FROM statement (or currval
         anywhere — it reads without advancing) substitute to
@@ -2032,18 +2054,16 @@ class AnalyticsEngine:
         ``_nextval_from_rewrite``."""
         calls = self._seq_calls(stmt)
         if not calls:
-            return stmt, []
+            return stmt
         b = _blank_literals(stmt)
         has_next = any(
             c.group(1).lower() == "nextval" for c in calls
         )
         if has_next and re.search(r"\bfrom\b", b, re.I):
             return self._nextval_from_rewrite(stmt)
-        return self._sub_sequence_calls(stmt), []
+        return self._sub_sequence_calls(stmt)
 
-    def _nextval_from_rewrite(
-        self, stmt: str
-    ) -> tuple[str, list[str]]:
+    def _nextval_from_rewrite(self, stmt: str) -> str:
         """``SELECT ..., nextval('s'), ... FROM <query>`` (DuckDB
         evaluates nextval once per OUTPUT row, select items left to
         right): supported for BARE nextval select items (optionally
@@ -2113,13 +2133,13 @@ class AnalyticsEngine:
                 " column"
             )
         if not seq_items:  # only currval calls: substitute in place
-            return self._sub_sequence_calls(stmt), []
+            return self._sub_sequence_calls(stmt)
         inner = (
             "select "
             + (", ".join(inner_items) if inner_items else "1 as _one")
             + " " + stmt[f[0]:]
         )
-        df, views = self._plan_engine_select(inner)
+        df = self._plan_engine_select(inner)
         idx = f"_seq_{uuid.uuid4().hex[:6]}"
         d = self._zip_index(df, idx)
         n = d.count() if not self._planning else 0
@@ -2159,10 +2179,8 @@ class AnalyticsEngine:
                     out_cols.append(F.col(f"`{next(inner_iter)}`"))
             else:
                 out_cols.append(F.col(f"`{next(inner_iter)}`"))
-        res = d.select(*out_cols)
-        view = f"_nv_{uuid.uuid4().hex[:8]}"
-        res.createOrReplaceTempView(view)
-        return f"select * from {view}", views + [view]
+        view = self._scoped_view(d.select(*out_cols), "_nv_")
+        return f"select * from {view}"
 
     def _sub_values_sequences(self, vtext: str) -> str:
         """Per-tuple sequence substitution in a VALUES list: each row
@@ -2211,9 +2229,7 @@ class AnalyticsEngine:
         re.I,
     )
 
-    def _rewrite_using_sample(
-        self, stmt: str
-    ) -> tuple[str, list[str]]:
+    def _rewrite_using_sample(self, stmt: str) -> str:
         """DuckDB's ``USING SAMPLE`` clause, lowered onto Spark
         TABLESAMPLE. Units map exactly (``n ROWS`` / bare n → ``(n
         ROWS)``, ``n%``/``n PERCENT`` → ``(n PERCENT)``); the method
@@ -2228,12 +2244,12 @@ class AnalyticsEngine:
         b = _blank_literals(stmt)
         m = re.search(r"\busing\s+sample\b", b, re.I)
         if not m:
-            return stmt, []
+            return stmt
         if _paren_depth_at(b, m.start()) > 0:
             # a subquery's clause: the generic engine-subquery lift
             # plans that group standalone, where this rewrite sees it
             # at depth 0
-            return stmt, []
+            return stmt
         sm = self._SAMPLE_SPEC_RE.search(stmt)
         if not sm or sm.start() != m.start():
             raise EngineError(
@@ -2280,7 +2296,7 @@ class AnalyticsEngine:
         return (
             head[:insert_at] + ts + head[insert_at:]
             + stmt[sm.end():]
-        ), []
+        )
 
     # ---------------------------- DuckDB list/struct expressions --
     # words that can legally precede a bare `[` only when the bracket
@@ -5217,9 +5233,7 @@ class AnalyticsEngine:
             f" else {body} end)"
         )
 
-    def _rewrite_window_exclude(
-        self, stmt: str
-    ) -> tuple[str, list[str]]:
+    def _rewrite_window_exclude(self, stmt: str) -> str:
         """Window frame EXCLUDE clause (DuckDB/Postgres; absent from
         Spark's OVER grammar). Supported class, each shape
         DuckDB-probed:
@@ -5276,7 +5290,7 @@ class AnalyticsEngine:
         if not re.search(
             r"\bexclude\b", _blank_literals(stmt), re.I
         ):
-            return stmt, []
+            return stmt
         out = stmt
         for _ in range(200):  # bounded: each pass resolves one clause
             b = _blank_literals(out)
@@ -5293,7 +5307,7 @@ class AnalyticsEngine:
                     hit = (om, cp, out[om.end(): cp], em)
                     break
             if hit is None:
-                return out, []
+                return out
             om, cp, spec, em = hit
             kind = re.sub(r"\s+", " ", em.group(1).lower())
             spec_wo = (spec[: em.start()] + spec[em.end():]).strip()
@@ -5959,75 +5973,70 @@ class AnalyticsEngine:
         if not m or not m.group(1).strip():
             raise EngineError(f"cannot parse SUMMARIZE: {stmt!r}")
         body = m.group(1).strip()
-        views: list[str] = []
         if re.fullmatch(r"\w+", body):
             df = self.spark.table(body)
         else:
-            df, views = self._plan_engine_select(body)
-        try:
-            fields = df.schema.fields
-            aggs = [F.count(F.lit(1)).alias("__total")]
-            for i, f in enumerate(fields):
-                c = self._safe_col(f.name)
+            df = self._plan_engine_select(body)
+        fields = df.schema.fields
+        aggs = [F.count(F.lit(1)).alias("__total")]
+        for i, f in enumerate(fields):
+            c = self._safe_col(f.name)
+            aggs += [
+                F.min(c).cast("string").alias(f"min_{i}"),
+                F.max(c).cast("string").alias(f"max_{i}"),
+                F.countDistinct(c).alias(f"nd_{i}"),
+                F.count(c).alias(f"cnt_{i}"),
+            ]
+            if isinstance(f.dataType, T.NumericType):
+                qc = (
+                    f.name if re.fullmatch(r"\w+", f.name)
+                    else f"`{f.name}`"
+                )
                 aggs += [
-                    F.min(c).cast("string").alias(f"min_{i}"),
-                    F.max(c).cast("string").alias(f"max_{i}"),
-                    F.countDistinct(c).alias(f"nd_{i}"),
-                    F.count(c).alias(f"cnt_{i}"),
+                    F.avg(c).cast("double").alias(f"avg_{i}"),
+                    F.stddev(c).cast("double").alias(f"std_{i}"),
+                    F.expr(
+                        f"percentile({qc},"
+                        " array(0.25, 0.5, 0.75))"
+                    ).alias(f"q_{i}"),
                 ]
-                if isinstance(f.dataType, T.NumericType):
-                    qc = (
-                        f.name if re.fullmatch(r"\w+", f.name)
-                        else f"`{f.name}`"
-                    )
-                    aggs += [
-                        F.avg(c).cast("double").alias(f"avg_{i}"),
-                        F.stddev(c).cast("double").alias(f"std_{i}"),
-                        F.expr(
-                            f"percentile({qc},"
-                            " array(0.25, 0.5, 0.75))"
-                        ).alias(f"q_{i}"),
-                    ]
-            row = df.agg(*aggs).collect()[0]
-            total = row["__total"]
-            rows = []
-            for i, f in enumerate(fields):
-                numeric = isinstance(f.dataType, T.NumericType)
-                q = row[f"q_{i}"] if numeric else None
-                rows.append((
-                    f.name,
-                    f.dataType.simpleString(),
-                    row[f"min_{i}"],
-                    row[f"max_{i}"],
-                    row[f"nd_{i}"],
-                    row[f"avg_{i}"] if numeric else None,
-                    row[f"std_{i}"] if numeric else None,
-                    float(q[0]) if q and q[0] is not None else None,
-                    float(q[1]) if q and q[1] is not None else None,
-                    float(q[2]) if q and q[2] is not None else None,
-                    total,
-                    (
-                        round(100.0 * (total - row[f"cnt_{i}"]) / total, 2)
-                        if total else None
-                    ),
-                ))
-            return Result(
-                columns=[
-                    "column_name", "column_type", "min", "max",
-                    "distinct_count", "avg", "std", "q25", "q50",
-                    "q75", "count", "null_percentage",
-                ],
-                types=[
-                    "string", "string", "string", "string", "bigint",
-                    "double", "double", "double", "double", "double",
-                    "bigint", "double",
-                ],
-                rows=rows,
-                effect_rows=len(rows),
-            )
-        finally:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
+        row = df.agg(*aggs).collect()[0]
+        total = row["__total"]
+        rows = []
+        for i, f in enumerate(fields):
+            numeric = isinstance(f.dataType, T.NumericType)
+            q = row[f"q_{i}"] if numeric else None
+            rows.append((
+                f.name,
+                f.dataType.simpleString(),
+                row[f"min_{i}"],
+                row[f"max_{i}"],
+                row[f"nd_{i}"],
+                row[f"avg_{i}"] if numeric else None,
+                row[f"std_{i}"] if numeric else None,
+                float(q[0]) if q and q[0] is not None else None,
+                float(q[1]) if q and q[1] is not None else None,
+                float(q[2]) if q and q[2] is not None else None,
+                total,
+                (
+                    round(100.0 * (total - row[f"cnt_{i}"]) / total, 2)
+                    if total else None
+                ),
+            ))
+        return Result(
+            columns=[
+                "column_name", "column_type", "min", "max",
+                "distinct_count", "avg", "std", "q25", "q50",
+                "q75", "count", "null_percentage",
+            ],
+            types=[
+                "string", "string", "string", "string", "bigint",
+                "double", "double", "double", "double", "double",
+                "bigint", "double",
+            ],
+            rows=rows,
+            effect_rows=len(rows),
+        )
 
     def _column_defaults(self, name: str) -> dict[str, F.Column]:
         """Declared DEFAULT expressions by lowercase column name, as
@@ -6337,11 +6346,13 @@ class AnalyticsEngine:
         entries registered BEFORE the statement — a streaming sink's
         batch state, a library caller's own operator composition — stay
         untouched, and nested execute() calls release only their own
-        suffix."""
+        suffix. The helper temp views the statement bound
+        (``_stmt_views``) drop at the same point, by the same rule."""
         from andb_spark.caching import cache_mark, release_caches_since
 
         t0 = time.perf_counter()
         cmark = cache_mark()
+        vmark = len(self._stmt_views)
         stmt = sql.strip().rstrip(";").strip()
         if getattr(self, "_sysviews_dirty", False) and self._SYSVIEW_RE.search(
             stmt
@@ -6673,6 +6684,7 @@ class AnalyticsEngine:
             # suppressing saves of a later permanent table of the
             # same name
             self._pending_temp = None
+            self._release_views(vmark)
             release_caches_since(cmark)
         r.elapsed = time.perf_counter() - t0
         return r
@@ -6908,17 +6920,13 @@ class AnalyticsEngine:
             was_planning = self._planning
             self._planning = True  # job-free: schema only
             try:
-                df, views = self._plan_engine_select(qm.group(1))
+                df = self._plan_engine_select(qm.group(1))
             finally:
                 self._planning = was_planning
-            try:
-                rows = [
-                    (f.name, f.dataType.simpleString(), f.nullable)
-                    for f in df.schema.fields
-                ]
-            finally:
-                for v in views:
-                    self.spark.catalog.dropTempView(v)
+            rows = [
+                (f.name, f.dataType.simpleString(), f.nullable)
+                for f in df.schema.fields
+            ]
             return Result(
                 columns=["column_name", "type", "nullable"],
                 types=["string", "string", "boolean"],
@@ -7300,10 +7308,9 @@ class AnalyticsEngine:
         touching just the segments whose [min, max] overlap the
         predicate — the same manifest-stats economics Iceberg/Delta
         readers get, without waiting for parquet footer I/O to skip
-        row groups. Returns ``(rewritten_stmt, tmp_view)`` — the
-        statement with its table token swapped for a UNIQUE temp view
-        bound to the surviving segments (caller drops the view after
-        materializing) — or None. The session-global view of the
+        row groups. Returns the statement with its table token swapped
+        for a UNIQUE statement-scoped temp view bound to the surviving
+        segments, or None. The session-global view of the
         table is never rebound, so a concurrent SELECT on the same
         SparkSession can never observe the pruned binding.
 
@@ -7349,11 +7356,9 @@ class AnalyticsEngine:
             pruned = self.spark.createDataFrame([], self._schema(name))
         else:
             pruned = self._read_table(name).limit(0)
-        tmp = f"{name}__zp_{uuid.uuid4().hex[:8]}"
-        pruned.createOrReplaceTempView(tmp)
-        return (
-            re.sub(rf"\b{re.escape(name)}\b", tmp, stmt, count=1, flags=re.I),
-            tmp,
+        tmp = self._scoped_view(pruned, f"{name}__zp_")
+        return re.sub(
+            rf"\b{re.escape(name)}\b", tmp, stmt, count=1, flags=re.I
         )
 
     @staticmethod
@@ -7501,7 +7506,7 @@ class AnalyticsEngine:
         parts.append("".join(cur))
         return parts
 
-    def _rewrite_distinct_on(self, stmt: str) -> tuple[str, list[str]]:
+    def _rewrite_distinct_on(self, stmt: str) -> str:
         """DISTINCT ON (Postgres/DuckDB): keep the first row per key
         group under the statement's ORDER BY. Postgres' contract is
         enforced: ORDER BY must lead with the DISTINCT ON keys, and at
@@ -7519,7 +7524,7 @@ class AnalyticsEngine:
         — ``SELECT DISTINCT ON (k) a, b .. ORDER BY k, ts DESC`` is
         legal even when k/ts are unprojected expressions, so the
         ordering cannot be re-attached to the post-projection view by
-        name. Returns (statement, views-to-drop)."""
+        name."""
         m = re.match(r"^\s*select\s+distinct\s+on\s*\(", stmt, re.I)
         if not m:
             # catch-all: the spelling anywhere the anchored rewrite
@@ -7537,7 +7542,7 @@ class AnalyticsEngine:
                     " a WITH clause body or make it the statement's"
                     " own select list"
                 )
-            return stmt, []
+            return stmt
         # scan to the matching close paren (keys may hold nested calls)
         depth = 1
         i = m.end()
@@ -7618,7 +7623,6 @@ class AnalyticsEngine:
         if f is None:
             raise EngineError("DISTINCT ON: no FROM clause to attach to")
         sel, src = body[: f[0]].rstrip(), body[f[0]:]
-        pre_views: list[str] = []
         if re.match(r"^\s*\*\s+replace\s*\(", sel, re.I):
             # DISTINCT ON + star-REPLACE: DuckDB resolves the ORDER BY
             # (and any QUALIFY) against the REPLACED columns — probed
@@ -7628,16 +7632,8 @@ class AnalyticsEngine:
             # ON over it; injecting helper columns next to the raw
             # `* replace` select list would bind them to the SOURCE
             # columns instead (sibling aliases are not visible).
-            inner_sql, v0 = self._rewrite_surfaces(f"select {sel} {src}")
-            pre_views += v0
-            rview = f"_donrep_{uuid.uuid4().hex[:8]}"
-            try:
-                self.spark.sql(inner_sql).createOrReplaceTempView(rview)
-            except BaseException:
-                for v in pre_views:
-                    self.spark.catalog.dropTempView(v)
-                raise
-            pre_views.append(rview)
+            inner_sql = self._rewrite_surfaces(f"select {sel} {src}")
+            rview = self._scoped_view(self.spark.sql(inner_sql), "_donrep_")
             sel, src = "*", f"from {rview}"
         helpers = ", ".join(
             f"{p[0]} as _don_o{n}" for n, p in enumerate(parsed)
@@ -7664,43 +7660,34 @@ class AnalyticsEngine:
         # POSITIONAL join) that Spark can't parse, or would parse as a
         # different query — run the surface pipeline on the inner
         # statement BEFORE planning it (r7 ADVICE #2)
-        views: list[str] = pre_views
-        try:
-            inner, v = self._rewrite_surfaces(inner)
-            views += v
-            if qualify_pred is not None:
-                from pyspark.sql import Window as _W
+        inner = self._rewrite_surfaces(inner)
+        if qualify_pred is not None:
+            from pyspark.sql import Window as _W
 
-                # stage 2: DISTINCT ON over the QUALIFY survivors.
-                # ORDER BY must lead with the keys (enforced above),
-                # so the first len(keys) helper columns ARE the keys
-                # and the remainder carries the tiebreak order with
-                # its per-item direction/nulls placement.
-                w = _W.partitionBy(
-                    *[F.col(f"_don_o{n}") for n in range(len(keys))]
-                ).orderBy(*sort_cols[len(keys):])
-                df = (
-                    self.spark.sql(inner)
-                    .filter(F.col("_qual"))
-                    .drop("_qual")
-                    .withColumn("_don_rn", F.row_number().over(w))
-                    .filter(F.col("_don_rn") == 1)
-                )
-            else:
-                df = self.spark.sql(inner).filter(F.col("_don_rn") == 1)
-            df = df.orderBy(*sort_cols).drop(
-                "_don_rn", *[f"_don_o{n}" for n in range(len(parsed))]
+            # stage 2: DISTINCT ON over the QUALIFY survivors.
+            # ORDER BY must lead with the keys (enforced above),
+            # so the first len(keys) helper columns ARE the keys
+            # and the remainder carries the tiebreak order with
+            # its per-item direction/nulls placement.
+            w = _W.partitionBy(
+                *[F.col(f"_don_o{n}") for n in range(len(keys))]
+            ).orderBy(*sort_cols[len(keys):])
+            df = (
+                self.spark.sql(inner)
+                .filter(F.col("_qual"))
+                .drop("_qual")
+                .withColumn("_don_rn", F.row_number().over(w))
+                .filter(F.col("_don_rn") == 1)
             )
-            view = f"_don_{uuid.uuid4().hex[:8]}"
-            df.createOrReplaceTempView(view)
-            views.append(view)
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
-        return f"select * from {view}{limit}", views
+        else:
+            df = self.spark.sql(inner).filter(F.col("_don_rn") == 1)
+        df = df.orderBy(*sort_cols).drop(
+            "_don_rn", *[f"_don_o{n}" for n in range(len(parsed))]
+        )
+        view = self._scoped_view(df, "_don_")
+        return f"select * from {view}{limit}"
 
-    def _rewrite_qualify(self, stmt: str) -> tuple[str, list[str]]:
+    def _rewrite_qualify(self, stmt: str) -> str:
         """QUALIFY clause (DuckDB/Snowflake semantics — filter on
         window-function results after they are computed; Spark has no
         QUALIFY). Rewrite: inject the predicate into the select list as
@@ -7716,7 +7703,7 @@ class AnalyticsEngine:
         or literal containing the word is left alone."""
         found = self._find_top_level_keyword(stmt, ("qualify",))
         if found is None:
-            return stmt, []
+            return stmt
         q_at, _ = found
         head = stmt[:q_at].rstrip()
         tail = stmt[q_at + len("qualify"):].strip()
@@ -7746,18 +7733,10 @@ class AnalyticsEngine:
         # parse — run the surface pipeline on the inner statement
         # BEFORE planning (same composition class as DISTINCT ON over
         # ASOF, r7 #2)
-        views: list[str] = []
-        try:
-            inner, views = self._rewrite_surfaces(inner)
-            df = self.spark.sql(inner).filter(F.col("_qual")).drop("_qual")
-            view = f"_qualify_{uuid.uuid4().hex[:8]}"
-            df.createOrReplaceTempView(view)
-            views.append(view)
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
-        return f"{outer_sel} from {view} {trailing}".rstrip(), views
+        inner = self._rewrite_surfaces(inner)
+        df = self.spark.sql(inner).filter(F.col("_qual")).drop("_qual")
+        view = self._scoped_view(df, "_qualify_")
+        return f"{outer_sel} from {view} {trailing}".rstrip()
 
     # quantified comparison: `lhs <op> ANY|SOME|ALL ( select ... )`.
     # lhs restricted to a bare/qualified identifier or numeric token —
@@ -7773,7 +7752,7 @@ class AnalyticsEngine:
         re.I,
     )
 
-    def _rewrite_quantified(self, stmt: str) -> tuple[str, list[str]]:
+    def _rewrite_quantified(self, stmt: str) -> str:
         """SQL quantified comparisons — ``x <op> ANY (subquery)`` /
         ``ALL`` / ``SOME`` (ANSI; native in DuckDB/Postgres, absent
         from Spark SQL). Rewritten onto Spark-native constructs with
@@ -7810,199 +7789,186 @@ class AnalyticsEngine:
         quantifier) against DuckDB's native implementation, including
         empty / all-NULL / some-NULL sets and NULL probes."""
         plan_only = self._planning
-        views: list[str] = []
         NULLB = "cast(null as boolean)"
         _blank = _blank_literals
 
-        try:
-            while True:
-                blanked = _blank(stmt)
-                hit = None
-                for cand in self._QUANT_RE.finditer(blanked):
-                    op_pos = cand.end() - 1
-                    cp = self._match_paren(stmt, op_pos)
-                    inner = stmt[cand.end(): cp]
-                    # `any(boolcol)` is Spark's bool_or aggregate —
-                    # only a SELECT body is a quantified subquery
-                    if not re.match(r"\s*select\b", inner, re.I):
-                        continue
-                    # the lhs must STAND ALONE: preceded by nothing,
-                    # an opening paren, a comma, or a keyword/boolean
-                    # boundary. An arithmetic/concat operator or a
-                    # dot before it means the regex grabbed the TAIL
-                    # of a larger expression (`x + 1 > any(...)`) —
-                    # splicing there would bind with wrong precedence,
-                    # so leave it for the catch-all's named refusal.
-                    j = cand.start() - 1
-                    while j >= 0 and blanked[j] in " \t\r\n":
-                        j -= 1
-                    if j >= 0 and (
-                        blanked[j] in "+-*/%|&^.<>=!~"
-                        or blanked[j].isalnum()
-                        or blanked[j] == "_"
-                    ):
-                        prevtok = re.search(
-                            r"(\w+)\s*$", blanked[: j + 1]
-                        )
-                        if not (prevtok and prevtok.group(1).lower() in (
-                            "and", "or", "not", "where", "when", "then",
-                            "else", "on", "having", "select", "by",
-                        )):
-                            continue
-                    hit = (cand, cp, inner)
-                    break
-                if hit is None:
-                    break
-                cand, cp, inner = hit
-                lhs = cand.group("lhs")
-                op = {"!=": "<>"}.get(cand.group("op"), cand.group("op"))
-                quant = cand.group("q").lower()
-                if quant == "some":
-                    quant = "any"
-                try:
-                    df = self.spark.sql(inner)
-                    cols = df.columns
-                except Exception as e:
-                    # EQUI-CORRELATED subqueries (r11, was a named
-                    # refusal): rewrite onto per-key grouped stats +
-                    # correlated scalar-subquery probes — see
-                    # _quantified_correlated_repl
-                    corr = self._quantified_correlated_repl(
-                        inner, lhs, op, quant, plan_only
-                    )
-                    if corr is None:
-                        raise EngineError(
-                            "ANY/ALL: the subquery must be a"
-                            " standalone (uncorrelated) SELECT, or a"
-                            " simple equi-correlated `SELECT <expr>"
-                            " FROM <src> WHERE ...` body (no GROUP"
-                            " BY/LIMIT/set ops; correlation as plain"
-                            f" `=` conjuncts) ({e})"
-                        ) from e
-                    repl, corr_views = corr
-                    views += corr_views
-                    stmt = stmt[: cand.start()] + repl + stmt[cp + 1:]
+        while True:
+            blanked = _blank(stmt)
+            hit = None
+            for cand in self._QUANT_RE.finditer(blanked):
+                op_pos = cand.end() - 1
+                cp = self._match_paren(stmt, op_pos)
+                inner = stmt[cand.end(): cp]
+                # `any(boolcol)` is Spark's bool_or aggregate —
+                # only a SELECT body is a quantified subquery
+                if not re.match(r"\s*select\b", inner, re.I):
                     continue
-                if len(cols) != 1:
+                # the lhs must STAND ALONE: preceded by nothing,
+                # an opening paren, a comma, or a keyword/boolean
+                # boundary. An arithmetic/concat operator or a
+                # dot before it means the regex grabbed the TAIL
+                # of a larger expression (`x + 1 > any(...)`) —
+                # splicing there would bind with wrong precedence,
+                # so leave it for the catch-all's named refusal.
+                j = cand.start() - 1
+                while j >= 0 and blanked[j] in " \t\r\n":
+                    j -= 1
+                if j >= 0 and (
+                    blanked[j] in "+-*/%|&^.<>=!~"
+                    or blanked[j].isalnum()
+                    or blanked[j] == "_"
+                ):
+                    prevtok = re.search(
+                        r"(\w+)\s*$", blanked[: j + 1]
+                    )
+                    if not (prevtok and prevtok.group(1).lower() in (
+                        "and", "or", "not", "where", "when", "then",
+                        "else", "on", "having", "select", "by",
+                    )):
+                        continue
+                hit = (cand, cp, inner)
+                break
+            if hit is None:
+                break
+            cand, cp, inner = hit
+            lhs = cand.group("lhs")
+            op = {"!=": "<>"}.get(cand.group("op"), cand.group("op"))
+            quant = cand.group("q").lower()
+            if quant == "some":
+                quant = "any"
+            try:
+                df = self.spark.sql(inner)
+                cols = df.columns
+            except Exception as e:
+                # EQUI-CORRELATED subqueries (r11, was a named
+                # refusal): rewrite onto per-key grouped stats +
+                # correlated scalar-subquery probes — see
+                # _quantified_correlated_repl
+                corr = self._quantified_correlated_repl(
+                    inner, lhs, op, quant, plan_only
+                )
+                if corr is None:
                     raise EngineError(
-                        "ANY/ALL subquery must select exactly one"
-                        f" column (got {len(cols)})"
-                    )
-                view = f"_quant_{uuid.uuid4().hex[:8]}"
-                df.createOrReplaceTempView(view)
-                views.append(view)
-                c = f"`{cols[0]}`"
-                # aggregate the set ONCE, eagerly, into a 1-row
-                # LOCAL relation: each scalar subquery below would
-                # otherwise re-execute the whole subquery (up to four
-                # scans of its source — a scale-killer when the set is
-                # a filtered slice of the fact table). One small job
-                # at rewrite time; the CASE's scalar subqueries then
-                # read an in-memory row. Only the IN membership branch
-                # still scans the source (it needs the values), once.
-                col0 = df.columns[0]
-                stats_df = df.agg(
-                    F.count(F.lit(1)).alias("cnt"),
-                    F.count(F.col(col0)).alias("nn"),
-                    F.min(F.col(col0)).alias("mn"),
-                    F.max(F.col(col0)).alias("mx"),
-                    F.countDistinct(F.col(col0)).alias("nd"),
-                )
-                stats = f"_quantstats_{uuid.uuid4().hex[:8]}"
-                if plan_only:
-                    # plain EXPLAIN must not execute jobs: keep the
-                    # stats as a lazy 1-row view (scalar subqueries
-                    # re-derive it in the plan — fine, nothing runs)
-                    stats_df.createOrReplaceTempView(stats)
-                else:
-                    _local_df(
-                        self.spark, stats_df.collect(), stats_df.schema
-                    ).createOrReplaceTempView(stats)
-                views.append(stats)
-                cnt = f"(select cnt from {stats})"
-                nn = f"(select nn from {stats})"
-                mn = f"(select mn from {stats})"
-                mx = f"(select mx from {stats})"
-                nd = f"(select nd from {stats})"
-                if (quant, op) in (("any", "="), ("all", "<>")):
-                    # Spark's IN-subquery in a projection is NOT
-                    # null-aware (NULL probe -> FALSE, and a non-match
-                    # against a set containing NULL -> FALSE, where the
-                    # standard and DuckDB say UNKNOWN). Its TRUE branch
-                    # IS trustworthy, so: order the CASE to trust only
-                    # the hit, route the NULL probe and the
-                    # missed-with-NULL-elements cases (nn < cnt)
-                    # explicitly. `<> ALL` is the exact negation.
-                    hit = "true" if quant == "any" else "false"
-                    miss = "false" if quant == "any" else "true"
-                    repl = (
-                        f"(case when {cnt} = 0 then {miss}"
-                        f" when {lhs} is null then {NULLB}"
-                        f" when {lhs} in (select {c} from {view})"
-                        f" then {hit}"
-                        f" when {nn} < {cnt} then {NULLB}"
-                        f" else {miss} end)"
-                    )
-                elif op == "<>":  # any
-                    repl = (
-                        f"(case when {cnt} = 0 then false"
-                        f" when {lhs} is null then {NULLB}"
-                        f" when {nd} >= 2 then true"
-                        f" when {lhs} <> {mn} then true"
-                        f" when {nn} < {cnt} then {NULLB}"
-                        f" else false end)"
-                    )
-                elif op == "=":  # all
-                    repl = (
-                        f"(case when {cnt} = 0 then true"
-                        f" when {lhs} is null then {NULLB}"
-                        f" when {nd} >= 2 then false"
-                        f" when {lhs} <> {mn} then false"
-                        f" when {nn} < {cnt} then {NULLB}"
-                        f" else true end)"
-                    )
-                elif quant == "any":
-                    ext = mn if op in (">", ">=") else mx
-                    repl = (
-                        f"(case when {cnt} = 0 then false"
-                        f" when {lhs} {op} {ext} then true"
-                        f" when {lhs} is null then {NULLB}"
-                        f" when {nn} < {cnt} then {NULLB}"
-                        f" else false end)"
-                    )
-                else:  # all, inequality: NOT (lhs neg-op ANY)
-                    ext = mx if op in (">", ">=") else mn
-                    neg = {">": "<=", ">=": "<", "<": ">=", "<=": ">"}[op]
-                    repl = (
-                        f"(case when {cnt} = 0 then true"
-                        f" when {lhs} {neg} {ext} then false"
-                        f" when {lhs} is null then {NULLB}"
-                        f" when {nn} < {cnt} then {NULLB}"
-                        f" else true end)"
-                    )
-                stmt = stmt[: cand.start()] + repl + stmt[cp + 1:]
-            # catch-all: a quantified spelling the regex could not
-            # consume (complex lhs expression) must fail by name, not
-            # as Spark's raw parse error
-            if re.search(
-                r"(>=|<=|<>|!=|=|>|<)\s*(any|some|all)\s*\(\s*select\b",
-                _blank(stmt), re.I,
-            ):
+                        "ANY/ALL: the subquery must be a"
+                        " standalone (uncorrelated) SELECT, or a"
+                        " simple equi-correlated `SELECT <expr>"
+                        " FROM <src> WHERE ...` body (no GROUP"
+                        " BY/LIMIT/set ops; correlation as plain"
+                        f" `=` conjuncts) ({e})"
+                    ) from e
+                stmt = stmt[: cand.start()] + corr + stmt[cp + 1:]
+                continue
+            if len(cols) != 1:
                 raise EngineError(
-                    "ANY/ALL: the left-hand side must be a plain"
-                    " (optionally qualified) column or literal —"
-                    " alias complex expressions in a subquery first"
+                    "ANY/ALL subquery must select exactly one"
+                    f" column (got {len(cols)})"
                 )
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
-        return stmt, views
+            view = self._scoped_view(df, "_quant_")
+            c = f"`{cols[0]}`"
+            # aggregate the set ONCE, eagerly, into a 1-row
+            # LOCAL relation: each scalar subquery below would
+            # otherwise re-execute the whole subquery (up to four
+            # scans of its source — a scale-killer when the set is
+            # a filtered slice of the fact table). One small job
+            # at rewrite time; the CASE's scalar subqueries then
+            # read an in-memory row. Only the IN membership branch
+            # still scans the source (it needs the values), once.
+            col0 = df.columns[0]
+            stats_df = df.agg(
+                F.count(F.lit(1)).alias("cnt"),
+                F.count(F.col(col0)).alias("nn"),
+                F.min(F.col(col0)).alias("mn"),
+                F.max(F.col(col0)).alias("mx"),
+                F.countDistinct(F.col(col0)).alias("nd"),
+            )
+            if not plan_only:
+                # plain EXPLAIN must not execute jobs: it keeps the
+                # stats as a lazy 1-row view (scalar subqueries
+                # re-derive it in the plan — fine, nothing runs)
+                stats_df = _local_df(
+                    self.spark, stats_df.collect(), stats_df.schema
+                )
+            stats = self._scoped_view(stats_df, "_quantstats_")
+            cnt = f"(select cnt from {stats})"
+            nn = f"(select nn from {stats})"
+            mn = f"(select mn from {stats})"
+            mx = f"(select mx from {stats})"
+            nd = f"(select nd from {stats})"
+            if (quant, op) in (("any", "="), ("all", "<>")):
+                # Spark's IN-subquery in a projection is NOT
+                # null-aware (NULL probe -> FALSE, and a non-match
+                # against a set containing NULL -> FALSE, where the
+                # standard and DuckDB say UNKNOWN). Its TRUE branch
+                # IS trustworthy, so: order the CASE to trust only
+                # the hit, route the NULL probe and the
+                # missed-with-NULL-elements cases (nn < cnt)
+                # explicitly. `<> ALL` is the exact negation.
+                hit = "true" if quant == "any" else "false"
+                miss = "false" if quant == "any" else "true"
+                repl = (
+                    f"(case when {cnt} = 0 then {miss}"
+                    f" when {lhs} is null then {NULLB}"
+                    f" when {lhs} in (select {c} from {view})"
+                    f" then {hit}"
+                    f" when {nn} < {cnt} then {NULLB}"
+                    f" else {miss} end)"
+                )
+            elif op == "<>":  # any
+                repl = (
+                    f"(case when {cnt} = 0 then false"
+                    f" when {lhs} is null then {NULLB}"
+                    f" when {nd} >= 2 then true"
+                    f" when {lhs} <> {mn} then true"
+                    f" when {nn} < {cnt} then {NULLB}"
+                    f" else false end)"
+                )
+            elif op == "=":  # all
+                repl = (
+                    f"(case when {cnt} = 0 then true"
+                    f" when {lhs} is null then {NULLB}"
+                    f" when {nd} >= 2 then false"
+                    f" when {lhs} <> {mn} then false"
+                    f" when {nn} < {cnt} then {NULLB}"
+                    f" else true end)"
+                )
+            elif quant == "any":
+                ext = mn if op in (">", ">=") else mx
+                repl = (
+                    f"(case when {cnt} = 0 then false"
+                    f" when {lhs} {op} {ext} then true"
+                    f" when {lhs} is null then {NULLB}"
+                    f" when {nn} < {cnt} then {NULLB}"
+                    f" else false end)"
+                )
+            else:  # all, inequality: NOT (lhs neg-op ANY)
+                ext = mx if op in (">", ">=") else mn
+                neg = {">": "<=", ">=": "<", "<": ">=", "<=": ">"}[op]
+                repl = (
+                    f"(case when {cnt} = 0 then true"
+                    f" when {lhs} {neg} {ext} then false"
+                    f" when {lhs} is null then {NULLB}"
+                    f" when {nn} < {cnt} then {NULLB}"
+                    f" else true end)"
+                )
+            stmt = stmt[: cand.start()] + repl + stmt[cp + 1:]
+        # catch-all: a quantified spelling the regex could not
+        # consume (complex lhs expression) must fail by name, not
+        # as Spark's raw parse error
+        if re.search(
+            r"(>=|<=|<>|!=|=|>|<)\s*(any|some|all)\s*\(\s*select\b",
+            _blank(stmt), re.I,
+        ):
+            raise EngineError(
+                "ANY/ALL: the left-hand side must be a plain"
+                " (optionally qualified) column or literal —"
+                " alias complex expressions in a subquery first"
+            )
+        return stmt
 
     def _quantified_correlated_repl(
         self, inner: str, lhs: str, op: str, quant: str,
         plan_only: bool,
-    ) -> tuple[str, list[str]] | None:
+    ) -> str | None:
         """Correlated quantified comparison — ``x <op> ANY|ALL
         (SELECT v FROM t2 WHERE t2.k = t1.k ...)`` (DuckDB/Postgres
         execute these natively; r11, was a named refusal). The class:
@@ -8093,90 +8059,80 @@ class AnalyticsEngine:
             f" count(distinct __qv) as nd"
             f" from ({wrap}) __qsrc group by {keys}"
         )
-        views: list[str] = []
-        try:
-            stats_df = self.spark.sql(stats_sql)
-            if not plan_only:
-                # one computation shared by every probe; execute()'s
-                # statement-scoped cache release reclaims it
-                stats_df = persist_tracked(stats_df)
-            stats = f"_quantcorr_{uuid.uuid4().hex[:8]}"
-            stats_df.createOrReplaceTempView(stats)
-            views.append(stats)
-            keycond = " and ".join(
-                f"__qk{i} = ({outer})"
-                for i, (_ik, outer) in enumerate(corr)
+        stats_df = self.spark.sql(stats_sql)
+        if not plan_only:
+            # one computation shared by every probe; execute()'s
+            # statement-scoped cache release reclaims it
+            stats_df = persist_tracked(stats_df)
+        stats = self._scoped_view(stats_df, "_quantcorr_")
+        keycond = " and ".join(
+            f"__qk{i} = ({outer})"
+            for i, (_ik, outer) in enumerate(corr)
+        )
+
+        def s(col: str) -> str:
+            return f"(select {col} from {stats} where {keycond})"
+
+        hn, mn, mx, nd = s("hasnull"), s("mn"), s("mx"), s("nd")
+        empty = f"{hn} is null"
+        NULLB = "cast(null as boolean)"
+        if (quant, op) in (("any", "="), ("all", "<>")):
+            vals = self._scoped_view(self.spark.sql(wrap), "_quantvals_")
+            hit = "true" if quant == "any" else "false"
+            miss = "false" if quant == "any" else "true"
+            member = (
+                f"exists (select 1 from {vals} where "
+                + " and ".join(
+                    f"__qk{i} = ({o})"
+                    for i, (_ik, o) in enumerate(corr)
+                )
+                + f" and __qv = {lhs})"
             )
-
-            def s(col: str) -> str:
-                return f"(select {col} from {stats} where {keycond})"
-
-            hn, mn, mx, nd = s("hasnull"), s("mn"), s("mx"), s("nd")
-            empty = f"{hn} is null"
-            NULLB = "cast(null as boolean)"
-            if (quant, op) in (("any", "="), ("all", "<>")):
-                vals = f"_quantvals_{uuid.uuid4().hex[:8]}"
-                self.spark.sql(wrap).createOrReplaceTempView(vals)
-                views.append(vals)
-                hit = "true" if quant == "any" else "false"
-                miss = "false" if quant == "any" else "true"
-                member = (
-                    f"exists (select 1 from {vals} where "
-                    + " and ".join(
-                        f"__qk{i} = ({o})"
-                        for i, (_ik, o) in enumerate(corr)
-                    )
-                    + f" and __qv = {lhs})"
-                )
-                repl = (
-                    f"(case when {empty} then {miss}"
-                    f" when {lhs} is null then {NULLB}"
-                    f" when {member} then {hit}"
-                    f" when {hn} then {NULLB}"
-                    f" else {miss} end)"
-                )
-            elif op == "<>":  # any
-                repl = (
-                    f"(case when {empty} then false"
-                    f" when {lhs} is null then {NULLB}"
-                    f" when {nd} >= 2 then true"
-                    f" when {lhs} <> {mn} then true"
-                    f" when {hn} then {NULLB}"
-                    f" else false end)"
-                )
-            elif op == "=":  # all
-                repl = (
-                    f"(case when {empty} then true"
-                    f" when {lhs} is null then {NULLB}"
-                    f" when {nd} >= 2 then false"
-                    f" when {lhs} <> {mn} then false"
-                    f" when {hn} then {NULLB}"
-                    f" else true end)"
-                )
-            elif quant == "any":
-                ext = mn if op in (">", ">=") else mx
-                repl = (
-                    f"(case when {empty} then false"
-                    f" when {lhs} {op} {ext} then true"
-                    f" when {lhs} is null then {NULLB}"
-                    f" when {hn} then {NULLB}"
-                    f" else false end)"
-                )
-            else:  # all, inequality: NOT (lhs neg-op ANY)
-                ext = mx if op in (">", ">=") else mn
-                neg = {">": "<=", ">=": "<", "<": ">=", "<=": ">"}[op]
-                repl = (
-                    f"(case when {empty} then true"
-                    f" when {lhs} {neg} {ext} then false"
-                    f" when {lhs} is null then {NULLB}"
-                    f" when {hn} then {NULLB}"
-                    f" else true end)"
-                )
-            return repl, views
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
+            repl = (
+                f"(case when {empty} then {miss}"
+                f" when {lhs} is null then {NULLB}"
+                f" when {member} then {hit}"
+                f" when {hn} then {NULLB}"
+                f" else {miss} end)"
+            )
+        elif op == "<>":  # any
+            repl = (
+                f"(case when {empty} then false"
+                f" when {lhs} is null then {NULLB}"
+                f" when {nd} >= 2 then true"
+                f" when {lhs} <> {mn} then true"
+                f" when {hn} then {NULLB}"
+                f" else false end)"
+            )
+        elif op == "=":  # all
+            repl = (
+                f"(case when {empty} then true"
+                f" when {lhs} is null then {NULLB}"
+                f" when {nd} >= 2 then false"
+                f" when {lhs} <> {mn} then false"
+                f" when {hn} then {NULLB}"
+                f" else true end)"
+            )
+        elif quant == "any":
+            ext = mn if op in (">", ">=") else mx
+            repl = (
+                f"(case when {empty} then false"
+                f" when {lhs} {op} {ext} then true"
+                f" when {lhs} is null then {NULLB}"
+                f" when {hn} then {NULLB}"
+                f" else false end)"
+            )
+        else:  # all, inequality: NOT (lhs neg-op ANY)
+            ext = mx if op in (">", ">=") else mn
+            neg = {">": "<=", ">=": "<", "<": ">=", "<=": ">"}[op]
+            repl = (
+                f"(case when {empty} then true"
+                f" when {lhs} {neg} {ext} then false"
+                f" when {lhs} is null then {NULLB}"
+                f" when {hn} then {NULLB}"
+                f" else true end)"
+            )
+        return repl
 
     _FF_TAIL_KWS = (
         "where", "group by", "having", "qualify", "window",
@@ -8245,7 +8201,7 @@ class AnalyticsEngine:
             .strip()
         )
 
-    def _rewrite_star_exclude(self, stmt: str) -> tuple[str, list[str]]:
+    def _rewrite_star_exclude(self, stmt: str) -> str:
         """DuckDB star-projection spelling ``* EXCLUDE (cols)`` →
         Spark's native ``* EXCEPT (cols)`` (same semantics, probed).
         Token swap on the literal-blanked copy; an EXCLUDE inside a
@@ -8264,11 +8220,11 @@ class AnalyticsEngine:
             out.append("except")
             pos = m.end(1)
         if not out:
-            return stmt, []
+            return stmt
         out.append(stmt[pos:])
-        return "".join(out), []
+        return "".join(out)
 
-    def _rewrite_fetch_first(self, stmt: str) -> tuple[str, list[str]]:
+    def _rewrite_fetch_first(self, stmt: str) -> str:
         """ANSI result-limiting dialect: ``OFFSET n ROW[S] [FETCH
         {FIRST|NEXT} m ROW[S] ONLY]`` and bare ``FETCH FIRST m ROWS
         ONLY`` (standard SQL, native in DuckDB/Postgres; Spark speaks
@@ -8376,11 +8332,9 @@ class AnalyticsEngine:
                 "FETCH FIRST / OFFSET ... ROWS requires a literal"
                 " integer count"
             )
-        return stmt, []
+        return stmt
 
-    def _limit_percent(
-        self, head: str, pct: float, off: int
-    ) -> tuple[str, list[str]]:
+    def _limit_percent(self, head: str, pct: float, off: int) -> str:
         """``LIMIT p% [OFFSET m]`` (DuckDB percent limit; either
         clause order): the row budget is floor(p/100 x the statement's
         TOTAL row count, before OFFSET) — probed on this DuckDB build
@@ -8397,24 +8351,15 @@ class AnalyticsEngine:
                 "LIMIT percent out of range, should be between 0%"
                 " and 100%"
             )
-        df, views = self._plan_engine_select(head)
-        try:
-            view = f"_lp_{uuid.uuid4().hex[:8]}"
-            df.createOrReplaceTempView(view)
-            views.append(view)
-            if self._planning:
-                return f"select * from {view}", views
-            k = int(df.count() * pct / 100.0)
-            tail = f" limit {k}" + (f" offset {off}" if off else "")
-            return f"select * from {view}{tail}", views
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
+        df = self._plan_engine_select(head)
+        view = self._scoped_view(df, "_lp_")
+        if self._planning:
+            return f"select * from {view}"
+        k = int(df.count() * pct / 100.0)
+        tail = f" limit {k}" + (f" offset {off}" if off else "")
+        return f"select * from {view}{tail}"
 
-    def _fetch_with_ties(
-        self, head: str, off: int, n: int
-    ) -> tuple[str, list[str]]:
+    def _fetch_with_ties(self, head: str, off: int, n: int) -> str:
         """``ORDER BY ... [OFFSET o ROWS] FETCH FIRST n ROWS WITH
         TIES``: the first o+n rows under the total order plus every
         row tying with the (o+n)-th row's sort key, then the first o
@@ -8465,22 +8410,14 @@ class AnalyticsEngine:
             # even when combined with a nonzero OFFSET (r10 ADVICE #1:
             # the generic path would have made the OFF-th row the
             # boundary and let its ties beyond the page survive).
-            df, views = self._plan_engine_select(head)
-            try:
-                view = f"_ft_{uuid.uuid4().hex[:8]}"
-                df.limit(0).createOrReplaceTempView(view)
-                views.append(view)
-                return f"select * from {view}", views
-            except BaseException:
-                for v in views:
-                    self.spark.catalog.dropTempView(v)
-                raise
+            df = self._plan_engine_select(head).limit(0)
+            return f"select * from {self._scoped_view(df, '_ft_')}"
         # plan the FULL head, ORDER BY included: a DISTINCT ON head
         # NEEDS its ORDER BY (r10 probe — stripping it here made the
         # composition refuse), and the redundant inner sort under the
         # TakeOrdered below is removed by Catalyst's EliminateSorts
         try:
-            df, views = self._plan_engine_select(head)
+            df = self._plan_engine_select(head)
         except EngineError:
             raise
         except Exception as e:
@@ -8497,160 +8434,145 @@ class AnalyticsEngine:
                     f" ({e})"
                 ) from e
             raise
-        try:
-            # ordinal ORDER BY (`order by 1`): a bare integer is a
-            # select-list POSITION everywhere else in the engine
-            # (Spark orderByOrdinal) — F.expr would build a constant
-            # sort key and every row would tie (review r10 #1)
-            resolved = []
-            for e, d, nl in items:
-                if e.isdigit():
-                    if not 1 <= int(e) <= len(df.columns):
-                        raise EngineError(
-                            f"ORDER BY position {e} is not in the"
-                            " select list"
-                        )
-                    e = df.columns[int(e) - 1]
-                resolved.append((e, d, nl))
-            items = resolved
-            helpers = [f"_ft_o{i}" for i in range(len(items))]
-            src_scope = False
-            proj_cols: list[str] = list(df.columns)
-            try:
-                for h, (e, _d, _nl) in zip(helpers, items):
-                    df = df.withColumn(h, F.expr(e))
-            except Exception as e:
-                # Postgres resolves the ORDER BY against the SOURCE
-                # scope (an unprojected sort key is legal): inject
-                # each order expression into the head's select list
-                # as a helper column and re-plan — the ties machinery
-                # runs on helpers and the final projection drops them
-                # (r10 verdict #3; the DISTINCT ON helper-column
-                # pattern, one scope earlier)
-                df2, v2 = self._ties_source_scope_plan(
-                    head, items, helpers
-                )
-                if df2 is None:
+        # ordinal ORDER BY (`order by 1`): a bare integer is a
+        # select-list POSITION everywhere else in the engine
+        # (Spark orderByOrdinal) — F.expr would build a constant
+        # sort key and every row would tie (review r10 #1)
+        resolved = []
+        for e, d, nl in items:
+            if e.isdigit():
+                if not 1 <= int(e) <= len(df.columns):
                     raise EngineError(
-                        "FETCH ... WITH TIES: the ORDER BY must"
-                        " reference columns the statement projects,"
-                        " or resolve against a simple SELECT head's"
-                        f" source columns ({e})"
-                    ) from e
-                views += v2
-                df = df2
-                src_scope = True
-                proj_cols = [c for c in df.columns if c not in helpers]
-            sort_cols = [
-                self._order_spec(F.col(h), d, nl)
-                for h, (_e, d, nl) in zip(helpers, items)
-            ]
-            view = f"_ft_{uuid.uuid4().hex[:8]}"
+                        f"ORDER BY position {e} is not in the"
+                        " select list"
+                    )
+                e = df.columns[int(e) - 1]
+            resolved.append((e, d, nl))
+        items = resolved
+        helpers = [f"_ft_o{i}" for i in range(len(items))]
+        src_scope = False
+        proj_cols: list[str] = list(df.columns)
+        try:
+            for h, (e, _d, _nl) in zip(helpers, items):
+                df = df.withColumn(h, F.expr(e))
+        except Exception as e:
+            # Postgres resolves the ORDER BY against the SOURCE
+            # scope (an unprojected sort key is legal): inject
+            # each order expression into the head's select list
+            # as a helper column and re-plan — the ties machinery
+            # runs on helpers and the final projection drops them
+            # (r10 verdict #3; the DISTINCT ON helper-column
+            # pattern, one scope earlier)
+            df2 = self._ties_source_scope_plan(head, items, helpers)
+            if df2 is None:
+                raise EngineError(
+                    "FETCH ... WITH TIES: the ORDER BY must"
+                    " reference columns the statement projects,"
+                    " or resolve against a simple SELECT head's"
+                    f" source columns ({e})"
+                ) from e
+            df = df2
+            src_scope = True
+            proj_cols = [c for c in df.columns if c not in helpers]
+        sort_cols = [
+            self._order_spec(F.col(h), d, nl)
+            for h, (_e, d, nl) in zip(helpers, items)
+        ]
 
-            def _final_sql() -> str:
-                # source-scope: the view RETAINS the helper columns
-                # (the order keys exist nowhere else once the source
-                # columns are projected away) — order by them, project
-                # the statement's own columns
-                if src_scope:
-                    sel = ", ".join(f"`{c}`" for c in proj_cols)
-                    osql = ", ".join(
-                        f"{h} {d}" + (f" nulls {nl}" if nl else "")
-                        for h, (_e, d, nl) in zip(helpers, items)
-                    )
-                    return (
-                        f"select {sel} from {view} order by {osql}"
-                        + (f" offset {off}" if off else "")
-                    )
+        def _final_sql(view: str) -> str:
+            # source-scope: the view RETAINS the helper columns
+            # (the order keys exist nowhere else once the source
+            # columns are projected away) — order by them, project
+            # the statement's own columns
+            if src_scope:
+                sel = ", ".join(f"`{c}`" for c in proj_cols)
+                osql = ", ".join(
+                    f"{h} {d}" + (f" nulls {nl}" if nl else "")
+                    for h, (_e, d, nl) in zip(helpers, items)
+                )
                 return (
-                    f"select * from {view} order by {order_text}"
+                    f"select {sel} from {view} order by {osql}"
                     + (f" offset {off}" if off else "")
                 )
+            return (
+                f"select * from {view} order by {order_text}"
+                + (f" offset {off}" if off else "")
+            )
 
-            def _strip(frame):
-                return frame if src_scope else frame.drop(*helpers)
+        def _strip(frame):
+            return frame if src_scope else frame.drop(*helpers)
 
-            if self._planning:
-                from pyspark.sql import Window as _W
+        if self._planning:
+            from pyspark.sql import Window as _W
 
-                ranked = df.withColumn(
-                    "_ft_rk", F.rank().over(_W.orderBy(*sort_cols))
+            ranked = df.withColumn(
+                "_ft_rk", F.rank().over(_W.orderBy(*sort_cols))
+            )
+            final = _strip(
+                ranked.filter(F.col("_ft_rk") <= off + n).drop("_ft_rk")
+            )
+            return _final_sql(self._scoped_view(final, "_ft_"))
+        top = df.orderBy(*sort_cols).limit(off + n)
+
+        def _tie_pred(boundary):
+            tie = None
+            for h in helpers:
+                c = F.col(h).eqNullSafe(
+                    F.lit(boundary[h]).cast(top.schema[h].dataType)
                 )
-                _strip(
-                    ranked.filter(F.col("_ft_rk") <= off + n).drop(
-                        "_ft_rk"
-                    )
-                ).createOrReplaceTempView(view)
-                views.append(view)
-                return _final_sql(), views
-            top = df.orderBy(*sort_cols).limit(off + n)
+                tie = c if tie is None else (tie & c)
+            return tie
 
-            def _tie_pred(boundary):
-                tie = None
-                for h in helpers:
-                    c = F.col(h).eqNullSafe(
-                        F.lit(boundary[h]).cast(top.schema[h].dataType)
-                    )
-                    tie = c if tie is None else (tie & c)
-                return tie
-
-            if off + n <= 8192:
-                # small page: ONE bounded job; the collected top set
-                # becomes a local relation, and the boundary is its
-                # last row (collect() of orderBy().limit() preserves
-                # the sort). Filtering the LOCAL relation with the
-                # same eqNullSafe predicate keeps SQL tie semantics
-                # (NULL/NaN handling) identical to the cluster side.
-                rows = top.collect()
-                topdf = _local_df(self.spark, rows, top.schema)
-                if len(rows) < off + n or not rows:
-                    # top set complete — or an empty page (FETCH
-                    # FIRST 0 ROWS: Postgres returns nothing; there
-                    # is no boundary row to tie with, review r10 #4)
-                    final = topdf
-                else:
-                    tie = _tie_pred(rows[-1])
-                    final = topdf.filter(~tie).unionByName(
-                        df.filter(tie)
-                    )
-                _strip(final).createOrReplaceTempView(view)
-                views.append(view)
+        if off + n <= 8192:
+            # small page: ONE bounded job; the collected top set
+            # becomes a local relation, and the boundary is its
+            # last row (collect() of orderBy().limit() preserves
+            # the sort). Filtering the LOCAL relation with the
+            # same eqNullSafe predicate keeps SQL tie semantics
+            # (NULL/NaN handling) identical to the cluster side.
+            rows = top.collect()
+            topdf = _local_df(self.spark, rows, top.schema)
+            if len(rows) < off + n or not rows:
+                # top set complete — or an empty page (FETCH
+                # FIRST 0 ROWS: Postgres returns nothing; there
+                # is no boundary row to tie with, review r10 #4)
+                final = topdf
             else:
-                top = top.persist()
-                try:
-                    rev = [
-                        self._order_spec(F.col(h), d, nl, reverse=True)
-                        for h, (_e, d, nl) in zip(helpers, items)
-                    ]
-                    last = top.orderBy(*rev).limit(1).collect()
-                    if len(last) == 1 and top.count() == off + n:
-                        final = top.filter(
-                            ~_tie_pred(last[0])
-                        ).unionByName(df.filter(_tie_pred(last[0])))
-                    else:  # fewer than o+n rows: top set is complete
-                        final = top
-                    # materialize NOW — but on the EXECUTORS, never
-                    # the driver (review r10 #6: a collect() here
-                    # would pull o+n+ties rows through the driver for
-                    # a result a CTAS/INSERT consumer keeps
-                    # distributed). localCheckpoint cuts the lineage,
-                    # so `top` can unpersist before returning.
-                    from andb_spark.caching import checkpoint_tracked
+                tie = _tie_pred(rows[-1])
+                final = topdf.filter(~tie).unionByName(
+                    df.filter(tie)
+                )
+            final = _strip(final)
+        else:
+            top = top.persist()
+            try:
+                rev = [
+                    self._order_spec(F.col(h), d, nl, reverse=True)
+                    for h, (_e, d, nl) in zip(helpers, items)
+                ]
+                last = top.orderBy(*rev).limit(1).collect()
+                if len(last) == 1 and top.count() == off + n:
+                    final = top.filter(
+                        ~_tie_pred(last[0])
+                    ).unionByName(df.filter(_tie_pred(last[0])))
+                else:  # fewer than o+n rows: top set is complete
+                    final = top
+                # materialize NOW — but on the EXECUTORS, never
+                # the driver (review r10 #6: a collect() here
+                # would pull o+n+ties rows through the driver for
+                # a result a CTAS/INSERT consumer keeps
+                # distributed). localCheckpoint cuts the lineage,
+                # so `top` can unpersist before returning.
+                from andb_spark.caching import checkpoint_tracked
 
-                    final = checkpoint_tracked(_strip(final))
-                    final.createOrReplaceTempView(view)
-                    views.append(view)
-                finally:
-                    top.unpersist()
-            return _final_sql(), views
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
+                final = checkpoint_tracked(_strip(final))
+            finally:
+                top.unpersist()
+        return _final_sql(self._scoped_view(final, "_ft_"))
 
     def _ties_source_scope_plan(
         self, head: str, items: list, helpers: list[str]
-    ) -> tuple[DataFrame | None, list[str]]:
+    ) -> DataFrame | None:
         """WITH TIES whose ORDER BY references columns the statement
         does NOT project: Postgres resolves against the source scope,
         so inject each order expression into the head's select list
@@ -8660,19 +8582,19 @@ class AnalyticsEngine:
         pattern, one scope earlier). Simple SELECT heads only:
         DISTINCT refuses (Postgres: ORDER BY expressions must appear
         in the select list), and compound set operations / WITH
-        prefixes keep the projected-columns rule (returns (None, [])
-        → the caller's named refusal). A GROUP BY head works when
+        prefixes keep the projected-columns rule (returns None → the
+        caller's named refusal). A GROUP BY head works when
         the expression is a valid post-aggregation expression —
         exactly Postgres's rule — and falls back to the refusal
         otherwise."""
         blanked = _blank_literals(head)
         if not re.match(r"^\s*select\s+(?!distinct\b)", blanked, re.I):
-            return None, []
+            return None
         f = self._find_top_level_keyword(head, ("from",))
         if f is None or self._find_top_level_keyword(
             head, ("union", "intersect", "except")
         ) is not None:
-            return None, []
+            return None
         inj = ", ".join(
             f"({e}) as {h}"
             for (e, _d, _nl), h in zip(items, helpers)
@@ -8681,9 +8603,9 @@ class AnalyticsEngine:
         try:
             return self._plan_engine_select(new_head)
         except Exception:
-            return None, []
+            return None
 
-    def _rewrite_union_by_name(self, stmt: str) -> tuple[str, list[str]]:
+    def _rewrite_union_by_name(self, stmt: str) -> str:
         """``<q> UNION [ALL] BY NAME <q> [...]`` (DuckDB; Spark SQL
         has no BY NAME union). Columns bind by NAME, not position; a
         column present on only one side fills NULL on the other; the
@@ -8731,7 +8653,7 @@ class AnalyticsEngine:
                 # bodies never reach here: the binder runs the
                 # rewrite on each body at depth 0 first.
                 return self._lift_union_by_name_subqueries(stmt, blanked)
-            return stmt, []
+            return stmt
         pieces: list[str] = []
         pos = 0
         for s, e, _a in seps:
@@ -8770,34 +8692,24 @@ class AnalyticsEngine:
                     " a later branch is ambiguous across the BY NAME"
                     " boundary — parenthesize the sub-union"
                 )
-        views: list[str] = []
-        try:
-            dfs: list[DataFrame] = []
-            for p in pieces:
-                p = p.strip()
-                # a fully parenthesized operand: strip the outer parens
-                if p.startswith("(") and self._match_paren(p, 0) == len(p) - 1:
-                    p = p[1:-1].strip()
-                # a parenthesized BY NAME sub-union re-enters this
-                # rewrite at depth 0 after the paren strip above
-                p, v = self._rewrite_surfaces(p)
-                views += v
-                dfs.append(self.spark.sql(p))
-            acc = dfs[0]
-            for df, (_s, _e, is_all) in zip(dfs[1:], seps):
-                acc = acc.unionByName(df, allowMissingColumns=True)
-                if not is_all:
-                    acc = acc.dropDuplicates()
-            view = f"_ubn_{uuid.uuid4().hex[:8]}"
-            acc.createOrReplaceTempView(view)
-            views.append(view)
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
-        return f"select * from {view}{trailing}", views
+        dfs: list[DataFrame] = []
+        for p in pieces:
+            p = p.strip()
+            # a fully parenthesized operand: strip the outer parens
+            if p.startswith("(") and self._match_paren(p, 0) == len(p) - 1:
+                p = p[1:-1].strip()
+            # a parenthesized BY NAME sub-union re-enters this
+            # rewrite at depth 0 after the paren strip above
+            dfs.append(self.spark.sql(self._rewrite_surfaces(p)))
+        acc = dfs[0]
+        for df, (_s, _e, is_all) in zip(dfs[1:], seps):
+            acc = acc.unionByName(df, allowMissingColumns=True)
+            if not is_all:
+                acc = acc.dropDuplicates()
+        view = self._scoped_view(acc, "_ubn_")
+        return f"select * from {view}{trailing}"
 
-    def _lift_engine_subqueries(self, stmt: str) -> tuple[str, list[str]]:
+    def _lift_engine_subqueries(self, stmt: str) -> str:
         """Generic subquery lift for the select-anchored engine-only
         surfaces (r10 — closes the composability class the BY NAME
         lift opened): a parenthesized subquery whose content carries a
@@ -8815,135 +8727,119 @@ class AnalyticsEngine:
         them natively (LATERAL correlation intact)."""
         blanked = _blank_literals(stmt)
         out: list[str] = []
-        views: list[str] = []
         i = 0
         changed = False
-        try:
-            while i < len(stmt):
-                if blanked[i] == "(":
-                    cp = self._match_paren(stmt, i)
-                    inner = stmt[i + 1: cp].strip()
-                    # slice of the ONE whole-statement blank — same
-                    # length as stmt, so no per-group re-blanking
-                    # (r10 review #7: O(n x parens) on IN-list-heavy
-                    # statements)
-                    ib = blanked[i + 1: cp].strip()
-                    # FROM-first and PIVOT/UNPIVOT-statement subquery
-                    # groups always lift: the standalone plan
-                    # normalizes them (Spark cannot parse the
-                    # spellings)
-                    if re.match(r"^\s*(?:from|pivot|unpivot)\b", ib, re.I):
-                        try:
-                            df, v = self._plan_engine_select(inner)
-                        except EngineError:
-                            raise
-                        except Exception as e:
-                            raise EngineError(
-                                f"FROM-first subquery failed: {e}"
-                            ) from e
-                        views += v
-                        view = f"_esq_{uuid.uuid4().hex[:8]}"
-                        df.createOrReplaceTempView(view)
-                        views.append(view)
-                        out.append(f"(select * from {view})")
-                        changed = True
-                        i = cp + 1
-                        continue
-                    needs = bool(re.match(r"^\s*select\b", ib, re.I)) and (
-                        self._find_top_level_keyword(ib, ("qualify",))
-                        is not None
-                        or re.match(
-                            r"^\s*select\s+distinct\s+on\s*\(", ib, re.I
+        while i < len(stmt):
+            if blanked[i] == "(":
+                cp = self._match_paren(stmt, i)
+                inner = stmt[i + 1: cp].strip()
+                # slice of the ONE whole-statement blank — same
+                # length as stmt, so no per-group re-blanking
+                # (r10 review #7: O(n x parens) on IN-list-heavy
+                # statements)
+                ib = blanked[i + 1: cp].strip()
+                # FROM-first and PIVOT/UNPIVOT-statement subquery
+                # groups always lift: the standalone plan
+                # normalizes them (Spark cannot parse the
+                # spellings)
+                if re.match(r"^\s*(?:from|pivot|unpivot)\b", ib, re.I):
+                    try:
+                        df = self._plan_engine_select(inner)
+                    except EngineError:
+                        raise
+                    except Exception as e:
+                        raise EngineError(
+                            f"FROM-first subquery failed: {e}"
+                        ) from e
+                    view = self._scoped_view(df, "_esq_")
+                    out.append(f"(select * from {view})")
+                    changed = True
+                    i = cp + 1
+                    continue
+                needs = bool(re.match(r"^\s*select\b", ib, re.I)) and (
+                    self._find_top_level_keyword(ib, ("qualify",))
+                    is not None
+                    or re.match(
+                        r"^\s*select\s+distinct\s+on\s*\(", ib, re.I
+                    )
+                    or re.match(
+                        # optional alias prefix (`t.* REPLACE`):
+                        # the spelling must LIFT so the top-level
+                        # rewrite's named refusal reaches the user
+                        # instead of a raw Spark parse error (r10
+                        # ADVICE #3; same prefix as the binder
+                        # gate)
+                        r"^\s*select\s+(?:distinct\s+)?"
+                        r"(?:\w+\s*\.\s*)?\*\s+replace"
+                        r"\s*\(", ib, re.I,
+                    )
+                    # a COLUMNS() call belonging to the content's
+                    # OWN scope — possibly inside function parens
+                    # like sum(columns(..)), but not a deeper
+                    # subquery's (recursion resolves those)
+                    or any(
+                        not self._inside_nested_select(
+                            ib, cm.start()
                         )
-                        or re.match(
-                            # optional alias prefix (`t.* REPLACE`):
-                            # the spelling must LIFT so the top-level
-                            # rewrite's named refusal reaches the user
-                            # instead of a raw Spark parse error (r10
-                            # ADVICE #3; same prefix as the binder
-                            # gate)
-                            r"^\s*select\s+(?:distinct\s+)?"
-                            r"(?:\w+\s*\.\s*)?\*\s+replace"
-                            r"\s*\(", ib, re.I,
-                        )
-                        # a COLUMNS() call belonging to the content's
-                        # OWN scope — possibly inside function parens
-                        # like sum(columns(..)), but not a deeper
-                        # subquery's (recursion resolves those)
-                        or any(
-                            not self._inside_nested_select(
-                                ib, cm.start()
-                            )
-                            for cm in re.finditer(
-                                r"\bcolumns\s*\(", ib, re.I
-                            )
-                        )
-                        # an ASOF / POSITIONAL JOIN at the content's
-                        # own top level: the depth-0 rewrites cannot
-                        # scope inside a subquery (r10 probe — the
-                        # asof ON-parser ran past the closing paren)
-                        or any(
-                            _paren_depth_at(ib, am.start()) == 0
-                            for am in re.finditer(
-                                r"\b(?:asof\s+(?:left\s+)?"
-                                r"|positional\s+)join\b", ib, re.I
-                            )
-                        )
-                        # USING SAMPLE at the content's own top
-                        # level: the depth-0 sample rewrite refuses
-                        # inside subqueries, the standalone plan
-                        # handles it
-                        or any(
-                            _paren_depth_at(ib, um.start()) == 0
-                            for um in re.finditer(
-                                r"\busing\s+sample\b", ib, re.I
-                            )
+                        for cm in re.finditer(
+                            r"\bcolumns\s*\(", ib, re.I
                         )
                     )
-                    if needs:
-                        try:
-                            df, v = self._plan_engine_select(inner)
-                        except EngineError:
-                            raise
-                        except Exception as e:
-                            # equi-correlated bodies decorrelate
-                            # (r10 verdict #2) before refusing
-                            deco = self._decorrelate_engine_subquery(
-                                inner
-                            )
-                            if deco is None:
-                                raise EngineError(
-                                    "QUALIFY / DISTINCT ON / *"
-                                    " REPLACE in a subquery must be"
-                                    " uncorrelated or equi-correlated"
-                                    " (the body plans standalone):"
-                                    f" {e}"
-                                ) from e
-                            spliced, v = deco
-                            views += v
-                            out.append(f"({spliced})")
-                            changed = True
-                            i = cp + 1
-                            continue
-                        views += v
-                        view = f"_esq_{uuid.uuid4().hex[:8]}"
-                        df.createOrReplaceTempView(view)
-                        views.append(view)
-                        out.append(f"(select * from {view})")
+                    # an ASOF / POSITIONAL JOIN at the content's
+                    # own top level: the depth-0 rewrites cannot
+                    # scope inside a subquery (r10 probe — the
+                    # asof ON-parser ran past the closing paren)
+                    or any(
+                        _paren_depth_at(ib, am.start()) == 0
+                        for am in re.finditer(
+                            r"\b(?:asof\s+(?:left\s+)?"
+                            r"|positional\s+)join\b", ib, re.I
+                        )
+                    )
+                    # USING SAMPLE at the content's own top
+                    # level: the depth-0 sample rewrite refuses
+                    # inside subqueries, the standalone plan
+                    # handles it
+                    or any(
+                        _paren_depth_at(ib, um.start()) == 0
+                        for um in re.finditer(
+                            r"\busing\s+sample\b", ib, re.I
+                        )
+                    )
+                )
+                if needs:
+                    try:
+                        df = self._plan_engine_select(inner)
+                    except EngineError:
+                        raise
+                    except Exception as e:
+                        # equi-correlated bodies decorrelate
+                        # (r10 verdict #2) before refusing
+                        deco = self._decorrelate_engine_subquery(
+                            inner
+                        )
+                        if deco is None:
+                            raise EngineError(
+                                "QUALIFY / DISTINCT ON / *"
+                                " REPLACE in a subquery must be"
+                                " uncorrelated or equi-correlated"
+                                " (the body plans standalone):"
+                                f" {e}"
+                            ) from e
+                        out.append(f"({deco})")
                         changed = True
                         i = cp + 1
                         continue
-                out.append(stmt[i])
-                i += 1
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
-        return ("".join(out) if changed else stmt), views
+                    view = self._scoped_view(df, "_esq_")
+                    out.append(f"(select * from {view})")
+                    changed = True
+                    i = cp + 1
+                    continue
+            out.append(stmt[i])
+            i += 1
+        return "".join(out) if changed else stmt
 
-    def _decorrelate_engine_subquery(
-        self, body: str
-    ) -> tuple[str, list[str]] | None:
+    def _decorrelate_engine_subquery(self, body: str) -> str | None:
         """Equi-correlated engine-only subquery bodies (DuckDB
         executes QUALIFY inline under correlation; before r11 these
         were a named refusal): a body whose top-level WHERE carries
@@ -9083,24 +8979,17 @@ class AnalyticsEngine:
         )
         rebuilt = self._inject_partition_keys(rebuilt, part)
         try:
-            df, views = self._plan_engine_select(rebuilt)
+            df = self._plan_engine_select(rebuilt)
         except Exception:
             return None
-        try:
-            view = f"_esq_{uuid.uuid4().hex[:8]}"
-            df.createOrReplaceTempView(view)
-            views.append(view)
-            proj = df.columns[: -len(helpers)]
-            sel = ", ".join(f"`{c}`" for c in proj)
-            pred = " and ".join(
-                f"{h} = ({outer})"
-                for h, (_i, outer) in zip(helpers, corr)
-            )
-            return f"select {sel} from {view} where {pred}", views
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
+        view = self._scoped_view(df, "_esq_")
+        proj = df.columns[: -len(helpers)]
+        sel = ", ".join(f"`{c}`" for c in proj)
+        pred = " and ".join(
+            f"{h} = ({outer})"
+            for h, (_i, outer) in zip(helpers, corr)
+        )
+        return f"select {sel} from {view} where {pred}"
 
     def _split_conjuncts(self, text: str) -> list[str]:
         """Split a predicate on top-level AND (paren/literal-aware,
@@ -9158,9 +9047,7 @@ class AnalyticsEngine:
             i += 1
         return "".join(out)
 
-    def _lift_union_by_name_subqueries(
-        self, stmt: str, blanked: str
-    ) -> tuple[str, list[str]]:
+    def _lift_union_by_name_subqueries(self, stmt: str, blanked: str) -> str:
         """Splice every parenthesized group containing a BY NAME union
         into a select over a per-statement view (the group content
         runs the full ``_rewrite_union_by_name`` recursively — nested
@@ -9170,46 +9057,39 @@ class AnalyticsEngine:
         aggregates over the derived table) is unchanged. A correlated
         subquery cannot bind standalone and is refused by name."""
         out: list[str] = []
-        views: list[str] = []
         i = 0
         changed = False
-        try:
-            while i < len(stmt):
-                if blanked[i] == "(":
-                    cp = self._match_paren(stmt, i)
-                    if re.search(
-                        r"\bunion\s+(?:all\s+)?by\s+name\b",
-                        blanked[i + 1: cp], re.I,
-                    ):
-                        try:
-                            inner, v = self._rewrite_union_by_name(
-                                stmt[i + 1: cp].strip()
-                            )
-                        except EngineError:
-                            raise
-                        except Exception as e:
-                            raise EngineError(
-                                "UNION BY NAME in a subquery must be"
-                                " uncorrelated (the branches plan"
-                                f" standalone): {e}"
-                            ) from e
-                        views += v
-                        out.append(f"({inner})")
-                        changed = True
-                        i = cp + 1
-                        continue
-                out.append(stmt[i])
-                i += 1
-            if not changed:  # backstop — should be unreachable
-                raise EngineError(
-                    "UNION BY NAME inside a subquery is not supported"
-                    " — lift the union into a WITH clause"
-                )
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
-        return "".join(out), views
+        while i < len(stmt):
+            if blanked[i] == "(":
+                cp = self._match_paren(stmt, i)
+                if re.search(
+                    r"\bunion\s+(?:all\s+)?by\s+name\b",
+                    blanked[i + 1: cp], re.I,
+                ):
+                    try:
+                        inner = self._rewrite_union_by_name(
+                            stmt[i + 1: cp].strip()
+                        )
+                    except EngineError:
+                        raise
+                    except Exception as e:
+                        raise EngineError(
+                            "UNION BY NAME in a subquery must be"
+                            " uncorrelated (the branches plan"
+                            f" standalone): {e}"
+                        ) from e
+                    out.append(f"({inner})")
+                    changed = True
+                    i = cp + 1
+                    continue
+            out.append(stmt[i])
+            i += 1
+        if not changed:  # backstop — should be unreachable
+            raise EngineError(
+                "UNION BY NAME inside a subquery is not supported"
+                " — lift the union into a WITH clause"
+            )
+        return "".join(out)
 
     @staticmethod
     def _inside_nested_select(blank: str, idx: int) -> bool:
@@ -9289,9 +9169,7 @@ class AnalyticsEngine:
         ) + stmt[cl_end:]
         return rebuilt, _blank_literals(rebuilt)
 
-    def _rewrite_columns_projection(
-        self, stmt: str
-    ) -> tuple[str, list[str]]:
+    def _rewrite_columns_projection(self, stmt: str) -> str:
         """DuckDB ``COLUMNS('regex')`` / ``COLUMNS(*)`` dynamic
         projection (absent from Spark SQL): every expression
         containing a top-level COLUMNS call is a TEMPLATE that
@@ -9315,7 +9193,7 @@ class AnalyticsEngine:
         blanked = _blank_literals(stmt)
         m = re.match(r"^\s*select\s+(distinct\s+)?", stmt, re.I)
         if not m or not re.search(r"\bcolumns\s*\(", blanked, re.I):
-            return stmt, []
+            return stmt
 
         def _calls_in(
             seg: str, seg_blank: str
@@ -9338,7 +9216,7 @@ class AnalyticsEngine:
             return calls
 
         if not _calls_in(stmt, blanked):
-            return stmt, []  # nested only: the subquery lift owns those
+            return stmt  # nested only: the subquery lift owns those
         stmt, blanked = self._inline_columns_windows(stmt, blanked)
         f = self._find_top_level_keyword(stmt, ("from",))
         if f is None:
@@ -9530,12 +9408,10 @@ class AnalyticsEngine:
                 )
             pos = nxt[0] if nxt else None
         return (
-            stmt[: m.end()] + new_sel + " from "
-            + "".join(rebuilt_tail),
-            [],
+            stmt[: m.end()] + new_sel + " from " + "".join(rebuilt_tail)
         )
 
-    def _rewrite_select_replace(self, stmt: str) -> tuple[str, list[str]]:
+    def _rewrite_select_replace(self, stmt: str) -> str:
         """``SELECT [DISTINCT] * REPLACE (expr AS col [, ...]) FROM
         ...`` (DuckDB star-REPLACE; Spark has EXCEPT but no REPLACE).
         Expanded textually: the FROM list (everything from the
@@ -9573,7 +9449,7 @@ class AnalyticsEngine:
                     " statement's own select list — rewrite nested"
                     " uses as an outer query over a subquery"
                 )
-            return stmt, []
+            return stmt
         cp = self._match_paren(stmt, m.end() - 1)
         items = self._split_top_level(stmt[m.end(): cp])
         rest = stmt[cp + 1:]
@@ -9626,9 +9502,9 @@ class AnalyticsEngine:
             for c in cols
         )
         distinct = m.group(1) or ""
-        return f"select {distinct}{sel} {rest.lstrip()}", []
+        return f"select {distinct}{sel} {rest.lstrip()}"
 
-    def _rewrite_range_join(self, stmt: str) -> tuple[str, list[str]]:
+    def _rewrite_range_join(self, stmt: str) -> str:
         """Substitute the bucketed interval-join plan for a plain inner
         point-in-interval join (same result set — inner join + exact
         range filter — different asymptotics). Fires ONLY on the exact
@@ -9639,7 +9515,6 @@ class AnalyticsEngine:
         exactly as in _rewrite_asof."""
         from andb_spark.operators.rangejoin import bucketed_interval_join
 
-        views: list[str] = []
         quals: set[str] = set()
         shadowed: list[tuple[set[str], set[str]]] = []
 
@@ -9719,35 +9594,28 @@ class AnalyticsEngine:
                 points, intervals, p_col, lo_col, hi_col,
                 keys=keys, bucket_seconds=bucket_s,
             ).drop(*keys)
-            view = f"_rj_{uuid.uuid4().hex[:8]}"
-            out.createOrReplaceTempView(view)
-            views.append(view)
+            view = self._scoped_view(out, "_rj_")
             quals.update({pt, it, pa, ia})
             shadowed.append(({ia.lower(), it.lower()}, dropped_cols))
             return f"from {view}"
 
-        try:
-            new_stmt = self._RANGE_RE.sub(_sub, stmt)
-            for aliases, dropped in shadowed:
-                for qm in re.finditer(r"\b(\w+)\.(\w+)", new_stmt):
-                    if (
-                        qm.group(1).lower() in aliases
-                        and qm.group(2).lower() in dropped
-                    ):
-                        raise EngineError(
-                            f"range join: column {qm.group(0)} is"
-                            " shadowed by a same-named point-side"
-                            " column and is not exposed — alias it"
-                            " before the join"
-                        )
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
+        new_stmt = self._RANGE_RE.sub(_sub, stmt)
+        for aliases, dropped in shadowed:
+            for qm in re.finditer(r"\b(\w+)\.(\w+)", new_stmt):
+                if (
+                    qm.group(1).lower() in aliases
+                    and qm.group(2).lower() in dropped
+                ):
+                    raise EngineError(
+                        f"range join: column {qm.group(0)} is"
+                        " shadowed by a same-named point-side"
+                        " column and is not exposed — alias it"
+                        " before the join"
+                    )
         for q in quals:
             new_stmt = re.sub(rf"\b{re.escape(q)}\.", "", new_stmt,
                               flags=re.I)
-        return new_stmt, views
+        return new_stmt
 
     @staticmethod
     def _match_paren(text: str, openpos: int) -> int:
@@ -9776,7 +9644,7 @@ class AnalyticsEngine:
             i += 1
         raise EngineError("unbalanced parentheses")
 
-    def _lift_asof_subquery_sources(self, stmt: str) -> tuple[str, list[str]]:
+    def _lift_asof_subquery_sources(self, stmt: str) -> str:
         """Bind parenthesized subquery sources that DIRECTLY
         participate in an ASOF JOIN to per-statement temp views, so
         the asof rewrite can resolve them via ``spark.table()`` (r7
@@ -9790,81 +9658,71 @@ class AnalyticsEngine:
         (``_rewrite_surfaces``), so nested ASOF / QUALIFY / DISTINCT
         ON inside the source compose."""
         _blank = _blank_literals
-        views: list[str] = []
 
         def _bind_body(body: str) -> str:
-            b, v = self._rewrite_surfaces(body)
-            views.extend(v)
-            view = f"_sq_{uuid.uuid4().hex[:8]}"
-            self.spark.sql(b).createOrReplaceTempView(view)
-            views.append(view)
-            return view
+            b = self._rewrite_surfaces(body)
+            return self._scoped_view(self.spark.sql(b), "_sq_")
 
-        try:
-            changed = True
-            while changed:
-                changed = False
-                b = _blank(stmt)
-                if not re.search(
-                    r"\basof\s+(?:left\s+)?join\b", b, re.I
-                ):
-                    break
-                # right side: ASOF [LEFT] JOIN ( SELECT ... ) alias
-                for m in re.finditer(
-                    r"\basof\s+(?:left\s+)?join\s*\(", b, re.I
-                ):
-                    op = m.end() - 1
-                    cp = self._match_paren(stmt, op)
-                    inner = stmt[op + 1: cp]
-                    if not re.match(r"\s*select\b", inner, re.I):
-                        continue
-                    am = re.match(
-                        r"\s*(?:as\s+)?(\w+)", stmt[cp + 1:], re.I
-                    )
-                    if not am or am.group(1).lower() == "on":
-                        raise EngineError(
-                            "ASOF JOIN: a subquery source needs an"
-                            " alias (asof join (select ...) x on ...)"
-                        )
-                    view = _bind_body(inner)
-                    # leading space: a zero-space spelling like
-                    # `asof join(select...)` would otherwise glue the
-                    # view onto the keyword (r8 ADVICE #4)
-                    stmt = (
-                        stmt[: op]
-                        + f" {view} {am.group(1)}"
-                        + stmt[cp + 1 + am.end():]
-                    )
-                    changed = True
-                    break
-                if changed:
+        changed = True
+        while changed:
+            changed = False
+            b = _blank(stmt)
+            if not re.search(
+                r"\basof\s+(?:left\s+)?join\b", b, re.I
+            ):
+                break
+            # right side: ASOF [LEFT] JOIN ( SELECT ... ) alias
+            for m in re.finditer(
+                r"\basof\s+(?:left\s+)?join\s*\(", b, re.I
+            ):
+                op = m.end() - 1
+                cp = self._match_paren(stmt, op)
+                inner = stmt[op + 1: cp]
+                if not re.match(r"\s*select\b", inner, re.I):
                     continue
-                # left side: FROM ( SELECT ... ) alias ASOF [LEFT] JOIN
-                for m in re.finditer(r"\bfrom\s*\(", b, re.I):
-                    op = m.end() - 1
-                    cp = self._match_paren(stmt, op)
-                    inner = stmt[op + 1: cp]
-                    if not re.match(r"\s*select\b", inner, re.I):
-                        continue
-                    am = re.match(
-                        r"\s*(?:as\s+)?(\w+)(\s+asof\s+(?:left\s+)?join\b)",
-                        b[cp + 1:], re.I,
+                am = re.match(
+                    r"\s*(?:as\s+)?(\w+)", stmt[cp + 1:], re.I
+                )
+                if not am or am.group(1).lower() == "on":
+                    raise EngineError(
+                        "ASOF JOIN: a subquery source needs an"
+                        " alias (asof join (select ...) x on ...)"
                     )
-                    if not am:
-                        continue
-                    view = _bind_body(inner)
-                    stmt = (
-                        stmt[: op]
-                        + f" {view} {am.group(1)}"
-                        + stmt[cp + 1 + am.end(1):]
-                    )
-                    changed = True
-                    break
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
-        return stmt, views
+                view = _bind_body(inner)
+                # leading space: a zero-space spelling like
+                # `asof join(select...)` would otherwise glue the
+                # view onto the keyword (r8 ADVICE #4)
+                stmt = (
+                    stmt[: op]
+                    + f" {view} {am.group(1)}"
+                    + stmt[cp + 1 + am.end():]
+                )
+                changed = True
+                break
+            if changed:
+                continue
+            # left side: FROM ( SELECT ... ) alias ASOF [LEFT] JOIN
+            for m in re.finditer(r"\bfrom\s*\(", b, re.I):
+                op = m.end() - 1
+                cp = self._match_paren(stmt, op)
+                inner = stmt[op + 1: cp]
+                if not re.match(r"\s*select\b", inner, re.I):
+                    continue
+                am = re.match(
+                    r"\s*(?:as\s+)?(\w+)(\s+asof\s+(?:left\s+)?join\b)",
+                    b[cp + 1:], re.I,
+                )
+                if not am:
+                    continue
+                view = _bind_body(inner)
+                stmt = (
+                    stmt[: op]
+                    + f" {view} {am.group(1)}"
+                    + stmt[cp + 1 + am.end(1):]
+                )
+                changed = True
+                break
+        return stmt
 
     _POSJOIN_RE = re.compile(
         r"\bfrom\s+(?P<lt>\w+)"
@@ -9927,9 +9785,7 @@ class AnalyticsEngine:
     # loud refusal, not a silent truncation.
     _PIVOT_VALUE_CAP = 10_000
 
-    def _rewrite_pivot_statement(
-        self, stmt: str
-    ) -> tuple[str, list[str]]:
+    def _rewrite_pivot_statement(self, stmt: str) -> str:
         """DuckDB's simplified PIVOT / UNPIVOT STATEMENT forms (the
         dynamic spellings; the SQL-standard PIVOT/UNPIVOT clauses are
         native Spark and pass through untouched):
@@ -9961,36 +9817,33 @@ class AnalyticsEngine:
             return self._pivot_stmt_df(s)
         if re.match(r"^unpivot\b", s, re.I):
             return self._unpivot_stmt_df(s)
-        return stmt, []
+        return stmt
 
     @staticmethod
     def _safe_col(c: str) -> F.Column:
         return F.col(c) if re.fullmatch(r"\w+", c) else F.col(f"`{c}`")
 
-    def _pivot_stmt_target(
-        self, s: str, kw: str
-    ) -> tuple[DataFrame, str, list[str]]:
+    def _pivot_stmt_target(self, s: str, kw: str) -> tuple[DataFrame, str]:
         """Resolve a PIVOT/UNPIVOT statement's target: a plain
         table/view name, or a parenthesized subquery planned through
         the full pipeline (so `UNPIVOT (PIVOT ...) ON ...` round
-        trips compose). Returns (df, rest-of-statement, views)."""
+        trips compose). Returns (df, rest-of-statement)."""
         m = re.match(rf"^{kw}\s+(\w+)\s+on\s+(.*)$", s, re.I | re.S)
         if m:
-            return self.spark.table(m.group(1)), m.group(2), []
+            return self.spark.table(m.group(1)), m.group(2)
         pm = re.match(rf"^{kw}\s*\(", s, re.I)
         if pm:
             cp = self._match_paren(s, pm.end() - 1)
             inner = s[pm.end(): cp].strip()
             rm = re.match(r"^\s*on\s+(.*)$", s[cp + 1:], re.I | re.S)
             if rm:
-                df, views = self._plan_engine_select(inner)
-                return df, rm.group(1), views
+                return self._plan_engine_select(inner), rm.group(1)
         raise EngineError(
             f"cannot parse {kw.upper()} statement: {s!r}"
         )
 
-    def _pivot_stmt_df(self, s: str) -> tuple[str, list[str]]:
-        df, rest, tviews = self._pivot_stmt_target(s, "pivot")
+    def _pivot_stmt_df(self, s: str) -> str:
+        df, rest = self._pivot_stmt_target(s, "pivot")
         u = self._find_top_level_keyword(rest, ("using",))
         g = self._find_top_level_keyword(rest, ("group by",))
         t = self._find_top_level_keyword(rest, ("order by", "limit"))
@@ -10177,12 +10030,8 @@ class AnalyticsEngine:
                 res = res.withColumn(
                     c, F.coalesce(self._safe_col(c), F.lit(0))
                 )
-        view = f"_pv_{uuid.uuid4().hex[:8]}"
-        res.createOrReplaceTempView(view)
-        return (
-            f"select * from {view}" + (f" {tail}" if tail else ""),
-            tviews + [view],
-        )
+        view = self._scoped_view(res, "_pv_")
+        return f"select * from {view}" + (f" {tail}" if tail else "")
 
     @staticmethod
     def _pivot_literal(x: str):
@@ -10197,8 +10046,8 @@ class AnalyticsEngine:
             f"PIVOT IN list expects plain literals, got {x!r}"
         )
 
-    def _unpivot_stmt_df(self, s: str) -> tuple[str, list[str]]:
-        df, rest, tviews = self._pivot_stmt_target(s, "unpivot")
+    def _unpivot_stmt_df(self, s: str) -> str:
+        df, rest = self._pivot_stmt_target(s, "unpivot")
         into = self._find_top_level_keyword(rest, ("into",))
         t = self._find_top_level_keyword(rest, ("order by", "limit"))
         on_end = min(
@@ -10243,16 +10092,10 @@ class AnalyticsEngine:
             name_col,
             value_col,
         ).filter(self._safe_col(value_col).isNotNull())
-        view = f"_upv_{uuid.uuid4().hex[:8]}"
-        res.createOrReplaceTempView(view)
-        return (
-            f"select * from {view}" + (f" {tail}" if tail else ""),
-            tviews + [view],
-        )
+        view = self._scoped_view(res, "_upv_")
+        return f"select * from {view}" + (f" {tail}" if tail else "")
 
-    def _rewrite_positional_join(
-        self, stmt: str
-    ) -> tuple[str, list[str]]:
+    def _rewrite_positional_join(self, stmt: str) -> str:
         """``<l> POSITIONAL JOIN <r>`` (DuckDB): zip the two sides
         row-by-row in their natural order; the shorter side pads
         NULL (probed: a FULL pairing on row position, left columns
@@ -10268,104 +10111,92 @@ class AnalyticsEngine:
         inside them)."""
         blanked = _blank_literals(stmt)
         if not re.search(r"\bpositional\s+join\b", blanked, re.I):
-            return stmt, []
-        views: list[str] = []
-        try:
-            stmt, v = self._lift_positional_subquery_sources(stmt)
-            views += v
-            while True:
-                # match on the literal-blanked copy (same length):
-                # the keyword inside a string must never rewrite
-                # (review r11 #2)
-                m = self._POSJOIN_RE.search(_blank_literals(stmt))
-                if not m:
-                    if re.search(
-                        r"\bpositional\s+join\b",
-                        _blank_literals(stmt), re.I,
-                    ):
-                        raise EngineError(
-                            "POSITIONAL JOIN: unsupported source"
-                            " shape — need `FROM <table|(subquery)"
-                            " alias> POSITIONAL JOIN <table|"
-                            "(subquery) alias>`"
-                        )
-                    break
-                lt, la = m.group("lt"), m.group("la") or m.group("lt")
-                rt, ra = m.group("rt"), m.group("ra") or m.group("rt")
-                try:
-                    left = self.spark.table(lt)
-                    right = self.spark.table(rt)
-                except Exception as e:
+            return stmt
+        stmt = self._lift_positional_subquery_sources(stmt)
+        while True:
+            # match on the literal-blanked copy (same length):
+            # the keyword inside a string must never rewrite
+            # (review r11 #2)
+            m = self._POSJOIN_RE.search(_blank_literals(stmt))
+            if not m:
+                if re.search(
+                    r"\bpositional\s+join\b",
+                    _blank_literals(stmt), re.I,
+                ):
                     raise EngineError(
-                        f"POSITIONAL JOIN: cannot resolve sources: {e}"
-                    ) from e
-                # alias-qualified references to DUP-NAMED columns
-                # cannot survive the single-view splice (the
-                # qualifier strip below would leave them ambiguous —
-                # review r11 #3): refuse by name
-                dups = {
-                    c.lower() for c in left.columns
-                } & {c.lower() for c in right.columns}
-                if dups:
-                    rest_b = _blank_literals(stmt)
-                    for al in {la.lower(), ra.lower()}:
-                        for d in dups:
-                            if re.search(
-                                rf"\b{re.escape(al)}\s*\.\s*"
-                                rf"{re.escape(d)}\b", rest_b, re.I,
-                            ):
-                                raise EngineError(
-                                    "POSITIONAL JOIN: qualified"
-                                    f" reference {al}.{d} to a"
-                                    " column present on BOTH sides"
-                                    " — rename it inside a subquery"
-                                    " side first"
-                                )
-                # positional rename around the join: an intermediate
-                # zip view of a CHAIN can itself carry duplicate
-                # names, which name-based selection cannot address
-                # (review r11 #4)
-                nl, nr = len(left.columns), len(right.columns)
-                zl = self._zip_index(left, "_pj_li").toDF(
-                    *[f"_pjl{i}" for i in range(nl)], "_pj_li"
-                )
-                zr = self._zip_index(right, "_pj_ri").toDF(
-                    *[f"_pjr{i}" for i in range(nr)], "_pj_ri"
-                )
-                joined = zl.join(
-                    zr, zl["_pj_li"] == zr["_pj_ri"], "full_outer"
-                )
-                out = joined.select(
-                    *[f"_pjl{i}" for i in range(nl)],
-                    *[f"_pjr{i}" for i in range(nr)],
-                    F.coalesce(
-                        zl["_pj_li"], zr["_pj_ri"]
-                    ).alias("_pj_ord"),
-                ).sortWithinPartitions("_pj_ord").drop("_pj_ord").toDF(
-                    *left.columns, *right.columns
-                )
-                view = f"_pj_{uuid.uuid4().hex[:8]}"
-                out.createOrReplaceTempView(view)
-                views.append(view)
-                stmt = stmt[: m.start()] + f"from {view}" + stmt[m.end():]
-                for al in {la, ra}:
-                    stmt = self._sub_outside_literals(
-                        stmt, f"{al}.", ""
+                        "POSITIONAL JOIN: unsupported source"
+                        " shape — need `FROM <table|(subquery)"
+                        " alias> POSITIONAL JOIN <table|"
+                        "(subquery) alias>`"
                     )
-            return stmt, views
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
+                break
+            lt, la = m.group("lt"), m.group("la") or m.group("lt")
+            rt, ra = m.group("rt"), m.group("ra") or m.group("rt")
+            try:
+                left = self.spark.table(lt)
+                right = self.spark.table(rt)
+            except Exception as e:
+                raise EngineError(
+                    f"POSITIONAL JOIN: cannot resolve sources: {e}"
+                ) from e
+            # alias-qualified references to DUP-NAMED columns
+            # cannot survive the single-view splice (the
+            # qualifier strip below would leave them ambiguous —
+            # review r11 #3): refuse by name
+            dups = {
+                c.lower() for c in left.columns
+            } & {c.lower() for c in right.columns}
+            if dups:
+                rest_b = _blank_literals(stmt)
+                for al in {la.lower(), ra.lower()}:
+                    for d in dups:
+                        if re.search(
+                            rf"\b{re.escape(al)}\s*\.\s*"
+                            rf"{re.escape(d)}\b", rest_b, re.I,
+                        ):
+                            raise EngineError(
+                                "POSITIONAL JOIN: qualified"
+                                f" reference {al}.{d} to a"
+                                " column present on BOTH sides"
+                                " — rename it inside a subquery"
+                                " side first"
+                            )
+            # positional rename around the join: an intermediate
+            # zip view of a CHAIN can itself carry duplicate
+            # names, which name-based selection cannot address
+            # (review r11 #4)
+            nl, nr = len(left.columns), len(right.columns)
+            zl = self._zip_index(left, "_pj_li").toDF(
+                *[f"_pjl{i}" for i in range(nl)], "_pj_li"
+            )
+            zr = self._zip_index(right, "_pj_ri").toDF(
+                *[f"_pjr{i}" for i in range(nr)], "_pj_ri"
+            )
+            joined = zl.join(
+                zr, zl["_pj_li"] == zr["_pj_ri"], "full_outer"
+            )
+            out = joined.select(
+                *[f"_pjl{i}" for i in range(nl)],
+                *[f"_pjr{i}" for i in range(nr)],
+                F.coalesce(
+                    zl["_pj_li"], zr["_pj_ri"]
+                ).alias("_pj_ord"),
+            ).sortWithinPartitions("_pj_ord").drop("_pj_ord").toDF(
+                *left.columns, *right.columns
+            )
+            view = self._scoped_view(out, "_pj_")
+            stmt = stmt[: m.start()] + f"from {view}" + stmt[m.end():]
+            for al in {la, ra}:
+                stmt = self._sub_outside_literals(
+                    stmt, f"{al}.", ""
+                )
+        return stmt
 
-    def _lift_positional_subquery_sources(
-        self, stmt: str
-    ) -> tuple[str, list[str]]:
+    def _lift_positional_subquery_sources(self, stmt: str) -> str:
         """Bind parenthesized subquery sides of a POSITIONAL JOIN to
         per-statement views named AS their alias (the same lazy move
         as ASOF's subquery sides) — bodies plan through the full
         pipeline, so ORDER BY / engine-only SQL inside them compose."""
-        views: list[str] = []
 
         def _bind(op: int) -> tuple[str, int] | None:
             """Bind the subquery opening at ``op`` to a view named as
@@ -10393,59 +10224,53 @@ class AnalyticsEngine:
                     f"POSITIONAL JOIN: subquery alias {alias!r}"
                     " collides with an existing table/view"
                 )
-            df, v = self._plan_engine_select(stmt[op + 1: cp])
-            views.extend(v)
+            df = self._plan_engine_select(stmt[op + 1: cp])
             df.createOrReplaceTempView(alias)
-            views.append(alias)
+            self._stmt_views.append(alias)
             return alias, cp + 1 + am.end()
 
-        try:
-            changed = True
-            while changed:
-                changed = False
-                b = _blank_literals(stmt)
-                # right side: POSITIONAL JOIN ( SELECT ... ) alias
-                for m in re.finditer(
-                    r"\bpositional\s+join\s*\(", b, re.I
-                ):
-                    bound = _bind(m.end() - 1)
-                    if bound is None:
-                        continue
-                    alias, end = bound
-                    stmt = (
-                        stmt[: m.start()]
-                        + f"positional join {alias} " + stmt[end:]
-                    )
-                    changed = True
-                    break
-                if changed:
+        changed = True
+        while changed:
+            changed = False
+            b = _blank_literals(stmt)
+            # right side: POSITIONAL JOIN ( SELECT ... ) alias
+            for m in re.finditer(
+                r"\bpositional\s+join\s*\(", b, re.I
+            ):
+                bound = _bind(m.end() - 1)
+                if bound is None:
                     continue
-                # left side: FROM ( SELECT ... ) alias POSITIONAL JOIN
-                for m in re.finditer(r"\bfrom\s*\(", b, re.I):
-                    op = m.end() - 1
-                    cp = self._match_paren(stmt, op)
-                    if not re.match(
-                        r"\s*(?:as\s+)?\w+\s+positional\s+join\b",
-                        b[cp + 1:], re.I,
-                    ):
-                        continue
-                    bound = _bind(op)
-                    if bound is None:
-                        continue
-                    alias, end = bound
-                    stmt = (
-                        stmt[: m.start()] + f"from {alias} "
-                        + stmt[end:]
-                    )
-                    changed = True
-                    break
-            return stmt, views
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
+                alias, end = bound
+                stmt = (
+                    stmt[: m.start()]
+                    + f"positional join {alias} " + stmt[end:]
+                )
+                changed = True
+                break
+            if changed:
+                continue
+            # left side: FROM ( SELECT ... ) alias POSITIONAL JOIN
+            for m in re.finditer(r"\bfrom\s*\(", b, re.I):
+                op = m.end() - 1
+                cp = self._match_paren(stmt, op)
+                if not re.match(
+                    r"\s*(?:as\s+)?\w+\s+positional\s+join\b",
+                    b[cp + 1:], re.I,
+                ):
+                    continue
+                bound = _bind(op)
+                if bound is None:
+                    continue
+                alias, end = bound
+                stmt = (
+                    stmt[: m.start()] + f"from {alias} "
+                    + stmt[end:]
+                )
+                changed = True
+                break
+        return stmt
 
-    def _rewrite_asof(self, stmt: str) -> tuple[str, list[str]]:
+    def _rewrite_asof(self, stmt: str) -> str:
         """Materialize every ASOF JOIN clause into a temp view and
         substitute it into the statement (view columns = left columns +
         non-colliding right columns, unqualified — alias qualifiers in
@@ -10464,14 +10289,13 @@ class AnalyticsEngine:
         semantics — tolerance masks the MATCH, it doesn't filter the
         row), where DuckDB 1.0 post-filters the NULL-extended row out,
         making LEFT behave like inner; the differential suite pins
-        both behaviors side by side. Returns the rewritten statement
-        and the views to drop after materialization."""
+        both behaviors side by side."""
         from andb_spark.operators.asof import asof_join
 
         # parenthesized subquery sources become lazy temp views first
         # (every _rewrite_asof call site gets the composition for
-        # free); a later failure below must drop these too
-        stmt, views = self._lift_asof_subquery_sources(stmt)
+        # free)
+        stmt = self._lift_asof_subquery_sources(stmt)
         quals: set[str] = set()
         shadowed: list[tuple[set[str], set[str]]] = []
 
@@ -10616,9 +10440,7 @@ class AnalyticsEngine:
                 # marker (payload values may be legitimately NULL)
                 out = out.filter(F.col(marker).isNotNull())
             out = out.drop(marker)
-            view = f"_asof_{uuid.uuid4().hex[:8]}"
-            out.createOrReplaceTempView(view)
-            views.append(view)
+            view = self._scoped_view(out, "_asof_")
             # right columns NOT exposed (name collision with the left
             # side): a statement that still references them through the
             # right alias must fail loudly, not silently resolve to the
@@ -10632,51 +10454,44 @@ class AnalyticsEngine:
             quals.update({lt, rt, la, ra})
             return f"from {view}"
 
-        try:
-            new_stmt = self._ASOF_RE.sub(_sub, stmt)
-            # catch-all for unmatched ASOF shapes: Spark has no ASOF
-            # JOIN syntax, so anything the rewrite didn't consume —
-            # e.g. a parenthesized subquery source — would otherwise
-            # surface as Spark's raw parse error. Refuse by name with
-            # the working alternative (r6 verdict #4). String literals
-            # are blanked first so data can't false-positive; the
-            # pattern treats '' as an escaped quote INSIDE a literal
-            # (r7 verdict #3 — '[^']*' mis-scanned 'it''s asof join'
-            # as two literals with live text between them).
-            blanked = re.sub(r"'(?:[^']|'')*'", "''", new_stmt)
-            if re.search(r"\basof\s+(left\s+)?join\b", blanked, re.I):
-                raise EngineError(
-                    "ASOF JOIN: unsupported source shape — sides must"
-                    " be plain table/view/CTE names or aliased"
-                    " (SELECT ...) subqueries; lift anything else"
-                    " (VALUES lists, unaliased subqueries, comma"
-                    " joins) into a WITH clause first"
-                )
-            for aliases, dropped in shadowed:
-                for qm in re.finditer(r"\b(\w+)\.(\w+)", new_stmt):
-                    if (
-                        qm.group(1).lower() in aliases
-                        and qm.group(2).lower() in dropped
-                    ):
-                        raise EngineError(
-                            f"ASOF JOIN: column {qm.group(0)} is"
-                            " shadowed by a same-named left-side column"
-                            " and is not exposed — alias it on the"
-                            " right side before the join"
-                        )
-        except BaseException:
-            # a raise after view creation must not leak the views —
-            # the caller only learns of them through the return value
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
+        new_stmt = self._ASOF_RE.sub(_sub, stmt)
+        # catch-all for unmatched ASOF shapes: Spark has no ASOF
+        # JOIN syntax, so anything the rewrite didn't consume —
+        # e.g. a parenthesized subquery source — would otherwise
+        # surface as Spark's raw parse error. Refuse by name with
+        # the working alternative (r6 verdict #4). String literals
+        # are blanked first so data can't false-positive; the
+        # pattern treats '' as an escaped quote INSIDE a literal
+        # (r7 verdict #3 — '[^']*' mis-scanned 'it''s asof join'
+        # as two literals with live text between them).
+        blanked = re.sub(r"'(?:[^']|'')*'", "''", new_stmt)
+        if re.search(r"\basof\s+(left\s+)?join\b", blanked, re.I):
+            raise EngineError(
+                "ASOF JOIN: unsupported source shape — sides must"
+                " be plain table/view/CTE names or aliased"
+                " (SELECT ...) subqueries; lift anything else"
+                " (VALUES lists, unaliased subqueries, comma"
+                " joins) into a WITH clause first"
+            )
+        for aliases, dropped in shadowed:
+            for qm in re.finditer(r"\b(\w+)\.(\w+)", new_stmt):
+                if (
+                    qm.group(1).lower() in aliases
+                    and qm.group(2).lower() in dropped
+                ):
+                    raise EngineError(
+                        f"ASOF JOIN: column {qm.group(0)} is"
+                        " shadowed by a same-named left-side column"
+                        " and is not exposed — alias it on the"
+                        " right side before the join"
+                    )
         # view columns are unqualified: strip the join aliases
         # (and base-table qualifiers) from the remaining statement
         for q in quals:
             new_stmt = re.sub(
                 rf"\b{re.escape(q)}\.", "", new_stmt, flags=re.I
             )
-        return new_stmt, views
+        return new_stmt
 
     @staticmethod
     def _sub_ident(text: str, name: str, repl: str) -> str:
@@ -10820,7 +10635,7 @@ class AnalyticsEngine:
             i += 1
         return "".join(out)
 
-    def _bind_ctes_for_surfaces(self, stmt: str) -> tuple[str, list[str]]:
+    def _bind_ctes_for_surfaces(self, stmt: str) -> str:
         """Bind WITH-clause CTEs to per-statement temp views when —
         and only when — the main body uses an engine SQL surface that
         resolves sources via ``spark.table()`` (ASOF JOIN, the
@@ -10836,11 +10651,11 @@ class AnalyticsEngine:
         JOIN, no keyed-BETWEEN join — pass through untouched for Spark
         to plan natively (including WITH RECURSIVE, which Spark 4
         handles and this binder must never unroll). Returns the
-        unwrapped main statement and the views to drop."""
+        unwrapped main statement."""
         if not re.match(r"^\s*with\b", stmt, re.I):
-            return stmt, []
+            return stmt
         if re.match(r"^\s*with\s+recursive\b", stmt, re.I):
-            return stmt, []
+            return stmt
         # ''-escape-aware blanking (r7 verdict #3): '[^']*' treated
         # 'it''s asof join' as two literals with live text between
         # them, so keyword detection could fire inside a string.
@@ -10875,7 +10690,7 @@ class AnalyticsEngine:
                 r"\*\s+replace\s*\(", blanked, re.I,
             )
         ):
-            return stmt, []
+            return stmt
         # parse: with name as ( body ) [, name2 as ( body2 )]* main
         pos = re.match(r"^\s*with\s+", stmt, re.I).end()
         ctes: list[tuple[str, str]] = []
@@ -10885,7 +10700,7 @@ class AnalyticsEngine:
                 # unparseable CTE head (e.g. column-aliased
                 # `name(a,b) as (...)`): leave the statement alone —
                 # the surface's own catch-all raises the named error
-                return stmt, []
+                return stmt
             name = hm.group(1)
             i = pos + hm.end()
             depth, in_str = 1, False
@@ -10984,34 +10799,24 @@ class AnalyticsEngine:
                 )
             )
         ):
-            return stmt, []
-        views: list[str] = []
+            return stmt
         bound: list[tuple[str, str]] = []  # (cte name, view name)
-        try:
-            for name, body in ctes:
-                for cname, vname in bound:
-                    body = self._sub_ident(body, cname, vname)
-                # a CTE body may itself use the surfaces (an asof
-                # enrichment defined once, joined downstream), so it
-                # runs the whole surface pipeline standalone (r7
-                # ADVICE #4: a body using the engine-only QUALIFY /
-                # DISTINCT ON surfaces sits at paren depth > 0 where
-                # the depth-0 rewrites never reach). Its helper views
-                # live until the caller's post-fetch cleanup, exactly
-                # like main-body rewrite views.
-                body, v = self._rewrite_surfaces(body)
-                views += v
-                view = f"_cte_{uuid.uuid4().hex[:8]}"
-                self.spark.sql(body).createOrReplaceTempView(view)
-                views.append(view)
-                bound.append((name, view))
+        for name, body in ctes:
             for cname, vname in bound:
-                main = self._sub_ident(main, cname, vname)
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
-        return main, views
+                body = self._sub_ident(body, cname, vname)
+            # a CTE body may itself use the surfaces (an asof
+            # enrichment defined once, joined downstream), so it
+            # runs the whole surface pipeline standalone (r7
+            # ADVICE #4: a body using the engine-only QUALIFY /
+            # DISTINCT ON surfaces sits at paren depth > 0 where
+            # the depth-0 rewrites never reach). Its helper views
+            # belong to the statement, like main-body rewrite views.
+            body = self._rewrite_surfaces(body)
+            view = self._scoped_view(self.spark.sql(body), "_cte_")
+            bound.append((name, view))
+        for cname, vname in bound:
+            main = self._sub_ident(main, cname, vname)
+        return main
 
     # ---------------------------------------------- surface pipeline --
     # The DuckDB-surface rewrite pipeline, written down once. Every
@@ -11020,12 +10825,13 @@ class AnalyticsEngine:
     # INSERT ... SELECT sources, view bodies, and the bodies the
     # surfaces themselves plan (CTEs, ASOF subquery sources, DISTINCT
     # ON / QUALIFY inner statements, BY NAME branches). Each entry is
-    # (pass, EXPLAIN header note). A pass maps SQL text to text, or to
-    # (text, per-statement views). EXPLAIN prints, once and in table
-    # order, the note of every entry whose pass returned views — {n}
-    # is their view count, {bucket} the session's range-join bucket
-    # width (the reference's EXPLAIN shows its plan choices in the
-    # same header position, portal.py:124-128).
+    # (pass, EXPLAIN header note). A pass maps SQL text to text; the
+    # helper views it binds belong to the statement (_scoped_view).
+    # EXPLAIN prints, once and in table order, the note of every entry
+    # whose pass bound views — {n} is their view count, {bucket} the
+    # session's range-join bucket width (the reference's EXPLAIN shows
+    # its plan choices in the same header position,
+    # portal.py:124-128).
     #
     # Each pass consumes its own spelling, so a nested run over
     # already-rewritten text only finishes what is left. The DuckDB
@@ -11100,26 +10906,18 @@ class AnalyticsEngine:
 
     def _rewrite_surfaces(
         self, stmt: str, fired: dict[str, int] | None = None
-    ) -> tuple[str, list[str]]:
-        """Apply ``_SURFACE_PASSES`` in order. Returns the SQL Spark
-        plans and the per-statement views bound on the way (the caller
-        drops them after materializing); if any pass raises, every
-        view bound so far is dropped first. ``fired``, when given,
-        counts the views bound under each entry note, in table order —
-        EXPLAIN's header."""
-        views: list[str] = []
-        try:
-            for name, note in self._SURFACE_PASSES:
-                out = getattr(self, name)(stmt)
-                stmt, bound = (out, []) if isinstance(out, str) else out
-                views += bound
-                if bound and note and fired is not None:
-                    fired[note] = fired.get(note, 0) + len(bound)
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
-        return stmt, views
+    ) -> str:
+        """Apply ``_SURFACE_PASSES`` in order and return the SQL Spark
+        plans. ``fired``, when given, counts the views each entry's
+        pass bound, under its note, in table order — EXPLAIN's
+        header."""
+        for name, note in self._SURFACE_PASSES:
+            mark = len(self._stmt_views)
+            stmt = getattr(self, name)(stmt)
+            bound = len(self._stmt_views) - mark
+            if bound and note and fired is not None:
+                fired[note] = fired.get(note, 0) + bound
+        return stmt
 
     # AnDB-dialect compat: `LIMIT off,n` (MySQL-style, parser_.py:
     # 138-148) → standard `LIMIT n OFFSET off`.
@@ -11133,18 +10931,12 @@ class AnalyticsEngine:
     # (Delta/Iceberg snapshot semantics over plain parquet).
     _VERSION_RE = re.compile(r"\b(\w+)\s+version\s+as\s+of\s+(\d+)", re.I)
 
-    def _bind_versions(self, stmt: str) -> tuple[str, list[str]]:
+    def _bind_versions(self, stmt: str) -> str:
         """Bind every ``<table> VERSION AS OF <n>`` to a per-statement
         view over that version's files."""
-        views: list[str] = []
 
         def _version_view(m: re.Match) -> str:
             name, vnum = m.group(1), int(m.group(2))
-            # unique per statement: a concurrent statement resolving
-            # the "same" (name, vnum) — e.g. across a RESTORE that
-            # renumbered history — can never race on a shared binding
-            view = f"{name}__v{vnum}_{uuid.uuid4().hex[:8]}"
-            views.append(view)
             paths = self._resolve_version(name, vnum)
             # The CURRENT declared schema drives historical reads (so a
             # metadata-only DROP COLUMN cannot resurrect through time
@@ -11169,15 +10961,14 @@ class AnalyticsEngine:
                         c.lower() for c in inferred.columns
                     }:
                         reader = reader.schema(declared)
-            reader.parquet(*paths).createOrReplaceTempView(view)
-            return view
+            # unique per statement: a concurrent statement resolving
+            # the "same" (name, vnum) — e.g. across a RESTORE that
+            # renumbered history — can never race on a shared binding
+            return self._scoped_view(
+                reader.parquet(*paths), f"{name}__v{vnum}_"
+            )
 
-        try:
-            return self._VERSION_RE.sub(_version_view, stmt), views
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
+        return self._VERSION_RE.sub(_version_view, stmt)
 
     def _normalize_stored_sql(self, sql: str) -> str:
         """View, materialized-view and macro SQL is stored as written;
@@ -11189,34 +10980,7 @@ class AnalyticsEngine:
         )
 
     def _select(self, stmt: str) -> Result:
-        stmt, views = self._rewrite_surfaces(stmt)
-        try:
-            return self._select_resolved(stmt)
-        finally:
-            # bounded: no per-query leak
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-
-    def _plan_engine_select(self, query: str) -> tuple[DataFrame, list[str]]:
-        """Plan a SELECT through the surface pipeline ``_select`` runs,
-        returning the (lazy) DataFrame and the per-statement views to
-        drop AFTER the caller materializes it. This is what lets CTAS,
-        INSERT ... SELECT, EXPLAIN ANALYZE, DESCRIBE and view bodies
-        compose with engine-only SQL (ASOF / range joins, QUALIFY,
-        DISTINCT ON, quantified comparisons, UNION BY NAME,
-        star-REPLACE, time travel)."""
-        query, views = self._rewrite_surfaces(query)
-        try:
-            return self.spark.sql(query), views
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
-
-    def _select_resolved(self, stmt: str) -> Result:
-        """SELECT body after dialect/version rewriting (split out so
-        the per-statement version views can be dropped in one place
-        after materialization)."""
+        stmt = self._rewrite_surfaces(stmt)
         mode = self.session_vars.get("andb.ann_mode", "exact")
         ann = self._ANN_RE.match(stmt) if mode != "exact" else None
         if ann:
@@ -11238,15 +11002,16 @@ class AnalyticsEngine:
                 (F.lit(1.0) - F.col("cos_sim")).alias(ann.group("alias")),
             )
             return self._fetch(df)
-        pruned = self._zone_prune_view(stmt)
-        run_stmt, tmp = pruned if pruned else (stmt, None)
-        try:
-            # _fetch materializes fully, so dropping the unique pruned
-            # view after is safe — no lazy plan escapes holding it.
-            return self._fetch(self.spark.sql(run_stmt))
-        finally:
-            if tmp:
-                self.spark.catalog.dropTempView(tmp)
+        return self._fetch(self.spark.sql(self._zone_prune_view(stmt) or stmt))
+
+    def _plan_engine_select(self, query: str) -> DataFrame:
+        """Plan a SELECT through the surface pipeline ``_select`` runs
+        and return the (lazy) DataFrame. This is what lets CTAS,
+        INSERT ... SELECT, EXPLAIN ANALYZE, DESCRIBE and view bodies
+        compose with engine-only SQL (ASOF / range joins, QUALIFY,
+        DISTINCT ON, quantified comparisons, UNION BY NAME,
+        star-REPLACE, time travel)."""
+        return self.spark.sql(self._rewrite_surfaces(query))
 
     def _fetch(self, df: DataFrame) -> Result:
         """Materialize a SELECT for the reference-shaped Result, with a
@@ -11323,22 +11088,18 @@ class AnalyticsEngine:
             # table — the Spark analog of the reference portal's
             # per-operator actual_rows/elapsed instrumentation
             # (portal.py:93-118, physical/base.py:22-24).
-            df, views = self._plan_engine_select(ana.group(1))
-            try:
-                t0 = time.perf_counter()
-                # Execute THIS queryExecution's physical plan without
-                # materializing rows on the driver: toRdd() runs the
-                # same executedPlan (populating its SQLMetrics) and the
-                # JVM-side count() only ships per-partition counts
-                # back. A plain df.count() would instead execute a
-                # rewritten Aggregate plan, and df.collect() would hold
-                # the full result set driver-side — unbounded at scale.
-                n = df._jdf.queryExecution().toRdd().count()
-                dt = time.perf_counter() - t0
-                jplan = df._jdf.queryExecution().executedPlan()
-            finally:
-                for v in views:
-                    self.spark.catalog.dropTempView(v)
+            df = self._plan_engine_select(ana.group(1))
+            t0 = time.perf_counter()
+            # Execute THIS queryExecution's physical plan without
+            # materializing rows on the driver: toRdd() runs the
+            # same executedPlan (populating its SQLMetrics) and the
+            # JVM-side count() only ships per-partition counts
+            # back. A plain df.count() would instead execute a
+            # rewritten Aggregate plan, and df.collect() would hold
+            # the full result set driver-side — unbounded at scale.
+            n = df._jdf.queryExecution().toRdd().count()
+            dt = time.perf_counter() - t0
+            jplan = df._jdf.queryExecution().executedPlan()
             return Result(
                 columns=[
                     "Physical Plan", "rows", "elapsed_sec", "Operator Metrics"
@@ -11357,7 +11118,7 @@ class AnalyticsEngine:
         was = self._planning
         self._planning = True
         try:
-            inner, views = self._rewrite_surfaces(inner, fired)
+            inner = self._rewrite_surfaces(inner, fired)
         finally:
             self._planning = was
         bucket = self.session_vars.get("andb.range_bucket_seconds", 1800)
@@ -11365,41 +11126,35 @@ class AnalyticsEngine:
             note.format(n=n, bucket=bucket) + "\n"
             for note, n in fired.items()
         )
-        tmp = None
-        try:
-            mode = self.session_vars.get("andb.ann_mode", "exact")
-            ann = self._ANN_RE.match(inner) if mode != "exact" else None
-            if ann:
-                # Surface the access-path decision (the reference's
-                # EXPLAIN shows its scan choice the same way —
-                # IndexScan vs TableScan in the physical plan text).
-                from andb_spark.plans.ann import choose_topk_path
+        mode = self.session_vars.get("andb.ann_mode", "exact")
+        ann = self._ANN_RE.match(inner) if mode != "exact" else None
+        if ann:
+            # Surface the access-path decision (the reference's
+            # EXPLAIN shows its scan choice the same way —
+            # IndexScan vs TableScan in the physical plan text).
+            from andb_spark.plans.ann import choose_topk_path
 
-                path = choose_topk_path(
-                    mode, self.catalog["stats"].get(ann.group("table"))
-                )
-                header += (
-                    f"-- vector access path: {path}"
-                    f" (andb.ann_mode={mode})\n"
-                )
-            # EXPLAIN shows the plan _select would run — including the
-            # zone-pruned scan when data skipping applies (the
-            # reference's EXPLAIN surfaces its IndexScan-vs-TableScan
-            # choice the same way).
-            pruned = self._zone_prune_view(inner)
-            run_inner, tmp = pruned if pruned else (inner, None)
-            if tmp:
-                header += (
-                    f"-- zone maps: "
-                    f"{self.session_vars['andb.last_zone_prune']}\n"
-                )
-            df = self.spark.sql(run_inner)
-            qe = df._jdf.queryExecution()
-            logical = header + qe.optimizedPlan().toString()
-            physical = qe.executedPlan().toString()
-        finally:
-            for v in views + ([tmp] if tmp else []):
-                self.spark.catalog.dropTempView(v)
+            path = choose_topk_path(
+                mode, self.catalog["stats"].get(ann.group("table"))
+            )
+            header += (
+                f"-- vector access path: {path}"
+                f" (andb.ann_mode={mode})\n"
+            )
+        # EXPLAIN shows the plan _select would run — including the
+        # zone-pruned scan when data skipping applies (the
+        # reference's EXPLAIN surfaces its IndexScan-vs-TableScan
+        # choice the same way).
+        pruned = self._zone_prune_view(inner)
+        if pruned:
+            header += (
+                f"-- zone maps: "
+                f"{self.session_vars['andb.last_zone_prune']}\n"
+            )
+        df = self.spark.sql(pruned or inner)
+        qe = df._jdf.queryExecution()
+        logical = header + qe.optimizedPlan().toString()
+        physical = qe.executedPlan().toString()
         # Two-column, logical + physical — the reference's EXPLAIN output
         # shape (portal.py:124-128).
         return Result(
@@ -11859,12 +11614,13 @@ class AnalyticsEngine:
             meta["matview_last_refresh"] = "noop"
             self._save_catalog()
             return 0
-        # Bind ONLY the delta files to a UNIQUE temp view and rewrite
-        # the defining query's FROM token to it — never rebinding the
-        # base's session-global view, so a concurrent SELECT on the
-        # same SparkSession can never observe the delta-only binding
-        # (temp-view resolution happens at spark.sql analysis time, so
-        # the partial plan stays pinned after the view is dropped).
+        # Bind ONLY the delta files to a UNIQUE statement-scoped temp
+        # view and rewrite the defining query's FROM token to it —
+        # never rebinding the base's session-global view, so a
+        # concurrent SELECT on the same SparkSession can never observe
+        # the delta-only binding (temp-view resolution happens at
+        # spark.sql analysis time, so the partial plan stays pinned
+        # after the view is dropped).
         # The token rewrite targets THE table reference; if the
         # `from <base>` pattern appears more than once (e.g. a column
         # named like the base inside `extract(epoch from ts)`),
@@ -11873,22 +11629,21 @@ class AnalyticsEngine:
         from_pat = rf"(\bfrom\s+){re.escape(base)}\b"
         if len(re.findall(from_pat, plan["state_sql"], re.I)) != 1:
             return None
-        delta_view = f"{base}__mvdelta_{uuid.uuid4().hex[:8]}"
-        self._read_files(
-            base, [os.path.join(self.warehouse, r) for r in delta]
-        ).createOrReplaceTempView(delta_view)
-        try:
-            partial = self.spark.sql(
-                re.sub(
-                    from_pat,
-                    rf"\g<1>{delta_view}",
-                    plan["state_sql"],
-                    count=1,
-                    flags=re.I,
-                )
+        delta_view = self._scoped_view(
+            self._read_files(
+                base, [os.path.join(self.warehouse, r) for r in delta]
+            ),
+            f"{base}__mvdelta_",
+        )
+        partial = self.spark.sql(
+            re.sub(
+                from_pat,
+                rf"\g<1>{delta_view}",
+                plan["state_sql"],
+                count=1,
+                flags=re.I,
             )
-        finally:
-            self.spark.catalog.dropTempView(delta_view)
+        )
         merge = [
             getattr(F, fn)(alias).alias(alias)
             for alias, fn in plan["aggs"]
@@ -11973,46 +11728,41 @@ class AnalyticsEngine:
         the commit point)."""
         self._writable_meta(name)
         query = self._normalize_ctas_body(query)
-        src, views = self._plan_engine_select(query)
+        src = self._plan_engine_select(query)
+        columns = _columns_from_schema(src.schema)
+        meta = self._meta(name)
+        old_cols = meta["columns"]
+        old_stats = self.catalog["stats"].get(name)
+        old_idx = {
+            k: v for k, v in self.catalog["indexes"].items()
+            if v["table"] == name
+        }
+        meta["columns"] = columns
+        # dependents die with the replaced contents, exactly as in
+        # the drop-then-create spelling (r9 review #6): the ANN
+        # stats describe the OLD rows and the indexes may name
+        # columns the new schema lacks. Cleared in the SAME commit.
+        self.catalog["stats"].pop(name, None)
+        for k in old_idx:
+            del self.catalog["indexes"][k]
         try:
-            columns = _columns_from_schema(src.schema)
-            meta = self._meta(name)
-            old_cols = meta["columns"]
-            old_stats = self.catalog["stats"].get(name)
-            old_idx = {
-                k: v for k, v in self.catalog["indexes"].items()
-                if v["table"] == name
-            }
-            meta["columns"] = columns
-            # dependents die with the replaced contents, exactly as in
-            # the drop-then-create spelling (r9 review #6): the ANN
-            # stats describe the OLD rows and the indexes may name
-            # columns the new schema lacks. Cleared in the SAME commit.
-            self.catalog["stats"].pop(name, None)
-            for k in old_idx:
-                del self.catalog["indexes"][k]
-            try:
-                n = self._stage_version(name, src)
-                self._commit_staged(name)
-            except BaseException:
-                meta["columns"] = old_cols
-                if old_stats is not None:
-                    self.catalog["stats"][name] = old_stats
-                self.catalog["indexes"].update(old_idx)
-                meta.pop("_staged", None)
-                raise
-            self._maybe_auto_refresh(name)
-            return Result(effect_rows=n)
-        finally:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
+            n = self._stage_version(name, src)
+            self._commit_staged(name)
+        except BaseException:
+            meta["columns"] = old_cols
+            if old_stats is not None:
+                self.catalog["stats"][name] = old_stats
+            self.catalog["indexes"].update(old_idx)
+            meta.pop("_staged", None)
+            raise
+        self._maybe_auto_refresh(name)
+        return Result(effect_rows=n)
 
     def _materialize_select(
         self, name: str, query: str, matview_sql: str | None = None
     ) -> Result:
         self._check_name_free(name)
         plan = _matview_plan(matview_sql) if matview_sql else None
-        surface_views: list[str] = []
         if matview_sql:
             # matviews keep the bare-Spark-SQL contract: the remembered
             # SQL re-plans on every REFRESH (and incrementally via
@@ -12025,17 +11775,9 @@ class AnalyticsEngine:
                 src.select(*plan["out_cols"]).schema if plan else src.schema
             )
         else:
-            # CTAS composes with the engine-only SQL surfaces (r9):
-            # the views drop after _overwrite materializes the source
-            src, surface_views = self._plan_engine_select(query)
-            try:
-                columns = _columns_from_schema(src.schema)
-            except BaseException:
-                # e.g. an unsupported column type — don't leak the
-                # per-statement surface views past the refusal
-                for v in surface_views:
-                    self.spark.catalog.dropTempView(v)
-                raise
+            # CTAS composes with the engine-only SQL surfaces (r9)
+            src = self._plan_engine_select(query)
+            columns = _columns_from_schema(src.schema)
         meta: dict = {"columns": columns}
         if matview_sql:
             meta["matview_sql"] = matview_sql
@@ -12060,9 +11802,6 @@ class AnalyticsEngine:
         except BaseException:
             self.catalog["tables"].pop(name, None)
             raise
-        finally:
-            for v in surface_views:
-                self.spark.catalog.dropTempView(v)
         return Result(effect_rows=n)
 
     def _rename_table(self, old: str, new: str) -> Result:
@@ -12644,14 +12383,13 @@ class AnalyticsEngine:
             )
             was = self._planning
             self._planning = True
-            helpers: list[str] = []
             try:
                 probe = self._expand_macros(probe)
                 sel = self._rewrite_duckdb_collections(
                     f"select ({probe}) as __macro_probe"
                 )
                 self._bind_referenced_views(sel, plan_only=True)
-                _df, helpers = self._plan_engine_select(sel)
+                self._plan_engine_select(sel)
             except EngineError:
                 raise
             except Exception as e:
@@ -12668,8 +12406,6 @@ class AnalyticsEngine:
                     ) from e
             finally:
                 self._planning = was
-                for h in helpers:
-                    self.spark.catalog.dropTempView(h)
         reg[key] = {
             "name": name,
             "params": [[p, d] for p, d in params],
@@ -13122,40 +12858,36 @@ class AnalyticsEngine:
                 .filter(F.col("_rn") == 1)
                 .drop("_ord", "_rn")
             )
-        view = f"_upsert_{uuid.uuid4().hex[:8]}"
-        src_df.createOrReplaceTempView(view)
-        try:
-            cond = " and ".join(
-                f"{target}.{k} = {view}.{k}" for k in keys
+        view = self._scoped_view(src_df, "_upsert_")
+        cond = " and ".join(
+            f"{target}.{k} = {view}.{k}" for k in keys
+        )
+        ins_vals = ", ".join(f"{view}.{c}" for c in collist)
+        clauses = (
+            f" when not matched then insert"
+            f" ({', '.join(collist)}) values ({ins_vals})"
+        )
+        if do_update:
+            set_sql = m.group("set").strip()
+            # the greedy (?P<set>.*) swallows a Postgres-legal
+            # trailing "DO UPDATE SET ... WHERE pred" into the SET
+            # expression, which would fail deep inside MERGE with
+            # a confusing parse error — refuse it by name instead
+            if self._find_top_level_keyword(set_sql, ("where",)):
+                raise EngineError(
+                    "ON CONFLICT DO UPDATE ... WHERE is not"
+                    " supported; filter the source SELECT instead"
+                )
+            set_sql = self._sub_outside_literals(
+                set_sql, "excluded.", f"{view}."
             )
-            ins_vals = ", ".join(f"{view}.{c}" for c in collist)
             clauses = (
-                f" when not matched then insert"
-                f" ({', '.join(collist)}) values ({ins_vals})"
+                f" when matched then update set {set_sql}" + clauses
             )
-            if do_update:
-                set_sql = m.group("set").strip()
-                # the greedy (?P<set>.*) swallows a Postgres-legal
-                # trailing "DO UPDATE SET ... WHERE pred" into the SET
-                # expression, which would fail deep inside MERGE with
-                # a confusing parse error — refuse it by name instead
-                if self._find_top_level_keyword(set_sql, ("where",)):
-                    raise EngineError(
-                        "ON CONFLICT DO UPDATE ... WHERE is not"
-                        " supported; filter the source SELECT instead"
-                    )
-                set_sql = self._sub_outside_literals(
-                    set_sql, "excluded.", f"{view}."
-                )
-                clauses = (
-                    f" when matched then update set {set_sql}" + clauses
-                )
-            return self._merge(
-                f"merge into {target} using {view} on {cond}{clauses}",
-                source_unique_per_key=True,
-            )
-        finally:
-            self.spark.catalog.dropTempView(view)
+        return self._merge(
+            f"merge into {target} using {view} on {cond}{clauses}",
+            source_unique_per_key=True,
+        )
 
     def _insert_or_action(self, m: re.Match) -> Result:
         """INSERT OR REPLACE / OR IGNORE INTO (DuckDB's implicit-key
@@ -13468,18 +13200,13 @@ class AnalyticsEngine:
                 return Result(effect_rows=n)
             values_sql = "SELECT * FROM " + tail  # VALUES (...) , (...)
             src = self.spark.sql(values_sql)
-            surface_views: list[str] = []
         else:
             # INSERT ... SELECT composes with the engine-only SQL
-            # surfaces (r9) — views drop after _append materializes
-            src, surface_views = self._plan_engine_select(tail)
-        try:
-            return self._insert_from_df(
-                name, schema, target_cols, collist, by_name, src
-            )
-        finally:
-            for v in surface_views:
-                self.spark.catalog.dropTempView(v)
+            # surfaces (r9)
+            src = self._plan_engine_select(tail)
+        return self._insert_from_df(
+            name, schema, target_cols, collist, by_name, src
+        )
 
     def _insert_from_df(
         self,
@@ -13700,9 +13427,7 @@ class AnalyticsEngine:
         re.I | re.S,
     )
 
-    def _bind_inline_source(
-        self, stmt: str, open_at: int
-    ) -> tuple[str, str, list[str]]:
+    def _bind_inline_source(self, stmt: str, open_at: int) -> tuple[str, str]:
         """Bind a parenthesized subquery SOURCE — ``USING (SELECT ...)
         alias`` / ``FROM (SELECT ...) alias`` in MERGE and join-DML —
         to a session temp view NAMED AS THE ALIAS, so the statement's
@@ -13711,10 +13436,11 @@ class AnalyticsEngine:
         ``spark.table``. The subquery plans through the FULL engine
         pipeline (lazy — nothing materializes here), so engine-only
         SQL composes inside the source. Because the view lives at
-        session scope for the statement's span, an alias that would
-        shadow an existing table/view is refused (the target itself,
-        most dangerously). Returns (rest-after-alias, alias,
-        views-to-drop). ``open_at`` is the index of the ``(``."""
+        session scope for the statement's span (it drops with the
+        statement's other helper views), an alias that would shadow an
+        existing table/view is refused (the target itself, most
+        dangerously). Returns (rest-after-alias, alias). ``open_at``
+        is the index of the ``(``."""
         cp = self._match_paren(stmt, open_at)
         inner = stmt[open_at + 1: cp]
         if not re.match(r"\s*select\b", inner, re.I):
@@ -13736,15 +13462,10 @@ class AnalyticsEngine:
                 f"subquery source alias {alias!r} collides with an"
                 " existing table/view — pick another alias"
             )
-        df, views = self._plan_engine_select(inner)
-        try:
-            df.createOrReplaceTempView(alias)
-        except BaseException:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
-            raise
-        views.append(alias)
-        return stmt[cp + 1 + am.end():], alias, views
+        self._plan_engine_select(inner).createOrReplaceTempView(alias)
+        self._stmt_views.append(alias)
+        return stmt[cp + 1 + am.end():], alias
+
     _MERGE_CLAUSE_RE = re.compile(
         r"when\s+(?P<not>not\s+)?matched\s+then\s+"
         r"(?P<action>update\s+set\s+.*?|delete"
@@ -13765,26 +13486,16 @@ class AnalyticsEngine:
         clauses (same move as DML WHERE — the translated UPDATE...FROM
         and DELETE...USING conditions land here, r9 review #4), then
         run the table-sourced MERGE below."""
-        views: list[str] = []
         um = re.match(r"^(merge\s+into\s+\w+\s+using)\s*\(", stmt, re.I)
         if um:
-            rest, alias, views = self._bind_inline_source(
-                stmt, um.end() - 1
-            )
+            rest, alias = self._bind_inline_source(stmt, um.end() - 1)
             stmt = f"{um.group(1)} {alias} {rest.lstrip()}"
-        try:
-            # engine-only subqueries in ON / WHEN conditions lift to
-            # views first (r10 — same move as plain DML WHERE)
-            stmt, lv = self._lift_engine_subqueries(stmt)
-            views += lv
-            stmt, qv = self._rewrite_quantified(stmt)
-            views += qv
-            return self._merge_resolved(
-                stmt, delete_translation, source_unique_per_key
-            )
-        finally:
-            for v in views:
-                self.spark.catalog.dropTempView(v)
+        # engine-only subqueries in ON / WHEN conditions lift to
+        # views first (r10 — same move as plain DML WHERE)
+        stmt = self._rewrite_quantified(self._lift_engine_subqueries(stmt))
+        return self._merge_resolved(
+            stmt, delete_translation, source_unique_per_key
+        )
 
     def _merge_resolved(
         self,
@@ -14056,6 +13767,7 @@ class AnalyticsEngine:
         no bulk I/O at all). FROM appends through the same
         cast-to-schema + constraint path as INSERT; TO exports the
         current table version."""
+        from andb_spark.caching import persist_tracked
         from andb_spark.sources import read_source, write_source
 
         cm = re.match(r"copy\s*\(", stmt, re.I)
@@ -14074,22 +13786,17 @@ class AnalyticsEngine:
                     "syntax: COPY (select ...) TO 'path'"
                     " [FORMAT parquet|csv|json|orc|text]"
                 )
-            df, views = self._plan_engine_select(inner)
+            # persist: the write and the effect_rows count consume
+            # ONE evaluation (r9 review #3 — an unpersisted df would
+            # re-execute the whole query for the count, and a
+            # nondeterministic query could report a count that
+            # disagrees with the exported file); execute() releases it
+            df = persist_tracked(self._plan_engine_select(inner))
             try:
-                # persist: the write and the effect_rows count consume
-                # ONE evaluation (r9 review #3 — an unpersisted df
-                # would re-execute the whole query for the count, and
-                # a nondeterministic query could report a count that
-                # disagrees with the exported file)
-                df = df.persist()
                 write_source(df, tm.group(1), tm.group(2))
                 return Result(effect_rows=df.count())
             except ValueError as e:
                 raise EngineError(str(e)) from e
-            finally:
-                df.unpersist()
-                for v in views:
-                    self.spark.catalog.dropTempView(v)
         m = re.match(
             r"copy\s+(\w+)\s+(to|from)\s+'([^']+)'(?:\s+format\s+(\w+))?\s*$",
             stmt,
@@ -14406,14 +14113,8 @@ class AnalyticsEngine:
             # USING (SELECT ...) alias: bind the subquery source to a
             # view named as the alias, rebuild, recurse once into the
             # table-sourced path below
-            rest, alias, dviews = self._bind_inline_source(
-                stmt, dm.end() - 1
-            )
-            try:
-                return self._delete(f"{dm.group(1)} {alias} {rest.lstrip()}")
-            finally:
-                for v in dviews:
-                    self.spark.catalog.dropTempView(v)
+            rest, alias = self._bind_inline_source(stmt, dm.end() - 1)
+            return self._delete(f"{dm.group(1)} {alias} {rest.lstrip()}")
         um = re.match(
             r"delete\s+from\s+(\w+)\s+using\s+(\w+)\s+where\s+(.*)$",
             stmt, re.I | re.S,
@@ -14460,38 +14161,31 @@ class AnalyticsEngine:
         # Engine-only subqueries in the condition (IN (... QUALIFY /
         # DISTINCT ON ...)) lift to views first (r10) — F.expr can't
         # parse them, DuckDB executes them.
-        qviews: list[str] = []
-        try:
-            cond, qviews = self._lift_engine_subqueries(cond)
-            cond, v = self._rewrite_quantified(cond)
-            qviews += v
-            condition = F.coalesce(F.expr(cond), F.lit(False))
-            n_matched, keep, affected = self._cow_split(
-                name, condition, cond
-            )
-            if n_matched == 0:
-                if _returning is not None:
-                    return self._returning_result(
-                        self._read_table(name).filter(F.lit(False)),
-                        _returning, 0,
-                    )
-                return Result(effect_rows=0)  # no write at all
-            kept_rows = self._read_files(name, affected).filter(~condition)
-            # a DELETE only drops rows: it cannot break a constraint
-            self._stage_version(name, kept_rows, base=keep, changed=set())
-            self._commit_staged(name)
-            self._maybe_auto_refresh(name)  # CoW broke lineage → full
+        cond = self._rewrite_quantified(self._lift_engine_subqueries(cond))
+        condition = F.coalesce(F.expr(cond), F.lit(False))
+        n_matched, keep, affected = self._cow_split(
+            name, condition, cond
+        )
+        if n_matched == 0:
             if _returning is not None:
-                # pre-image of the deleted rows, from the old
-                # affected files (still on disk — immutable history)
                 return self._returning_result(
-                    self._read_files(name, affected).filter(condition),
-                    _returning, n_matched,
+                    self._read_table(name).filter(F.lit(False)),
+                    _returning, 0,
                 )
-            return Result(effect_rows=n_matched)
-        finally:
-            for v in qviews:
-                self.spark.catalog.dropTempView(v)
+            return Result(effect_rows=0)  # no write at all
+        kept_rows = self._read_files(name, affected).filter(~condition)
+        # a DELETE only drops rows: it cannot break a constraint
+        self._stage_version(name, kept_rows, base=keep, changed=set())
+        self._commit_staged(name)
+        self._maybe_auto_refresh(name)  # CoW broke lineage → full
+        if _returning is not None:
+            # pre-image of the deleted rows, from the old
+            # affected files (still on disk — immutable history)
+            return self._returning_result(
+                self._read_files(name, affected).filter(condition),
+                _returning, n_matched,
+            )
+        return Result(effect_rows=n_matched)
 
     def _update(self, stmt: str) -> Result:
         # RETURNING (DuckDB/Postgres): post-image of the updated rows
@@ -14527,38 +14221,33 @@ class AnalyticsEngine:
                     continue
                 head = body[:at].rstrip()
                 tail = body[at + 4:]
-                uviews: list[str] = []
                 tm = re.match(r"\s*\(", tail)
                 if tm:
                     # FROM (SELECT ...) alias: bind the subquery
                     # source to a view named as the alias
-                    rest, alias, uviews = self._bind_inline_source(
+                    rest, alias = self._bind_inline_source(
                         tail, tm.end() - 1
                     )
                     tail = f"{alias} {rest.lstrip()}"
-                try:
-                    sm = re.match(
-                        r"\s*(\w+)\s+where\s+(.*)$", tail, re.I | re.S
+                sm = re.match(
+                    r"\s*(\w+)\s+where\s+(.*)$", tail, re.I | re.S
+                )
+                if not sm:
+                    raise EngineError(
+                        "UPDATE ... FROM requires a single"
+                        " table/view source and a WHERE join"
+                        " condition"
                     )
-                    if not sm:
-                        raise EngineError(
-                            "UPDATE ... FROM requires a single"
-                            " table/view source and a WHERE join"
-                            " condition"
-                        )
-                    if _returning is not None:
-                        raise EngineError(
-                            "RETURNING is not supported on"
-                            " UPDATE ... FROM"
-                        )
-                    return self._merge(
-                        f"merge into {hm.group(1)} using {sm.group(1)}"
-                        f" on {sm.group(2)}"
-                        f" when matched then update set {head}"
+                if _returning is not None:
+                    raise EngineError(
+                        "RETURNING is not supported on"
+                        " UPDATE ... FROM"
                     )
-                finally:
-                    for v in uviews:
-                        self.spark.catalog.dropTempView(v)
+                return self._merge(
+                    f"merge into {hm.group(1)} using {sm.group(1)}"
+                    f" on {sm.group(2)}"
+                    f" when matched then update set {head}"
+                )
         m = re.match(
             r"update\s+(\w+)\s+set\s+(.*?)(?:\s+where\s+(.*))?$",
             stmt,
@@ -14570,27 +14259,9 @@ class AnalyticsEngine:
         self._writable_meta(name)  # matviews reject DML, like DELETE
         # quantified comparisons in the WHERE rewrite as in SELECT/
         # DELETE; engine-only subqueries in the condition lift to
-        # views first (r10); views drop after the staged write below.
-        # BOTH rewrites run inside the try: a quantified refusal after
-        # a successful lift must not leak the lift's views (r10
-        # review #1)
-        qviews: list[str] = []
-        try:
-            if cond:
-                cond, qviews = self._lift_engine_subqueries(cond)
-                cond, v = self._rewrite_quantified(cond)
-                qviews += v
-            return self._update_resolved(
-                name, setlist, cond, _returning
-            )
-        finally:
-            for v in qviews:
-                self.spark.catalog.dropTempView(v)
-
-    def _update_resolved(
-        self, name: str, setlist: str, cond: str | None,
-        returning: str | None = None,
-    ) -> Result:
+        # views first (r10)
+        if cond:
+            cond = self._rewrite_quantified(self._lift_engine_subqueries(cond))
         condition = F.expr(cond) if cond else F.lit(True)
         affected: list[str] = []
         if cond:
@@ -14599,10 +14270,10 @@ class AnalyticsEngine:
                 name, F.coalesce(condition, F.lit(False)), cond
             )
             if n_hit == 0:
-                if returning is not None:
+                if _returning is not None:
                     return self._returning_result(
                         self._read_table(name).filter(F.lit(False)),
-                        returning, 0,
+                        _returning, 0,
                     )
                 return Result(effect_rows=0)
             df = self._read_files(name, affected)
@@ -14660,7 +14331,7 @@ class AnalyticsEngine:
         self._commit_staged(name)
         self._maybe_auto_refresh(name)  # CoW broke lineage → full path
         eff = n_hit if n_hit is not None else n
-        if returning is not None:
+        if _returning is not None:
             # post-image of the UPDATED rows: the old affected files
             # are immutable (the version that referenced them just
             # became history), so the pre-image filter + SET
@@ -14672,14 +14343,14 @@ class AnalyticsEngine:
                 )
             else:
                 old = self._read_table(name)  # post-commit = post-image
-                return self._returning_result(old, returning, eff)
+                return self._returning_result(old, _returning, eff)
             post = old.select(
                 *[
                     assigned.get(f.name, F.col(f.name)).alias(f.name)
                     for f in schema.fields
                 ]
             )
-            return self._returning_result(post, returning, eff)
+            return self._returning_result(post, _returning, eff)
         return Result(effect_rows=eff)
 
 

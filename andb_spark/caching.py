@@ -86,14 +86,12 @@ def cache_mark() -> tuple[int, int, int]:
     return (len(_LIVE_CACHES), len(_LIVE_BROADCASTS), len(_LIVE_CHECKPOINTS))
 
 
-def release_caches_since(mark: tuple) -> int:
+def release_caches_since(mark: tuple[int, int, int]) -> int:
     """Release registry entries added after ``mark`` (see
     ``cache_mark``). Nest-safe: inner scopes release their own suffix,
     leaving outer scopes' entries in place. Returns handles released.
-    Idempotent. Accepts the pre-r16 2-tuple mark (no checkpoint slot =
-    release every registered checkpoint)."""
-    nc, nb = mark[0], mark[1]
-    nk = mark[2] if len(mark) > 2 else 0
+    Idempotent."""
+    nc, nb, nk = mark
     n = 0
     for df in _LIVE_CACHES[nc:]:
         try:

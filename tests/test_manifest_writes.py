@@ -435,7 +435,9 @@ def test_zone_maps_prune_select_reads(engine):
     # temp view — the table's own session view is never touched, so a
     # concurrent reader of `zr` always sees the full table
     stmt = "select k from zr where k between 5100 and 5200"
-    rewritten, tmp = engine._zone_prune_view(stmt)
+    mark = len(engine._stmt_views)
+    rewritten = engine._zone_prune_view(stmt)
+    (tmp,) = engine._stmt_views[mark:]  # the one view the prune bound
     assert tmp.startswith("zr__zp_") and tmp in rewritten
     segs = engine._segments_of(engine._meta("zr"))
     files = engine.spark.table(tmp).inputFiles()
@@ -445,7 +447,7 @@ def test_zone_maps_prune_select_reads(engine):
     # a second statement issued while the swap is live still reads the
     # WHOLE table (the round-3 rebind-restore pattern failed this)
     assert e("select count(1) as n from zr").rows == [(2100,)]
-    engine.spark.catalog.dropTempView(tmp)  # as _select's finally does
+    engine._release_views(mark)  # as execute() does at statement end
 
     # globally disjoint predicate: zero rows, all segments skipped
     r = e("select k from zr where k > 900000")

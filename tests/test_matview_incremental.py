@@ -366,6 +366,28 @@ def test_autorefresh_tracks_appends_and_respects_transactions(engine):
         e("set andb.matview_autorefresh = maybe")
 
 
+def test_autorefresh_outside_a_statement_drops_its_delta_view(engine):
+    """The streaming sinks commit through ``_overwrite_all`` outside
+    execute(); the incremental refresh such a commit triggers must
+    still drop the delta-file view it bound."""
+    e = engine.execute
+    _seed(e)
+    e("set andb.matview_autorefresh = on")
+    spark = engine.spark
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    batch = spark.createDataFrame([("a", 5), ("e", 6)], "g string, v int")
+    engine._overwrite_all(appends={"base": batch})
+    assert engine.catalog["tables"]["mv"]["matview_last_refresh"] == (
+        "incremental"
+    )
+    assert temp_views() == before
+    assert _mv_rows(e) == _full_rows(e)
+
+
 def test_plan_parser_rejects_nondeterministic_expressions():
     """Time-dependent / random expressions make delta-only re-runs
     unsound (history rows were filtered with yesterday's current_date):

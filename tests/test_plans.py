@@ -452,7 +452,8 @@ def test_union_by_name_all_adds_no_shuffle(spark, tmp_path):
     eng.execute("insert into pa values (1,'x'), (2,'y')")
     eng.execute("create table pb (b double, k int)")
     eng.execute("insert into pb values (0.5, 3)")
-    stmt, views = eng._rewrite_union_by_name(
+    mark = len(eng._stmt_views)
+    stmt = eng._rewrite_union_by_name(
         "select k, a from pa union all by name select b, k from pb"
     )
     try:
@@ -464,8 +465,7 @@ def test_union_by_name_all_adds_no_shuffle(spark, tmp_path):
         assert "Exchange" not in final, final
         assert "Join" not in final, final
     finally:
-        for v in views:
-            eng.spark.catalog.dropTempView(v)
+        eng._release_views(mark)  # as execute() does at statement end
     eng.close()
 
 
@@ -479,10 +479,12 @@ def test_select_replace_is_pure_projection(spark, tmp_path):
     eng = AnalyticsEngine(str(tmp_path / "whplr"), spark=spark)
     eng.execute("create table pr (k int, v int, w int)")
     eng.execute("insert into pr values (1, 2, 3)")
-    stmt, views = eng._rewrite_select_replace(
+    mark = len(eng._stmt_views)
+    stmt = eng._rewrite_select_replace(
         "select * replace (v * 2 as v) from pr"
     )
-    assert views == []  # textual expansion binds no views
+    # textual expansion binds no views
+    assert len(eng._stmt_views) == mark
     df = eng.spark.sql(stmt)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -503,10 +505,12 @@ def test_columns_projection_is_pure_projection(spark, tmp_path):
     eng = AnalyticsEngine(str(tmp_path / "whplc"), spark=spark)
     eng.execute("create table pc (ab int, ac int, bd int)")
     eng.execute("insert into pc values (1, 2, 3)")
-    stmt, views = eng._rewrite_columns_projection(
+    mark = len(eng._stmt_views)
+    stmt = eng._rewrite_columns_projection(
         "select columns('a.*') from pc"
     )
-    assert views == []  # textual expansion binds no views
+    # textual expansion binds no views
+    assert len(eng._stmt_views) == mark
     df = eng.spark.sql(stmt)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -520,10 +524,10 @@ def test_columns_projection_is_pure_projection(spark, tmp_path):
         or "*(1) Project" in plan
     ), plan
     # aggregate fan-out: partial+final HashAggregate, nothing more
-    stmt, views = eng._rewrite_columns_projection(
+    stmt = eng._rewrite_columns_projection(
         "select min(columns(*)) from pc"
     )
-    assert views == []
+    assert len(eng._stmt_views) == mark
     plan = eng.spark.sql(stmt)._jdf.queryExecution().executedPlan()
     assert plan.toString().count("HashAggregate") >= 2, plan.toString()
     eng.close()
@@ -545,7 +549,8 @@ def test_window_exclude_shares_one_sort(spark, tmp_path):
     eng.execute(
         "insert into wx values (1,1,10),(1,2,20),(1,2,25),(2,3,30)"
     )
-    df, views = eng._plan_engine_select(
+    mark = len(eng._stmt_views)
+    df = eng._plan_engine_select(
         "select g, k,"
         " sum(v) over (partition by g order by k range between"
         " unbounded preceding and 2 preceding exclude current row)"
@@ -562,8 +567,7 @@ def test_window_exclude_shares_one_sort(spark, tmp_path):
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
     finally:
-        for v in views:
-            eng.spark.catalog.dropTempView(v)
+        eng._release_views(mark)  # as execute() does at statement end
     # AQE's toString echoes the initial plan too — count the final
     final = plan.split("== Initial Plan ==")[0]
     assert final.count("Exchange") == 1, final

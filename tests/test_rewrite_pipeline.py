@@ -12,7 +12,7 @@ import re
 
 import pytest
 
-from andb_spark.api import AnalyticsEngine
+from andb_spark.api import AnalyticsEngine, EngineError
 
 # per-statement helper views: `_<kind>_<hex>` rewrite views and
 # `<table>__v<n>_<hex>` time-travel bindings (base tables and user
@@ -45,6 +45,8 @@ def eng(spark, tmp_path_factory):
     run("create table iv (iid int, lo int, hi int)")
     run("insert into iv values (10, 0, 10), (11, 40, 60)")
     run("create sequence seq_leak")
+    run("create table pk (id int primary key, v int)")
+    run("insert into pk values (1, 10)")
     yield e
     e.close()
 
@@ -184,3 +186,72 @@ def test_dialect_normalized_once_on_every_path(eng, tag, query):
     got = e(f"select * from {tag}_v")
     assert (got.columns, got.rows) == (want.columns, want.rows)
     assert [r[0] for r in e(f"describe {query}").rows] == want.columns
+
+
+# a QUALIFY source binds a per-statement view before the statement
+# fails; `nope` is the unresolved column every failing form names last
+QUAL = "select k from t qualify row_number() over (order by v) = 1"
+QUAL_SRC = (
+    "(select k as id, v from t"
+    " qualify row_number() over (order by v) = 1) s"
+)
+LIFTED = f"k in ({QUAL})"
+
+
+@pytest.mark.parametrize("stmt", [
+    # SELECT over each surface
+    f"{QUAL} order by nope",
+    "select nope from (select distinct on (k) k, v from t"
+    " order by k, v) d",
+    "with q as (select sym, qt, px from quotes) select tid, nope"
+    " from trades tr asof join q on tr.sym = q.sym and tr.ts >= q.qt",
+    "select nope from t positional join u",
+    "select k from t union by name select w from u order by nope",
+    "select nope from (select * replace (v + 1 as v) from t) s",
+    "select * exclude (v) from t version as of 3 where nope = 1",
+    "select nope from (select columns('k|v') from t) s",
+    "select k, nope from t where k > any (select w from u)",
+    "select nextval('seq_leak') as id, k from t version as of 3"
+    " where nope = 1",
+    "select nope from (select * from t using sample 2 rows) s",
+    "select nope from t version as of 3",
+    # CTAS / INSERT ... SELECT: unresolved, arity, PK violation
+    f"create table leak_c as {QUAL} order by nope",
+    f"insert into u {QUAL} order by nope",
+    "insert into u select k, v from t"
+    " qualify row_number() over (order by v) = 1",
+    "insert into pk select 1 as id, v from t"
+    " qualify row_number() over (order by v) = 1",
+    "insert into pk values (1, 5) on conflict (id)"
+    " do update set v = nope",
+    # DML with lifted WHERE subqueries; the last is a quantified
+    # refusal after a successful lift
+    f"update t set v = nope where {LIFTED}",
+    f"delete from t where {LIFTED} and nope = 1",
+    f"update t set v = 0 where {LIFTED} and k + 1 > any (select w from u)",
+    # subquery DML sources
+    f"merge into pk using {QUAL_SRC} on pk.id = s.id"
+    " when matched then update set v = s.nope",
+    f"update pk set v = s.nope from {QUAL_SRC} where pk.id = s.id",
+    f"delete from pk using {QUAL_SRC} where pk.id = s.nope",
+    f"copy ({QUAL}) to '{{tmp}}/out' format nope",
+    # planning-only and catalog statements over a query
+    f"explain analyze {QUAL} order by nope",
+    f"describe {QUAL} order by nope",
+    f"summarize {QUAL} order by nope",
+    f"create view leak_v as {QUAL} order by nope",
+    f"create materialized view leak_mv as {QUAL} order by nope",
+    # EXECUTE re-enters execute(): the nested statement scope
+    "execute leak_p",
+])
+def test_failing_statement_leaves_no_helper_view(
+    spark, eng, tmp_path, stmt
+):
+    """Every statement class that binds helper views drops them when
+    it fails, whichever step fails: the statement owns its views."""
+    eng.execute(f"prepare leak_p as {QUAL} order by nope")
+    before = helper_views(spark)
+    with pytest.raises(EngineError):
+        eng.execute(stmt.format(tmp=tmp_path))
+    assert helper_views(spark) == before
+    assert eng.execute("select count(*) from t").rows == [(4,)]
