@@ -33,6 +33,7 @@ half-written table.
 from __future__ import annotations
 
 import datetime
+import functools
 import hashlib
 import itertools
 import json
@@ -141,6 +142,56 @@ def _parse_type(name: str) -> tuple[T.DataType, int | None]:
             raise EngineError("struct type needs at least one field")
         return T.StructType(fields), None
     raise EngineError(f"unknown type: {name}")
+
+
+def _quote_ident(name: str) -> str:
+    """Backquoted Spark SQL identifier; an embedded backtick doubles."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_type(dt: T.DataType) -> str:
+    """Spark SQL spelling of a data type, struct field names quoted
+    (``simpleString`` leaves them bare, which a CAST cannot parse
+    back when a name holds a space)."""
+    if isinstance(dt, T.StructType):
+        fields = ", ".join(
+            f"{_quote_ident(f.name)}: {_sql_type(f.dataType)}"
+            for f in dt.fields
+        )
+        return f"struct<{fields}>"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{_sql_type(dt.elementType)}>"
+    return dt.simpleString()
+
+
+def _cast_to(schema: T.StructType) -> list[str]:
+    """``selectExpr`` items projecting each column of ``schema`` cast
+    to its declared type under its own name: one projection call
+    instead of a py4j round trip per Column-API node."""
+    return [
+        f"CAST({_quote_ident(f.name)} AS {_sql_type(f.dataType)})"
+        f" AS {_quote_ident(f.name)}"
+        for f in schema.fields
+    ]
+
+
+def _sql_lit(v) -> str:
+    """Spark SQL literal of a typed driver-side value (None, bool,
+    int, float, str or date, as the literal INSERT path types them),
+    spelled so Spark's parser reads back exactly that value: doubles
+    go through a string cast (correctly rounded), strings escape the
+    backslash and the quote the way Spark's unescaping expects."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return f"CAST('{v!r}' AS DOUBLE)"
+    if isinstance(v, datetime.date):
+        return f"DATE '{v.isoformat()}'"
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _footer_stats(seg_dir: str) -> tuple[int, dict[str, list]]:
@@ -1459,12 +1510,19 @@ class AnalyticsEngine:
 
     # Literal tokens the driver-side INSERT fast path understands.
     _LIT_ROW_RE = re.compile(r"^\((.*)\)$", re.S)
+    # a typed date literal in strict ISO form; every other spelling
+    # ('1997-2-3', a bare string into a date column) is Spark's to cast
+    _LIT_DATE_RE = re.compile(
+        r"date\s*'([0-9]{4}-[0-9]{2}-[0-9]{2})'", re.I
+    )
 
     @staticmethod
     def _parse_literal_rows(values_text: str) -> list[list[tuple]] | None:
         """Parse a VALUES tail into tagged literals, or None when any
-        scalar is not a plain literal (expressions, typed literals like
-        `date '...'`, arrays — those need Spark's evaluator)."""
+        scalar is not a plain literal: expressions, arrays, typed
+        literals other than a strict ISO ``date 'YYYY-MM-DD'``, and
+        strings holding a backslash (Spark's parser unescapes it) all
+        need Spark's evaluator."""
         rows: list[list[tuple]] = []
         for part in _split_top_level(values_text):
             rm = AnalyticsEngine._LIT_ROW_RE.match(part.strip())
@@ -1473,47 +1531,64 @@ class AnalyticsEngine:
             vals: list[tuple] = []
             for lit in _split_top_level(rm.group(1)):
                 lit = lit.strip()
+                dm = AnalyticsEngine._LIT_DATE_RE.fullmatch(lit)
                 if re.fullmatch(r"null", lit, re.I):
                     vals.append(("n", None))
                 elif re.fullmatch(r"true", lit, re.I):
                     vals.append(("b", True))
                 elif re.fullmatch(r"false", lit, re.I):
                     vals.append(("b", False))
+                elif dm:
+                    try:
+                        day = datetime.date.fromisoformat(dm.group(1))
+                    except ValueError:
+                        return None  # '1997-02-30': Spark's error
+                    vals.append(("d", day))
                 elif re.fullmatch(r"'(?:[^']|'')*'", lit, re.S):
+                    if "\\" in lit:
+                        return None
                     vals.append(("s", lit[1:-1].replace("''", "'")))
-                elif re.fullmatch(r"-?\d+", lit):
+                elif re.fullmatch(r"-?[0-9]+", lit):
                     vals.append(("i", int(lit)))
-                elif re.fullmatch(r"-?\d+\.\d+", lit):
+                elif re.fullmatch(r"-?[0-9]+\.[0-9]+", lit):
                     vals.append(("f", float(lit)))
                 else:
                     return None
             rows.append(vals)
         return rows if rows else None
 
-    # literal tag → declared types it converts to EXACTLY (anything
-    # else — e.g. a string into an int column, a float into an int —
-    # falls back to Spark so cast semantics stay Spark's, bit for bit).
-    # 'real' (float32) is deliberately absent: the driver path would
-    # convert literal → Python double → float32 (double rounding) while
-    # Spark casts the decimal literal to float32 in one correctly-
-    # rounded step, so boundary literals could differ by one ulp
-    # (ADVICE r4) — float32 targets always take the Spark path.
+    # literal tag → the Spark types of the columns it converts to
+    # EXACTLY (anything else — e.g. a string into an int column, a
+    # float into an int — falls back to Spark so cast semantics stay
+    # Spark's, bit for bit). Keyed by the column's Spark type, not its
+    # declared spelling: the catalog keeps `integer`, `bool`, `char`
+    # and `text` as written and stores a bare `varchar` as `string`,
+    # and all of them read back as one of these types (varchar(n) is
+    # a string the gate truncates). FloatType ('real'/'float') is
+    # deliberately absent: the driver path would convert literal →
+    # Python double → float32 (double rounding) while Spark casts the
+    # decimal literal to float32 in one correctly-rounded step, so
+    # boundary literals could differ by one ulp (ADVICE r4) — float32
+    # targets always take the Spark path.
     _LIT_COMPAT = {
-        "i": {"int", "bigint", "double"},
-        "f": {"double"},
-        "s": {"text"},  # varchar handled separately (truncation)
-        "b": {"boolean"},
+        "i": (T.IntegerType, T.LongType, T.DoubleType),
+        "f": (T.DoubleType,),
+        "s": (T.StringType,),
+        "b": (T.BooleanType,),
+        "d": (T.DateType,),
     }
 
-    def _try_literal_append(
+    def _literal_table(
         self, name: str, schema: T.StructType, cols: list[str], vtext: str
-    ) -> int | None:
-        """Driver-side INSERT VALUES: returns the inserted row count,
-        or None to fall back to the Spark path. Only takes the append
-        when every literal's conversion to its declared column type is
-        provably identical to Spark's cast — wrong-arity rows, range
-        overflows, date/timestamp/vector targets, and non-literal
-        scalars all fall back."""
+    ):
+        """The VALUES tail ``vtext`` for columns ``cols`` as a pyarrow
+        table of the declared schema (omitted columns NULL), or None
+        to fall back to the Spark path. Only builds the table when
+        every literal's conversion to its column type is provably
+        identical to Spark's cast — wrong-arity rows, range overflows,
+        float32/timestamp/vector targets and non-literal scalars all
+        fall back — and when no omitted column carries a DEFAULT (an
+        arbitrary expression the Spark path fills)."""
         rows = self._parse_literal_rows(vtext)
         if rows is None or any(len(r) != len(cols) for r in rows):
             return None
@@ -1523,66 +1598,73 @@ class AnalyticsEngine:
             # which raises its ambiguous-column error
             return None
         meta = self._meta(name)
-        if (
-            any(c.get("pk") or c.get("default") for c in meta["columns"])
-            or meta.get("uniques")
-            or meta.get("checks")
+        if any(
+            c.get("default") is not None and c["name"] not in cols
+            for c in meta["columns"]
         ):
-            # PRIMARY KEY / UNIQUE / CHECK enforcement lives at
-            # _stage_version's choke point, which the pyarrow stage
-            # skips; DEFAULT columns need the Spark path's expression
-            # fill (a default is an arbitrary expression, not a
-            # literal) — defer all constrained tables to Spark
             return None
-        coltypes = {c["name"]: c["type"].strip().lower()
-                    for c in meta["columns"]}
-        notnull = {c["name"] for c in meta["columns"] if c["notnull"]}
+        widths = {}
+        for c in meta["columns"]:
+            vm = _VARCHAR_RE.match(c["type"].strip())
+            if vm:
+                widths[c["name"]] = int(vm.group(1))
+        types = {f_.name: f_.dataType for f_ in schema.fields}
         by_col: dict[str, list] = {c: [] for c in cols}
         for r in rows:
             for c, (tag, v) in zip(cols, r):
-                declared = coltypes[c]
-                vm = _VARCHAR_RE.match(declared)
-                if tag == "n":
-                    pass  # NULL fits any type; NOT NULL checked below
-                elif vm:
-                    if tag != "s":
+                if tag != "n":  # NULL fits any type
+                    dt = types[c]
+                    if type(dt) not in self._LIT_COMPAT[tag]:
                         return None
-                    v = v[: int(vm.group(1))]  # varchar(n) truncation
-                elif declared not in self._LIT_COMPAT.get(tag, ()):
-                    return None
-                if tag == "i" and declared == "int" and not (
-                    -(2**31) <= v < 2**31
-                ):
-                    return None  # overflow: Spark's cast wraps — defer
-                if v is None and c in notnull:
-                    raise EngineError(
-                        f"column {c} of {name} violates NOT NULL"
-                    )
+                    if isinstance(dt, T.IntegerType) and not (
+                        -(2**31) <= v < 2**31
+                    ):
+                        return None  # overflow: Spark's cast wraps
+                    if c in widths:
+                        v = v[: widths[c]]  # varchar(n) truncation
                 by_col[c].append(v)
-        for f_ in schema.fields:
-            if f_.name not in by_col and f_.name in notnull:
-                raise EngineError(
-                    f"column {f_.name} of {name} violates NOT NULL"
-                )
         from pyspark.sql.pandas.types import to_arrow_schema
 
         import pyarrow as pa
 
-        arrow_schema = to_arrow_schema(schema)
         n = len(rows)
         try:
-            table = pa.Table.from_pydict(
+            return pa.Table.from_pydict(
                 {
                     f_.name: by_col.get(f_.name, [None] * n)
                     for f_ in schema.fields
                 },
-                schema=arrow_schema,
+                schema=to_arrow_schema(schema),
             )
         except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError):
             return None  # any conversion doubt → Spark decides
-        count = self._stage_arrow(
-            name, table, base=self._segments_of(meta)
+
+    def _try_literal_append(
+        self, name: str, schema: T.StructType, cols: list[str], vtext: str
+    ) -> int | None:
+        """Driver-side INSERT VALUES: returns the inserted row count,
+        or None to fall back to the Spark path. ``_literal_table``
+        types the batch, ``_decide_literal_constraints`` decides every
+        constraint it can break (at most one Spark job: the pushed-
+        down probe of the base files zone maps cannot rule out) and
+        ``_stage_arrow`` writes it as one new segment."""
+        table = self._literal_table(name, schema, cols, vtext)
+        if table is None:
+            return None
+        base = self._segments_of(self._meta(name))
+        self._decide_literal_constraints(
+            name, table,
+            lambda keysets, keys: next(
+                (
+                    i for i, held in enumerate(
+                        self._key_holders(name, base, keysets, keys)
+                    )
+                    if held
+                ),
+                None,
+            ),
         )
+        count = self._stage_arrow(name, table, base=base)
         self._commit_staged(name)
         self._maybe_auto_refresh(name)  # same ordering as _append
         self._maybe_auto_compact(name)
@@ -1593,7 +1675,10 @@ class AnalyticsEngine:
         pyarrow twin of ``_stage_version``'s phase 1, producing the
         SAME ``_staged`` contract (commit via ``_commit_staged``).
         Used where the payload is literal or empty and a Spark job
-        submit would be pure constant overhead."""
+        submit would be pure constant overhead. It checks nothing:
+        the caller has already decided every constraint the rows can
+        break (``_decide_literal_constraints`` for literal batches;
+        an empty segment breaks none)."""
         import pyarrow.parquet as pq
 
         meta = self._meta(name)
@@ -6169,6 +6254,73 @@ class AnalyticsEngine:
                 f"column {culprit} of {name} violates NOT NULL"
             )
 
+    @staticmethod
+    def _keysets(
+        meta: dict, changed: set[str] | None = None
+    ) -> list[tuple[list[str], bool]]:
+        """The table's key sets as (columns, is_pk) in declaration
+        order, the PRIMARY KEY first — the order violations report
+        in. Only sets including a ``changed`` column (lowercase
+        names; None = every column) are kept."""
+
+        def touched(cols) -> bool:
+            return changed is None or any(c.lower() in changed for c in cols)
+
+        pk = [c["name"] for c in meta.get("columns", []) if c.get("pk")]
+        keysets = [(pk, True)] if pk and touched(pk) else []
+        return keysets + [
+            (list(uq), False)
+            for uq in meta.get("uniques") or []
+            if touched(uq)
+        ]
+
+    @staticmethod
+    def _check_refs(check: str, names) -> set[str]:
+        """Which of ``names`` (lowercase column names) a CHECK's text
+        may reference — a case-insensitive identifier match outside
+        literals. Conservative: words include function names, and an
+        unusual (non-word) name falls back to a substring test, so a
+        name is never missed, only sometimes over-matched."""
+        text = _blank_literals(check).lower()
+        words = set(re.findall(r"\w+", text))
+        return {
+            c for c in names
+            if (c in words if re.fullmatch(r"\w+", c)
+                else c.strip('"`') in text)
+        }
+
+    @staticmethod
+    def _constraint_error(
+        name: str,
+        keysets: list[tuple[list[str], bool]],
+        dup: int | None,
+        hit: int | None,
+        check_bad: bool,
+    ) -> str | None:
+        """The violation a write reports, or None: the one place the
+        messages and their precedence live, for the staged probe and
+        the driver-side literal decisions alike. ``dup`` is the first
+        key set (index into ``keysets``) with a duplicate among the
+        written rows; ``hit`` the earliest set declared before it
+        whose written keys an existing row already holds;
+        ``check_bad`` whether a written row fails a CHECK. A base hit
+        outranks an in-batch duplicate, which outranks CHECK."""
+        if hit is None and dup is None:
+            return f"CHECK constraint failed: {name}" if check_bad else None
+        in_batch = hit is None
+        ks, is_pk = keysets[dup if in_batch else hit]
+        cols = ", ".join(ks)
+        if is_pk and in_batch:
+            return (
+                f"PRIMARY KEY constraint violated on {name}:"
+                f" duplicate key ({cols}) in the written rows"
+            )
+        kind = "primary key" if is_pk else "unique"
+        return (
+            f"duplicate key violates {kind} constraint on {name}"
+            f" ({cols})" + (" in the written rows" if in_batch else "")
+        )
+
     def _check_staged_constraints(
         self,
         name: str,
@@ -6183,13 +6335,18 @@ class AnalyticsEngine:
         write choke point, over the STAGED files only (never a
         re-execution of the source plan) — the batch-oriented analog
         of DuckDB's per-row index probe (Constraint Error parity).
+        This is the only Spark-side constraint probe. Literal batches
+        whose rows the driver already holds are decided without it
+        (``_decide_literal_constraints``, same messages and
+        precedence); a literal upsert's rewrite still comes here for
+        the CHECKs the driver cannot decide.
 
         Only what the statement could have broken is probed: the
         table's committed version already satisfies every constraint
         (see ``_stage_version``), so a PK/UNIQUE set is probed only
         when it includes a ``changed`` column and a CHECK only when
-        its text names one (case-insensitive identifier match —
-        conservative). ``changed=None`` means every column.
+        its text names one (``_check_refs``). ``changed=None`` means
+        every column.
 
         What remains costs at most two Spark actions:
           1. ONE aggregate over the staged rows: per key set,
@@ -6209,55 +6366,21 @@ class AnalyticsEngine:
              zone maps the write already produced) with the per-
              segment zones, so a key-disjoint append reads zero base
              files.
-        Violations report in declaration order (PK in-batch, PK base,
-        then each UNIQUE set the same way, CHECK last). A violation
-        removes the staged dir and raises before anything references
-        it, the same crash contract as ``_check_staged_notnull``."""
+        Violations report as ``_constraint_error`` orders them. A
+        violation removes the staged dir and raises before anything
+        references it, the same crash contract as
+        ``_check_staged_notnull``."""
         meta = self._meta(name)
         if not rows:
             return
         low = None if changed is None else {c.lower() for c in changed}
-
-        def touched(cols) -> bool:
-            return low is None or any(c.lower() in low for c in cols)
-
-        pk = [c["name"] for c in meta.get("columns", []) if c.get("pk")]
-        keysets = [(pk, True)] if pk and touched(pk) else []
-        keysets += [
-            (list(uq), False)
-            for uq in meta.get("uniques") or []
-            if touched(uq)
+        keysets = self._keysets(meta, low)
+        checks = [
+            c for c in meta.get("checks") or []
+            if low is None or self._check_refs(c, low)
         ]
-
-        def names_changed(check: str) -> bool:
-            # over-matching only costs a probe: words include function
-            # names, and an unusual (non-word) column name falls back
-            # to a substring test
-            text = _blank_literals(check).lower()
-            words = set(re.findall(r"\w+", text))
-            return low is None or any(
-                c in words if re.fullmatch(r"\w+", c)
-                else c.strip('"`') in text
-                for c in low
-            )
-
-        checks = [c for c in meta.get("checks") or [] if names_changed(c)]
         if not keysets and not checks:
             return
-
-        def violation(i: int, in_batch: bool) -> str:
-            ks, is_pk = keysets[i]
-            cols = ", ".join(ks)
-            if is_pk and in_batch:
-                return (
-                    f"PRIMARY KEY constraint violated on {name}:"
-                    f" duplicate key ({cols}) in the written rows"
-                )
-            kind = "primary key" if is_pk else "unique"
-            return (
-                f"duplicate key violates {kind} constraint on {name}"
-                f" ({cols})" + (" in the written rows" if in_batch else "")
-            )
 
         def keyed(ks: list[str]):
             cond = F.lit(True)
@@ -6280,21 +6403,17 @@ class AnalyticsEngine:
             bad = " or ".join(f"not coalesce(({c}), true)" for c in checks)
             aggs.append(F.count(F.when(F.expr(bad), 1)).alias("_bad"))
         got = staged.agg(*aggs).collect()[0] if aggs else None
-        first = next(
+        dup = next(
             (
                 i for i in range(len(keysets))
                 if rows > 1 and got[f"_d{i}"] < got[f"_n{i}"]
             ),
             None,
         )
-        err = violation(first, True) if first is not None else (
-            f"CHECK constraint failed: {name}"
-            if checks and got["_bad"] else None
-        )
         # base collisions of key sets declared BEFORE the first staged
         # violation take precedence over it
         probes = []
-        for i, (ks, is_pk) in enumerate(keysets[:first] if base else []):
+        for i, (ks, is_pk) in enumerate(keysets[:dup] if base else []):
             # a key column without footer bounds simply prunes nothing
             bounds = {k: tuple(stats[k]) for k in ks if k in stats}
             entries = self._zone_overlap_entries(name, base, bounds)
@@ -6316,19 +6435,176 @@ class AnalyticsEngine:
                 )
                 .select(F.lit(i).alias("_i"))
             )
+        hit = None
         if probes:
-            hit = probes[0]
-            for p in probes[1:]:
-                hit = hit.union(p)
             # union partitions keep branch order, so the first row
             # limit(1) returns belongs to the earliest colliding set
-            row = hit.limit(1).collect()
-            if row:
-                err = violation(row[0]["_i"], False)
+            row = functools.reduce(DataFrame.union, probes).limit(
+                1
+            ).collect()
+            hit = row[0]["_i"] if row else None
+        err = self._constraint_error(
+            name, keysets, dup, hit, bool(checks) and got["_bad"] > 0
+        )
         if err:
             meta.pop("_staged", None)
             shutil.rmtree(new_dir, ignore_errors=True)
             raise EngineError(err)
+
+    def _decide_literal_constraints(self, name: str, table, base_hit) -> None:
+        """Decide, on the driver, every constraint a batch of NEW rows
+        held in a typed pyarrow ``table`` (``_literal_table``) can
+        break — the driver-side twin of ``_stage_version``'s NOT NULL
+        check plus ``_check_staged_constraints``, with the same
+        messages and precedence (``_constraint_error``):
+          - NOT NULL from the typed columns, naming the column the
+            footer check names (the last declared one holding a NULL);
+          - in-batch PK/UNIQUE duplicates on the typed Python tuples
+            (a key with a NULL component is exempt);
+          - base collisions: ``base_hit(keysets, keys)`` returns the
+            index of the earliest of ``keysets`` (with the batch's key
+            tuples per set) whose keys an existing row holds — asked
+            only for the sets declared before the first in-batch
+            duplicate, as the staged probe asks;
+          - CHECK: one filter over the batch as a SQL VALUES relation
+            (a LocalRelation: no Spark job), asked only when no key
+            violation outranks it.
+        Raises EngineError on a violation."""
+        if not table.num_rows:
+            return
+        meta = self._meta(name)
+        notnull = {c["name"] for c in meta["columns"] if c.get("notnull")}
+        culprit = None
+        for col in table.schema.names:
+            if col in notnull and table.column(col).null_count:
+                culprit = col
+        if culprit:
+            raise EngineError(f"column {culprit} of {name} violates NOT NULL")
+        keysets = self._keysets(meta)
+        checks = meta.get("checks") or []
+        if not keysets and not checks:
+            return
+        keys = [self._key_tuples(table, ks) for ks, _ in keysets]
+        dup = next(
+            (i for i, ts in enumerate(keys) if self._has_dup(ts)), None
+        )
+        asked = keysets[:dup]
+        hit = base_hit(asked, keys[: len(asked)]) if asked else None
+        bad = False
+        if checks and hit is None and dup is None:
+            cond = " or ".join(f"not coalesce(({c}), true)" for c in checks)
+            bad = bool(
+                self._values_relation(self._schema(name), table)
+                .filter(cond).limit(1).collect()
+            )
+        err = self._constraint_error(name, keysets, dup, hit, bad)
+        if err:
+            raise EngineError(err)
+
+    @staticmethod
+    def _key_tuples(table, ks: list[str]) -> list[tuple | None]:
+        """Per row of a typed pyarrow table, its key over ``ks``
+        (matched case-insensitively, as Spark resolves them), or None
+        when a component is NULL — such a key never conflicts."""
+        names = {n.lower(): n for n in table.schema.names}
+        cols = [table.column(names[k.lower()]).to_pylist() for k in ks]
+        return [
+            None if any(v is None for v in t) else t for t in zip(*cols)
+        ]
+
+    @staticmethod
+    def _take(table, rows: list[int]):
+        """The given rows of a pyarrow table, in order (an empty list
+        included, which ``take`` cannot type by itself)."""
+        import pyarrow as pa
+
+        return table.take(pa.array(rows, type=pa.int64()))
+
+    @staticmethod
+    def _has_dup(keys: list[tuple | None]) -> bool:
+        present = [k for k in keys if k is not None]
+        return len(set(present)) < len(present)
+
+    def _key_holders(
+        self, name: str, entries: list[str], keysets, keys
+    ) -> list[dict[tuple, set[str]]]:
+        """Per key set (columns, is_pk) with its batch key tuples
+        ``keys``, which non-NULL keys existing rows of ``entries``
+        hold, and in which files: ONE collect over a union of reads of
+        the files whose zone maps overlap each set's key bounds, the
+        match pushed down to the scan (no job when every file is
+        pruned). Records the PRIMARY KEY's surviving file count in
+        ``andb.last_pk_probe_files``, as the staged probe does."""
+        holders: list[dict[tuple, set[str]]] = [{} for _ in keysets]
+        distinct: list[list[tuple]] = []
+        scans = []
+        by_lower = {f_.name.lower(): f_.name for f_ in self._schema(name)}
+        for i, ((ks, is_pk), tuples) in enumerate(zip(keysets, keys)):
+            cols = [by_lower[k.lower()] for k in ks]
+            uniq = list(dict.fromkeys(t for t in tuples if t is not None))
+            distinct.append(uniq)
+            bounds = {}
+            for ci, c in enumerate(cols):
+                vals = [t[ci] for t in uniq]
+                if vals and not isinstance(vals[0], bool):  # no bool zones
+                    lo, hi = min(vals), max(vals)
+                    if isinstance(lo, datetime.date):  # zones hold ISO text
+                        lo, hi = lo.isoformat(), hi.isoformat()
+                    bounds[c] = (lo, hi)
+            files = (
+                self._zone_overlap_entries(name, entries, bounds)
+                if uniq else []
+            )
+            if is_pk:
+                self.session_vars["andb.last_pk_probe_files"] = len(files)
+            if not files:
+                continue
+            conds = [
+                " AND ".join(
+                    f"{_quote_ident(c)} = {_sql_lit(v)}"
+                    for c, v in zip(cols, t)
+                )
+                for t in uniq
+            ]
+            if len(cols) == 1:
+                lits = ", ".join(_sql_lit(t[0]) for t in uniq)
+                match = f"{_quote_ident(cols[0])} IN ({lits})"
+            else:
+                match = " OR ".join(f"({c})" for c in conds)
+            which = " ".join(f"WHEN {c} THEN {j}" for j, c in enumerate(conds))
+            scans.append(
+                self._read_files(
+                    name,
+                    [os.path.join(self.warehouse, name, e) for e in files],
+                )
+                .filter(match)
+                .selectExpr(
+                    f"{i} AS _i", f"CASE {which} END AS _j",
+                    "input_file_name() AS _f",
+                )
+            )
+        if scans:
+            for r in functools.reduce(DataFrame.union, scans).collect():
+                holders[r["_i"]].setdefault(
+                    distinct[r["_i"]][r["_j"]], set()
+                ).add(self._uri_path(r["_f"]))
+        return holders
+
+    def _values_relation(self, schema: T.StructType, table) -> DataFrame:
+        """The rows of a driver-side pyarrow ``table`` as a SQL VALUES
+        relation cast to ``schema`` (same column order). Spark folds
+        it into a LocalRelation and evaluates a filter/limit/collect
+        over it on the driver, with no job (an aggregate over it, or
+        any action over a ``createDataFrame`` frame, submits one)."""
+        body = ", ".join(
+            "(" + ", ".join(
+                f"CAST({_sql_lit(v)} AS {_sql_type(f_.dataType)})"
+                for v, f_ in zip(row, schema.fields)
+            ) + ")"
+            for row in zip(*(c.to_pylist() for c in table.columns))
+        )
+        names = ", ".join(_quote_ident(f_.name) for f_ in schema.fields)
+        return self.spark.sql(f"SELECT * FROM VALUES {body} AS _v({names})")
 
     # ---------------------------------------------------------- execute --
     _SYSVIEW_RE = re.compile(
@@ -12774,6 +13050,200 @@ class AnalyticsEngine:
         re.I | re.S,
     )
 
+    _UPSERT_DUP_MSG = (
+        "ON CONFLICT DO UPDATE command cannot affect row a second time:"
+        " duplicate conflict keys in the source rows"
+    )
+
+    def _try_literal_upsert(
+        self,
+        target: str,
+        collist: list[str],
+        keys: list[str],
+        vtext: str,
+        do_update: bool,
+        set_sql: str,
+    ) -> Result | None:
+        """INSERT ... VALUES ... ON CONFLICT decided on the driver, or
+        None for the MERGE lowering. Taken when ``_literal_table`` can
+        type ``vtext``, the conflict columns are a declared PRIMARY
+        KEY/UNIQUE set without a varchar(n) or floating column (the
+        lowering compares those as the untyped VALUES columns) and
+        DO UPDATE SET assigns no key column.
+          - In-batch conflict keys: DO UPDATE raises on a duplicate,
+            DO NOTHING keeps the first row per key.
+          - One ``_key_holders`` collect finds the conflict keys that
+            match and, for every other key set, which existing rows
+            hold the batch's keys (rows of rewritten files keep
+            theirs, so every current file is asked).
+          - DO NOTHING, or no match: the unmatched rows are a literal
+            append, decided from those holders with no further job.
+          - Otherwise one staged write rewrites the files holding
+            matched keys (their rows left-joined to the matched
+            literal rows, SET applied) plus the inserted rows. The
+            driver first decides the inserted rows' keys and every
+            CHECK naming no SET target (over the inserted rows) or
+            whose columns are all SET from ``excluded.<same column>``
+            (over every batch row); the staged probe takes the rest,
+            ``changed`` naming only their SET targets. A violation
+            found here goes back to the MERGE lowering, which reports
+            it as before: a NOT NULL on a SET target outranks it
+            there, and only the rewrite can show that."""
+        schema = self._schema(target)
+        by_lower = {f_.name.lower(): f_.name for f_ in schema.fields}
+        if any(c.lower() not in by_lower for c in collist):
+            return None
+        cols = [by_lower[c.lower()] for c in collist]
+        meta = self._meta(target)
+        keysets = self._keysets(meta)
+        want = sorted(k.lower() for k in keys)
+        arbiter = next(
+            (
+                i for i, (ks, _) in enumerate(keysets)
+                if sorted(k.lower() for k in ks) == want
+            ),
+            None,
+        )
+        if arbiter is None:
+            return None
+        widths = {
+            c["name"].lower() for c in meta["columns"]
+            if _VARCHAR_RE.match(c["type"].strip())
+        }
+        if any(
+            k in widths or isinstance(
+                schema[by_lower[k]].dataType, (T.DoubleType, T.FloatType)
+            )
+            for k in want
+        ):
+            return None
+        update_set: dict[str, str] = {}
+        if do_update:
+            if self._find_top_level_keyword(set_sql, ("where",)):
+                return None
+            try:
+                update_set = self._parse_update_set(
+                    target, list(by_lower.values()), set_sql
+                )
+            except (EngineError, ValueError):
+                return None
+            key_cols = {c.lower() for ks, _ in keysets for c in ks}
+            listed = {c.lower() for c in cols}
+            if any(c.lower() in key_cols for c in update_set) or any(
+                x.lower() not in listed
+                for x in re.findall(
+                    r"\bexcluded\.(\w+)", _blank_literals(set_sql), re.I
+                )
+            ):
+                return None
+        table = self._literal_table(target, schema, cols, vtext)
+        if table is None:
+            return None
+        conflict = self._key_tuples(table, keysets[arbiter][0])
+        if do_update:
+            if self._has_dup(conflict):
+                raise EngineError(self._UPSERT_DUP_MSG)
+        else:
+            seen: set[tuple] = set()
+            first = []
+            for r, t in enumerate(conflict):
+                if t is None or t not in seen:
+                    first.append(r)
+                    seen.add(t)
+            table = self._take(table, first)
+            conflict = [conflict[r] for r in first]
+        entries = self._segments_of(meta)
+        key_rows = [self._key_tuples(table, ks) for ks, _ in keysets]
+        holders = self._key_holders(target, entries, keysets, key_rows)
+        matched = holders[arbiter]
+        inserted = [r for r, t in enumerate(conflict) if t not in matched]
+        if not do_update or not matched:
+            rows = self._take(table, inserted)
+            self._decide_literal_constraints(
+                target, rows,
+                lambda asked, ins_keys: next(
+                    (
+                        i for i, ts in enumerate(ins_keys)
+                        if any(t in holders[i] for t in ts)
+                    ),
+                    None,
+                ),
+            )
+            n = self._stage_arrow(target, rows, base=entries)
+            self._commit_staged(target)
+            self._maybe_auto_refresh(target)  # as the MERGE lowering
+            return Result(effect_rows=n)
+        for i, ts in enumerate(key_rows):
+            ins_keys = [ts[r] for r in inserted]
+            if self._has_dup(ins_keys) or any(
+                t in holders[i] for t in ins_keys
+            ):
+                return None
+        set_low = {c.lower() for c in update_set}
+        same = {
+            c.lower() for c, e in update_set.items()
+            if re.fullmatch(rf"excluded\.{re.escape(c)}", e, re.I)
+        }
+        names = list(by_lower)
+        conds, probe = [], set()
+        for chk in meta.get("checks") or []:
+            refs = self._check_refs(chk, names)
+            if not refs & set_low:
+                if inserted:
+                    conds.append(f"(__ins AND NOT coalesce(({chk}), true))")
+            elif refs <= same:
+                conds.append(f"NOT coalesce(({chk}), true)")
+            else:
+                probe |= refs & set_low
+        if conds:
+            import pyarrow as pa
+
+            new = set(inserted)
+            flagged = table.append_column(
+                "__ins", pa.array([r in new for r in range(len(conflict))])
+            )
+            fschema = T.StructType(
+                schema.fields + [T.StructField("__ins", T.BooleanType())]
+            )
+            if self._values_relation(fschema, flagged).filter(
+                " OR ".join(conds)
+            ).limit(1).collect():
+                return None
+        n_matched = sum(len(files) for files in matched.values())
+        keep, affected = self._split_hit_files(
+            target, set().union(*matched.values()), n_matched
+        )
+        view = f"_upsert_{uuid.uuid4().hex[:8]}"
+        src = self._values_relation(
+            T.StructType([schema[c] for c in cols]),
+            self._take(
+                table.select(cols),
+                [r for r, t in enumerate(conflict) if t in matched],
+            ),
+        ).withColumn("__m", F.lit(1)).alias(view)
+        cond = " and ".join(f"{target}.{k} = {view}.{k}" for k in keys)
+        out = self._merge_update_branch(
+            self._read_files(target, affected).alias(target).join(
+                src, F.expr(cond), "left"
+            ),
+            target, schema,
+            self._parse_update_set(
+                target, list(by_lower.values()),
+                self._sub_outside_literals(
+                    set_sql, "excluded.", f"{view}."
+                ),
+            ),
+        )
+        if inserted:
+            out = out.unionByName(
+                self._values_relation(schema, self._take(table, inserted))
+            )
+        out = self._enforce_constraints(target, out)
+        self._stage_version(target, out, base=keep, changed=probe)
+        self._commit_staged(target)
+        self._maybe_auto_refresh(target)
+        return Result(effect_rows=n_matched + len(inserted))
+
     def _insert_on_conflict(self, m: re.Match) -> Result:
         """INSERT ... ON CONFLICT (Postgres/DuckDB upsert syntax),
         lowered onto the engine's MERGE path. Parity details honored:
@@ -12782,7 +13252,8 @@ class AnalyticsEngine:
         duplicate keys WITHIN the source — Postgres' "cannot affect
         row a second time"); DO NOTHING keeps the FIRST source row per
         key and skips the rest, exactly Postgres' arrival-order
-        semantics over a VALUES list."""
+        semantics over a VALUES list. A literal VALUES source is tried
+        on the driver first (``_try_literal_upsert``)."""
         target = m.group("t")
         self._writable_meta(target)
         keys = [k.strip() for k in m.group("keys").split(",")]
@@ -12798,6 +13269,7 @@ class AnalyticsEngine:
                 f"ON CONFLICT key(s) {bad} not in the insert column list"
             )
         src_sql = m.group("src").strip()
+        do_update = m.group("act").lower() != "nothing"
         if src_sql.lower().startswith("values"):
             # DEFAULT keyword + sequence calls substitute like plain
             # INSERT VALUES (per tuple, in row order)
@@ -12805,6 +13277,13 @@ class AnalyticsEngine:
                 target, collist, src_sql
             )
             src_sql = self._sub_values_sequences(src_sql)
+            done = self._try_literal_upsert(
+                target, collist, keys,
+                re.sub(r"^values\s*", "", src_sql, count=1, flags=re.I),
+                do_update, (m.group("set") or "").strip(),
+            )
+            if done is not None:
+                return done
             src_sql = (
                 f"select * from ({src_sql}) as _v({', '.join(collist)})"
             )
@@ -12819,7 +13298,6 @@ class AnalyticsEngine:
         from andb_spark.caching import persist_tracked as _pt
 
         src_df = _pt(src_df)
-        do_update = m.group("act").lower() != "nothing"
         # A row whose conflict key carries ANY NULL component can
         # never conflict (Postgres/DuckDB-probed: two (NULL, x) rows
         # both insert) — exempt such rows from the in-batch duplicate
@@ -12833,11 +13311,7 @@ class AnalyticsEngine:
                 .groupBy(*keys).count().filter(F.col("count") > 1)
             )
             if dup.limit(1).count():
-                raise EngineError(
-                    "ON CONFLICT DO UPDATE command cannot affect row a"
-                    " second time: duplicate conflict keys in the"
-                    " source rows"
-                )
+                raise EngineError(self._UPSERT_DUP_MSG)
         else:
             # keep the first arriving row per key (VALUES order /
             # source order), drop the rest — they would conflict with
@@ -13270,9 +13744,7 @@ class AnalyticsEngine:
                         f.name, defaults.get(f.name.lower(),
                                              F.lit(None)).cast(f.dataType)
                     )
-        src = src.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-        )
+        src = src.selectExpr(*_cast_to(schema))
         src = self._enforce_constraints(name, src)
         # O(batch): only the inserted rows hit disk; every existing file
         # is re-referenced by the new manifest, never rewritten. The row
@@ -13408,11 +13880,8 @@ class AnalyticsEngine:
                 f"INSERT OVERWRITE column count mismatch: "
                 f"{len(src.columns)} vs {len(schema.fields)}"
             )
-        src = src.toDF(*[f.name for f in schema.fields]).select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
+        src = src.toDF(*[f.name for f in schema.fields]).selectExpr(
+            *_cast_to(schema)
         )
         src = self._enforce_constraints(name, src)
         n = self._overwrite(name, src)
@@ -13497,6 +13966,49 @@ class AnalyticsEngine:
             stmt, delete_translation, source_unique_per_key
         )
 
+    @staticmethod
+    def _parse_update_set(
+        target: str, tcols: list[str], text: str
+    ) -> dict[str, str]:
+        """``a = expr, t.b = expr`` → {declared column: expression
+        text}; a target qualifier is dropped, an unknown column
+        refuses by name."""
+        by_lower = {c.lower(): c for c in tcols}
+        out: dict[str, str] = {}
+        for part in _split_top_level(text):
+            k, v = part.split("=", 1)
+            k = k.strip().split(".")[-1]
+            if k.lower() not in by_lower:
+                raise EngineError(f"MERGE SET column {k} not in {target}")
+            out[by_lower[k.lower()]] = v.strip()
+        return out
+
+    @staticmethod
+    def _merge_update_branch(
+        joined: DataFrame,
+        target: str,
+        schema: T.StructType,
+        update_set: dict[str, str],
+    ) -> DataFrame:
+        """The rewritten files' rows after a matched UPDATE: ``joined``
+        is those rows (aliased ``target``) left-joined to the source
+        rows marked ``__m``; a marked row takes each SET expression,
+        every other value stays, all cast to the declared types — one
+        ``selectExpr`` for every column."""
+        tq = _quote_ident(target)
+        exprs = []
+        for f_ in schema.fields:
+            old = f"{tq}.{_quote_ident(f_.name)}"
+            new = update_set.get(f_.name)
+            val = old if new is None else (
+                f"CASE WHEN __m IS NOT NULL THEN ({new}) ELSE {old} END"
+            )
+            exprs.append(
+                f"CAST({val} AS {_sql_type(f_.dataType)})"
+                f" AS {_quote_ident(f_.name)}"
+            )
+        return joined.selectExpr(*exprs)
+
     def _merge_resolved(
         self,
         stmt: str,
@@ -13578,16 +14090,9 @@ class AnalyticsEngine:
                 matched_delete = True
             else:
                 um = re.match(r"update\s+set\s+(.*)$", action, re.I | re.S)
-                update_set = {}
-                for part in _split_top_level(um.group(1)):
-                    k, v = part.split("=", 1)
-                    k = k.strip().split(".")[-1]
-                    kl = {c.lower(): c for c in tcols}.get(k.lower())
-                    if kl is None:
-                        raise EngineError(
-                            f"MERGE SET column {k} not in {target}"
-                        )
-                    update_set[kl] = v.strip()
+                update_set = self._parse_update_set(
+                    target, tcols, um.group(1)
+                )
         if update_set and matched_delete:
             # This engine's matched clauses are unconditional, so both
             # together are ambiguous (which rows update vs delete?) —
@@ -13692,17 +14197,8 @@ class AnalyticsEngine:
                 )
             else:
                 parts.append(
-                    joined.select(
-                        *[
-                            F.when(
-                                F.col("__m").isNotNull(),
-                                F.expr(update_set.get(c, f"{target}.{c}")),
-                            )
-                            .otherwise(F.col(f"{target}.{c}"))
-                            .cast(schema[c].dataType)
-                            .alias(c)
-                            for c in tcols
-                        ]
+                    self._merge_update_branch(
+                        joined, target, schema, update_set
                     )
                 )
         if insert_vals is not None:
@@ -13729,14 +14225,7 @@ class AnalyticsEngine:
                             _dflt.get(f.name.lower(),
                                       F.lit(None)).cast(f.dataType),
                         )
-            parts.append(
-                ins.select(
-                    *[
-                        F.col(f.name).cast(f.dataType).alias(f.name)
-                        for f in schema.fields
-                    ]
-                )
-            )
+            parts.append(ins.selectExpr(*_cast_to(schema)))
         if not parts:  # no matches, no inserts: nothing to write
             return Result(effect_rows=0)
         out = parts[0]
@@ -13830,9 +14319,7 @@ class AnalyticsEngine:
             src = read_source(self.spark, path, fmt, schema=schema)
         except ValueError as e:
             raise EngineError(str(e)) from e
-        src = src.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-        )
+        src = src.selectExpr(*_cast_to(schema))
         src = self._enforce_constraints(name, src)
         # bulk import = file append, O(batch); count from the footers
         n = self._append(name, src)
@@ -13999,10 +14486,21 @@ class AnalyticsEngine:
             .collect()
         )
         n_matched = sum(r["_n"] for r in per_file)
-        hit = {
-            urllib.parse.unquote(urllib.parse.urlparse(r["_f"]).path)
-            for r in per_file
-        }
+        hit = {self._uri_path(r["_f"]) for r in per_file}
+        keep_entries, affected = self._split_hit_files(name, hit, n_matched)
+        return n_matched, keep_entries, affected
+
+    @staticmethod
+    def _uri_path(uri: str) -> str:
+        """Local path of an ``input_file_name()`` URI."""
+        return urllib.parse.unquote(urllib.parse.urlparse(uri).path)
+
+    def _split_hit_files(
+        self, name: str, hit: set[str], n_matched: int
+    ) -> tuple[list[str], list[str]]:
+        """Split the manifest around the files holding ``n_matched``
+        matched rows (``_partition_entries``) into (keep entries,
+        affected paths)."""
         keep_entries, affected = self._partition_entries(name, hit)
         # Broad-change fallback: when the change touches nearly every
         # file, file-granular bookkeeping buys nothing — the rewrite is
@@ -14021,7 +14519,7 @@ class AnalyticsEngine:
                 f"internal: {n_matched} matched rows in {name} resolved "
                 f"to no manifest file (hit paths: {sorted(hit)[:3]}...)"
             )
-        return n_matched, keep_entries, affected
+        return keep_entries, affected
 
     def _partition_entries(
         self, name: str, hit: set[str]

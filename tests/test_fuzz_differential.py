@@ -16,6 +16,7 @@ both sides (different summation orders are legal).
 
 from __future__ import annotations
 
+import datetime
 import math
 
 import duckdb
@@ -730,7 +731,7 @@ def test_random_dml_sequence_agrees_with_duckdb(spark, n0, stmts):
 # forced-Spark path must produce identical tables.
 
 _INS_COLTYPES = ["int", "bigint", "real", "double", "boolean", "text",
-                 "varchar(3)"]
+                 "varchar(3)", "varchar", "string", "date"]
 
 
 def _ins_value(typ):
@@ -748,7 +749,12 @@ def _ins_value(typ):
         )
     if typ == "boolean":
         return st.one_of(st.booleans(), st.none())
-    return st.one_of(  # text / varchar
+    if typ == "date":
+        return st.one_of(
+            st.dates(datetime.date(1000, 1, 1), datetime.date(9999, 12, 31)),
+            st.none(),
+        )
+    return st.one_of(  # text / varchar / string
         st.text(
             alphabet="ab'(),;% éß0",
             max_size=8,
@@ -781,6 +787,8 @@ def _ins_literal(typ, v):
         return f"{v:.3f}"  # matches the fast path's -?\d+\.\d+ shape
     if typ in ("int", "bigint"):
         return str(v)
+    if typ == "date":
+        return f"date '{v.isoformat()}'"
     return "'" + str(v).replace("'", "''") + "'"
 
 
@@ -822,6 +830,73 @@ def test_literal_insert_fast_path_matches_spark_path(spark, case):
                 ), (t, a, b)
             else:
                 assert a == b, (t, a, b)
+
+
+# The constrained variant: a PRIMARY KEY, a UNIQUE of a drawn type and
+# a CHECK, with keys from small domains so batches collide with each
+# other and with earlier batches. The driver-side constraint decisions
+# (api._decide_literal_constraints) must give the forced-Spark path's
+# outcome — effect_rows or the exact violation message — and table.
+_CON_UVALS = {
+    "bigint": st.integers(0, 4),
+    "varchar": st.sampled_from(["a", "b", "c'd", ""]),
+    "date": st.dates(datetime.date(1999, 12, 30), datetime.date(2000, 1, 2)),
+}
+
+
+@st.composite
+def _ins_constrained_case(draw):
+    utype = draw(st.sampled_from(sorted(_CON_UVALS)))
+    row = st.tuples(
+        st.one_of(st.integers(-1, 6), st.none()),
+        st.one_of(_CON_UVALS[utype], st.none()),
+        st.one_of(st.integers(-2, 8).map(lambda i: i / 2), st.none()),
+    )
+    batches = draw(
+        st.lists(st.lists(row, min_size=1, max_size=3), min_size=1,
+                 max_size=3)
+    )
+    return utype, batches
+
+
+@settings(max_examples=12, deadline=None)
+@seed(FUZZ_ROUND * 104729 + 11)
+@given(case=_ins_constrained_case())
+def test_literal_insert_constrained_matches_spark_path(spark, case):
+    import tempfile
+
+    from andb_spark.api import AnalyticsEngine, EngineError
+
+    utype, batches = case
+    types = ("bigint", utype, "double")
+    results = []
+    for force_spark in (False, True):
+        eng = AnalyticsEngine(tempfile.mkdtemp(prefix="insfz_"), spark=spark)
+        if force_spark:
+            eng._try_literal_append = lambda *a, **k: None
+        eng.execute(
+            f"create table fc (k bigint primary key, u {utype} unique,"
+            " v double check (v >= 0))"
+        )
+        seen = []
+        for rows in batches:
+            values = ", ".join(
+                "(" + ", ".join(_ins_literal(t, v) for t, v in zip(types, r))
+                + ")"
+                for r in rows
+            )
+            try:
+                seen.append(
+                    eng.execute(f"insert into fc values {values}").effect_rows
+                )
+            except EngineError as e:
+                seen.append(str(e))
+        seen.append(sorted(
+            eng.execute("select * from fc").rows,
+            key=lambda t: tuple((x is None, str(x)) for x in t),
+        ))
+        results.append(seen)
+    assert results[0] == results[1]
 
 
 # Quantified-comparison fuzz arm (r8): the ANY/ALL/SOME rewrite

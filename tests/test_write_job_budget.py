@@ -1,6 +1,8 @@
 """Write-path job budget: the PK/UNIQUE/CHECK probes at the staged-write
 choke point (api.py::_check_staged_constraints) probe only what a
-statement could have broken, in at most two Spark actions.
+statement could have broken, in at most two Spark actions; literal
+VALUES writes decide their constraints on the driver
+(api.py::_decide_literal_constraints, _try_literal_upsert).
 
 - Per-statement Spark job budgets on a table carrying a PRIMARY KEY, a
   UNIQUE and a CHECK (counted with conftest.statement_jobs, AQE stage
@@ -71,7 +73,7 @@ def test_statement_job_budgets(spark, engine):
         (
             "insert into t values"
             " (10000001, 5, 'c10000001', 12.5, 'F', date '1997-02-03')",
-            7,
+            1,
         ),
         ("update t set price = price + 7 where k = 1234", 6),
         ("delete from t where k between 100 and 120", 4),
@@ -82,13 +84,38 @@ def test_statement_job_budgets(spark, engine):
             " (10000002, 1, 'c10000002', 4.0, 'F', date '1997-01-01')"
             " on conflict (k) do update"
             " set price = excluded.price, status = excluded.status",
-            18,
+            6,
+        ),
+        (
+            "insert into t values"
+            " (10000003, 1, 'c10000003', 4.0, 'F', date '1997-01-01'),"
+            " (10000004, 1, 'c10000004', 4.0, 'F', date '1997-01-01')"
+            " on conflict (k) do nothing",
+            1,
         ),
     ]
     for sql, budget in budgets:
         n = statement_jobs(spark, lambda: e(sql))
         assert n <= budget, (sql, n, budget)
-    assert e("select count(*) from t").rows == [(2000 - 21 + 1 + 2,)]
+    assert e("select count(*) from t").rows == [(2000 - 21 + 1 + 2 + 2,)]
+
+
+def test_integer_key_append_runs_no_job(spark, engine):
+    """With no string key, the footer zone maps rule out every base
+    file for a fresh integer key, and the CHECK runs over a
+    LocalRelation: a 1-row literal append submits no Spark job."""
+    e = engine.execute
+    e(
+        "create table ik (k bigint primary key, v double check (v >= 0),"
+        " d date)"
+    )
+    e("insert into ik select id, id * 0.5, date '1996-01-01'"
+      " from range(0, 2000) r(id)")
+    sql = "insert into ik values (5000, 1.5, date '1997-02-03')"
+    assert statement_jobs(spark, lambda: e(sql)) == 0
+    with pytest.raises(EngineError, match="CHECK constraint failed"):
+        e("insert into ik values (5001, -1.5, null)")
+    assert e("select count(*), max(k) from ik").rows == [(2001, 5000)]
 
 
 @pytest.mark.parametrize(

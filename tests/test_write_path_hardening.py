@@ -360,3 +360,21 @@ def test_desc_shorthand_and_duplicate_insert_columns(engine):
     with pytest.raises(EngineError):
         e("insert into dd (a, a) values (1, 2)")
     assert e("select count(1) as n from dd").rows == [(1,)]
+
+
+def test_cast_projection_quotes_unusual_column_names(engine, tmp_path):
+    """INSERT ... SELECT and COPY ... FROM cast the source to the table
+    schema in one selectExpr: a column name holding a space or a
+    backtick must be quoted (backtick doubled), not parsed."""
+    e = engine.execute
+    e("create table odd as select 1 as `a b`, 'x' as `c``d`")
+    assert engine._schema("odd").names == ["a b", "c`d"]
+    e("insert into odd select 2, 'y'")
+    path = str(tmp_path / "odd.parquet")
+    engine.spark.createDataFrame(
+        [(3, "z")], "`a b` int, `c``d` string"
+    ).write.parquet(path)
+    assert e(f"copy odd from '{path}' format parquet").effect_rows == 1
+    assert sorted(e("select * from odd").rows) == [
+        (1, "x"), (2, "y"), (3, "z")
+    ]
