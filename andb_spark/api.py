@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from andb_spark.functions.register import register_all
+from andb_spark.plans.ann import MODES as _ANN_MODES
 from andb_spark.session import get_session, tune_for_session
 
 # AnDB type name → Spark type (SURVEY.md §1.2 mapping table).
@@ -611,11 +612,17 @@ class AnalyticsEngine:
         # answers are strictly opt-in.
         self.session_vars: dict[str, str] = {"andb.ann_mode": "exact"}
         # True only while a statement is planned, not run (plain
-        # EXPLAIN, DESCRIBE, plan-only view binds): every pass at ANY
-        # composition depth (CTE body, DISTINCT ON / QUALIFY inner
-        # statement, ASOF subquery source) must then stay job-free —
-        # e.g. _rewrite_quantified takes its lazy stats-view path
-        # (r8 ADVICE #2).
+        # EXPLAIN, DESCRIBE, plan-only view binds), at ANY composition
+        # depth (CTE body, DISTINCT ON / QUALIFY inner statement, ASOF
+        # subquery source). Every other pass builds one lazy plan that
+        # planning and execution share; five pre-passes still read the
+        # flag, because the executed form needs a count or has a side
+        # effect:
+        # - _limit_percent: counts the rows to size the LIMIT
+        # - _zip_index: checkpoints and counts partitions for offsets
+        # - _seq_default_fill, _nextval_from_rewrite: count the rows
+        #   to reserve a sequence block
+        # - _seq_next_block: advances the sequence (planning peeks)
         self._planning = False
         self.catalog.setdefault("stats", {})
         # Logical (non-materialized) views: name -> {"sql": defining
@@ -7080,31 +7087,36 @@ class AnalyticsEngine:
         return Result()
 
     # --------------------------------------------- vars / stats / ANALYZE --
+    # Every settable andb.* session variable: name -> (accepts the
+    # value?, what it must be). SET checks the value here, so a bad one
+    # fails the SET instead of every later statement that reads it.
+    _ON_OFF = (lambda v: v in ("on", "off"), "on or off")
+    _UINT = (lambda v: v.isdecimal(), "a non-negative integer")
+    _POS_INT = (lambda v: v.isdecimal() and int(v) > 0, "a positive integer")
+    _SETTINGS = {
+        "andb.ann_mode": (lambda v: v in _ANN_MODES, f"one of {_ANN_MODES}"),
+        "andb.matview_autorefresh": _ON_OFF,
+        "andb.zone_prune": _ON_OFF,
+        # small-file count threshold; 0 disables
+        "andb.auto_compact": _UINT,
+        "andb.max_result_rows": _POS_INT,
+        # 0 disables the staged-write output sizing
+        "andb.stage_sizing_max_bytes": _UINT,
+        "andb.stage_target_file_bytes": _UINT,
+        "andb.range_bucket_seconds": _POS_INT,
+    }
+
     def _set_var(self, stmt: str) -> Result:
         m = re.match(r"set\s+([\w.]+)\s*=\s*'?([\w.\-]+)'?\s*$", stmt, re.I)
         if not m:
             raise EngineError(f"cannot parse SET statement: {stmt}")
         name, value = m.group(1), m.group(2)
-        if name == "andb.ann_mode":
-            from andb_spark.plans.ann import MODES
-
-            if value not in MODES:
-                raise EngineError(f"andb.ann_mode must be one of {MODES}")
-        if name == "andb.matview_autorefresh" and value not in ("on", "off"):
-            raise EngineError("andb.matview_autorefresh must be on or off")
-        if name == "andb.auto_compact":
-            if not re.fullmatch(r"\d+", value):
-                raise EngineError(
-                    "andb.auto_compact must be a non-negative integer"
-                    " (small-file count threshold; 0 disables)"
-                )
-        if name == "andb.max_result_rows":
-            # validate HERE: a bad value accepted at SET time would make
-            # every later SELECT fail inside _fetch
-            if not re.fullmatch(r"\d+", value) or int(value) < 1:
-                raise EngineError(
-                    "andb.max_result_rows must be a positive integer"
-                )
+        if name.lower().startswith("andb."):
+            if name not in self._SETTINGS:
+                raise EngineError(f"unknown setting {name}")
+            ok, must_be = self._SETTINGS[name]
+            if not ok(value):
+                raise EngineError(f"{name} must be {must_be} (got {value})")
         self.session_vars[name] = value
         return Result()
 
@@ -7595,9 +7607,7 @@ class AnalyticsEngine:
         keyword can only drop conjuncts, and any malformed fragment
         disables the parse entirely), so a swap never excludes a
         segment the real predicate could match."""
-        if self.session_vars.get("andb.zone_prune", "on").lower() in (
-            "off", "false", "0",
-        ):
+        if self.session_vars.get("andb.zone_prune") == "off":
             return None
         m = self._FROM_WHERE_RE.match(stmt)
         if not m or m.group(1) not in self.catalog["tables"]:
@@ -8031,41 +8041,24 @@ class AnalyticsEngine:
     def _rewrite_quantified(self, stmt: str) -> str:
         """SQL quantified comparisons — ``x <op> ANY (subquery)`` /
         ``ALL`` / ``SOME`` (ANSI; native in DuckDB/Postgres, absent
-        from Spark SQL). Rewritten onto Spark-native constructs with
-        exact three-valued-logic semantics:
-
-        - ``= ANY`` -> ``IN (subquery)``; ``<> ALL`` -> ``NOT IN``
-          (Spark's IN already implements the standard's 3VL, incl.
-          NULL probes and NULL elements).
-        - every other (op, quantifier) -> a CASE over scalar
-          aggregates of the subquery bound to a LAZY temp view:
-          count(*) / count(col) decide the empty-set result (FALSE
-          for ANY, TRUE for ALL) and the has-NULL-element UNKNOWN;
-          min/max carry the comparison (``x > ANY S`` is ``x >
-          min(S)``; ``x > ALL S`` is NOT ``x <= max(S)``); for
-          (in)equality against ANY/ALL, count(distinct col)
-          distinguishes the one-distinct-value case. Each aggregate
-          is an uncorrelated scalar subquery — Spark computes it once
-          and broadcasts the literal, so the rewrite adds one tiny
-          aggregation per quantifier, never a per-row join.
-
-        Under ``self._planning`` (plain EXPLAIN, DESCRIBE) the stats
-        stay scalar subqueries over the LAZY set view instead of an
-        eager aggregation — planning must never execute a job; the
-        executed paths keep the one-scan eager aggregation.
+        from Spark SQL), uncorrelated or equi-correlated. Each one
+        becomes a CASE with exact three-valued-logic semantics over
+        one lazy plan (``_quantified_case``): an uncorrelated
+        subquery is the zero-key case of the correlated lowering, so
+        EXPLAIN, DESCRIBE, view binding and execution all plan the
+        same statement and none of them runs a job here.
 
         The LHS must stand alone: a match whose lhs token is really
         the tail of a larger expression (``x + 1 > any (...)`` — the
         regex would grab ``1`` and splice with wrong precedence) is
-        left unconsumed so the catch-all refuses it by name.
+        left unconsumed so the catch-all refuses it by name. A
+        correlated body outside the equi-correlated class
+        (``_quantified_correlated_body``) is refused by name too.
 
-        Correlated subqueries are refused by name (the view binding
-        cannot see outer columns). The differential grid
-        (test_parser_surfaces_differential.py) pins every (op,
-        quantifier) against DuckDB's native implementation, including
-        empty / all-NULL / some-NULL sets and NULL probes."""
-        plan_only = self._planning
-        NULLB = "cast(null as boolean)"
+        The differential grids (test_parser_surfaces_differential.py,
+        test_fuzz_differential.py) pin every (op, quantifier) against
+        DuckDB's native implementation, including empty / all-NULL /
+        some-NULL sets and NULL probes."""
         _blank = _blank_literals
 
         while True:
@@ -8113,17 +8106,10 @@ class AnalyticsEngine:
             if quant == "some":
                 quant = "any"
             try:
-                df = self.spark.sql(inner)
-                cols = df.columns
+                cols = self.spark.sql(inner).columns
             except Exception as e:
-                # EQUI-CORRELATED subqueries (r11, was a named
-                # refusal): rewrite onto per-key grouped stats +
-                # correlated scalar-subquery probes — see
-                # _quantified_correlated_repl
-                corr = self._quantified_correlated_repl(
-                    inner, lhs, op, quant, plan_only
-                )
-                if corr is None:
+                body = self._quantified_correlated_body(inner)
+                if body is None:
                     raise EngineError(
                         "ANY/ALL: the subquery must be a"
                         " standalone (uncorrelated) SELECT, or a"
@@ -8132,100 +8118,17 @@ class AnalyticsEngine:
                         " BY/LIMIT/set ops; correlation as plain"
                         f" `=` conjuncts) ({e})"
                     ) from e
-                stmt = stmt[: cand.start()] + corr + stmt[cp + 1:]
-                continue
-            if len(cols) != 1:
-                raise EngineError(
-                    "ANY/ALL subquery must select exactly one"
-                    f" column (got {len(cols)})"
-                )
-            view = self._scoped_view(df, "_quant_")
-            c = f"`{cols[0]}`"
-            # aggregate the set ONCE, eagerly, into a 1-row
-            # LOCAL relation: each scalar subquery below would
-            # otherwise re-execute the whole subquery (up to four
-            # scans of its source — a scale-killer when the set is
-            # a filtered slice of the fact table). One small job
-            # at rewrite time; the CASE's scalar subqueries then
-            # read an in-memory row. Only the IN membership branch
-            # still scans the source (it needs the values), once.
-            col0 = df.columns[0]
-            stats_df = df.agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.count(F.col(col0)).alias("nn"),
-                F.min(F.col(col0)).alias("mn"),
-                F.max(F.col(col0)).alias("mx"),
-                F.countDistinct(F.col(col0)).alias("nd"),
-            )
-            if not plan_only:
-                # plain EXPLAIN must not execute jobs: it keeps the
-                # stats as a lazy 1-row view (scalar subqueries
-                # re-derive it in the plan — fine, nothing runs)
-                stats_df = _local_df(
-                    self.spark, stats_df.collect(), stats_df.schema
-                )
-            stats = self._scoped_view(stats_df, "_quantstats_")
-            cnt = f"(select cnt from {stats})"
-            nn = f"(select nn from {stats})"
-            mn = f"(select mn from {stats})"
-            mx = f"(select mx from {stats})"
-            nd = f"(select nd from {stats})"
-            if (quant, op) in (("any", "="), ("all", "<>")):
-                # Spark's IN-subquery in a projection is NOT
-                # null-aware (NULL probe -> FALSE, and a non-match
-                # against a set containing NULL -> FALSE, where the
-                # standard and DuckDB say UNKNOWN). Its TRUE branch
-                # IS trustworthy, so: order the CASE to trust only
-                # the hit, route the NULL probe and the
-                # missed-with-NULL-elements cases (nn < cnt)
-                # explicitly. `<> ALL` is the exact negation.
-                hit = "true" if quant == "any" else "false"
-                miss = "false" if quant == "any" else "true"
-                repl = (
-                    f"(case when {cnt} = 0 then {miss}"
-                    f" when {lhs} is null then {NULLB}"
-                    f" when {lhs} in (select {c} from {view})"
-                    f" then {hit}"
-                    f" when {nn} < {cnt} then {NULLB}"
-                    f" else {miss} end)"
-                )
-            elif op == "<>":  # any
-                repl = (
-                    f"(case when {cnt} = 0 then false"
-                    f" when {lhs} is null then {NULLB}"
-                    f" when {nd} >= 2 then true"
-                    f" when {lhs} <> {mn} then true"
-                    f" when {nn} < {cnt} then {NULLB}"
-                    f" else false end)"
-                )
-            elif op == "=":  # all
-                repl = (
-                    f"(case when {cnt} = 0 then true"
-                    f" when {lhs} is null then {NULLB}"
-                    f" when {nd} >= 2 then false"
-                    f" when {lhs} <> {mn} then false"
-                    f" when {nn} < {cnt} then {NULLB}"
-                    f" else true end)"
-                )
-            elif quant == "any":
-                ext = mn if op in (">", ">=") else mx
-                repl = (
-                    f"(case when {cnt} = 0 then false"
-                    f" when {lhs} {op} {ext} then true"
-                    f" when {lhs} is null then {NULLB}"
-                    f" when {nn} < {cnt} then {NULLB}"
-                    f" else false end)"
-                )
-            else:  # all, inequality: NOT (lhs neg-op ANY)
-                ext = mx if op in (">", ">=") else mn
-                neg = {">": "<=", ">=": "<", "<": ">=", "<=": ">"}[op]
-                repl = (
-                    f"(case when {cnt} = 0 then true"
-                    f" when {lhs} {neg} {ext} then false"
-                    f" when {lhs} is null then {NULLB}"
-                    f" when {nn} < {cnt} then {NULLB}"
-                    f" else true end)"
-                )
+                vals, outer = body
+            else:
+                if len(cols) != 1:
+                    raise EngineError(
+                        "ANY/ALL subquery must select exactly one"
+                        f" column (got {len(cols)})"
+                    )
+                col = cols[0].replace("`", "``")
+                vals = f"select (`{col}`) as __qv from ({inner}) __qsrc"
+                outer = []
+            repl = self._quantified_case(vals, outer, lhs, op, quant)
             stmt = stmt[: cand.start()] + repl + stmt[cp + 1:]
         # catch-all: a quantified spelling the regex could not
         # consume (complex lhs expression) must fail by name, not
@@ -8241,37 +8144,21 @@ class AnalyticsEngine:
             )
         return stmt
 
-    def _quantified_correlated_repl(
-        self, inner: str, lhs: str, op: str, quant: str,
-        plan_only: bool,
-    ) -> str | None:
-        """Correlated quantified comparison — ``x <op> ANY|ALL
-        (SELECT v FROM t2 WHERE t2.k = t1.k ...)`` (DuckDB/Postgres
-        execute these natively; r11, was a named refusal). The class:
-        a simple body (single select item, FROM + WHERE only — no
-        GROUP BY/LIMIT/set ops) whose WHERE carries plain ``=``
-        correlation conjuncts, classified PLAN-BASED exactly like
-        `_decorrelate_engine_subquery` (a side is 'inner' iff it
-        resolves against the body's own FROM; both-or-neither → out
-        of class → the caller's named refusal).
+    def _quantified_correlated_body(
+        self, inner: str
+    ) -> tuple[str, list[str]] | None:
+        """Classify an equi-correlated quantified body — ``SELECT v
+        FROM t2 WHERE t2.k = t1.k ...`` (DuckDB/Postgres execute these
+        natively). The class: a simple body (single select item, FROM
+        + WHERE only — no GROUP BY/LIMIT/set ops) whose WHERE carries
+        plain ``=`` correlation conjuncts, classified PLAN-BASED
+        exactly like `_decorrelate_engine_subquery` (a side is 'inner'
+        iff it resolves against the body's own FROM; both-or-neither →
+        out of class → None, the caller's named refusal).
 
-        Rewrite: ONE per-correlation-key aggregation of the body
-        (`GROUP BY` keys → hasnull/min/max/count-distinct — rows
-        exist ONLY for non-empty groups, so the EMPTY-set branch is
-        simply 'the correlated probe found no row'), bound lazily and
-        statement-scope PERSISTED so the CASE's 3-4 correlated scalar
-        probes share one computation instead of re-aggregating the
-        source per probe; each probe decorrelates in Catalyst to a
-        LeftSingle hash join on the key (verified on the physical
-        plan — never a per-outer-row nested loop). The CASE templates
-        are the uncorrelated branches' exact 3VL twins with `cnt = 0`
-        → 'no stats row' and `nn < cnt` → the precomputed `hasnull`;
-        the `= ANY` / `<> ALL` membership probe becomes a correlated
-        EXISTS (a plain semi join on key+value). At 100× data every
-        piece is a key-partitioned aggregate or hash join — the
-        shape DuckDB's own subquery decorrelation produces."""
-        from andb_spark.caching import persist_tracked
-
+        Returns the body's value set as SQL, ``select (<inner key>)
+        as __qk<i>, ..., (<item>) as __qv from <src> where <plain
+        conjuncts>``, and the outer side of each correlation key."""
         if self._first_clause_kw(
             inner,
             ("group by", "having", "qualify", "window", "order by",
@@ -8323,56 +8210,80 @@ class AnalyticsEngine:
             corr.append((lft, rgt) if li else (rgt, lft))
         if not corr or not _resolves(item):
             return None
-        keysel = ", ".join(
-            f"({ik}) as __qk{i}" for i, (ik, _o) in enumerate(corr)
+        keysel = "".join(
+            f"({ik}) as __qk{i}, " for i, (ik, _o) in enumerate(corr)
         )
         wsql = (" where " + " and ".join(plain)) if plain else ""
-        wrap = f"select {keysel}, ({item}) as __qv from {sources}{wsql}"
-        keys = ", ".join(f"__qk{i}" for i in range(len(corr)))
-        stats_sql = (
-            f"select {keys}, count(__qv) < count(*) as hasnull,"
-            f" min(__qv) as mn, max(__qv) as mx,"
-            f" count(distinct __qv) as nd"
-            f" from ({wrap}) __qsrc group by {keys}"
+        return (
+            f"select {keysel}({item}) as __qv from {sources}{wsql}",
+            [o for _ik, o in corr],
         )
-        stats_df = self.spark.sql(stats_sql)
-        if not plan_only:
-            # one computation shared by every probe; execute()'s
-            # statement-scoped cache release reclaims it
-            stats_df = persist_tracked(stats_df)
-        stats = self._scoped_view(stats_df, "_quantcorr_")
-        keycond = " and ".join(
-            f"__qk{i} = ({outer})"
-            for i, (_ik, outer) in enumerate(corr)
+
+    def _quantified_case(
+        self, vals_sql: str, outer: list[str], lhs: str, op: str,
+        quant: str,
+    ) -> str:
+        """The 3VL CASE for ``lhs <op> ANY|ALL S``. ``vals_sql`` yields
+        S as ``__qv`` plus one ``__qk<i>`` column per correlation key,
+        to be matched against ``outer[i]`` (no keys: uncorrelated).
+
+        One lazy aggregation of S per key — has-NULL, min, max,
+        count(distinct) — with ``having count(*) > 0``, so an empty
+        set is 'the probe found no stats row' in both cases. min/max
+        carry the comparison (``x > ANY S`` is ``x > min(S)``; ``x >
+        ALL S`` is NOT ``x <= max(S)``); count(distinct) separates
+        the one-distinct-value case of (in)equality; ``= ANY`` /
+        ``<> ALL`` test membership with an IN over (value, keys), a
+        hash existence join. Spark's IN in a projection is not
+        null-aware (a miss against a set holding NULL is FALSE, where
+        the standard says UNKNOWN), so the CASE trusts only its hit
+        and routes NULLs through has-NULL. Each stats probe is a
+        scalar subquery: uncorrelated ones are merged into one
+        aggregation by Catalyst's MergeScalarSubqueries, correlated
+        ones decorrelate to a hash join on the key — never a
+        per-outer-row loop."""
+        vals = self._scoped_view(self.spark.sql(vals_sql), "_quant_")
+        keys = [f"__qk{i}" for i in range(len(outer))]
+        group = f" group by {', '.join(keys)}" if keys else ""
+        stats = self._scoped_view(
+            self.spark.sql(
+                f"select {''.join(f'{k}, ' for k in keys)}"
+                f"count(__qv) < count(*) as hasnull,"
+                f" min(__qv) as mn, max(__qv) as mx,"
+                f" count(distinct __qv) as nd"
+                f" from {vals}{group} having count(*) > 0"
+            ),
+            "_quantstats_",
+        )
+        match = "".join(
+            f" and {k} = ({o})" for k, o in zip(keys, outer)
         )
 
         def s(col: str) -> str:
-            return f"(select {col} from {stats} where {keycond})"
+            return f"(select {col} from {stats} where true{match})"
 
         hn, mn, mx, nd = s("hasnull"), s("mn"), s("mx"), s("nd")
         empty = f"{hn} is null"
         NULLB = "cast(null as boolean)"
         if (quant, op) in (("any", "="), ("all", "<>")):
-            vals = self._scoped_view(self.spark.sql(wrap), "_quantvals_")
             hit = "true" if quant == "any" else "false"
             miss = "false" if quant == "any" else "true"
+            # an IN, not an EXISTS: an aggregate lhs (HAVING) cannot
+            # move into a subquery's WHERE
+            probe = ", ".join([lhs, *(f"({o})" for o in outer)])
             member = (
-                f"exists (select 1 from {vals} where "
-                + " and ".join(
-                    f"__qk{i} = ({o})"
-                    for i, (_ik, o) in enumerate(corr)
-                )
-                + f" and __qv = {lhs})"
+                f"({probe}) in"
+                f" (select {', '.join(['__qv', *keys])} from {vals})"
             )
-            repl = (
+            return (
                 f"(case when {empty} then {miss}"
                 f" when {lhs} is null then {NULLB}"
                 f" when {member} then {hit}"
                 f" when {hn} then {NULLB}"
                 f" else {miss} end)"
             )
-        elif op == "<>":  # any
-            repl = (
+        if op == "<>":  # any
+            return (
                 f"(case when {empty} then false"
                 f" when {lhs} is null then {NULLB}"
                 f" when {nd} >= 2 then true"
@@ -8380,8 +8291,8 @@ class AnalyticsEngine:
                 f" when {hn} then {NULLB}"
                 f" else false end)"
             )
-        elif op == "=":  # all
-            repl = (
+        if op == "=":  # all
+            return (
                 f"(case when {empty} then true"
                 f" when {lhs} is null then {NULLB}"
                 f" when {nd} >= 2 then false"
@@ -8389,26 +8300,25 @@ class AnalyticsEngine:
                 f" when {hn} then {NULLB}"
                 f" else true end)"
             )
-        elif quant == "any":
+        if quant == "any":
             ext = mn if op in (">", ">=") else mx
-            repl = (
+            return (
                 f"(case when {empty} then false"
                 f" when {lhs} {op} {ext} then true"
                 f" when {lhs} is null then {NULLB}"
                 f" when {hn} then {NULLB}"
                 f" else false end)"
             )
-        else:  # all, inequality: NOT (lhs neg-op ANY)
-            ext = mx if op in (">", ">=") else mn
-            neg = {">": "<=", ">=": "<", "<": ">=", "<=": ">"}[op]
-            repl = (
-                f"(case when {empty} then true"
-                f" when {lhs} {neg} {ext} then false"
-                f" when {lhs} is null then {NULLB}"
-                f" when {hn} then {NULLB}"
-                f" else true end)"
-            )
-        return repl
+        # all, inequality: NOT (lhs neg-op ANY)
+        ext = mx if op in (">", ">=") else mn
+        neg = {">": "<=", ">=": "<", "<": ">=", "<=": ">"}[op]
+        return (
+            f"(case when {empty} then true"
+            f" when {lhs} {neg} {ext} then false"
+            f" when {lhs} is null then {NULLB}"
+            f" when {hn} then {NULLB}"
+            f" else true end)"
+        )
 
     _FF_TAIL_KWS = (
         "where", "group by", "having", "qualify", "window",
@@ -8642,31 +8552,25 @@ class AnalyticsEngine:
         dropped (Postgres evaluation order: OFFSET before FETCH; ties
         extend the FETCH boundary only).
 
-        Plan (scale-first — NO global-order window, which would sort
-        the whole input into one task): (1) TakeOrdered o+n rows with
-        the order expressions carried as helper columns; (2) the
-        boundary = the LAST of those rows under the order; (3) result
-        = the top rows that don't tie with the boundary UNION the full
-        input filtered to boundary-tied rows — a predicate scan,
-        null-safe-equal on every sort key. Two bounded scans of the
-        source at any scale instead of one total sort. For the common
-        small page (o+n <= 8192) the top set collects in ONE job and
-        becomes a local relation, so the tie scan is the only cluster
-        work; a larger o+n keeps the set distributed (persist) and
-        probes the boundary via the REVERSED order + LIMIT 1 — one
-        row to the driver, never o+n. When the input has fewer than
-        o+n rows there is no boundary and the top set IS the result.
+        One lazy plan, the same for EXPLAIN, DESCRIBE, view binding
+        and execution (scale-first — NO global-order window, which
+        would sort the whole input into one task): (1) ``top`` =
+        TakeOrdered o+n rows with the order expressions carried as
+        helper columns; (2) the boundary = ``top`` under the REVERSED
+        order, LIMIT 1; (3) result = the ``top`` rows not tied with
+        the boundary UNION the source rows tied with it, "tied" being
+        null-safe equality on every sort key (an anti and a semi join
+        against the one boundary row). Bounded scans of the source at
+        any scale instead of one total sort, and no row reaches the
+        driver. When the input has fewer than o+n rows every row is
+        in ``top``, so the same plan is exact.
         An ORDER BY referencing columns the statement does NOT
         project resolves against the SOURCE scope for simple SELECT
         heads (Postgres resolution; ``_ties_source_scope_plan``
         injects the order expressions as helper columns and the
         final projection drops them). DISTINCT heads refuse — as in
         Postgres — and compound/WITH heads keep the
-        projected-columns rule (named refusal).
-
-        EXPLAIN (``self._planning``) must not launch the probe job:
-        the plan-only path emits the equivalent rank()-window SQL over
-        the same lazy view — correct semantics, plan-shape only."""
+        projected-columns rule (named refusal)."""
         ob = self._find_top_level_keyword(head, ("order by",))
         if ob is None:
             raise EngineError(
@@ -8755,96 +8659,36 @@ class AnalyticsEngine:
             for h, (_e, d, nl) in zip(helpers, items)
         ]
 
-        def _final_sql(view: str) -> str:
-            # source-scope: the view RETAINS the helper columns
-            # (the order keys exist nowhere else once the source
-            # columns are projected away) — order by them, project
-            # the statement's own columns
-            if src_scope:
-                sel = ", ".join(f"`{c}`" for c in proj_cols)
-                osql = ", ".join(
-                    f"{h} {d}" + (f" nulls {nl}" if nl else "")
-                    for h, (_e, d, nl) in zip(helpers, items)
-                )
-                return (
-                    f"select {sel} from {view} order by {osql}"
-                    + (f" offset {off}" if off else "")
-                )
-            return (
-                f"select * from {view} order by {order_text}"
-                + (f" offset {off}" if off else "")
-            )
-
-        def _strip(frame):
-            return frame if src_scope else frame.drop(*helpers)
-
-        if self._planning:
-            from pyspark.sql import Window as _W
-
-            ranked = df.withColumn(
-                "_ft_rk", F.rank().over(_W.orderBy(*sort_cols))
-            )
-            final = _strip(
-                ranked.filter(F.col("_ft_rk") <= off + n).drop("_ft_rk")
-            )
-            return _final_sql(self._scoped_view(final, "_ft_"))
         top = df.orderBy(*sort_cols).limit(off + n)
-
-        def _tie_pred(boundary):
-            tie = None
-            for h in helpers:
-                c = F.col(h).eqNullSafe(
-                    F.lit(boundary[h]).cast(top.schema[h].dataType)
-                )
-                tie = c if tie is None else (tie & c)
-            return tie
-
-        if off + n <= 8192:
-            # small page: ONE bounded job; the collected top set
-            # becomes a local relation, and the boundary is its
-            # last row (collect() of orderBy().limit() preserves
-            # the sort). Filtering the LOCAL relation with the
-            # same eqNullSafe predicate keeps SQL tie semantics
-            # (NULL/NaN handling) identical to the cluster side.
-            rows = top.collect()
-            topdf = _local_df(self.spark, rows, top.schema)
-            if len(rows) < off + n or not rows:
-                # top set complete — or an empty page (FETCH
-                # FIRST 0 ROWS: Postgres returns nothing; there
-                # is no boundary row to tie with, review r10 #4)
-                final = topdf
-            else:
-                tie = _tie_pred(rows[-1])
-                final = topdf.filter(~tie).unionByName(
-                    df.filter(tie)
-                )
-            final = _strip(final)
-        else:
-            top = top.persist()
-            try:
-                rev = [
-                    self._order_spec(F.col(h), d, nl, reverse=True)
-                    for h, (_e, d, nl) in zip(helpers, items)
-                ]
-                last = top.orderBy(*rev).limit(1).collect()
-                if len(last) == 1 and top.count() == off + n:
-                    final = top.filter(
-                        ~_tie_pred(last[0])
-                    ).unionByName(df.filter(_tie_pred(last[0])))
-                else:  # fewer than o+n rows: top set is complete
-                    final = top
-                # materialize NOW — but on the EXECUTORS, never
-                # the driver (review r10 #6: a collect() here
-                # would pull o+n+ties rows through the driver for
-                # a result a CTAS/INSERT consumer keeps
-                # distributed). localCheckpoint cuts the lineage,
-                # so `top` can unpersist before returning.
-                from andb_spark.caching import checkpoint_tracked
-
-                final = checkpoint_tracked(_strip(final))
-            finally:
-                top.unpersist()
-        return _final_sql(self._scoped_view(final, "_ft_"))
+        rev = [
+            self._order_spec(F.col(h), d, nl, reverse=True)
+            for h, (_e, d, nl) in zip(helpers, items)
+        ]
+        bound = top.orderBy(*rev).limit(1).select(
+            *[F.col(h).alias(f"{h}_b") for h in helpers]
+        )
+        tied = None
+        for h in helpers:
+            c = F.col(h).eqNullSafe(F.col(f"{h}_b"))
+            tied = c if tied is None else (tied & c)
+        final = top.join(bound, tied, "left_anti").unionByName(
+            df.join(bound, tied, "left_semi")
+        )
+        tail = f" offset {off}" if off else ""
+        if not src_scope:
+            view = self._scoped_view(final.drop(*helpers), "_ft_")
+            return f"select * from {view} order by {order_text}{tail}"
+        # source scope: the view RETAINS the helper columns (the order
+        # keys exist nowhere else once the source columns are
+        # projected away) — order by them, project the statement's
+        # own columns
+        view = self._scoped_view(final, "_ft_")
+        sel = ", ".join(f"`{c}`" for c in proj_cols)
+        osql = ", ".join(
+            f"{h} {d}" + (f" nulls {nl}" if nl else "")
+            for h, (_e, d, nl) in zip(helpers, items)
+        )
+        return f"select {sel} from {view} order by {osql}{tail}"
 
     def _ties_source_scope_plan(
         self, head: str, items: list, helpers: list[str]
@@ -11133,7 +10977,8 @@ class AnalyticsEngine:
         ("_rewrite_limit_comma", None),
         (
             "_rewrite_fetch_first",
-            "-- fetch with ties: rank()-bounded boundary plan",
+            "-- fetch with ties: top-k set plus the rows tied with"
+            " its boundary",
         ),
         ("_bind_versions", None),
         ("_rewrite_sequence_calls", None),
@@ -11256,7 +11101,17 @@ class AnalyticsEngine:
         )
 
     def _select(self, stmt: str) -> Result:
-        stmt = self._rewrite_surfaces(stmt)
+        df, _note = self._access_path(self._rewrite_surfaces(stmt))
+        return self._fetch(df)
+
+    def _access_path(self, stmt: str) -> tuple[DataFrame, str]:
+        """The frame a rewritten SELECT fetches, plus the EXPLAIN header
+        lines naming its access path: the vector top-k frame when
+        ``andb.ann_mode`` is not exact and the statement is a cosine
+        top-k, else the zone-pruned scan when data skipping applies,
+        else the statement itself. ``_select`` fetches this frame and
+        EXPLAIN prints its plans (the reference's EXPLAIN surfaces its
+        IndexScan-vs-TableScan choice the same way)."""
         mode = self.session_vars.get("andb.ann_mode", "exact")
         ann = self._ANN_RE.match(stmt) if mode != "exact" else None
         if ann:
@@ -11277,8 +11132,13 @@ class AnalyticsEngine:
                 F.col(ann.group("id")),
                 (F.lit(1.0) - F.col("cos_sim")).alias(ann.group("alias")),
             )
-            return self._fetch(df)
-        return self._fetch(self.spark.sql(self._zone_prune_view(stmt) or stmt))
+            note = f"-- vector access path: {path} (andb.ann_mode={mode})"
+            return df, note + "\n"
+        pruned = self._zone_prune_view(stmt)
+        if pruned:
+            note = self.session_vars["andb.last_zone_prune"]
+            return self.spark.sql(pruned), f"-- zone maps: {note}\n"
+        return self.spark.sql(stmt), ""
 
     def _plan_engine_select(self, query: str) -> DataFrame:
         """Plan a SELECT through the surface pipeline ``_select`` runs
@@ -11388,8 +11248,8 @@ class AnalyticsEngine:
                 effect_rows=1,
             )
         inner = re.sub(r"^explain\s+", "", stmt, flags=re.I)
-        # _planning keeps every pass at every composition depth
-        # job-free (lazy quantified stats, peeked sequences)
+        # _planning keeps the remaining count-dependent or
+        # side-effecting pre-passes job-free at every composition depth
         fired: dict[str, int] = {}
         was = self._planning
         self._planning = True
@@ -11402,32 +11262,8 @@ class AnalyticsEngine:
             note.format(n=n, bucket=bucket) + "\n"
             for note, n in fired.items()
         )
-        mode = self.session_vars.get("andb.ann_mode", "exact")
-        ann = self._ANN_RE.match(inner) if mode != "exact" else None
-        if ann:
-            # Surface the access-path decision (the reference's
-            # EXPLAIN shows its scan choice the same way —
-            # IndexScan vs TableScan in the physical plan text).
-            from andb_spark.plans.ann import choose_topk_path
-
-            path = choose_topk_path(
-                mode, self.catalog["stats"].get(ann.group("table"))
-            )
-            header += (
-                f"-- vector access path: {path}"
-                f" (andb.ann_mode={mode})\n"
-            )
-        # EXPLAIN shows the plan _select would run — including the
-        # zone-pruned scan when data skipping applies (the
-        # reference's EXPLAIN surfaces its IndexScan-vs-TableScan
-        # choice the same way).
-        pruned = self._zone_prune_view(inner)
-        if pruned:
-            header += (
-                f"-- zone maps: "
-                f"{self.session_vars['andb.last_zone_prune']}\n"
-            )
-        df = self.spark.sql(pruned or inner)
+        df, path_note = self._access_path(inner)
+        header += path_note
         qe = df._jdf.queryExecution()
         logical = header + qe.optimizedPlan().toString()
         physical = qe.executedPlan().toString()
@@ -14131,20 +13967,11 @@ class AnalyticsEngine:
             if affected:
                 t_affected = self._read_files(target, affected).alias(target)
         parts: list[DataFrame] = []
-        # `SET andb.merge_dup_check = off` skips the guard aggregate for
-        # sources the caller KNOWS are deduplicated on the join key (at
-        # scale it is one extra join+agg per MERGE). Default stays ON —
-        # correct-by-default; with it off, a multi-matched target row is
-        # silently duplicated by the left-join rewrite, exactly the
-        # anomaly the guard exists to forbid (VERDICT r4 #4).
-        dup_check = (
-            self.session_vars.get("andb.merge_dup_check", "on").lower()
-            not in ("off", "false", "0")
+        # DELETE ... USING: delete-on-any-match (Postgres/DuckDB) —
+        # multiplicity cannot change the outcome, skip the guard
+        dup_check = not (
+            delete_translation and matched_delete and update_set is None
         )
-        if delete_translation and matched_delete and update_set is None:
-            # DELETE ... USING: delete-on-any-match (Postgres/DuckDB) —
-            # multiplicity cannot change the outcome, skip the guard
-            dup_check = False
         if source_unique_per_key:
             # ON CONFLICT lowering (r16, guide §1.2 — don't recompute a
             # fact already proven): the ON condition is pure key

@@ -11,6 +11,7 @@ import os
 import pytest
 
 from andb_spark.api import AnalyticsEngine, EngineError
+from conftest import explain_plan, fetched_plan
 
 
 @pytest.fixture()
@@ -243,6 +244,19 @@ def test_ann_access_path_selection(spark, tmp_path, sf_dir):
 
     with pytest.raises(EngineError, match="ann_mode"):
         eng.execute("set andb.ann_mode = bogus")
+    # every andb.* setting is checked when it is SET, not when a later
+    # statement reads it; an unknown andb.* name is refused by name
+    for bad in (
+        "andb.stage_sizing_max_bytes = abc",
+        "andb.stage_target_file_bytes = -1",
+        "andb.range_bucket_seconds = 0",
+        "andb.range_bucket_seconds = 1.5",
+        "andb.zone_prune = maybe",
+        "andb.merge_dup_check = off",
+        "andb.no_such_setting = 1",
+    ):
+        with pytest.raises(EngineError, match=bad.split(" =")[0]):
+            eng.execute(f"set {bad}")
 
     # auto + no stats → exact path (safety default)
     eng.execute("set andb.ann_mode = auto")
@@ -260,6 +274,8 @@ def test_ann_access_path_selection(spark, tmp_path, sf_dir):
     eng.execute("set andb.ann_mode = lsh")
     expl = eng.execute(f"explain {q}")
     assert "vector access path: lsh" in expl.rows[0][0]
+    # ... and EXPLAIN plans the LSH probe it names, not the exact scan
+    assert explain_plan(eng, q) == fetched_plan(eng, q)
     lsh = eng.execute(q)
     assert eng.session_vars["andb.last_ann_path"] == "lsh"
     assert eng.execute("show var andb.last_ann_path").rows == [

@@ -465,7 +465,7 @@ def test_qualify_over_quantified(quant_engines):
 
 def test_quantified_correlated_matches_duckdb(spark, tmp_path):
     """EQUI-CORRELATED quantified comparisons (r11 — was a named
-    refusal; api.py::_quantified_correlated_repl): ``x <op> ANY|ALL
+    refusal; api.py::_quantified_correlated_body): ``x <op> ANY|ALL
     (SELECT v FROM t2 WHERE t2.k = t1.k)`` across every (operator,
     quantifier) pair, NOT-wrapped (the 3VL acid test), with residual
     inner conjuncts, expression values, reversed correlation sides,
@@ -554,6 +554,48 @@ def test_quantified_in_having_and_cte_body(quant_engines):
         " select x from big order by x"
     )
     assert eng.execute(sql).rows == con.execute(sql).fetchall()
+
+
+def test_quantified_membership_in_having_and_dml_matches_duckdb(
+    spark, tmp_path
+):
+    """`= ANY` / `<> ALL` test membership with an IN over the value
+    set, which also takes an aggregate lhs (HAVING) and a DML
+    condition, uncorrelated and correlated. Identical SQL runs
+    natively in DuckDB."""
+    from andb_spark.api import AnalyticsEngine
+
+    eng = AnalyticsEngine(str(tmp_path / "whqm"), spark=spark)
+    con = duckdb.connect()
+    for run in (eng.execute, con.execute):
+        run("create table mp (x int)")
+        run("insert into mp values (1), (3), (3), (5), (null)")
+        run("create table mv (v int, k int)")
+        run("insert into mv values (2, 1), (1, 1), (null, 3), (2, 3)")
+        run("create table md (k int, v int)")
+        run("insert into md values (1,10),(2,20),(3,30),(4,40),(5,null)")
+        run("create table mb (b int)")
+        run("insert into mb values (20), (40)")
+    for sql in (
+        "select x, count(*) as n from mp where x is not null group by x"
+        " having count(*) = any (select v from mv) order by x",
+        "select x, count(*) as n from mp where x is not null group by x"
+        " having count(*) <> all (select v from mv where v is not null)"
+        " order by x",
+        "select x, count(*) as n from mp where x is not null group by x"
+        " having count(*) = any (select v from mv where mv.k = mp.x)"
+        " order by x",
+        "select x, x = any (select v from mv) as a,"
+        " x <> all (select v from mv where mv.k = mp.x) as b"
+        " from mp order by x",
+    ):
+        assert eng.execute(sql).rows == con.execute(sql).fetchall(), sql
+    for run in (eng.execute, con.execute):
+        run("update md set v = v + 1 where v = any (select b from mb)")
+        run("delete from md where v <> all (select b + 1 from mb)")
+    sql = "select k, v from md order by k"
+    assert eng.execute(sql).rows == con.execute(sql).fetchall()
+    eng.close()
 
 
 def test_quantified_review_fixes(quant_engines):
@@ -2414,11 +2456,10 @@ def test_engine_subquery_lift_review_fixes(ubn_engines):
 
 
 def test_explain_with_ties_is_plan_only(ubn_engines):
-    """EXPLAIN of a WITH TIES statement must not launch the boundary
-    probe jobs (TakeOrdered + reversed-order collect): under
-    ``self._planning`` the rewrite emits the rank()-window plan shape
-    instead. Canary: a poison UDF view that raises on execution —
-    EXPLAIN must plan over it without firing."""
+    """EXPLAIN of a WITH TIES statement runs no job: the rewrite
+    builds one lazy plan (top set, boundary row, tie joins) that
+    EXPLAIN prints and execution runs. Canary: a poison UDF view that
+    raises on execution — EXPLAIN must plan over it without firing."""
     eng, _con = ubn_engines
 
     def _boom2():
@@ -2458,9 +2499,9 @@ def test_explain_with_ties_is_plan_only(ubn_engines):
 
 
 def test_explain_quantified_is_plan_only(quant_engines):
-    """Plain EXPLAIN of a quantified statement must not execute the
-    eager stats aggregation — the rewrite takes the lazy plan-only
-    path and the EXPLAIN header surfaces the rewrite."""
+    """Plain EXPLAIN of a quantified statement plans the lazy stats
+    aggregation that execution runs, without running it, and the
+    EXPLAIN header surfaces the rewrite."""
     eng, _con = quant_engines
     r = eng.execute(
         "explain select x from probe"
@@ -2474,10 +2515,10 @@ def test_explain_quantified_is_plan_only_at_depth(quant_engines):
     """The EXPLAIN-must-not-execute invariant holds at COMPOSITION
     depth, not just depth 0 (r8 ADVICE #2): a quantified comparison
     inside a CTE body or under QUALIFY is rewritten by nested
-    _rewrite_quantified calls, which must also take the lazy
-    stats-view path under plain EXPLAIN. Canary: a Python UDF that
-    raises on EXECUTION — if any nested rewrite eagerly collect()s
-    its stats aggregation during planning, the canary fires."""
+    _rewrite_quantified calls, whose stats must stay a lazy plan.
+    Canary: a Python UDF that raises on EXECUTION — if any nested
+    rewrite runs its stats aggregation during planning, the canary
+    fires."""
     eng, _con = quant_engines
 
     def _boom():

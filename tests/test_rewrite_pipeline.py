@@ -138,7 +138,8 @@ def test_explain_drops_every_view_it_binds(spark, eng, query):
     ),
     (
         "select k from t order by k fetch first 1 rows with ties",
-        "-- fetch with ties: rank()-bounded boundary plan",
+        "-- fetch with ties: top-k set plus the rows tied with its"
+        " boundary",
     ),
     (
         "select * from t positional join u",

@@ -294,36 +294,24 @@ def test_merge_duplicate_source_keys_raise_without_mutation(engine):
     assert e("select * from mm3 order by k").rows == [(2, 0), (10, 1)]
 
 
-def test_merge_dup_check_escape_hatch(engine):
-    """`SET andb.merge_dup_check = off` skips the multiple-match guard
-    aggregate for known-deduped sources (VERDICT r4 #4). With the guard
-    off a multi-matched target row follows the raw left-join rewrite —
-    one output row PER source match — which is exactly why the default
-    stays on; re-enabling restores the ANSI error."""
+def test_merge_multi_match_guard_has_no_off_switch(engine):
+    """A target row matched by more than one source row raises the
+    ANSI error (the left-join rewrite would otherwise duplicate it),
+    and no setting turns that guard off."""
     e = engine.execute
     e("create table gd (k int, v int)")
     e("insert into gd values (1, 10), (2, 20)")
     e("create table gdsrc (k int, v int)")
     e("insert into gdsrc values (1, 11), (1, 12)")
 
-    e("set andb.merge_dup_check = off")
-    r = e(
-        "merge into gd using gdsrc on gd.k = gdsrc.k"
-        " when matched then update set v = gdsrc.v"
-    )
-    assert r.effect_rows >= 1
-    # documented anomaly: k=1 duplicated, once per source match
-    assert e("select v from gd where k = 1 order by v").rows == [
-        (11,), (12,),
-    ]
-    assert e("select v from gd where k = 2").rows == [(20,)]
-
-    e("set andb.merge_dup_check = on")
+    with pytest.raises(EngineError, match="andb.merge_dup_check"):
+        e("set andb.merge_dup_check = off")
     with pytest.raises(EngineError, match="more than one source row"):
         e(
             "merge into gd using gdsrc on gd.k = gdsrc.k"
             " when matched then update set v = gdsrc.v"
         )
+    assert e("select k, v from gd order by k").rows == [(1, 10), (2, 20)]
 
 
 def test_alter_case_insensitive_resurrection_guard(engine):
