@@ -611,19 +611,6 @@ class AnalyticsEngine:
         # vector access-path rewrite in _select (plans/ann.py): approximate
         # answers are strictly opt-in.
         self.session_vars: dict[str, str] = {"andb.ann_mode": "exact"}
-        # True only while a statement is planned, not run (plain
-        # EXPLAIN, DESCRIBE, plan-only view binds), at ANY composition
-        # depth (CTE body, DISTINCT ON / QUALIFY inner statement, ASOF
-        # subquery source). Every other pass builds one lazy plan that
-        # planning and execution share; five pre-passes still read the
-        # flag, because the executed form needs a count or has a side
-        # effect:
-        # - _limit_percent: counts the rows to size the LIMIT
-        # - _zip_index: checkpoints and counts partitions for offsets
-        # - _seq_default_fill, _nextval_from_rewrite: count the rows
-        #   to reserve a sequence block
-        # - _seq_next_block: advances the sequence (planning peeks)
-        self._planning = False
         self.catalog.setdefault("stats", {})
         # Logical (non-materialized) views: name -> {"sql": defining
         # query, "columns": creation-time schema snapshot (advisory —
@@ -649,6 +636,10 @@ class AnalyticsEngine:
         # it triggers the same way. A helper is needed only until the
         # SQL naming it is analyzed, so statement end is never early.
         self._stmt_views: list[str] = []
+        # Sequence reservations as (sequence, previous current), in
+        # order; execute() settles its own suffix on exit, the same
+        # scoping as _stmt_views (_settle_sequences).
+        self._seq_reserved: list[tuple[str, int | None]] = []
         register_all(self.spark)
         # re-register managed tables from a previous session (durability
         # across engine restarts — the reference's catalog reload,
@@ -961,15 +952,13 @@ class AnalyticsEngine:
             visit(r, frozenset())
         return order
 
-    def _bind_view(self, name: str, plan_only: bool = False) -> DataFrame:
+    def _bind_view(self, name: str) -> DataFrame:
         """(Re)bind one logical view: plan its defining SQL through
         the FULL engine pipeline (so engine-only SQL works in view
         bodies) over the base tables' CURRENT temp views, and register
         the analyzed plan under the view's name. The pipeline's helper
         views drop at statement end — the analyzed plan embeds their
         logical plans, so the binding outlives them."""
-        was = self._planning
-        self._planning = was or plan_only
         # drop the PREVIOUS binding first: a body referencing its own
         # name (a self-cycle via CREATE OR REPLACE) must fail to plan
         # loudly, never resolve against the stale previous plan
@@ -987,8 +976,6 @@ class AnalyticsEngine:
                 f"view {name} failed to plan — a base table, view, or"
                 f" column it references may have changed: {e}"
             ) from e
-        finally:
-            self._planning = was
         aliases = self.catalog["views"][name].get("aliases")
         if aliases:
             # CREATE VIEW v (x, y) AS ... column aliases (DuckDB
@@ -1019,16 +1006,15 @@ class AnalyticsEngine:
         return df
 
     def _bind_referenced_views(
-        self, stmt: str, plan_only: bool = False,
-        tolerant: bool = False,
+        self, stmt: str, tolerant: bool = False
     ) -> None:
         """Resolve logical views LAZILY: any statement mentioning a
         catalog view (re)binds it and its transitive view
         dependencies, dependencies first — a view therefore always
         reflects its base tables' state as of the statement that
-        reads it (DuckDB late-binding semantics), at pure analysis
-        cost (no jobs; ``plan_only`` keeps even count-probing
-        surfaces like LIMIT p%% job-free for EXPLAIN/DESCRIBE).
+        reads it (DuckDB late-binding semantics). Binding runs the
+        pre-passes the view's plan needs (LIMIT p%, POSITIONAL JOIN
+        and nextval over FROM count rows), whatever the statement.
         Stale session bindings of views a ROLLBACK/RESTORE removed
         from the catalog are swept first, so they can never serve."""
         vws = self.catalog.get("views", {})
@@ -1056,7 +1042,7 @@ class AnalyticsEngine:
             return
         for n in order:
             try:
-                self._bind_view(n, plan_only=plan_only)
+                self._bind_view(n)
             except EngineError:
                 if not tolerant:
                     raise
@@ -2026,9 +2012,10 @@ class AnalyticsEngine:
     def _seq_next_block(self, name: str, n: int) -> int:
         """Reserve ``n`` successive sequence values; returns the FIRST.
         The bound check covers the whole block (DuckDB parity error);
-        a CYCLE sequence wraps instead of erroring. Reservation
-        persists immediately — like DuckDB, a failed statement does
-        not roll a sequence back."""
+        a CYCLE sequence wraps instead of erroring. The reservation
+        advances ``current`` in memory and belongs to the running
+        statement, which settles it on exit (``_settle_sequences``).
+        A write's own commit persists it with the written rows."""
         seqs = self.catalog.setdefault("sequences", {})
         if name not in seqs:
             raise EngineError(f"sequence {name} does not exist")
@@ -2049,13 +2036,26 @@ class AnalyticsEngine:
                     f"sequence {name} reached minimum value"
                     f" ({s['min']})"
                 )
-        if n > 0 and not self._planning:
-            # plan-only contexts (EXPLAIN / DESCRIBE / view binding)
-            # PEEK: the plan shows the would-be values, the counter
-            # does not move
+        if n > 0:
+            self._seq_reserved.append((name, s["current"]))
             s["current"] = last
-            self._save_catalog()
         return first
+
+    def _settle_sequences(self, mark: int, keep: bool) -> None:
+        """End of a statement scope: persist the sequence values
+        reserved since ``mark`` — like DuckDB, a failed statement
+        keeps them — or, when ``keep`` is false (the statement only
+        planned), restore each sequence's previous value. Either way
+        one catalog save records the outcome, so a plan-only
+        statement's own save (CREATE VIEW) is undone on disk too."""
+        undo = self._seq_reserved[mark:]
+        if not undo:
+            return
+        del self._seq_reserved[mark:]
+        if not keep:
+            for name, prev in reversed(undo):
+                self.catalog["sequences"][name]["current"] = prev
+        self._save_catalog()
 
     def _seq_currval(self, name: str) -> int:
         seqs = self.catalog.setdefault("sequences", {})
@@ -2121,7 +2121,7 @@ class AnalyticsEngine:
             raise EngineError(f"sequence {seqname} does not exist")
         idx = f"_seq_{uuid.uuid4().hex[:6]}"
         d = self._zip_index(df, idx)
-        n = d.count() if not self._planning else 0
+        n = d.count()
         first = self._seq_next_block(seqname, n) if n else (
             seqs[seqname]["start"]
         )
@@ -2234,7 +2234,7 @@ class AnalyticsEngine:
         df = self._plan_engine_select(inner)
         idx = f"_seq_{uuid.uuid4().hex[:6]}"
         d = self._zip_index(df, idx)
-        n = d.count() if not self._planning else 0
+        n = d.count()
         seqs_used = [s for s, _a in seq_items.values()]
         per_seq_m = {s: seqs_used.count(s) for s in set(seqs_used)}
         first: dict[str, int] = {}
@@ -6618,6 +6618,18 @@ class AnalyticsEngine:
         r"\bandb_(tables|columns|indexes|segments|views|macros)\b", re.I
     )
 
+    # Statements that plan a query without running it: plain EXPLAIN,
+    # DESCRIBE, view and macro DDL, PREPARE. They run the same
+    # pre-passes execution runs, so their sequence reservations are
+    # restored when they end (DuckDB: EXPLAIN does not advance a
+    # sequence; EXPLAIN ANALYZE executes and does).
+    _PLANS_ONLY_RE = re.compile(
+        r"(?:explain\b(?!\s+analyze\b)|desc(?:ribe)?\s"
+        r"|create\s+(?:or\s+replace\s+)?(?:view|macro)\b"
+        r"|drop\s+view\b|prepare\b)",
+        re.I,
+    )
+
     def execute(self, sql: str) -> Result:
         """One statement in, one Result out (entrance.py:16-55 shape).
 
@@ -6630,12 +6642,15 @@ class AnalyticsEngine:
         batch state, a library caller's own operator composition — stay
         untouched, and nested execute() calls release only their own
         suffix. The helper temp views the statement bound
-        (``_stmt_views``) drop at the same point, by the same rule."""
+        (``_stmt_views``) drop at the same point, by the same rule, and
+        its sequence reservations settle there: persisted, or restored
+        when the statement only plans (``_PLANS_ONLY_RE``)."""
         from andb_spark.caching import cache_mark, release_caches_since
 
         t0 = time.perf_counter()
         cmark = cache_mark()
         vmark = len(self._stmt_views)
+        smark = len(self._seq_reserved)
         stmt = sql.strip().rstrip(";").strip()
         if getattr(self, "_sysviews_dirty", False) and self._SYSVIEW_RE.search(
             stmt
@@ -6689,14 +6704,12 @@ class AnalyticsEngine:
             # statement mentioning a catalog view (re)binds it — its
             # defining SQL re-plans through the full pipeline over the
             # base tables' CURRENT temp views, so a view is always
-            # fresh after base DML. Plan-only statements bind
-            # job-free. View DDL binds TOLERANTLY (review r11 #1): a
-            # view broken by a base-table drop must stay droppable
-            # and OR-REPLACE-able — the DDL paths do their own
-            # validation — where a read statement must raise.
+            # fresh after base DML. View DDL binds TOLERANTLY
+            # (review r11 #1): a view broken by a base-table drop must
+            # stay droppable and OR-REPLACE-able — the DDL paths do
+            # their own validation — where a read statement must raise.
             self._bind_referenced_views(
                 stmt,
-                plan_only=head in ("EXPLAIN", "DESCRIBE", "DESC"),
                 tolerant=bool(re.match(
                     r"(?:create\s+(?:or\s+replace\s+)?|drop\s+)view\b",
                     stmt, re.I,
@@ -6968,6 +6981,9 @@ class AnalyticsEngine:
             # same name
             self._pending_temp = None
             self._release_views(vmark)
+            self._settle_sequences(
+                smark, keep=not self._PLANS_ONLY_RE.match(stmt)
+            )
             release_caches_since(cmark)
         r.elapsed = time.perf_counter() - t0
         return r
@@ -7196,21 +7212,16 @@ class AnalyticsEngine:
         or the inferred Spark schema of an attached fixture view.
         DESCRIBE <query> (DuckDB): the analyzed schema of any
         statement the engine executes — planned through the full
-        pipeline (ANALYSIS only; describing never runs a job), so
-        QUALIFY / DISTINCT ON / BY NAME unions / COLUMNS() describe
-        like plain SQL."""
+        pipeline, so QUALIFY / DISTINCT ON / BY NAME unions /
+        COLUMNS() describe like plain SQL. The query never runs; the
+        pre-passes its plan needs do, as under EXPLAIN."""
         qm = re.match(
             r"desc(?:ribe)?\s+"
             r"((?:select|with|values|from|pivot|unpivot)\b.*)$",
             stmt, re.I | re.S,
         )
         if qm:
-            was_planning = self._planning
-            self._planning = True  # job-free: schema only
-            try:
-                df = self._plan_engine_select(qm.group(1))
-            finally:
-                self._planning = was_planning
+            df = self._plan_engine_select(qm.group(1))
             rows = [
                 (f.name, f.dataType.simpleString(), f.nullable)
                 for f in df.schema.fields
@@ -8529,9 +8540,8 @@ class AnalyticsEngine:
         like DuckDB. Two bounded passes: one count scan (Catalyst's
         EliminateSorts drops any ORDER BY under the count) and the
         LIMIT-pushdown scan of the final statement — the same
-        cardinality probe any engine needs for a percent limit.
-        EXPLAIN must not run the count: the plan-only path emits the
-        unlimited statement over the lazy view."""
+        cardinality probe any engine needs for a percent limit;
+        EXPLAIN runs the count too, and prints the LIMIT it sizes."""
         if not 0 <= pct <= 100:
             raise EngineError(
                 "LIMIT percent out of range, should be between 0%"
@@ -8539,8 +8549,6 @@ class AnalyticsEngine:
             )
         df = self._plan_engine_select(head)
         view = self._scoped_view(df, "_lp_")
-        if self._planning:
-            return f"select * from {view}"
         k = int(df.count() * pct / 100.0)
         tail = f" limit {k}" + (f" offset {off}" if off else "")
         return f"select * from {view}{tail}"
@@ -9863,18 +9871,12 @@ class AnalyticsEngine:
         later join read the SAME snapshot — a sorted side's range
         partitioner re-samples boundaries per evaluation, and
         offsets computed under one partitioning applied to another
-        would misnumber rows. EXPLAIN (``self._planning``) takes a
-        job-free global-window plan shape instead."""
+        would misnumber rows."""
         from pyspark.sql import Window as W
 
         d = df.withColumn(
             "_pjp", F.spark_partition_id()
         ).withColumn("_pjm", F.monotonically_increasing_id())
-        if self._planning:
-            return d.withColumn(
-                idx_name,
-                F.row_number().over(W.orderBy("_pjm")).cast("long"),
-            ).drop("_pjp", "_pjm")
         from andb_spark.caching import checkpoint_tracked
 
         d = checkpoint_tracked(d)
@@ -11248,15 +11250,8 @@ class AnalyticsEngine:
                 effect_rows=1,
             )
         inner = re.sub(r"^explain\s+", "", stmt, flags=re.I)
-        # _planning keeps the remaining count-dependent or
-        # side-effecting pre-passes job-free at every composition depth
         fired: dict[str, int] = {}
-        was = self._planning
-        self._planning = True
-        try:
-            inner = self._rewrite_surfaces(inner, fired)
-        finally:
-            self._planning = was
+        inner = self._rewrite_surfaces(inner, fired)
         bucket = self.session_vars.get("andb.range_bucket_seconds", 1800)
         header = "".join(
             note.format(n=n, bucket=bucket) + "\n"
@@ -12284,8 +12279,8 @@ class AnalyticsEngine:
         so engine-only SQL (QUALIFY, DISTINCT ON, BY NAME unions,
         COLUMNS, ASOF) works in view bodies and the view always
         reflects the base tables' current state. Creation validates
-        the body end-to-end (plan-only — no job, like DuckDB's
-        binder) and snapshots the schema into the catalog for
+        the body end-to-end by planning it as a read would (it never
+        runs) and snapshots the schema into the catalog for
         DESCRIBE/andb_views; tables and views share one namespace
         with strict statement kinds (CREATE VIEW can never replace a
         table, DROP TABLE never takes a view)."""
@@ -12333,12 +12328,12 @@ class AnalyticsEngine:
             vws[name]["aliases"] = aliases
         try:
             # cycle check over the would-be catalog, then validate:
-            # bind the dependency closure plan-only (job-free DDL) —
-            # the view's own plan comes back last (post-order) and
-            # its schema snapshots into the catalog entry
+            # bind the dependency closure — the view's own plan comes
+            # back last (post-order) and its schema snapshots into
+            # the catalog entry
             df = None
             for dep in self._view_dep_order([name]):
-                df = self._bind_view(dep, plan_only=True)
+                df = self._bind_view(dep)
             vws[name]["columns"] = [
                 {"name": f.name, "type": f.dataType.simpleString()}
                 for f in df.schema.fields
@@ -12351,7 +12346,7 @@ class AnalyticsEngine:
                 # _bind_view dropped the live binding before planning
                 # the (failed) replacement — restore the old view
                 try:
-                    self._bind_view(name, plan_only=True)
+                    self._bind_view(name)
                 except EngineError:
                     pass  # old body no longer plans either
             raise
@@ -12405,7 +12400,7 @@ class AnalyticsEngine:
           call position disambiguates).
         - A scalar body must be a CLOSED expression over its
           parameters (plus literals, functions, and subqueries):
-          creation validates it plan-only with parameters bound NULL,
+          creation validates it by planning with parameters bound NULL,
           so a stray column reference fails AT CREATE like DuckDB's
           binder. Table macro bodies are NOT validated at create
           (probed: ``AS TABLE SELECT * FROM no_such`` creates fine
@@ -12485,7 +12480,7 @@ class AnalyticsEngine:
                 " already exists"
             )
         if kind == "scalar":
-            # plan-only validation with params bound NULL — inner
+            # validation by planning with params bound NULL — inner
             # macro calls expand against the CURRENT registry, so a
             # self-referencing OR REPLACE validates against the OLD
             # definition exactly like DuckDB (probed), and a brand-new
@@ -12493,14 +12488,12 @@ class AnalyticsEngine:
             probe = self._substitute_macro_params(
                 body, {p: "NULL" for p, _ in params}
             )
-            was = self._planning
-            self._planning = True
             try:
                 probe = self._expand_macros(probe)
                 sel = self._rewrite_duckdb_collections(
                     f"select ({probe}) as __macro_probe"
                 )
-                self._bind_referenced_views(sel, plan_only=True)
+                self._bind_referenced_views(sel)
                 self._plan_engine_select(sel)
             except EngineError:
                 raise
@@ -12516,8 +12509,6 @@ class AnalyticsEngine:
                         f"CREATE MACRO {name}: body does not bind:"
                         f" {e}"
                     ) from e
-            finally:
-                self._planning = was
         reg[key] = {
             "name": name,
             "params": [[p, d] for p, d in params],
@@ -13210,6 +13201,7 @@ class AnalyticsEngine:
         PARTIAL column list updates only the listed non-key columns
         (unlisted columns keep their old values — probed)."""
         action, target = m.group(1).lower(), m.group(2)
+        src_text = m.group(6)
         meta = self._meta(target)
         pk = [c["name"] for c in meta.get("columns", []) if c.get("pk")]
         uniques = [list(u) for u in (meta.get("uniques") or [])]
@@ -13250,7 +13242,7 @@ class AnalyticsEngine:
                 )
         if action == "ignore" and len(keysets) > 1:
             return self._insert_ignore_multi(
-                target, collist, keysets, bool(pk), m.group(6)
+                target, collist, keysets, bool(pk), src_text
             )
         key = keysets[0]
         # UNIQUE (unlike PRIMARY KEY) admits NULL key components, and
@@ -13271,29 +13263,16 @@ class AnalyticsEngine:
             # update). The DO NOTHING path keeps the FIRST source row
             # per key (Postgres order), but DuckDB errors on
             # in-batch duplicates for these spellings — pre-check.
-            src_sql = m.group(6).strip()
+            # Sequence calls substitute once, and the pre-check and the
+            # insert read the same text (DuckDB: a batch refused for a
+            # duplicate key still consumes its nextval values).
+            src_sql = src_text.strip()
             if src_sql.lower().startswith("values"):
-                src_sql = self._sub_default_keyword(
-                    target, collist, src_sql
+                src_text = self._sub_values_sequences(
+                    self._sub_default_keyword(target, collist, src_sql)
                 )
-                # the PRE-CHECK must not advance sequences (the real
-                # insert substitutes later): nextval placeholders are
-                # per-row-unique, which is exactly their dup behavior
-                calls = self._seq_calls(src_sql)
-                if calls:
-                    parts, pos = [], 0
-                    for cm in calls:
-                        parts.append(src_sql[pos:cm.start()])
-                        parts.append(
-                            "monotonically_increasing_id()"
-                            if cm.group(1).lower() == "nextval"
-                            else str(self._seq_currval(cm.group(2)))
-                        )
-                        pos = cm.end()
-                    parts.append(src_sql[pos:])
-                    src_sql = "".join(parts)
                 src_sql = (
-                    f"select * from ({src_sql}) as"
+                    f"select * from ({src_text}) as"
                     f" _v({', '.join(collist)})"
                 )
             src_df = self.spark.sql(src_sql).toDF(*collist)
@@ -13312,7 +13291,7 @@ class AnalyticsEngine:
             tail = "do nothing"
         cols_sql = f" ({', '.join(collist)})" if m.group(4) else ""
         return self._insert(
-            f"insert into {target}{cols_sql} {m.group(6)}"
+            f"insert into {target}{cols_sql} {src_text}"
             f" on conflict ({', '.join(key)}) {tail}"
         )
 
@@ -14277,8 +14256,8 @@ class AnalyticsEngine:
         predicate through a non-deterministic projection, so tagging
         first would force a full-table scan; filtering first keeps the
         predicate in PushedFilters where parquet row-group min/max
-        skipping serves it (pinned by
-        test_cow_planning_scan_pushes_predicate)."""
+        skipping serves it (pinned by the copy-on-write scan pushdown
+        test in tests/test_manifest_writes.py)."""
         if entries is None:
             paths = self._segment_paths(name)
         else:

@@ -1814,7 +1814,7 @@ def test_limit_percent_matches_duckdb(ubn_engines):
 
 def test_describe_query_matches_duckdb_names(spark, tmp_path):
     """DESCRIBE <query> (DuckDB): the analyzed schema of any engine
-    statement, planned job-free through the full pipeline. Column
+    statement, planned through the full pipeline, never run. Column
     NAMES and order must match DuckDB's DESCRIBE of the identical
     query (type spellings are engine-specific, so only names
     compare); engine-only SQL (QUALIFY, BY NAME union, COLUMNS)
@@ -3454,6 +3454,40 @@ def test_sequences_match_duckdb(spark, tmp_path):
     eng2.close()
 
 
+def test_insert_or_ignore_nextval_matches_duckdb(spark, tmp_path):
+    """INSERT OR IGNORE … VALUES with nextval on a single-key table:
+    the sequence calls substitute once, and the in-batch duplicate
+    pre-check reads the rows the insert writes. DuckDB 1.0: a batch
+    refused for a duplicate key still consumes its values, and a row
+    skipped for an existing key consumes its value too."""
+    from andb_spark.api import AnalyticsEngine
+
+    eng = AnalyticsEngine(str(tmp_path / "whoi"), spark=spark)
+    con = duckdb.connect()
+    for run in (eng.execute, con.execute):
+        run("create table t (k int primary key, v int)")
+        run("create sequence s")
+        with pytest.raises(Exception, match="duplicate key"):
+            run(
+                "insert or ignore into t values"
+                " (1, nextval('s')), (1, nextval('s'))"
+            )
+        run(
+            "insert or ignore into t values"
+            " (2, nextval('s')), (3, nextval('s'))"
+        )
+        run(
+            "insert or ignore into t values"
+            " (2, nextval('s')), (4, nextval('s'))"
+        )
+    for sql in (
+        "select * from t order by k",
+        "select currval('s') as c",
+    ):
+        assert eng.execute(sql).rows == con.execute(sql).fetchall(), sql
+    eng.close()
+
+
 def test_returning_matches_duckdb(spark, tmp_path):
     """RETURNING on INSERT/UPDATE/DELETE (DuckDB/Postgres;
     api.py::_split_returning + _returning_result): INSERT projects
@@ -3702,9 +3736,9 @@ def test_using_sample_invariants_match_duckdb(spark, tmp_path):
 def test_explain_covers_late_r11_surfaces(spark, tmp_path):
     """EXPLAIN (both plans) composes with every late-r11 surface: the
     pivot statement, USING SAMPLE, window EXCLUDE and sequence calls
-    plan job-free (EXPLAIN of nextval PEEKS — the counter must NOT
-    advance), and EXPLAIN ANALYZE executes the pivot statement
-    through the full pipeline."""
+    plan (EXPLAIN restores the nextval values it reserved — the
+    counter must NOT advance), and EXPLAIN ANALYZE executes the pivot
+    statement through the full pipeline."""
     from andb_spark.api import AnalyticsEngine
 
     eng = AnalyticsEngine(str(tmp_path / "whexp"), spark=spark)
@@ -3720,7 +3754,7 @@ def test_explain_covers_late_r11_surfaces(spark, tmp_path):
         "explain analyze pivot t on q using sum(v) group by g",
     ):
         assert eng.execute(sql).rows, sql
-    # the EXPLAINs above peeked: the first real nextval is still 1
+    # the EXPLAINs above restored: the first real nextval is still 1
     assert eng.execute("select nextval('s1') as n").rows == [(1,)]
     eng.close()
 
@@ -4210,7 +4244,8 @@ def test_collections_compose_with_engine_surfaces(spark, tmp_path):
     # an unresolved NAME in a macro body still refuses at create
     with pytest.raises(EngineError, match="does not bind"):
         eng.execute("create macro bad(x) as x + nosuchcol")
-    # EXPLAIN over nextval-FROM plans job-free and PEEKS the counter
+    # EXPLAIN over nextval-FROM counts the rows, then restores the
+    # counter it reserved from
     eng.execute("create sequence s9")
     assert eng.execute("explain select nextval('s9') n, k from t").rows
     assert eng.execute("select nextval('s9') as n").rows == [(1,)]

@@ -138,6 +138,28 @@ def test_q4_exists_plans_as_semi_join(spark, sf_dir):
     assert "LeftSemi" in plan, plan
 
 
+def test_q21_plans_without_expand(spark, sf_dir):
+    """q21 counts suppliers per order from (order, supplier) pairs
+    instead of two countDistincts in one aggregate, which Catalyst
+    plans as an Expand that doubles every lineitem row before the
+    shuffle."""
+    plan = final_plan(spark, sf_dir, "q21_waiting_suppliers")
+    assert "Expand" not in plan, plan
+
+
+def test_q2_keeps_semi_join_and_one_shuffle(spark, sf_dir):
+    """q2 filters lineitem to the wanted parts with a LeftSemi join and
+    shuffles the result once, on l_partkey: the per-part count and the
+    min-over-part window both reuse that one partitioning."""
+    plan = final_plan(spark, sf_dir, "q2_min_ship_supplier")
+    # AQE's toString echoes the initial plan too — read the final
+    final = plan.split("== Initial Plan ==")[0]
+    assert "LeftSemi" in final, final
+    shuffles = re.findall(r"(?<!\w)Exchange (\w+\([^)]*\))", final)
+    assert len(shuffles) == 1, final
+    assert shuffles[0].startswith("hashpartitioning(l_partkey#"), shuffles
+
+
 def test_q8_star_join_broadcasts_dims(spark, sf_dir):
     """The 6-way market-share star join must broadcast its dimension
     sides — at most one shuffle join (the lineitem-orders fact-fact

@@ -1,0 +1,83 @@
+"""Each statement owns the sequence values it reserves.
+
+A reservation advances the sequence in memory; the statement settles
+it when it ends. A statement that only plans (plain EXPLAIN,
+``DESCRIBE <query>``, view and macro DDL, PREPARE) restores the
+previous value, in memory and on disk. Every other statement persists
+its reservations, including one that fails after reserving (DuckDB
+keeps consumed values too), and a write persists them with its own
+commit."""
+
+from __future__ import annotations
+
+import pytest
+
+from andb_spark.api import AnalyticsEngine, EngineError
+
+
+def _current(engine, name: str):
+    return engine.catalog["sequences"][name]["current"]
+
+
+def test_plan_only_statements_restore_their_reservations(spark, tmp_path):
+    wh = str(tmp_path / "whown")
+    eng = AnalyticsEngine(wh, spark=spark)
+    eng.execute("create table p (x int)")
+    eng.execute("insert into p values (1), (2), (3)")
+    eng.execute("create sequence s")
+    assert eng.execute("select nextval('s') as n").rows == [(1,)]
+    for sql in (
+        "explain select nextval('s') as n",
+        "explain select nextval('s') as n, x from p",
+        "describe select nextval('s') as n, x from p",
+        "create view v as select nextval('s') as n, x from p",
+        "explain select * from v",
+        "describe select * from v",
+        "prepare pv as select * from v",
+        "create macro nx(a) as a + nextval('s')",
+        "create or replace view v as select nextval('s') as n, x from p",
+    ):
+        eng.execute(sql)
+        assert _current(eng, "s") == 1, sql
+    eng.close()
+    eng = AnalyticsEngine(wh, spark=spark)
+    assert _current(eng, "s") == 1
+    eng.execute("drop view v")
+    assert _current(eng, "s") == 1
+    assert eng.execute("select nextval('s') as n").rows == [(2,)]
+    eng.close()
+
+
+def test_executing_statements_persist_their_reservations(spark, tmp_path):
+    wh = str(tmp_path / "whkeep")
+    eng = AnalyticsEngine(wh, spark=spark)
+    eng.execute("create table p (x int)")
+    eng.execute("insert into p values (1), (2), (3)")
+    eng.execute("create sequence s")
+    eng.execute("create view nv as select nextval('s') as n, x from p")
+    assert sorted(eng.execute("select * from nv").rows) == [
+        (1, 1), (2, 2), (3, 3)
+    ]
+    assert _current(eng, "s") == 3
+    eng.execute("explain analyze select * from nv")
+    assert _current(eng, "s") == 6
+    # fails on the duplicate key after reserving both values
+    eng.execute("create table k (id int primary key, v int)")
+    with pytest.raises(EngineError, match="duplicate"):
+        eng.execute(
+            "insert into k values (1, nextval('s')), (1, nextval('s'))"
+        )
+    assert _current(eng, "s") == 8
+    # a write's own commit carries the block it filled
+    eng.execute("create sequence ids")
+    eng.execute(
+        "create table d (id bigint default nextval('ids'), x int)"
+    )
+    eng.execute("insert into d (x) select x from p")
+    eng.close()
+    eng = AnalyticsEngine(wh, spark=spark)
+    assert _current(eng, "s") == 8
+    assert eng.execute("select count(*) as n from k").rows == [(0,)]
+    top = eng.execute("select max(id) as m from d").rows[0][0]
+    assert eng.execute("select nextval('ids') as n").rows == [(top + 1,)]
+    eng.close()
