@@ -905,9 +905,10 @@ class AnalyticsEngine:
     # ------------------------------------------- logical views --
     def _view_dep_order(self, roots: list[str]) -> list[str]:
         """Topological closure of the catalog views reachable from
-        ``roots`` (dependencies first), by word-scan of each defining
-        SQL. Cycles — possible only via CREATE OR REPLACE VIEW
-        re-pointing an existing name — are a named refusal here, at
+        ``roots`` (dependencies first), by the relation names of each
+        defining SQL (``_relation_names``). Cycles — possible only via
+        CREATE OR REPLACE VIEW re-pointing an existing name — are a
+        named refusal here, at
         bind/create time, never a recursion blowup at plan time."""
         vws = self.catalog["views"]
         order: list[str] = []
@@ -932,18 +933,13 @@ class AnalyticsEngine:
                     body_sql = self._expand_macros(body_sql)
                 except EngineError:
                     pass
-            bb = _blank_literals(body_sql)
+            rels = _relation_names(_blank_literals(body_sql))
             # d == n (a body naming its own view) is NOT flagged here:
-            # the word-scan cannot tell a self-reference from a COLUMN
-            # aliased with the view's name (`create view revenue as
-            # select sum(..) as revenue ...` — the classic q15 shape).
             # ``_bind_view`` drops the old binding before re-planning,
             # so a genuine 1-cycle fails to plan with the named error
             # instead of silently layering the stale previous plan.
             for d in vws:
-                if d != n and re.search(
-                    rf"\b{re.escape(d)}\b", bb, re.I
-                ):
+                if d != n and d.lower() in rels:
                     visit(d, stack | {n})
             done.add(n)
             order.append(n)
@@ -1008,13 +1004,16 @@ class AnalyticsEngine:
     def _bind_referenced_views(
         self, stmt: str, tolerant: bool = False
     ) -> None:
-        """Resolve logical views LAZILY: any statement mentioning a
-        catalog view (re)binds it and its transitive view
-        dependencies, dependencies first — a view therefore always
-        reflects its base tables' state as of the statement that
-        reads it (DuckDB late-binding semantics). Binding runs the
-        pre-passes the view's plan needs (LIMIT p%, POSITIONAL JOIN
-        and nextval over FROM count rows), whatever the statement.
+        """Resolve logical views LAZILY: any statement naming a
+        catalog view as a RELATION (``_relation_names``: FROM/JOIN
+        lists, UPDATE/INTO/USING targets, DESCRIBE and the like, view
+        DDL) (re)binds it and its transitive view dependencies,
+        dependencies first — a view therefore always reflects its
+        base tables' state as of the statement that reads it (DuckDB
+        late-binding semantics). Binding runs the pre-passes the
+        view's plan needs (LIMIT p%, POSITIONAL JOIN and nextval over
+        FROM count rows, nextval reserves a block), so a column or
+        alias merely spelled like a view must not bind it.
         Stale session bindings of views a ROLLBACK/RESTORE removed
         from the catalog are swept first, so they can never serve."""
         vws = self.catalog.get("views", {})
@@ -1027,11 +1026,8 @@ class AnalyticsEngine:
                 self._bound_views.discard(name)
         if not vws:
             return
-        blanked = _blank_literals(stmt)
-        roots = [
-            n for n in vws
-            if re.search(rf"\b{re.escape(n)}\b", blanked, re.I)
-        ]
+        rels = _relation_names(_blank_literals(stmt))
+        roots = [n for n in vws if n.lower() in rels]
         if not roots:
             return
         try:
@@ -2111,17 +2107,17 @@ class AnalyticsEngine:
         self, df: DataFrame, colname: str, dt, seqname: str
     ) -> tuple[DataFrame, int | None]:
         """Fill a DEFAULT nextval('seq') column over an UNKNOWN-count
-        source: dense 0-based index via the distributed zipWithIndex
+        source: dense 1-based index via the distributed zipWithIndex
         construction (``_zip_index`` — two passes, no global window),
-        then first + inc * idx. The block reserves AFTER the count is
-        known (the localCheckpoint inside _zip_index pins the rows,
-        so the fill and the reservation see the same count)."""
+        then first + inc * (idx - 1). The block reserves AFTER the
+        count is known (the localCheckpoint inside _zip_index pins the
+        rows, so the fill and the reservation see the same count —
+        _zip_index's own partition counts, no second job)."""
         seqs = self.catalog.setdefault("sequences", {})
         if seqname not in seqs:
             raise EngineError(f"sequence {seqname} does not exist")
         idx = f"_seq_{uuid.uuid4().hex[:6]}"
-        d = self._zip_index(df, idx)
-        n = d.count()
+        d, n = self._zip_index(df, idx)
         first = self._seq_next_block(seqname, n) if n else (
             seqs[seqname]["start"]
         )
@@ -2233,8 +2229,7 @@ class AnalyticsEngine:
         )
         df = self._plan_engine_select(inner)
         idx = f"_seq_{uuid.uuid4().hex[:6]}"
-        d = self._zip_index(df, idx)
-        n = d.count()
+        d, n = self._zip_index(df, idx)
         seqs_used = [s for s, _a in seq_items.values()]
         per_seq_m = {s: seqs_used.count(s) for s in set(seqs_used)}
         first: dict[str, int] = {}
@@ -9862,8 +9857,10 @@ class AnalyticsEngine:
         re.I | re.S,
     )
 
-    def _zip_index(self, df: DataFrame, idx_name: str) -> DataFrame:
-        """Attach a 0-based positional row index, DISTRIBUTED: a
+    def _zip_index(
+        self, df: DataFrame, idx_name: str
+    ) -> tuple[DataFrame, int]:
+        """Attach a 1-based positional row index, DISTRIBUTED: a
         per-partition row_number plus the broadcast cumulative
         partition offsets (the zipWithIndex construction in DataFrame
         ops — two passes, no global single-task window). The side is
@@ -9871,7 +9868,8 @@ class AnalyticsEngine:
         later join read the SAME snapshot — a sorted side's range
         partitioner re-samples boundaries per evaluation, and
         offsets computed under one partitioning applied to another
-        would misnumber rows."""
+        would misnumber rows. Returns the indexed frame and its row
+        count (the sum of the partition counts — no extra job)."""
         from pyspark.sql import Window as W
 
         d = df.withColumn(
@@ -9899,7 +9897,7 @@ class AnalyticsEngine:
         return d.withColumn(
             idx_name,
             (off_expr + F.row_number().over(w)).cast("long"),
-        ).drop("_pjp", "_pjm")
+        ).drop("_pjp", "_pjm"), acc
 
     # Pivot value discovery cap: the driver collects the distinct ON
     # values, exactly like DuckDB's binder does — a million-column
@@ -10288,10 +10286,10 @@ class AnalyticsEngine:
             # names, which name-based selection cannot address
             # (review r11 #4)
             nl, nr = len(left.columns), len(right.columns)
-            zl = self._zip_index(left, "_pj_li").toDF(
+            zl = self._zip_index(left, "_pj_li")[0].toDF(
                 *[f"_pjl{i}" for i in range(nl)], "_pj_li"
             )
-            zr = self._zip_index(right, "_pj_ri").toDF(
+            zr = self._zip_index(right, "_pj_ri")[0].toDF(
                 *[f"_pjr{i}" for i in range(nr)], "_pj_ri"
             )
             joined = zl.join(
@@ -14878,6 +14876,87 @@ def _blank_literals(s: str) -> str:
         lambda m: "'" + " " * (len(m.group(0)) - 2) + "'",
         s,
     )
+
+
+# Where a statement names a relation, besides FROM lists: JOIN, UPDATE,
+# INTO and USING targets, TABLE and VIEW DDL subjects (IF [NOT] EXISTS
+# skipped), PIVOT and UNPIVOT subjects wherever they stand, and the
+# subject of a leading DESCRIBE, SUMMARIZE or COPY. Zero-width, so one
+# keyword's target can be the next keyword (``describe pivot v``).
+_RELATION_KW_RE = re.compile(
+    r"(?=\b(?:join|update|into|using|table|view|pivot|unpivot)"
+    r"\s+(?:if\s+(?:not\s+)?exists\s+)?[`\"]?(\w+)"
+    r"|^\s*(?:describe|desc|summarize|copy)\s+[`\"]?(\w+))",
+    re.I,
+)
+# A FROM-list item's first name, past the parens that open a
+# parenthesised join: ``from (v1 join v2 on ...)`` names v1.
+_FROM_ITEM_RE = re.compile(r"[\s(]*[`\"]?(\w+)")
+# What ends a FROM list at its own paren depth.
+_FROM_LIST_TOKEN_RE = re.compile(
+    r"[(),;]|\b(?:where|group|having|qualify|window|order|limit|offset"
+    r"|union|intersect|except|select|returning|set)\b",
+    re.I,
+)
+# Functions whose argument syntax spells FROM before a VALUE, not a
+# relation: extract(year from d), trim(both 'x' from s), ...
+_VALUE_FROM_FUNCS = frozenset(
+    {"extract", "trim", "substring", "substr", "overlay"}
+)
+
+
+def _value_from(blanked: str, pos: int) -> bool:
+    """Is the FROM at ``pos`` a value FROM — ``IS [NOT] DISTINCT
+    FROM`` or inside one of ``_VALUE_FROM_FUNCS``' argument lists?"""
+    if re.search(r"\bdistinct\s+$", blanked[:pos], re.I):
+        return True
+    depth = 0
+    for i in range(pos - 1, -1, -1):
+        c = blanked[i]
+        if c == ")":
+            depth += 1
+        elif c == "(":
+            if depth == 0:
+                fm = re.search(r"(\w+)\s*$", blanked[:i])
+                return bool(fm) and fm.group(1).lower() in _VALUE_FROM_FUNCS
+            depth -= 1
+    return False
+
+
+def _relation_names(blanked: str) -> set[str]:
+    """Lower-cased names a (literal-blanked) statement uses as
+    RELATIONS: every item of every FROM list (the first word after
+    FROM and after each comma at the list's own paren depth, up to the
+    clause that ends it) and each ``_RELATION_KW_RE`` target. A column,
+    alias or select item spelled like a relation is not one of them."""
+    names = {
+        (m.group(1) or m.group(2)).lower()
+        for m in _RELATION_KW_RE.finditer(blanked)
+    }
+    for m in re.finditer(r"\bfrom\b", blanked, re.I):
+        if _value_from(blanked, m.start()):
+            continue
+        item = _FROM_ITEM_RE.match(blanked, m.end())
+        if item:
+            names.add(item.group(1).lower())
+        depth = 0
+        for t in _FROM_LIST_TOKEN_RE.finditer(blanked, m.end()):
+            tok = t.group(0)
+            if tok == "(":
+                depth += 1
+            elif tok == ")":
+                if depth == 0:
+                    break
+                depth -= 1
+            elif depth:
+                continue
+            elif tok == ",":
+                item = _FROM_ITEM_RE.match(blanked, t.end())
+                if item:
+                    names.add(item.group(1).lower())
+            else:
+                break
+    return names
 
 
 def _paren_depth_at(blanked: str, pos: int) -> int:

@@ -27,9 +27,11 @@ def _to_col(c: Column | str) -> Column:
 
 
 def tokens(text: Column | str) -> Column:
-    """Whitespace tokenization → array<string>, empties removed."""
+    """Whitespace tokenization → array<string>, empties removed.
+    ``array_remove`` rather than a ``filter`` lambda: the lambda is
+    interpreted per element, array_remove runs in generated code."""
     t = _to_col(text)
-    return F.filter(F.split(t, r"\s+"), lambda x: x != F.lit(""))
+    return F.array_remove(F.split(t, r"\s+"), "")
 
 
 def token_count(text: Column | str) -> Column:

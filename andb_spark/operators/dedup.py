@@ -8,15 +8,24 @@ closest relative is the vector type + cosine builtin
 
 Design constraints honored here:
 - Everything is pure Catalyst expressions (md5/split/explode/groupBy) —
-  JVM-side, whole-stage-codegen'd, no Python UDFs. The same hash math is
-  expressible in ANSI SQL, which is what makes these operators
-  oracle-checkable against DuckDB.
+  JVM-side, no Python UDFs. The same hash math is expressible in ANSI
+  SQL, which is what makes these operators oracle-checkable against
+  DuckDB. Hot per-shingle paths avoid higher-order-function lambdas
+  (``zip_with``/``transform``/``filter``), which Spark interprets per
+  element instead of compiling.
 - MinHash signatures use md5 hex strings ordered lexicographically
   (fixed-width hex ⇒ lexicographic order == numeric order), so "min
   hash" never needs a 64-bit integer conversion that engines disagree
   on.
-- At 100 TB: the only shuffles are the groupBys on (doc, hash-slot) and
-  the band-bucket self-join. Band signatures are high-entropy md5s ⇒
+- MinHash-LSH is one lazy plan around ONE per-document aggregate (id,
+  signature, distinct shingle set): the bands, the candidate pairs and
+  the verification all read it, and AQE reuses its single exchange
+  instead of recomputing it. Nothing is cached: a lazily persisted
+  shingle table raced its own first fill (AQE submits the branches'
+  query stages concurrently, before the cache holds a block, so most
+  branches re-shingled the corpus anyway).
+- At 100 TB: the shuffles are the per-document groupBy and the
+  band-bucket self-join. Band signatures are high-entropy md5s ⇒
   near-uniform shuffle keys, no skew. Candidate verification joins only
   the candidate pairs' shingle sets, not all pairs.
 """
@@ -40,25 +49,47 @@ from andb_spark.caching import (  # noqa: F401  (re-export)
 )
 
 
-def shingles(text: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column (array<string>).
-
-    Built by zipping n shifted slices of the token array — O(tokens)
-    per row. (The indexed formulation, transform(sequence, i ->
-    element_at(words, i+j)), is O(tokens²) because element_at walks the
-    array per access; it benched ~9× slower on real documents.)
-    Fewer than n tokens → empty array (slice lengths clamp to 0)."""
-    text = F.col(text) if isinstance(text, str) else text
-    words = tokens(text)
+def _shingle_zip(words: Column, n: int) -> Column:
+    """THE shingle definition: a shingle is n consecutive ``tokens()``
+    words joined by one space. Returns arrays_zip of the n shifted
+    slices of ``words`` — element i holds words i..i+n-1 as fields
+    '0'..'n-1', and ``_shingle_text`` joins one element — O(tokens) per
+    row. (The indexed formulation, element_at(words, i+j), is
+    O(tokens²) because element_at walks the array per access.) Fewer
+    than n tokens → empty (slice lengths clamp to 0)."""
     length = F.greatest(F.size(words) - (n - 1), F.lit(0))
-    grams = F.slice(words, 1, length)
-    for j in range(2, n + 1):
-        grams = F.zip_with(
-            grams,
-            F.slice(words, j, length),
-            lambda a, b: F.concat_ws(" ", a, b),
+    return F.arrays_zip(
+        *[F.slice(words, j, length) for j in range(1, n + 1)]
+    )
+
+
+def _shingle_text(z: Column, n: int) -> Column:
+    return F.concat_ws(" ", *[z[str(j)] for j in range(n)])
+
+
+def shingles(text: Column | str, n: int = 3) -> Column:
+    """Distinct word n-gram shingles of a text column (array<string>),
+    the array form of ``_shingle_zip``."""
+    text = F.col(text) if isinstance(text, str) else text
+    return F.array_distinct(
+        F.transform(
+            _shingle_zip(tokens(text), n), lambda z: _shingle_text(z, n)
         )
-    return F.array_distinct(grams)
+    )
+
+
+def shingle_rows(
+    df: DataFrame, text_col: str, id_col: str, n: int = 3
+) -> DataFrame:
+    """(id, shingle) rows, one per shingle OCCURRENCE — the row form of
+    ``_shingle_zip``, built from generated code only: explode the
+    zipped slices, then concat_ws each row (no per-element lambda).
+    The token array is projected once and read by all n slices."""
+    return (
+        df.select(F.col(id_col), tokens(text_col).alias("_w"))
+        .select(id_col, F.explode(_shingle_zip(F.col("_w"), n)).alias("_z"))
+        .select(id_col, _shingle_text(F.col("_z"), n).alias("shingle"))
+    )
 
 
 def exact_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -136,12 +167,39 @@ def spread_small_input(df: DataFrame) -> DataFrame:
 
 
 def exploded_shingles(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, shingle) rows — the shared input of the signature and
-    verification stages. Input is spread to full parallelism first
-    (the downstream per-shingle hashing dominates; see
-    spread_small_input)."""
+    """(id, shingle) rows over each document's DISTINCT shingles — the
+    verify input ``jaccard_verify`` accepts pre-built. Input is spread
+    to full parallelism first (the downstream per-shingle work
+    dominates; see spread_small_input)."""
     return spread_small_input(df).select(
         F.col(id_col), F.explode(shingles(text_col)).alias("shingle")
+    )
+
+
+def _doc_minhash(
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int
+) -> DataFrame:
+    """THE per-document aggregate: (id, sig, shingles), where sig[h] =
+    min over the document's shingles of md5(h || '|' || shingle),
+    compared as fixed-width hex strings, and shingles is the distinct
+    shingle set. One groupBy over the shingle rows: the md5s run in
+    generated code (a higher-order-function fold over a shingle array
+    is interpreted per element and benched ~6× slower), collect_set
+    makes the set distinct, and partial aggregation ships one row per
+    (doc, partition), not per (doc, shingle, hash). A document with
+    fewer than 3 tokens, empty or NULL text has no shingle and no row.
+    Consumers that read only one of sig/shingles get the other pruned
+    by Catalyst."""
+    mins = ", ".join(
+        f"min(md5(concat('{h}|', shingle)))" for h in range(num_hashes)
+    )
+    return (
+        shingle_rows(spread_small_input(df), text_col, id_col)
+        .groupBy(id_col)
+        .agg(
+            F.expr(f"array({mins})").alias("sig"),
+            F.expr("collect_set(shingle)").alias("shingles"),
+        )
     )
 
 
@@ -150,41 +208,14 @@ def minhash_signatures(
     text_col: str,
     id_col: str,
     num_hashes: int = 8,
-    shingle_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Per-document MinHash signature: (id, sig array<string>) where
-    sig[h] = min over shingles of md5(h || '|' || shingle), compared as
-    fixed-width hex strings.
-
-    Computed as a pure per-row map (transform + array_min per hash slot)
-    — NO explode, NO shuffle. At 100 TB the signature stage is
-    embarrassingly parallel; the first shuffle in the LSH pipeline is
-    the band-bucket join. (An earlier explode(shingle)×explode(h)
-    formulation shuffled num_hashes×|shingles| rows — 8M at sf0.1 — and
-    was ~10× slower end-to-end.)"""
-    # explode once, then num_hashes codegen'd min-aggregates: the md5s
-    # run inside whole-stage codegen (a higher-order-function fold is
-    # interpreted per element and benches ~6× slower), and partial
-    # aggregation means the shuffle carries one row per (doc, partition),
-    # not per (doc, shingle, hash).
-    sh = (
-        shingle_df
-        if shingle_df is not None
-        else exploded_shingles(df, text_col, id_col)
-    )
-    aggs = [
-        F.min(
-            F.md5(F.concat_ws("|", F.lit(h), F.col("shingle")))
-        ).alias(f"_m{h}")
-        for h in range(num_hashes)
-    ]
-    return (
-        sh.groupBy(id_col)
-        .agg(*aggs)
-        .select(
-            F.col(id_col),
-            F.array(*[F.col(f"_m{h}") for h in range(num_hashes)]).alias("sig"),
-        )
+    """Per-document MinHash signature: (id, sig array<string>), the
+    signature column of ``_doc_minhash`` (its shingle set is pruned).
+    One shuffle — the per-document groupBy; an earlier
+    explode(shingle)×explode(h) formulation shuffled
+    num_hashes×|shingles| rows and was ~10× slower end-to-end."""
+    return _doc_minhash(df, text_col, id_col, num_hashes).select(
+        id_col, "sig"
     )
 
 
@@ -193,7 +224,7 @@ def lsh_bands(
 ) -> DataFrame:
     """Fold per-doc signatures into LSH band rows: (id, band, band_sig).
     band_sig = md5 of the band's min-hashes concatenated in h order.
-    Still per-row (a small explode of num_bands elements per doc)."""
+    Still per-row (a small inline of num_bands structs per doc)."""
     if not 1 <= rows_per_band <= num_hashes:
         raise ValueError(
             f"rows_per_band={rows_per_band} must be in [1, num_hashes="
@@ -206,50 +237,31 @@ def lsh_bands(
             f" rows_per_band={rows_per_band} — a remainder would silently"
             " discard hash slots and weaken recall"
         )
-    num_bands = num_hashes // rows_per_band
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat(
-                        *[
-                            F.element_at("sig", b * rows_per_band + r + 1)
-                            for r in range(rows_per_band)
-                        ]
-                    )
-                ).alias("band_sig"),
-            )
-            for b in range(num_bands)
-        ]
+    bands = ", ".join(
+        f"named_struct('band', {b}, 'band_sig', md5(concat("
+        + ", ".join(
+            f"sig[{b * rows_per_band + r}]" for r in range(rows_per_band)
+        )
+        + ")))"
+        for b in range(num_hashes // rows_per_band)
     )
-    return (
-        signatures.select(F.col(id_col), F.explode(bands).alias("bs"))
-        .select(id_col, F.col("bs.band").alias("band"), F.col("bs.band_sig").alias("band_sig"))
-    )
+    return signatures.selectExpr(f"`{id_col}`", f"inline(array({bands}))")
 
 
 def lsh_candidate_pairs(bands: DataFrame, id_col: str) -> DataFrame:
-    """Band buckets → distinct candidate pairs (id_a < id_b).
-
-    Formulated as a bucket self-join: both sides re-evaluate the band
-    pipeline (Spark shares no subtrees across join inputs), but they
-    share the *compiled* codegen classes, and measured cold end-to-end
-    this beats single-evaluation groupBy+collect_list+pair-explode
-    formulations, whose extra plan shapes cost more in Janino/JIT
-    compilation than the recompute costs in data. A bucket of size k
-    yields k² join rows — identical-signature skew is inherent to LSH
+    """Band buckets → distinct candidate pairs (id_a < id_b), as a
+    bucket self-join. Both join inputs are the same band rows: when the
+    join shuffles, AQE reuses one side's exchange for the other; when
+    it broadcasts, the per-document aggregate under the bands is still
+    one exchange that both sides read. A bucket of size k yields k²
+    join rows — identical-signature skew is inherent to LSH
     candidates, not to this plan; AQE skew-join splits oversized
     buckets at scale."""
-    a = bands.select(
-        F.col("band"), F.col("band_sig"), F.col(id_col).alias("id_a")
-    )
-    b = bands.select(
-        F.col("band"), F.col("band_sig"), F.col(id_col).alias("id_b")
-    )
+    a = bands.selectExpr("band", "band_sig", f"`{id_col}` AS id_a")
+    b = bands.selectExpr("band", "band_sig", f"`{id_col}` AS id_b")
     return (
         a.join(b, ["band", "band_sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        .where("id_a < id_b")
         .select("id_a", "id_b")
         .distinct()
     )
@@ -263,16 +275,16 @@ def jaccard_verify(
     threshold: float,
     shingle_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard over candidate pairs only (never all pairs).
-    Returns (id_a, id_b, jaccard) with jaccard >= threshold, rounded to
-    6 decimals for cross-engine stability.
+    """Exact n-gram Jaccard over candidate pairs only (never all pairs)
+    from (id, shingle) rows. Returns (id_a, id_b, jaccard) with jaccard
+    >= threshold, rounded to 6 decimals for cross-engine stability.
 
     ``candidates`` is referenced three times here (two id projections +
     the intersection join) and the shingle explode three times; Spark
     re-evaluates each reference. Callers whose candidate pipeline is
-    expensive relative to plan compilation should pass a persisted
-    ``candidates`` and a pre-restricted ``df`` (see minhash_lsh_pairs
-    ``materialize=True``)."""
+    expensive relative to plan compilation pass a persisted
+    ``candidates`` and a pre-built ``shingle_df`` (see
+    incremental_minhash_pairs ``materialize=True``)."""
     sh = (
         shingle_df.withColumnRenamed(id_col, "_id")
         if shingle_df is not None
@@ -290,43 +302,37 @@ def jaccard_verify(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    return _score_jaccard(inter, sizes, threshold)
+    return _score_jaccard(_with_sizes(inter, sizes), threshold)
 
 
-def _score_jaccard(
-    inter: DataFrame, sizes: DataFrame, threshold: float
-) -> DataFrame:
-    """Shared tail of every exact-Jaccard scorer: join per-side sizes
-    onto (id_a, id_b, n_inter) counts, derive round(|∩|/|∪|, 6), and
-    threshold-filter. ONE copy of the rounding convention the DuckDB
-    oracles restate — jaccard_verify and ngram_jaccard_pairs must
-    never drift apart on it."""
-    return (
-        inter.join(
-            sizes.select(
-                F.col("_id").alias("id_a"), F.col("n_shingles").alias("n_a")
-            ),
-            "id_a",
-        )
-        .join(
-            sizes.select(
-                F.col("_id").alias("id_b"), F.col("n_shingles").alias("n_b")
-            ),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter")
-                / (
-                    F.col("n_a") + F.col("n_b") - F.col("n_inter")
-                ).cast("double"),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+def _with_sizes(inter: DataFrame, sizes: DataFrame) -> DataFrame:
+    """Join per-side shingle counts (``sizes``: _id, n_shingles) onto
+    (id_a, id_b, n_inter) counts as n_a and n_b."""
+    return inter.join(
+        sizes.select(
+            F.col("_id").alias("id_a"), F.col("n_shingles").alias("n_a")
+        ),
+        "id_a",
+    ).join(
+        sizes.select(
+            F.col("_id").alias("id_b"), F.col("n_shingles").alias("n_b")
+        ),
+        "id_b",
     )
+
+
+def _score_jaccard(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Shared tail of every exact-Jaccard scorer: (id_a, id_b, n_inter,
+    n_a, n_b) → (id_a, id_b, jaccard) with jaccard = round(|∩|/|∪|, 6)
+    >= threshold. ONE copy of the rounding convention the DuckDB
+    oracles restate — minhash_lsh_pairs, jaccard_verify and
+    ngram_jaccard_pairs must never drift apart on it."""
+    return pairs.selectExpr(
+        "id_a",
+        "id_b",
+        "round(n_inter / CAST(n_a + n_b - n_inter AS DOUBLE), 6)"
+        " AS jaccard",
+    ).where(F.col("jaccard") >= threshold)
 
 
 def minhash_lsh_pairs(
@@ -336,51 +342,56 @@ def minhash_lsh_pairs(
     num_hashes: int = 8,
     rows_per_band: int = 2,
     threshold: float = 0.5,
-    materialize: bool = False,
-    checkpoint_shingles: bool = False,
 ) -> DataFrame:
     """Full MinHash→LSH→verify pipeline: near-duplicate pairs with exact
     Jaccard >= threshold among LSH candidates.
 
-    Execution regimes (measured, not guessed; combinable):
+    Execution regime: one lazy plan around ONE per-document aggregate
+    (``_doc_minhash``: id, signature, distinct shingle set). The bands,
+    ``lsh_candidate_pairs`` and the verification — each candidate pair
+    joined to both shingle sets, scored by size(array_intersect(a, b))
+    — all read it, and AQE serves every reference from its single
+    exchange (ReusedExchange). Building runs no Spark job, so EXPLAIN
+    and the reuse advisor stay execution-free.
 
-    - default (both False): pure lazy composition. Downstream consumers
-      re-evaluate shared subtrees, but all re-evaluations reuse the same
-      compiled codegen classes. At small corpus sizes the recompute is
-      cheaper than any materialization bookkeeping.
-    - ``checkpoint_shingles``: cache the exploded (id, shingle) table
-      once (LAZY persist — the first action computes it, later
-      references read the cache; construction runs no jobs, so EXPLAIN
-      and the reuse advisor stay execution-free) and feed it to BOTH
-      the signature and the verification stages — tokenize/shingle runs
-      once instead of ~4×. Measured at sf0.1: 2.5s lazy → 1.7s persist
-      (an earlier eager localCheckpoint variant was 2.5s — serializing
-      the corpus-sized table up front cost more than the recompute it
-      saved). The shingle table is corpus-sized, so this is the
-      mid-scale regime: executor memory/disk can hold it.
-    - ``materialize``: persist the candidate set (tiny relative to the
-      corpus) and restrict verification to candidate documents via a
-      semi-join — the MLlib-style "cache the small midpoint, never the
-      corpus" pattern. At 100 TB, where one corpus-wide signature pass
-      costs hours and the shingle table is too big to store, this caps
-      signature passes at one while materializing only candidate ids.
+    Nothing is persisted. An earlier regime lazily persisted the
+    exploded (id, shingle) table for six branches, but AQE submits
+    those branches' query stages concurrently, before the cache holds
+    a block, so ten of its seventeen jobs shingled the corpus again;
+    the band self-join's broadcast side also ran the signature
+    aggregate a second time. The single-aggregate plan runs five jobs
+    per call on the 2.5k-document perfbench corpus (CHANGES.md has the
+    timings). At 100 TB the aggregate is the one corpus-wide pass and
+    everything after it is per-document or per-candidate.
     """
-    shingle_df = None
-    if checkpoint_shingles:
-        shingle_df = _persist_tracked(exploded_shingles(df, text_col, id_col))
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_df)
-    bands = lsh_bands(sigs, id_col, num_hashes, rows_per_band)
-    cands = lsh_candidate_pairs(bands, id_col)
-    if materialize:
-        cands = _persist_tracked(cands)
-        cand_ids = (
-            cands.select(F.col("id_a").alias("_id"))
-            .unionAll(cands.select(F.col("id_b").alias("_id")))
-            .distinct()
+    # Always true (a document has a row only if it has a shingle, and
+    # every signature has num_hashes slots), but it references BOTH
+    # aggregate columns: without it, column pruning would split the
+    # aggregate into a signature-only copy for the bands and a
+    # set-only copy for the verification — two exchanges, each
+    # shingling the corpus — instead of one exchange AQE reuses.
+    docs = _doc_minhash(df, text_col, id_col, num_hashes).where(
+        f"size(sig) = {num_hashes} AND size(shingles) > 0"
+    )
+    cands = lsh_candidate_pairs(
+        lsh_bands(docs, id_col, num_hashes, rows_per_band), id_col
+    )
+    pairs = (
+        cands.join(
+            docs.selectExpr(f"`{id_col}` AS id_a", "shingles AS sh_a"), "id_a"
         )
-        df = df.join(cand_ids, df[id_col] == cand_ids["_id"], "left_semi")
-        shingle_df = None  # df was restricted; recompute shingles on it
-    return jaccard_verify(df, cands, text_col, id_col, threshold, shingle_df)
+        .join(
+            docs.selectExpr(f"`{id_col}` AS id_b", "shingles AS sh_b"), "id_b"
+        )
+        .selectExpr(
+            "id_a",
+            "id_b",
+            "size(array_intersect(sh_a, sh_b)) AS n_inter",
+            "size(sh_a) AS n_a",
+            "size(sh_b) AS n_b",
+        )
+    )
+    return _score_jaccard(pairs, threshold)
 
 
 def band_table(
@@ -478,7 +489,7 @@ def incremental_minhash_pairs(
         .distinct()
     )
     if materialize:
-        # persist (LAZY, like minhash_lsh_pairs): the first action
+        # persist (LAZY): the first action
         # computes and caches the tiny pair set; later references read
         # the cache instead of re-deriving signatures. Building the
         # DataFrame stays execution-free, so EXPLAIN / the reuse
@@ -664,7 +675,7 @@ def ngram_jaccard_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    return _score_jaccard(pairs, sizes, threshold)
+    return _score_jaccard(_with_sizes(pairs, sizes), threshold)
 
 
 def connected_components(

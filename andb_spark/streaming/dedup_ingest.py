@@ -188,7 +188,7 @@ def _survivors_of_batch(
     pairs = DD.minhash_lsh_pairs(
         batch_u, text_col, id_col,
         num_hashes=num_hashes, rows_per_band=rows_per_band,
-        threshold=threshold, materialize=True,
+        threshold=threshold,
     )
     removed = (
         DD.connected_components(pairs.select("id_a", "id_b"))

@@ -77,7 +77,7 @@ def d_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Near-dup pair sets are unbounded output — no trailing global sort.
     return DD.minhash_lsh_pairs(
         _docs(spark, sf_dir), "text", "doc_id", num_hashes=8, rows_per_band=2,
-        threshold=0.5, checkpoint_shingles=True,
+        threshold=0.5,
     )
 
 
