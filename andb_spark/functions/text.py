@@ -34,6 +34,13 @@ def tokens(text: Column | str) -> Column:
     return F.array_remove(F.split(t, r"\s+"), "")
 
 
+def tokens_sql(text: str) -> str:
+    """``tokens`` as Spark SQL over the SQL expression ``text``, for
+    plans built from SQL text (one parse on the JVM instead of one py4j
+    call per function)."""
+    return f"array_remove(split({text}, '\\\\s+'), '')"
+
+
 def token_count(text: Column | str) -> Column:
     return F.size(tokens(text)).cast("bigint")
 

@@ -13,29 +13,38 @@ Design constraints honored here:
   DuckDB. Hot per-shingle paths avoid higher-order-function lambdas
   (``zip_with``/``transform``/``filter``), which Spark interprets per
   element instead of compiling.
-- MinHash signatures use md5 hex strings ordered lexicographically
-  (fixed-width hex ⇒ lexicographic order == numeric order), so "min
-  hash" never needs a 64-bit integer conversion that engines disagree
-  on.
-- MinHash-LSH is one lazy plan around ONE per-document aggregate (id,
-  signature, distinct shingle set): the bands, the candidate pairs and
-  the verification all read it, and AQE reuses its single exchange
-  instead of recomputing it. Nothing is cached: a lazily persisted
-  shingle table raced its own first fill (AQE submits the branches'
-  query stages concurrently, before the cache holds a block, so most
-  branches re-shingled the corpus anyway).
+- MinHash is integer arithmetic over ONE md5 per shingle: the base hash
+  x is the first 7 hex digits of md5(shingle) as a BIGINT (28 bits;
+  DuckDB spells it ``('0x' || substr(md5(s), 1, 7))::BIGINT``), and
+  signature slot h is min((a_h * x + b_h) % (2^31 - 1)), the
+  universal-hash simulation of a random permutation (Broder's min-wise
+  permutations; Leskovec–Rajaraman–Ullman, *Mining of Massive
+  Datasets* §3.3). The products stay below 2^62, so no engine
+  overflows, and a min over longs runs as a hash aggregate (a min over
+  strings has no hash-aggregate buffer and sorts every shingle row).
+- Every MinHash consumer — the pairs, the signatures and band table,
+  the incremental pairs — reads ONE lazy per-document aggregate (id,
+  signature, distinct shingle set); where a plan reads both halves, AQE
+  reuses its single exchange instead of recomputing it. Nothing is
+  cached or checkpointed: a lazily persisted shingle table raced its
+  own first fill (AQE submits the branches' query stages concurrently,
+  before the cache holds a block, so most branches re-shingled the
+  corpus anyway), and building a builder runs no Spark job.
 - At 100 TB: the shuffles are the per-document groupBy and the
-  band-bucket self-join. Band signatures are high-entropy md5s ⇒
-  near-uniform shuffle keys, no skew. Candidate verification joins only
-  the candidate pairs' shingle sets, not all pairs.
+  band-bucket self-join. Band signatures are md5s of the band's
+  min-hashes ⇒ near-uniform shuffle keys, no skew. Candidate
+  verification joins only the candidate pairs' shingle sets, not all
+  pairs.
 """
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from andb_spark.functions.text import tokens
+from andb_spark.functions.text import tokens, tokens_sql
 
 # The shared session-level cache registry lives in andb_spark.caching
 # (dedup, sampling, bloom and the workloads all register there). These
@@ -49,46 +58,45 @@ from andb_spark.caching import (  # noqa: F401  (re-export)
 )
 
 
-def _shingle_zip(words: Column, n: int) -> Column:
-    """THE shingle definition: a shingle is n consecutive ``tokens()``
-    words joined by one space. Returns arrays_zip of the n shifted
-    slices of ``words`` — element i holds words i..i+n-1 as fields
-    '0'..'n-1', and ``_shingle_text`` joins one element — O(tokens) per
-    row. (The indexed formulation, element_at(words, i+j), is
-    O(tokens²) because element_at walks the array per access.) Fewer
-    than n tokens → empty (slice lengths clamp to 0)."""
-    length = F.greatest(F.size(words) - (n - 1), F.lit(0))
-    return F.arrays_zip(
-        *[F.slice(words, j, length) for j in range(1, n + 1)]
-    )
+def _shingle_zip(words: str, n: int) -> str:
+    """THE shingle definition, as Spark SQL: a shingle is n consecutive
+    ``tokens()`` words joined by one space. Returns arrays_zip of the n
+    shifted slices of the token-array expression ``words`` — element i
+    holds words i..i+n-1 as fields '0'..'n-1', and ``_shingle_text``
+    joins one element — O(tokens) per row. (The indexed formulation,
+    element_at(words, i+j), is O(tokens²) because element_at walks the
+    array per access.) Fewer than n tokens → empty (slice lengths clamp
+    to 0)."""
+    length = f"greatest(size({words}) - {n - 1}, 0)"
+    return "arrays_zip(" + ", ".join(
+        f"slice({words}, {j}, {length})" for j in range(1, n + 1)
+    ) + ")"
 
 
-def _shingle_text(z: Column, n: int) -> Column:
-    return F.concat_ws(" ", *[z[str(j)] for j in range(n)])
+def _shingle_text(z: str, n: int) -> str:
+    return "concat_ws(' ', " + ", ".join(f"{z}.`{j}`" for j in range(n)) + ")"
 
 
-def shingles(text: Column | str, n: int = 3) -> Column:
+def shingles(text_col: str, n: int = 3) -> Column:
     """Distinct word n-gram shingles of a text column (array<string>),
     the array form of ``_shingle_zip``."""
-    text = F.col(text) if isinstance(text, str) else text
-    return F.array_distinct(
-        F.transform(
-            _shingle_zip(tokens(text), n), lambda z: _shingle_text(z, n)
-        )
+    words = tokens_sql(f"`{text_col}`")
+    return F.expr(
+        f"array_distinct(transform({_shingle_zip(words, n)},"
+        f" z -> {_shingle_text('z', n)}))"
     )
 
 
-def shingle_rows(
-    df: DataFrame, text_col: str, id_col: str, n: int = 3
-) -> DataFrame:
-    """(id, shingle) rows, one per shingle OCCURRENCE — the row form of
-    ``_shingle_zip``, built from generated code only: explode the
-    zipped slices, then concat_ws each row (no per-element lambda).
-    The token array is projected once and read by all n slices."""
+def _shingle_rows_sql(text_col: str, id_col: str, n: int = 3) -> str:
+    """(id, shingle) rows over the relation ``{src}``, one per shingle
+    OCCURRENCE — the row form of ``_shingle_zip``, built from generated
+    code only: explode the zipped slices, then concat_ws each row (no
+    per-element lambda). The token array is projected once and read by
+    all n slices."""
     return (
-        df.select(F.col(id_col), tokens(text_col).alias("_w"))
-        .select(id_col, F.explode(_shingle_zip(F.col("_w"), n)).alias("_z"))
-        .select(id_col, _shingle_text(F.col("_z"), n).alias("shingle"))
+        f"SELECT `{id_col}`, {_shingle_text('z', n)} AS shingle FROM ("
+        f"SELECT `{id_col}`, explode({_shingle_zip('w', n)}) AS z FROM ("
+        f"SELECT `{id_col}`, {tokens_sql(f'`{text_col}`')} AS w FROM {{src}}))"
     )
 
 
@@ -124,7 +132,7 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     SIZE-DERIVED width (guide §2: scale-adaptive partitioning, not a
     constant tuned to either local mode or the cluster).
 
-    The signature stage costs dozens of md5s per shingle, but it runs
+    The signature stage is CPU-bound per shingle, but it runs
     at the SCAN's parallelism — and a small corpus is often one parquet
     row group, so the whole stage lands on ONE core while the rest
     idle (stage-level profile, SCALE.md §7 "Minhash drift, root-caused":
@@ -144,15 +152,21 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     best-of-3, and width 32's in-bench number degraded to 11.9 s under
     a loaded heap). The explicit repartition(N) is exempt from AQE
     coalescing, so the fan-out survives the small-data estimate that
-    caused it."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+    caused it.
+
+    A plan that already shuffles is returned untouched: it runs at the
+    shuffle's width, not the scan's, and asking an adaptive plan for
+    its partition count would run its query stages — jobs at build
+    time."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().nodeName() == "AdaptiveSparkPlan":
+        return df
+    n = qe.toRdd().getNumPartitions()
+    if n >= target:
         return df
     try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
+        est = int(qe.optimizedPlan().stats().sizeInBytes())
     except Exception:
         est = 0
     if est <= 0:  # no usable estimate: the old conservative behavior
@@ -161,45 +175,87 @@ def spread_small_input(df: DataFrame) -> DataFrame:
         width = max(
             1, min(target, -(-est // _SPREAD_BYTES_PER_PARTITION))
         )
-    if df.rdd.getNumPartitions() < width:
-        return df.repartition(width)
-    return df
+    return df.repartition(width) if n < width else df
 
 
-def exploded_shingles(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, shingle) rows over each document's DISTINCT shingles — the
-    verify input ``jaccard_verify`` accepts pre-built. Input is spread
-    to full parallelism first (the downstream per-shingle work
-    dominates; see spread_small_input)."""
-    return spread_small_input(df).select(
-        F.col(id_col), F.explode(shingles(text_col)).alias("shingle")
+# Signature slot h simulates a random permutation of the base hashes
+# as x -> (a_h * x + b_h) % MERSENNE_31. The base hash takes 7 hex
+# digits (x < 2^28), so a_h * x + b_h < 2^59 + 2^31: no BIGINT overflow
+# in Spark or DuckDB.
+MERSENNE_31 = 2147483647
+BASE_HASH_HEX_DIGITS = 7
+
+
+def minhash_permutations(num_hashes: int) -> list[tuple[int, int]]:
+    """THE MinHash constants: (a_h, b_h) for h < num_hashes, with
+    1 <= a_h < MERSENNE_31 and 0 <= b_h < MERSENNE_31, derived from md5
+    of fixed labels (no hidden choice; every num_hashes shares the same
+    prefix). The DuckDB oracles read them from here."""
+    def word(label: str) -> int:
+        return int(hashlib.md5(label.encode()).hexdigest(), 16)
+
+    return [
+        (
+            1 + word(f"minhash-a|{h}") % (MERSENNE_31 - 1),
+            word(f"minhash-b|{h}") % MERSENNE_31,
+        )
+        for h in range(num_hashes)
+    ]
+
+
+def base_hash_sql(col: str) -> str:
+    """The base hash of a shingle as Spark SQL: its md5's first
+    BASE_HASH_HEX_DIGITS hex digits as a non-negative BIGINT."""
+    return (
+        f"CAST(conv(substr(md5({col}), 1, {BASE_HASH_HEX_DIGITS}), 16, 10)"
+        " AS BIGINT)"
     )
 
 
 def _doc_minhash(
     df: DataFrame, text_col: str, id_col: str, num_hashes: int
 ) -> DataFrame:
-    """THE per-document aggregate: (id, sig, shingles), where sig[h] =
-    min over the document's shingles of md5(h || '|' || shingle),
-    compared as fixed-width hex strings, and shingles is the distinct
-    shingle set. One groupBy over the shingle rows: the md5s run in
-    generated code (a higher-order-function fold over a shingle array
-    is interpreted per element and benched ~6× slower), collect_set
-    makes the set distinct, and partial aggregation ships one row per
-    (doc, partition), not per (doc, shingle, hash). A document with
-    fewer than 3 tokens, empty or NULL text has no shingle and no row.
-    Consumers that read only one of sig/shingles get the other pruned
-    by Catalyst."""
+    """THE per-document aggregate: (id, sig, base_min, shingles) where
+    sig[h] = min over the document's shingles of
+    (a_h * x + b_h) % MERSENNE_31 with x the shingle's base hash and
+    (a_h, b_h) from ``minhash_permutations``; base_min = min(x) (the
+    document's MinHash bucket, which the LSH recall audit samples on);
+    shingles is the distinct shingle set. One groupBy over the shingle
+    rows: x is one md5 per shingle row, projected once below the
+    aggregate; the mins are integer arithmetic in generated code (a
+    higher-order-function fold over a shingle array is interpreted per
+    element); collect_set makes the set distinct; partial aggregation
+    ships one row per (doc, partition). A document with fewer than 3
+    tokens, empty or NULL text has no shingle and no row. Catalyst
+    prunes the columns a consumer does not read: the signature alone
+    is a HashAggregate of longs."""
     mins = ", ".join(
-        f"min(md5(concat('{h}|', shingle)))" for h in range(num_hashes)
+        f"min(({a} * x + {b}) % {MERSENNE_31})"
+        for a, b in minhash_permutations(num_hashes)
     )
-    return (
-        shingle_rows(spread_small_input(df), text_col, id_col)
-        .groupBy(id_col)
-        .agg(
-            F.expr(f"array({mins})").alias("sig"),
-            F.expr("collect_set(shingle)").alias("shingles"),
-        )
+    # one SQL statement: a single parse and analysis on the JVM instead
+    # of a py4j round trip per function and per DataFrame step
+    return df.sparkSession.sql(
+        f"SELECT `{id_col}`, array({mins}) AS sig, min(x) AS base_min,"
+        " collect_set(shingle) AS shingles FROM ("
+        f"SELECT `{id_col}`, shingle, {base_hash_sql('shingle')} AS x"
+        f" FROM ({_shingle_rows_sql(text_col, id_col)})) GROUP BY `{id_col}`",
+        src=spread_small_input(df),
+    )
+
+
+def minhash_docs(
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int = 8
+) -> DataFrame:
+    """``_doc_minhash`` for a plan that reads BOTH the signature and the
+    shingle set. The filter is always true (a document has a row only
+    if it has a shingle, and every signature has num_hashes slots), but
+    it references both columns: without it, column pruning would split
+    the aggregate into a signature-only copy and a set-only copy — two
+    exchanges, each shingling the corpus — instead of one exchange AQE
+    reuses."""
+    return _doc_minhash(df, text_col, id_col, num_hashes).where(
+        f"size(sig) = {num_hashes} AND size(shingles) > 0"
     )
 
 
@@ -209,7 +265,7 @@ def minhash_signatures(
     id_col: str,
     num_hashes: int = 8,
 ) -> DataFrame:
-    """Per-document MinHash signature: (id, sig array<string>), the
+    """Per-document MinHash signature: (id, sig array<bigint>), the
     signature column of ``_doc_minhash`` (its shingle set is pruned).
     One shuffle — the per-document groupBy; an earlier
     explode(shingle)×explode(h) formulation shuffled
@@ -223,7 +279,9 @@ def lsh_bands(
     signatures: DataFrame, id_col: str, num_hashes: int = 8, rows_per_band: int = 2
 ) -> DataFrame:
     """Fold per-doc signatures into LSH band rows: (id, band, band_sig).
-    band_sig = md5 of the band's min-hashes concatenated in h order.
+    band_sig = md5 of the band's min-hashes as decimal text joined by
+    '|' in h order — one definition for every rows_per_band, and DuckDB
+    spells it md5(string_agg(min_hash::VARCHAR, '|' ORDER BY h)).
     Still per-row (a small inline of num_bands structs per doc)."""
     if not 1 <= rows_per_band <= num_hashes:
         raise ValueError(
@@ -238,9 +296,10 @@ def lsh_bands(
             " discard hash slots and weaken recall"
         )
     bands = ", ".join(
-        f"named_struct('band', {b}, 'band_sig', md5(concat("
+        f"named_struct('band', {b}, 'band_sig', md5(concat_ws('|', "
         + ", ".join(
-            f"sig[{b * rows_per_band + r}]" for r in range(rows_per_band)
+            f"CAST(sig[{b * rows_per_band + r}] AS STRING)"
+            for r in range(rows_per_band)
         )
         + ")))"
         for b in range(num_hashes // rows_per_band)
@@ -267,72 +326,49 @@ def lsh_candidate_pairs(bands: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def jaccard_verify(
-    df: DataFrame,
-    candidates: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float,
-    shingle_df: DataFrame | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard over candidate pairs only (never all pairs)
-    from (id, shingle) rows. Returns (id_a, id_b, jaccard) with jaccard
-    >= threshold, rounded to 6 decimals for cross-engine stability.
-
-    ``candidates`` is referenced three times here (two id projections +
-    the intersection join) and the shingle explode three times; Spark
-    re-evaluates each reference. Callers whose candidate pipeline is
-    expensive relative to plan compilation pass a persisted
-    ``candidates`` and a pre-built ``shingle_df`` (see
-    incremental_minhash_pairs ``materialize=True``)."""
-    sh = (
-        shingle_df.withColumnRenamed(id_col, "_id")
-        if shingle_df is not None
-        else df.select(
-            F.col(id_col).alias("_id"),
-            F.explode(shingles(text_col)).alias("shingle"),
-        )
-    )
-    sizes = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    sh_a = sh.select(F.col("_id").alias("id_a"), F.col("shingle"))
-    sh_b = sh.select(F.col("_id").alias("id_b"), F.col("shingle"))
-    inter = (
-        candidates.join(sh_a, "id_a")
-        .join(sh_b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return _score_jaccard(_with_sizes(inter, sizes), threshold)
-
-
-def _with_sizes(inter: DataFrame, sizes: DataFrame) -> DataFrame:
-    """Join per-side shingle counts (``sizes``: _id, n_shingles) onto
-    (id_a, id_b, n_inter) counts as n_a and n_b."""
-    return inter.join(
-        sizes.select(
-            F.col("_id").alias("id_a"), F.col("n_shingles").alias("n_a")
-        ),
-        "id_a",
-    ).join(
-        sizes.select(
-            F.col("_id").alias("id_b"), F.col("n_shingles").alias("n_b")
-        ),
-        "id_b",
-    )
-
-
 def _score_jaccard(pairs: DataFrame, threshold: float) -> DataFrame:
     """Shared tail of every exact-Jaccard scorer: (id_a, id_b, n_inter,
     n_a, n_b) → (id_a, id_b, jaccard) with jaccard = round(|∩|/|∪|, 6)
     >= threshold. ONE copy of the rounding convention the DuckDB
-    oracles restate — minhash_lsh_pairs, jaccard_verify and
-    ngram_jaccard_pairs must never drift apart on it."""
+    oracles restate — the MinHash verifiers and shingle_jaccard_pairs
+    must never drift apart on it."""
     return pairs.selectExpr(
         "id_a",
         "id_b",
         "round(n_inter / CAST(n_a + n_b - n_inter AS DOUBLE), 6)"
         " AS jaccard",
     ).where(F.col("jaccard") >= threshold)
+
+
+def _verified(
+    cands: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    id_col: str,
+    threshold: float,
+) -> DataFrame:
+    """Exact Jaccard of candidate pairs (id_a, id_b) only, never all
+    pairs: each pair joined to id_a's shingle set in ``sets_a`` and
+    id_b's in ``sets_b`` (id, shingles — ``_doc_minhash`` rows), scored
+    by size(array_intersect(a, b))."""
+    pairs = (
+        cands.join(
+            sets_a.selectExpr(f"`{id_col}` AS id_a", "shingles AS sh_a"),
+            "id_a",
+        )
+        .join(
+            sets_b.selectExpr(f"`{id_col}` AS id_b", "shingles AS sh_b"),
+            "id_b",
+        )
+        .selectExpr(
+            "id_a",
+            "id_b",
+            "size(array_intersect(sh_a, sh_b)) AS n_inter",
+            "size(sh_a) AS n_a",
+            "size(sh_b) AS n_b",
+        )
+    )
+    return _score_jaccard(pairs, threshold)
 
 
 def minhash_lsh_pairs(
@@ -347,51 +383,26 @@ def minhash_lsh_pairs(
     Jaccard >= threshold among LSH candidates.
 
     Execution regime: one lazy plan around ONE per-document aggregate
-    (``_doc_minhash``: id, signature, distinct shingle set). The bands,
-    ``lsh_candidate_pairs`` and the verification — each candidate pair
-    joined to both shingle sets, scored by size(array_intersect(a, b))
-    — all read it, and AQE serves every reference from its single
-    exchange (ReusedExchange). Building runs no Spark job, so EXPLAIN
-    and the reuse advisor stay execution-free.
+    (``minhash_docs``: id, signature, distinct shingle set). The bands,
+    ``lsh_candidate_pairs`` and the verification (``_verified``) all
+    read it, and AQE serves every reference from its single exchange
+    (ReusedExchange). Building runs no Spark job, so EXPLAIN and the
+    reuse advisor stay execution-free.
 
     Nothing is persisted. An earlier regime lazily persisted the
     exploded (id, shingle) table for six branches, but AQE submits
     those branches' query stages concurrently, before the cache holds
     a block, so ten of its seventeen jobs shingled the corpus again;
     the band self-join's broadcast side also ran the signature
-    aggregate a second time. The single-aggregate plan runs five jobs
-    per call on the 2.5k-document perfbench corpus (CHANGES.md has the
-    timings). At 100 TB the aggregate is the one corpus-wide pass and
-    everything after it is per-document or per-candidate.
+    aggregate a second time. At 100 TB the aggregate is the one
+    corpus-wide pass and everything after it is per-document or
+    per-candidate.
     """
-    # Always true (a document has a row only if it has a shingle, and
-    # every signature has num_hashes slots), but it references BOTH
-    # aggregate columns: without it, column pruning would split the
-    # aggregate into a signature-only copy for the bands and a
-    # set-only copy for the verification — two exchanges, each
-    # shingling the corpus — instead of one exchange AQE reuses.
-    docs = _doc_minhash(df, text_col, id_col, num_hashes).where(
-        f"size(sig) = {num_hashes} AND size(shingles) > 0"
-    )
+    docs = minhash_docs(df, text_col, id_col, num_hashes)
     cands = lsh_candidate_pairs(
         lsh_bands(docs, id_col, num_hashes, rows_per_band), id_col
     )
-    pairs = (
-        cands.join(
-            docs.selectExpr(f"`{id_col}` AS id_a", "shingles AS sh_a"), "id_a"
-        )
-        .join(
-            docs.selectExpr(f"`{id_col}` AS id_b", "shingles AS sh_b"), "id_b"
-        )
-        .selectExpr(
-            "id_a",
-            "id_b",
-            "size(array_intersect(sh_a, sh_b)) AS n_inter",
-            "size(sh_a) AS n_a",
-            "size(sh_b) AS n_b",
-        )
-    )
-    return _score_jaccard(pairs, threshold)
+    return _verified(cands, docs, docs, id_col, threshold)
 
 
 def band_table(
@@ -407,7 +418,9 @@ def band_table(
     only and appends them; history is never recomputed. At 100 TB,
     store it as a managed table bucketed by (band, band_sig) so the
     nightly increment-vs-history candidate join is shuffle-free on the
-    history side."""
+    history side. A stored band table is tied to the MinHash definition
+    (``minhash_permutations``, ``base_hash_sql``, ``lsh_bands``):
+    change any of them and the table must be rebuilt."""
     return lsh_bands(
         minhash_signatures(df, text_col, id_col, num_hashes), id_col,
         num_hashes, rows_per_band,
@@ -423,8 +436,6 @@ def incremental_minhash_pairs(
     rows_per_band: int = 2,
     threshold: float = 0.5,
     history_bands: DataFrame | None = None,
-    materialize: bool = False,
-    eager: bool = False,
 ) -> DataFrame:
     """Near-dup pairs of an ingest INCREMENT against the HISTORICAL
     corpus — the production dedup shape (its exact-hash sibling is the
@@ -433,41 +444,16 @@ def incremental_minhash_pairs(
 
     Pass ``history_bands`` (the maintained ``band_table``) to skip
     recomputing historical signatures entirely; otherwise they are
-    derived from ``history_df`` here. Verification (exact Jaccard) only
-    ever shingles the increment plus the candidate history docs — the
-    history side is restricted by a semi-join on candidate ids before
-    any text processing, so a 100 TB history contributes only its
-    (few) colliding documents to the verify stage.
+    derived from ``history_df`` here. The increment is aggregated once
+    (``minhash_docs``): its bands and its shingle sets read the same
+    exchange. Verification (``_verified``) only ever shingles the
+    candidate history docs besides the increment — the history side is
+    restricted by a semi-join on candidate ids before any text
+    processing, so a 100 TB history contributes only its (few)
+    colliding documents to the verify stage.
 
-    ``materialize``: lazily composed, the candidate pairs feed both the
-    history restriction and the verify join, and the verify stage
-    references its shingle table three ways (sizes + both pair sides) —
-    the executed plan carries ~25 corpus scans (exchange reuse catches
-    only a few; AQE hides the recompute locally where stage overhead
-    dominates, but 25 scans of a 100 TB corpus is the whole game at
-    scale). With ``materialize`` the tiny candidate pair set and the
-    increment-plus-hits shingle table are lazily persisted: the first
-    action computes and caches them, capping corpus passes at three
-    (two band tables + one verify shingle) while construction itself
-    runs no jobs — EXPLAIN and the reuse advisor stay execution-free
-    even over the opted-in workload query. At sf0.1 the two regimes
-    are within ~0.5s of each other — local stage overhead, not scan
-    cost, dominates there; the flag is about the scan multiplicity.
-
-    ``eager`` (only meaningful with ``materialize``): materialize the
-    candidate pairs and the verify shingle table via an EAGER
-    ``localCheckpoint`` instead of a lazy persist. The checkpoint
-    TRUNCATES the plan (guide §3.3): downstream references read a
-    cached leaf instead of carrying the full replicated band-pipeline
-    subtree, which cuts Catalyst analysis time (~1 s of driver-side
-    gap at sf0.1 — the r15 job-timeline profile) and removes the
-    concurrent-branch races that recompute a lazily-persisted frame
-    several times before the first block lands. Both checkpointed
-    frames are change-sized (candidate pairs; increment+hits
-    shingles), never corpus-sized, so the materialization is bounded
-    at any scale. The cost: construction now RUNS JOBS, so callers
-    that must stay execution-free at build time (EXPLAIN, the reuse
-    advisor, streaming foreachBatch composition) keep the default.
+    One lazy plan: nothing is persisted or checkpointed, and building
+    runs no Spark job.
 
     Returns (id_a = history id, id_b = new id, jaccard >= threshold).
     New-vs-new duplicates inside the increment are the job of the
@@ -478,50 +464,32 @@ def incremental_minhash_pairs(
         if history_bands is not None
         else band_table(history_df, text_col, id_col, num_hashes, rows_per_band)
     )
-    nb = band_table(new_df, text_col, id_col, num_hashes, rows_per_band)
+    new_docs = minhash_docs(new_df, text_col, id_col, num_hashes)
+    nb = lsh_bands(new_docs, id_col, num_hashes, rows_per_band)
     cands = (
         hb.select("band", "band_sig", F.col(id_col).alias("id_a"))
         .join(
             nb.select("band", "band_sig", F.col(id_col).alias("id_b")),
             ["band", "band_sig"],
         )
+        .where("id_a != id_b")
         .select("id_a", "id_b")
         .distinct()
     )
-    if materialize:
-        # persist (LAZY): the first action
-        # computes and caches the tiny pair set; later references read
-        # the cache instead of re-deriving signatures. Building the
-        # DataFrame stays execution-free, so EXPLAIN / the reuse
-        # advisor can invoke this builder without running jobs.
-        # ``eager`` trades that property for plan truncation (see
-        # docstring) — the pair set is tiny either way.
-        cands = (
-            _checkpoint_tracked(cands)
-            if eager
-            else _persist_tracked(cands)
-        )
     # id is document IDENTITY: if an id somehow appears on both sides
     # (a re-delivered doc with edited text that slipped past the exact
     # screen), keeping both rows would merge two texts' shingles under
     # one id and corrupt every Jaccard involving it. The NEW row
-    # represents the id in verification; self-pairs are dropped.
-    cands = cands.filter(F.col("id_a") != F.col("id_b"))
+    # represents the id in verification; self-pairs are dropped above.
     hist_hit = history_df.join(
-        cands.select(F.col("id_a").alias(id_col)).distinct(), id_col, "left_semi"
+        cands.select(F.col("id_a").alias(id_col)), id_col, "left_semi"
     ).join(new_df.select(id_col), id_col, "left_anti")
-    verify_input = hist_hit.unionByName(new_df)
-    shingle_df = None
-    if materialize:
-        sh = exploded_shingles(verify_input, text_col, id_col)
-        shingle_df = (
-            _checkpoint_tracked(sh)
-            if eager
-            else _persist_tracked(sh)
-        )
-    return jaccard_verify(
-        verify_input, cands, text_col, id_col, threshold, shingle_df
+    sets_a = (
+        _doc_minhash(hist_hit, text_col, id_col, num_hashes)
+        .select(id_col, "shingles")
+        .unionByName(new_docs.select(id_col, "shingles"))
     )
+    return _verified(cands, sets_a, new_docs, id_col, threshold)
 
 
 def passage_chunks(
@@ -657,16 +625,12 @@ def scrub_repeated_passages(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame, text_col: str, id_col: str, threshold: float
-) -> DataFrame:
-    """All-pairs exact n-gram Jaccard >= threshold, computed via an
-    inverted index on shingles (shingle-equality join), NOT a cartesian
-    product — the classic scalable formulation: only pairs sharing at
-    least one shingle are ever materialized."""
-    sh = df.select(
-        F.col(id_col).alias("_id"), F.explode(shingles(text_col)).alias("shingle")
-    )
+def shingle_jaccard_pairs(sh: DataFrame, threshold: float) -> DataFrame:
+    """All-pairs exact Jaccard >= threshold over (_id, shingle) rows,
+    one per DISTINCT shingle of a document, computed via an inverted
+    index on shingles (shingle-equality join), NOT a cartesian product
+    — the classic scalable formulation: only pairs sharing at least one
+    shingle are ever materialized."""
     sizes = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     pairs = (
         sh.select(F.col("_id").alias("id_a"), "shingle")
@@ -674,8 +638,34 @@ def ngram_jaccard_pairs(
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
+        .join(
+            sizes.select(
+                F.col("_id").alias("id_a"), F.col("n_shingles").alias("n_a")
+            ),
+            "id_a",
+        )
+        .join(
+            sizes.select(
+                F.col("_id").alias("id_b"), F.col("n_shingles").alias("n_b")
+            ),
+            "id_b",
+        )
     )
-    return _score_jaccard(_with_sizes(pairs, sizes), threshold)
+    return _score_jaccard(pairs, threshold)
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame, text_col: str, id_col: str, threshold: float
+) -> DataFrame:
+    """All-pairs exact word-3-gram Jaccard >= threshold
+    (``shingle_jaccard_pairs`` over each document's shingles)."""
+    return shingle_jaccard_pairs(
+        df.select(
+            F.col(id_col).alias("_id"),
+            F.explode(shingles(text_col)).alias("shingle"),
+        ),
+        threshold,
+    )
 
 
 def connected_components(

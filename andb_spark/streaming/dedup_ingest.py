@@ -12,7 +12,10 @@ Maintained state (two managed engine tables):
 - ``bands``  — the append-only LSH band table
   (operators/dedup.py::band_table): MinHash signatures are a pure
   per-document function, so each batch appends bands for ITS survivors
-  only.
+  only. A band table holds ``band_sig`` values of one MinHash
+  definition: one written before the integer min-hashes (md5-string
+  signatures) matches no new band and must be rebuilt from ``clean``
+  with ``band_table``.
 
 Per micro-batch, work is proportional to the batch:
 1. in-batch exact dedup (min-id per content hash);
@@ -177,10 +180,6 @@ def _survivors_of_batch(
         rows_per_band=rows_per_band,
         threshold=threshold,
         history_bands=bands_df,
-        # cap corpus passes: lazily composed, the verify stage would
-        # re-scan the growing bands/clean tables several times PER
-        # BATCH — the sink releases the caches after each commit
-        materialize=True,
     ).select(F.col("id_b").alias(id_col)).distinct()
     batch_u = batch_u.join(near_hist, id_col, "left_anti")
 
@@ -266,9 +265,9 @@ def stream_dedup_ingest(
                 },
             )
         finally:
-            # this batch's materialize=True caches are consumed (or the
-            # batch failed mid-compute) — release either way, before
-            # the next batch re-persists against the grown history
+            # this batch's checkpoints (survivors, connected-components
+            # rounds) are consumed (or the batch failed mid-compute) —
+            # release either way, before the next batch
             DD.release_caches()
 
     run_foreach_batch(stream, _sink, checkpoint_dir, query_name)

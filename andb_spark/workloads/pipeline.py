@@ -227,7 +227,7 @@ def d_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = d.filter(F.col("doc_id") >= 400)
     return DD.incremental_minhash_pairs(
         hist, new, "text", "doc_id", num_hashes=8, rows_per_band=2,
-        threshold=0.5, materialize=True, eager=True,
+        threshold=0.5,
     ).orderBy("id_a", "id_b")
 
 
@@ -256,6 +256,11 @@ def d_passage_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The recall audit's MinHash bucket: a base hash below 2^20 is an md5
+# whose first 4 hex digits are below '0100' (1/256 of all shingles).
+_AUDIT_BUCKET = 1 << 20
+
+
 def d_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-audit of the LSH banding scheme (8 hashes × 2 rows/band):
     candidate recall against exact n-gram-Jaccard ground truth on a
@@ -273,66 +278,40 @@ def d_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed cutoff — near-identical docs share their min shingle hash
     with probability ≈ their Jaccard, so pairs survive or drop as a
     unit, at any corpus scale. recall is NULL (not a crash) if the
-    sampled ground truth is ever empty."""
-    d_all = _docs(spark, sf_dir)
-    # The sampled subset is EAGERLY localCheckpoint-ed (r15, guide
-    # §2/§3.3): the corpus-wide shingle+md5 sample pass previously ran
-    # at scan parallelism (one parquet row group → ONE 1.1 s task at
-    # sf0.1) and, being lazily persisted, was recomputed by up to four
-    # concurrent downstream branches racing ahead of the first cached
-    # block (r15 job-timeline profile: 4 overlapping 1.14 s
-    # single-task jobs). spread_small_input parallelizes the pass;
-    # the eager checkpoint runs it exactly once and TRUNCATES the
-    # plan, cutting the ~1.2 s Catalyst analysis gap the replicated
-    # subtree cost. The checkpoint is sample-sized (the `_mh` cutoff
-    # bounds it), the same footprint the previous lazy persist pinned.
-    # The exact ground truth stays a lazy persist: it feeds n_exact
-    # and the hit semi-join concurrently, and an eager barrier there
-    # SERIALIZED the exact and band pipelines (measured slower).
-    # The always-true nondeterministic conjunct stops Catalyst from
-    # pushing the (expensive — one md5 per shingle) filter BELOW the
-    # fan-out exchange: deterministic predicates commute with
-    # repartition, and pushed down the whole sample pass runs in the
-    # scan's single task again (measured 2.3 s → 0.8 s with the
-    # guard; 856 rows either way — the conjunct never changes the
-    # predicate's value, so the result set is deterministic).
-    d = DD._checkpoint_tracked(
-        DD.spread_small_input(d_all)
-        .withColumn(
-            "_mh", F.array_min(F.transform(DD.shingles("text"), F.md5))
-        )
-        .filter((F.col("_mh") < "0100") & (F.rand() >= F.lit(-1.0)))
-        .select("doc_id", "text")
+    sampled ground truth is ever empty.
+
+    The bucket is the document's minimum base hash (``base_min`` of
+    the MinHash aggregate) below 2^20: the base hash is md5's first 7
+    hex digits, so this is the same sample as "min md5(shingle) <
+    '0100'". One lazy plan: the sample, the exact ground truth (the
+    sampled shingle sets, inverted-indexed) and the bands all read one
+    per-document aggregate, whose exchange AQE computes once. The
+    sample predicate sits above that exchange, so no pushdown can move
+    it into the scan's stage."""
+    d = DD.minhash_docs(_docs(spark, sf_dir), "text", "doc_id", 8).where(
+        F.col("base_min") < _AUDIT_BUCKET
     )
-    exact = DD._persist_tracked(
-        DD.ngram_jaccard_pairs(d, "text", "doc_id", threshold=0.5).select(
-            "id_a", "id_b"
-        )
+    exact = DD.shingle_jaccard_pairs(
+        d.select(
+            F.col("doc_id").alias("_id"), F.explode("shingles").alias("shingle")
+        ),
+        threshold=0.5,
+    ).select("id_a", "id_b")
+    cand = DD.lsh_candidate_pairs(
+        DD.lsh_bands(d, "doc_id", num_hashes=8, rows_per_band=2), "doc_id"
     )
-    bands = DD.lsh_bands(
-        DD.minhash_signatures(d, "text", "doc_id", num_hashes=8),
-        "doc_id",
-        num_hashes=8,
-        rows_per_band=2,
-    )
-    # persisted: cand feeds BOTH the n_cand count and the hit
-    # semi-join — unpinned, the second branch re-runs the whole
-    # signature+banding pipeline (measured in the r7 stage profile)
-    cand = DD._persist_tracked(DD.lsh_candidate_pairs(bands, "doc_id"))
-    hit = exact.join(cand, ["id_a", "id_b"], "left_semi")
-    ne = exact.agg(F.count(F.lit(1)).alias("n_exact"))
-    nc = cand.agg(F.count(F.lit(1)).alias("n_cand"))
-    nh = hit.agg(F.count(F.lit(1)).alias("n_hit"))
+    # both pair sets are distinct: one outer join counts all three
     return (
-        ne.crossJoin(nc)
-        .crossJoin(nh)
-        .select(
-            "n_exact",
-            "n_cand",
-            "n_hit",
-            F.round(
-                F.try_divide(F.col("n_hit"), F.col("n_exact")), 6
-            ).alias("recall"),
+        exact.withColumn("_e", F.lit(1))
+        .join(cand.withColumn("_c", F.lit(1)), ["id_a", "id_b"], "full")
+        .agg(
+            F.count("_e").alias("n_exact"),
+            F.count("_c").alias("n_cand"),
+            F.count(F.col("_e") + F.col("_c")).alias("n_hit"),
+        )
+        .withColumn(
+            "recall",
+            F.round(F.try_divide(F.col("n_hit"), F.col("n_exact")), 6),
         )
     )
 
@@ -1557,6 +1536,32 @@ _FP = (
     + ")), ' '))"
 )
 
+# The MinHash-LSH definition of operators/dedup.py restated for DuckDB
+# over an ``sh`` (doc_id, shingle) CTE: the base hash x of a shingle,
+# signature slot h = min((a_h * x + b_h) % (2^31 - 1)) with dedup.py's
+# constants, and 2-row bands hashed as the md5 of the slots' decimal
+# text joined by '|'.
+_BASE_HASH = (
+    f"('0x' || substr(md5({{col}}), 1, {DD.BASE_HASH_HEX_DIGITS}))::BIGINT"
+)
+_LSH_BANDS = f"""
+        mh AS (
+            SELECT doc_id, h, min((a * x + b) % {DD.MERSENNE_31}) AS min_hash
+            FROM (SELECT doc_id, {_BASE_HASH.format(col='shingle')} AS x
+                  FROM sh) s,
+                 (VALUES {", ".join(
+                     f"({h}, {a}, {b})"
+                     for h, (a, b) in enumerate(DD.minhash_permutations(8))
+                 )}) hs(h, a, b)
+            GROUP BY doc_id, h
+        ),
+        bands AS (
+            SELECT doc_id, CAST(h // 2 AS INT) AS band,
+                   md5(string_agg(CAST(min_hash AS VARCHAR), '|' ORDER BY h))
+                       AS band_sig
+            FROM mh GROUP BY doc_id, band
+        )"""
+
 # Rabin-Karp rolling hash twin of functions/text.py::rolling_hash —
 # same fold, same md5-derived 32-bit token values, same Mersenne mod.
 _RH = (
@@ -1631,17 +1636,7 @@ ORACLES = {
             FROM (SELECT doc_id, {_WORDS.format(col='text')} AS w FROM documents)
         ),
         sh AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
-        mh AS (
-            SELECT doc_id, h, min(md5(h::VARCHAR || '|' || shingle)) AS min_hash
-            FROM sh, (SELECT unnest(range(0, 8)) AS h) hs
-            GROUP BY doc_id, h
-        ),
-        bands AS (
-            SELECT doc_id, CAST(h // 2 AS INT) AS band,
-                   md5(min(CASE WHEN h % 2 = 0 THEN min_hash END)
-                       || min(CASE WHEN h % 2 = 1 THEN min_hash END)) AS band_sig
-            FROM mh GROUP BY doc_id, band
-        ),
+{_LSH_BANDS},
         cand AS (
             SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
             FROM bands a JOIN bands b
@@ -1959,17 +1954,7 @@ ORACLES = {
             FROM (SELECT doc_id, {_WORDS.format(col='text')} AS w FROM documents)
         ),
         sh AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
-        mh AS (
-            SELECT doc_id, h, min(md5(h::VARCHAR || '|' || shingle)) AS min_hash
-            FROM sh, (SELECT unnest(range(0, 8)) AS h) hs
-            GROUP BY doc_id, h
-        ),
-        bands AS (
-            SELECT doc_id, CAST(h // 2 AS INT) AS band,
-                   md5(min(CASE WHEN h % 2 = 0 THEN min_hash END)
-                       || min(CASE WHEN h % 2 = 1 THEN min_hash END)) AS band_sig
-            FROM mh GROUP BY doc_id, band
-        ),
+{_LSH_BANDS},
         cand AS (
             SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
             FROM bands a JOIN bands b
@@ -1999,7 +1984,8 @@ ORACLES = {
         ),
         docs AS (
             SELECT doc_id, sh FROM docs0
-            WHERE list_min(list_transform(sh, s -> md5(s))) < '0100'
+            WHERE list_min(list_transform(sh, s -> {_BASE_HASH.format(col='s')}))
+                  < {_AUDIT_BUCKET}
         ),
         sh AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
         sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
@@ -2016,17 +2002,7 @@ ORACLES = {
             WHERE round(CAST(n_inter AS DOUBLE)
                         / (sa.n + sb.n - n_inter), 6) >= 0.5
         ),
-        mh AS (
-            SELECT doc_id, h, min(md5(h::VARCHAR || '|' || shingle)) AS min_hash
-            FROM sh, (SELECT unnest(range(0, 8)) AS h) hs
-            GROUP BY doc_id, h
-        ),
-        bands AS (
-            SELECT doc_id, CAST(h // 2 AS INT) AS band,
-                   md5(min(CASE WHEN h % 2 = 0 THEN min_hash END)
-                       || min(CASE WHEN h % 2 = 1 THEN min_hash END)) AS band_sig
-            FROM mh GROUP BY doc_id, band
-        ),
+{_LSH_BANDS},
         cand AS (
             SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
             FROM bands a JOIN bands b

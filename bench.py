@@ -1,6 +1,11 @@
 """Benchmark harness — run the headline queries and print ONE JSON line.
 
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 python bench.py
+    python bench.py --names=d_minhash_lsh,d_lsh_recall_audit   # a subset
+
+With ``--names`` only those registry jobs are warmed up and timed, and
+the one JSON line holds just their best-of-n times (no totals, and
+BENCH_LAST_FULL.json is left as it is).
 
 Output: {"metric": "headline_total_sec", "value": N, "unit": "sec",
          "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1}
@@ -401,6 +406,12 @@ def main() -> None:
 
     spark = build_session("andb_bench")
     qs = library_queries()  # incl. library-only sketch ops
+    names = next(
+        (a.split("=", 1)[1].split(",") for a in sys.argv[1:]
+         if a.startswith("--names=")),
+        None,
+    )
+    timed = names or HEADLINE
 
     # Warm-up: touch the fact table (JVM + scan paths), then run each
     # headline query once at the smallest scale factor so plan analysis
@@ -412,7 +423,7 @@ def main() -> None:
     load_table(spark, sf_dir, "lineitem").count()
     warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
     if os.path.isdir(warm_dir) and warm_dir != sf_dir.rstrip("/"):
-        for name in HEADLINE:
+        for name in timed:
             try:
                 qs[name](spark, warm_dir).collect()
             except Exception as e:  # never let warm-up kill the bench
@@ -427,7 +438,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     spread: dict[str, float] = {}
     jitter_abs: dict[str, float] = {}
-    for name in HEADLINE:
+    for name in timed:
         # best-of-n (default 3): report the steady-state time, not
         # whichever run a GC pause / OS scheduling hiccup landed on
         # (run-to-run spread on a shared box is ~20%; the min is the
@@ -464,6 +475,10 @@ def main() -> None:
             file=sys.stderr,
         )
 
+    if names:
+        print(json.dumps({"metric": "best_sec", "unit": "sec",
+                          "queries": timings, "sf": sf, "n_runs": n_runs}))
+        return
     # headline_total_sec sums the r1-r4 set only (cross-round
     # comparable); the r6 extension reports its own subtotal.
     total = round(sum(timings[n] for n in COMPARABLE), 3)

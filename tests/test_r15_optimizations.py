@@ -76,27 +76,24 @@ def test_load_table_memo_is_per_dir(spark):
     assert c.count() != a.count()
 
 
-def test_incremental_minhash_eager_matches_lazy(spark):
-    """The eager-localCheckpoint regime (plan truncation, r15) must
-    return exactly the lazy-persist regime's pairs — the flag changes
-    WHERE intermediates live, never what is computed."""
-    d = load_table(spark, SF001, "documents")
-    hist = d.filter(F.col("doc_id") < 40)
-    new = d.filter(F.col("doc_id") >= 40)
-    kw = dict(num_hashes=8, rows_per_band=2, threshold=0.5)
-    lazy = sorted(
-        tuple(r)
-        for r in DD.incremental_minhash_pairs(
-            hist, new, "text", "doc_id", materialize=True, **kw
-        ).collect()
+def test_incremental_minhash_matches_duckdb(spark):
+    """The one lazy incremental near-dup plan (no persist, no
+    checkpoint) returns exactly the DuckDB oracle's pairs at sf0.01."""
+    import duckdb
+
+    from andb_spark.catalog import table_path
+    from andb_spark.workloads import all_oracles
+    from andb_spark.workloads.pipeline import d_incremental_minhash
+
+    got = [tuple(r) for r in d_incremental_minhash(spark, SF01).collect()]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{table_path(SF01, 'documents')}')"
     )
-    eager = sorted(
-        tuple(r)
-        for r in DD.incremental_minhash_pairs(
-            hist, new, "text", "doc_id", materialize=True, eager=True, **kw
-        ).collect()
-    )
-    assert lazy == eager
+    want = con.execute(all_oracles()["d_incremental_minhash"]).fetchall()
+    assert got == [tuple(r) for r in want]
+    assert got  # the sf0.01 increment has near-duplicates in history
 
 
 def test_recall_audit_sample_pass_is_parallel(spark):
