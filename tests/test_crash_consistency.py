@@ -138,6 +138,39 @@ def test_crash_at_every_commit_boundary_is_consistent(spark, when):
         shutil.rmtree(wh, ignore_errors=True)
 
 
+def test_crash_between_dv_sidecar_and_catalog_save(spark, tmp_path):
+    """A deletion-vector DELETE writes its sidecar, then saves the
+    catalog (the commit point). Dying in between leaves the sidecar
+    unreachable: the reopened table still has the row, and VACUUM
+    sweeps the orphan."""
+    wh = str(tmp_path / "wh")
+    eng = AnalyticsEngine(wh, spark=spark)
+    e = eng.execute
+    e("create table dv (k int, v int)")
+    e("insert into dv select id, id from range(0, 100)")
+    e("insert into dv values (500, 5)")
+    dv_dir = os.path.join(wh, "dv", "_dv")
+    orig = AnalyticsEngine._save_catalog
+
+    def crashing(self):
+        raise _Crash("crash at the DV commit point")
+
+    AnalyticsEngine._save_catalog = crashing
+    try:
+        with pytest.raises(Exception):
+            e("delete from dv where k = 7")
+    finally:
+        AnalyticsEngine._save_catalog = orig
+    assert len(os.listdir(dv_dir)) == 1  # written, never committed
+    eng2 = AnalyticsEngine(wh, spark=spark)
+    assert "dvs" not in eng2._meta("dv")
+    assert eng2.execute("select count(*) from dv where k = 7").rows == [(1,)]
+    eng2.execute("vacuum dv")
+    assert os.listdir(dv_dir) == []
+    assert eng2.execute("delete from dv where k = 7").effect_rows == 1
+    assert eng2.execute("select count(*) from dv").rows == [(100,)]
+
+
 def test_crash_mid_transaction_then_reopen_rolls_back(spark):
     """Crash INSIDE an explicit transaction (after some statements
     committed their intermediate durable state): reopen must restore

@@ -100,14 +100,17 @@ def test_update_rewrites_only_touched_files(engine):
     # touch only rows living in the middle insert's segment
     e("update u set v = v + 1 where k between 1000 and 1004")
 
-    # untouched files (everything outside the hit files) byte-identical
-    files_after = set(engine._data_files("u"))
-    surviving = [p for p in files_before if p in files_after]
-    assert _file_state(surviving) == {p: state_before[p] for p in surviving}
-    # at least the other two insert segments' files all survived
-    rewritten = [p for p in files_before if p not in files_after]
-    assert rewritten, "some file must have been replaced"
-    assert all(f"/{segs[2]}/" in p for p in rewritten), rewritten
+    # no data file is rewritten: every one survives byte-identical,
+    # the hit file (in the middle insert's segment) carries a deletion
+    # vector for the 5 old rows, and their post-images are one new
+    # segment appended to the manifest
+    files_after = engine._data_files("u")
+    assert _file_state(files_before) == state_before
+    assert set(files_before) <= set(files_after)
+    dvs = engine._meta("u")["dvs"]
+    assert list(dvs) and all(rel.startswith(f"{segs[2]}/") for rel in dvs)
+    assert sum(dv["n"] for dv in dvs.values()) == 5
+    assert engine._segments_of(engine._meta("u"))[:4] == segs
     # semantics
     assert e(
         "select sum(v) as s from u where k between 1000 and 1004"
@@ -130,12 +133,17 @@ def test_delete_cow_and_zero_match_writes_nothing(engine):
     assert engine._meta("d")["vnum"] == vnum_before
     assert _file_state(files_before) == state_before
 
-    # targeted DELETE rewrites only the files holding matches
+    # targeted DELETE writes no data file: the manifest keeps every
+    # file byte-identical and the hit file carries a deletion vector
+    segs = engine._segments_of(engine._meta("d"))
     r = e("delete from d where k = 1500")
     assert r.effect_rows == 1
-    files_after = set(engine._data_files("d"))
-    surviving = [p for p in files_before if p in files_after]
-    assert _file_state(surviving) == {p: state_before[p] for p in surviving}
+    assert engine._data_files("d") == files_before
+    assert _file_state(files_before) == state_before
+    assert engine._segments_of(engine._meta("d")) == segs
+    dvs = engine._meta("d")["dvs"]
+    assert len(dvs) == 1 and next(iter(dvs)).startswith(f"{segs[2]}/")
+    assert next(iter(dvs.values()))["n"] == 1
     assert e("select count(1) as n from d").rows == [(1999,)]
     assert e("select count(1) as n from d where k = 1500").rows == [(0,)]
 
@@ -321,6 +329,32 @@ def test_relative_warehouse_path_cow_still_matches(spark, tmp_path, monkeypatch)
     r = e("delete from rw where k = 51")
     assert r.effect_rows == 1
     assert e("select count(1) as n from rw").rows == [(99,)]
+    # both statements took deletion vectors (the table has CREATE's
+    # empty file besides the data file), which name rows by the
+    # absolute file URI
+    assert engine_dvs_total(eng, "rw") == 2
+
+
+def engine_dvs_total(eng, t: str) -> int:
+    return sum(dv["n"] for dv in eng._meta(t)["dvs"].values())
+
+
+def test_dv_filter_matches_percent_encoded_file_uris(spark, tmp_path):
+    """``_metadata.file_path`` is a percent-encoded URI: a warehouse
+    path holding a space and a ``%`` must still match it, or every
+    deleted row would reappear on read."""
+    eng = AnalyticsEngine(str(tmp_path / "a b%20c"), spark=spark)
+    e = eng.execute
+    e("create table pe (k int, v int)")
+    e("insert into pe select id, 0 from range(0, 100)")
+    assert e("update pe set v = 9 where k = 50").effect_rows == 1
+    assert e("delete from pe where k in (51, 52)").effect_rows == 2
+    assert engine_dvs_total(eng, "pe") == 3
+    assert e("select v from pe where k = 50").rows == [(9,)]
+    assert e("select count(1) as n from pe").rows == [(98,)]
+    assert e("select count(*) from pe where k between 50 and 52").rows == [
+        (1,)
+    ]
 
 
 def test_cow_planning_scan_pushes_predicate(engine):
@@ -518,16 +552,18 @@ def test_zone_maps_prune_on_date_columns(engine):
     r = e("select count(1) as n from zd where d >= date '2024-07-01'")
     assert r.rows == [(60,)]
     assert "skipped 2/3" in engine.session_vars["andb.last_zone_prune"]
-    # DML on a date range rewrites only the June segment's files
+    # DML on a date range touches only the June segment's files: it
+    # rewrites none, and only files of that segment carry a deletion
+    # vector
     files_before = engine._data_files("zd")
     state_before = _file_state(files_before)
     r = e("delete from zd where d >= date '2024-08-01'")
     assert r.effect_rows == 29
-    files_after = set(engine._data_files("zd"))
-    surviving = [p for p in files_before if p in files_after]
-    assert _file_state(surviving) == {p: state_before[p] for p in surviving}
-    rewritten = [p for p in files_before if p not in files_after]
-    assert rewritten and all(f"/{segs[2]}/" in p for p in rewritten), rewritten
+    assert engine._data_files("zd") == files_before
+    assert _file_state(files_before) == state_before
+    dvs = engine._meta("zd")["dvs"]
+    assert dvs and all(rel.startswith(f"{segs[2]}/") for rel in dvs), dvs
+    assert sum(dv["n"] for dv in dvs.values()) == 29
     assert e("select count(1) as n from zd").rows == [(151,)]
 
 
@@ -536,7 +572,8 @@ def test_andb_segments_view_exposes_manifest(engine):
     .files analog): one row per live entry with row count + zone maps.
     Sizing is disabled so each insert lands multi-file and the UPDATE
     below produces the partially-hit segment whose per-file CoW
-    entries this test pins."""
+    entries this test pins: it rewrites more than half of one file, so
+    it takes copy-on-write rather than a deletion vector."""
     e = engine.execute
     engine.session_vars["andb.stage_sizing_max_bytes"] = 0
     e("create table sg (k int)")
@@ -551,7 +588,7 @@ def test_andb_segments_view_exposes_manifest(engine):
     assert r.rows[2][2] == 100 and '"k": [500, 599]' in r.rows[2][3]
     # CoW leaves per-file entries: row count does not transfer to a
     # subset file (NULL), the parent's bounds still (conservatively) do
-    e("update sg set k = -1 where k = 550")
+    e("update sg set k = -1 where k between 550 and 580")
     r = e("select entry, n_rows from andb_segments where table_name = 'sg'")
     assert any("/" in row[0] and row[1] is None for row in r.rows), r.rows
     engine.session_vars.pop("andb.stage_sizing_max_bytes", None)

@@ -169,6 +169,36 @@ def test_cow_rewrite_falls_back_to_full_then_recovers(engine):
     assert _mv_rows(e) == _full_rows(e)
 
 
+@pytest.mark.parametrize(
+    "dml",
+    [
+        "delete from base where v = 2",
+        "update base set v = 40 where v = 1",
+    ],
+)
+def test_deletion_vector_dml_refreshes_like_full(engine, dml):
+    """A deletion-vector DELETE or UPDATE keeps every base file in the
+    manifest (the UPDATE appends its new rows as a new file): only the
+    DV in the lineage identity shows the refresh that the seen files
+    lost rows, so it must not merge the change in as an insertion."""
+    e = engine.execute
+    _seed(e)
+    e(
+        "create materialized view sc as select g, count(*) as n,"
+        " sum(v) as total from base group by g"
+    )
+    e("insert into base values ('a', 5), ('c', 6)")
+    e("refresh materialized view sc")
+    e(dml)
+    assert engine._meta("base")["dvs"], "the DML takes a deletion vector"
+    e("refresh materialized view sc")
+    assert engine.catalog["tables"]["sc"]["matview_last_refresh"] == "full"
+    assert e("select * from sc order by g").rows == e(
+        "select g, count(*) as n, sum(v) as total from base"
+        " group by g order by g"
+    ).rows
+
+
 def test_non_sm_view_always_full_refresh(engine):
     """A compound aggregate expression (the exact shape the greedy
     regex used to mis-parse as SUM-mergeable) must take the full path

@@ -75,8 +75,8 @@ def test_statement_job_budgets(spark, engine):
             " (10000001, 5, 'c10000001', 12.5, 'F', date '1997-02-03')",
             1,
         ),
-        ("update t set price = price + 7 where k = 1234", 6),
-        ("delete from t where k between 100 and 120", 4),
+        ("update t set price = price + 7 where k = 1234", 1),
+        ("delete from t where k between 100 and 120", 1),
         (
             "insert into t values"
             " (200, 1, 'c200', 3.0, 'F', date '1997-01-01'),"
@@ -84,7 +84,7 @@ def test_statement_job_budgets(spark, engine):
             " (10000002, 1, 'c10000002', 4.0, 'F', date '1997-01-01')"
             " on conflict (k) do update"
             " set price = excluded.price, status = excluded.status",
-            6,
+            2,
         ),
         (
             "insert into t values"
@@ -256,6 +256,34 @@ def test_broad_change_fallback_effect_rows_match_duckdb(engine):
     assert engine.execute(sql).effect_rows == con.execute(sql).fetchall()[0][0]
     # every old file was rewritten: the manifest is the one new segment
     assert len(engine._segments_of(engine._meta("kv"))) == 1
+    _same_table(engine, con)
+
+
+def test_broad_and_past_half_changes_take_copy_on_write(engine):
+    """Deletion vectors serve small changes only: a DELETE hitting
+    >= 80% of the files rewrites them all into one segment, and one
+    that would mark more than half of a file's rows deleted rewrites
+    that file — neither leaves a deletion vector, and both report
+    DuckDB's effect_rows."""
+    con = duckdb.connect()
+    _twin(engine, con, "create table kv (k int primary key, v int)", "(0, 0)")
+
+    def both(sql: str):
+        got = engine.execute(sql).effect_rows
+        assert got == con.execute(sql).fetchall()[0][0], sql
+
+    for lo in (10, 20, 30):
+        both(f"insert into kv select i, i from range({lo}, {lo + 10}) r(i)")
+    both("delete from kv where k between 15 and 16")  # 1 file: a DV
+    assert len(engine._meta("kv")["dvs"]) == 1
+    both("delete from kv where k % 10 = 0")  # 4 of the 5 files
+    assert "dvs" not in engine._meta("kv")
+    assert len(engine._segments_of(engine._meta("kv"))) == 1
+    both("insert into kv select i, i from range(40, 50) r(i)")
+    files = engine._data_files("kv")
+    both("delete from kv where k between 40 and 45")  # 6 of its 10 rows
+    assert "dvs" not in engine._meta("kv")
+    assert len(set(files) - set(engine._data_files("kv"))) == 1
     _same_table(engine, con)
 
 

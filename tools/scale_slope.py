@@ -83,7 +83,10 @@ QUERIES = (
 # the layout a real bounded-file-size ingest produces — instead of the
 # local session's fixed-32-partition layout, whose constant file count
 # would smear every touched-band measurement with 10x-bigger files.
-WRITE_OPS = ("w_ctas_ingest", "w_update_band", "w_delete_nomatch")
+WRITE_OPS = (
+    "w_ctas_ingest", "w_update_band", "w_delete_nomatch",
+    "w_update_key", "w_delete_key",
+)
 
 # Engine-surface SQL rows (VERDICT r10 #6: the r10/r11 rewrite
 # surfaces lacked a measured slope). Statements run over the scaled
@@ -346,9 +349,20 @@ def ensure_corpus(regen: bool = False) -> None:
             os.symlink(os.path.join(_SF1, f"{t}.parquet"), dst)
 
 
-def _time_write_op(spark, sf_dir: str, op: str, copies: int) -> float:
+def _data_bytes(root: str) -> dict[str, int]:
+    """Size of every parquet data file under ``root``."""
+    return {
+        os.path.join(d, f): os.path.getsize(os.path.join(d, f))
+        for d, _, fs in os.walk(root) for f in fs if f.endswith(".parquet")
+    }
+
+
+def _time_write_op(
+    spark, sf_dir: str, op: str, copies: int
+) -> tuple[float, int]:
     """One write-path measurement: seconds spent in the TIMED DML
-    statement alone (engine init / CTAS / source setup excluded).
+    statement alone (engine init / CTAS / source setup excluded), and
+    the bytes of the parquet data files it wrote.
 
     - ``w_ctas_ingest``: full-table CTAS from ``orders`` — the
       data-proportional baseline every write ultimately pays.
@@ -361,6 +375,11 @@ def _time_write_op(spark, sf_dir: str, op: str, copies: int) -> float:
       nothing — the CoW split must detect zero affected files and
       write NOTHING; cost = one semi-join probe, no staging, no
       commit.
+    - ``w_update_key``: a 1-row UPDATE of a non-key column by key —
+      a deletion vector plus a one-row segment, so neither its time
+      nor its bytes may grow with the table.
+    - ``w_delete_key``: a DELETE of 21 keys — deletion vectors only,
+      no data file written.
     """
     import shutil
     import tempfile
@@ -371,6 +390,9 @@ def _time_write_op(spark, sf_dir: str, op: str, copies: int) -> float:
     eng = AnalyticsEngine(wh, spark=spark, attach_dir=sf_dir)
     try:
         e = eng.execute
+        # staged-write sizing would coalesce the CTAS into one file
+        # and override the range-partitioned layout below
+        e("set andb.stage_sizing_max_bytes = 0")
         n_files = 8 * copies
         ctas = (
             f"create table wt as select"
@@ -380,8 +402,35 @@ def _time_write_op(spark, sf_dir: str, op: str, copies: int) -> float:
         if op == "w_ctas_ingest":
             t0 = time.perf_counter()
             e(ctas)
-            return time.perf_counter() - t0
+            return time.perf_counter() - t0, sum(_data_bytes(wh).values())
         e(ctas)
+        before = _data_bytes(wh)
+
+        def timed(sql: str) -> tuple[float, int]:
+            t0 = time.perf_counter()
+            e(sql)
+            dt = time.perf_counter() - t0
+            after = _data_bytes(wh)
+            return dt, sum(n for f, n in after.items() if f not in before)
+
+        if op in ("w_update_key", "w_delete_key"):
+            # keys of the 1x range, so the touched file is one
+            # same-sized file at every corpus size
+            keys = [
+                r[0] for r in e(
+                    "select o_orderkey from wt order by o_orderkey"
+                    " limit 21 offset 100"
+                ).rows
+            ]
+            if op == "w_update_key":
+                return timed(
+                    "update wt set o_totalprice = o_totalprice + 1"
+                    f" where o_orderkey = {keys[0]}"
+                )
+            return timed(
+                "delete from wt where o_orderkey in"
+                f" ({', '.join(map(str, keys))})"
+            )
         if op == "w_update_band":
             # constant-size band: the ORIGINAL key range (copy 0);
             # scaled copies live at +10M offsets, so the touched rows
@@ -391,21 +440,17 @@ def _time_write_op(spark, sf_dir: str, op: str, copies: int) -> float:
                 " cast(1.1 as double) as f"
                 " from orders where o_orderkey < 1500"
             )
-            t0 = time.perf_counter()
-            e(
+            return timed(
                 "update wt set o_totalprice ="
                 " round(wt.o_totalprice * ws.f, 2) from ws"
                 " where wt.o_orderkey = ws.k"
             )
-            return time.perf_counter() - t0
         # w_delete_nomatch: keys far outside every file's zone range
         e(
             "create table wn as select o_orderkey + 900000000 as k"
             " from orders where o_orderkey < 1500"
         )
-        t0 = time.perf_counter()
-        e("delete from wt using wn where wt.o_orderkey = wn.k")
-        return time.perf_counter() - t0
+        return timed("delete from wt using wn where wt.o_orderkey = wn.k")
     finally:
         eng.close()
         shutil.rmtree(wh, ignore_errors=True)
@@ -497,17 +542,19 @@ def main() -> None:
     # is `orders`, which scales exactly by _COPIES by construction
     for name in write_ops:
         _time_write_op(spark, "/root/testdata/sf0.001", name, 1)  # warm
-        times = {}
+        times, written = {}, {}
         for label, d, copies in (("1x", _SF1, 1), ("10x", _OUT, _COPIES)):
             best = None
             for _ in range(runs):
-                dt = _time_write_op(spark, d, name, copies)
+                dt, written[label] = _time_write_op(spark, d, name, copies)
                 best = dt if best is None else min(best, dt)
             times[label] = round(best, 3)
         slope = (times["10x"] / times["1x"]) / _COPIES
         report[name] = {
             "t_1x_sec": times["1x"],
             "t_10x_sec": times["10x"],
+            "bytes_1x": written["1x"],
+            "bytes_10x": written["10x"],
             "rows_ratio": float(_COPIES),
             "time_ratio": round(times["10x"] / times["1x"], 2),
             "slope": round(slope, 3),
