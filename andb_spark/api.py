@@ -588,10 +588,10 @@ class AnalyticsEngine:
         attach_dir: str | None = None,
     ):
         self.spark = tune_for_session(spark or get_session())
-        # Canonical absolute path: copy-on-write planning compares
-        # input_file_name() URIs (always absolute) against manifest
-        # paths built from this root — a relative warehouse would make
-        # every comparison silently miss.
+        # Canonical absolute path: writers compare _metadata.file_path
+        # URIs (always absolute) against manifest paths built from
+        # this root — a relative warehouse would make every comparison
+        # silently miss.
         self.warehouse = os.path.abspath(warehouse_dir)
         os.makedirs(warehouse_dir, exist_ok=True)
         self._catalog_path = os.path.join(warehouse_dir, "_catalog.json")
@@ -1155,30 +1155,43 @@ class AnalyticsEngine:
             dvs.get(os.path.relpath(f, root), {}).get("n", 0) for f in files
         )
 
-    def _dv_collect(
-        self, name: str, condition, entries: list[str],
-        dnf: list[dict] | None,
-    ) -> list:
-        """ONE collect of the rows ``condition`` matches in the manifest
-        ``entries`` (zone-pruned by the caller with ``dnf``, the
-        condition's ``_zone_dnf``): ``__file``, ``__pos`` and every
-        declared column (the pre-image, whose zone the DV keeps). At
-        most ``_DV_CAP + 1`` rows come back — one more than the cap
-        tells the caller to take copy-on-write."""
+    def _dv_matches(self, name: str, condition, cond: str) -> DataFrame | None:
+        """The rows ``condition`` (the compiled WHERE text ``cond``)
+        matches, with their ``__file`` and ``__pos``: one scan of the
+        manifest entries zone maps cannot rule out, reading through
+        the DVs whose deleted rows could match (``_zone_dnf(cond)``).
+        None when zone maps rule out every entry. UPDATE and DELETE
+        collect it (``_dv_collect``) and, past the cap, group it by
+        file (``_cow_of_hits``)."""
+        scan = self._zone_scan_entries(name, cond)
+        if not scan:
+            return None
         root = os.path.join(self.warehouse, name)
+        return self._read_files(
+            name, [os.path.join(root, e) for e in scan],
+            positions=True, dnf=_zone_dnf(cond),
+        ).filter(condition)
+
+    def _dv_collect(self, name: str, matched: DataFrame | None) -> list:
+        """ONE collect of ``matched`` (``_dv_matches``): ``__file``,
+        ``__pos`` and every declared column (the pre-image, whose zone
+        the DV keeps). At most ``_DV_CAP + 1`` rows come back — one
+        more than the cap tells the caller to take copy-on-write."""
+        if matched is None:
+            return []
         cols = ["__file", "__pos"] + [
             f.name for f in self._schema(name).fields
         ]
-        return (
-            self._read_files(
-                name, [os.path.join(root, e) for e in entries],
-                positions=True, dnf=dnf,
-            )
-            .filter(condition)
-            .select(*cols)
-            .limit(self._DV_CAP + 1)
-            .collect()
-        )
+        return matched.select(*cols).limit(self._DV_CAP + 1).collect()
+
+    def _broad_change(self, name: str, n_files: int) -> bool:
+        """Whether a change hitting ``n_files`` data files touches
+        nearly every file of the table (>= 80 %). File-granular
+        bookkeeping then buys nothing: the rewrite is table-sized
+        either way, and a manifest of individual surviving files would
+        only bloat the catalog — so the change takes no deletion
+        vectors and rewrites the whole table."""
+        return n_files >= 0.8 * len(self._data_files(name))
 
     def _dv_hits(
         self, name: str, found: list[tuple[str, int]]
@@ -1186,10 +1199,9 @@ class AnalyticsEngine:
         """Deleted positions per hit file (path relative to the table
         dir) for the matched rows ``found`` as (``_metadata.file_path``,
         row index) pairs, or None when the change takes copy-on-write:
-        more than ``_DV_CAP`` rows, hit files making up >= 80 % of the
-        table's files (``_split_hit_files``' broad-change rule), or a
-        file whose DV would delete more than half its rows (rewriting
-        it folds the DV away)."""
+        more than ``_DV_CAP`` rows, a broad change
+        (``_broad_change``), or a file whose DV would delete more than
+        half its rows (rewriting it folds the DV away)."""
         if len(found) > self._DV_CAP:
             return None
         root = os.path.join(self.warehouse, name)
@@ -1197,7 +1209,7 @@ class AnalyticsEngine:
         for uri, pos in found:
             rel = os.path.relpath(self._uri_path(uri), root)
             hits.setdefault(rel, []).append(pos)
-        if len(hits) >= 0.8 * len(self._data_files(name)):
+        if self._broad_change(name, len(hits)):
             return None
         dvs = self._dvs_of(self._meta(name))
         for rel, pos in hits.items():
@@ -1207,14 +1219,14 @@ class AnalyticsEngine:
         return hits
 
     def _cow_of_hits(
-        self, name: str, found: list[tuple[str, int]], condition,
-        cond_text: str,
+        self, name: str, found: list[tuple[str, int]], matched: DataFrame,
     ) -> tuple[int, list[str], list[str]]:
         """Copy-on-write split for a change ``_dv_hits`` refused: the
-        collected matches name the hit files, unless the collect hit
-        its cap — then ``_cow_split`` counts them in full."""
+        collected matches ``found`` name the hit files, unless the
+        collect hit its cap — then the frame it collected, ``matched``,
+        is grouped by file in full (``_split_by_matches``)."""
         if len(found) > self._DV_CAP:
-            return self._cow_split(name, condition, cond_text)
+            return self._split_by_matches(name, matched)
         hit = {self._uri_path(uri) for uri, _ in found}
         keep, affected = self._split_hit_files(name, hit, len(found))
         return len(found), keep, affected
@@ -6929,8 +6941,7 @@ class AnalyticsEngine:
         This is the only Spark-side constraint probe. Literal batches
         whose rows the driver already holds are decided without it
         (``_decide_literal_constraints``, same messages and
-        precedence); a literal upsert's rewrite still comes here for
-        the CHECKs the driver cannot decide.
+        precedence).
 
         Only what the statement could have broken is probed: the
         table's committed version already satisfies every constraint
@@ -7006,8 +7017,11 @@ class AnalyticsEngine:
         probes = []
         for i, (ks, is_pk) in enumerate(keysets[:dup] if base else []):
             # a key column without footer bounds simply prunes nothing
-            bounds = {k: tuple(stats[k]) for k in ks if k in stats}
-            entries = self._zone_overlap_entries(name, base, bounds)
+            bounds = {
+                k: tuple(stats[k]) for k in ks
+                if k in stats and None not in stats[k]
+            }
+            entries = self._zone_entries(name, base, [bounds])
             if is_pk:
                 self.session_vars["andb.last_pk_probe_files"] = len(
                     entries
@@ -7119,20 +7133,20 @@ class AnalyticsEngine:
     def _key_holders(
         self, name: str, entries: list[str], keysets, keys,
         rows_of: int | None = None,
-    ) -> tuple[list[dict[tuple, set[str]]], dict[tuple, list]]:
+    ) -> tuple[list[set[tuple]], dict[tuple, list]]:
         """Per key set (columns, is_pk) with its batch key tuples
         ``keys``, which non-NULL keys existing rows of ``entries``
-        hold, and in which files: ONE collect over a union of reads of
-        the files whose zone maps overlap each set's key bounds, the
-        match pushed down to the scan (no job when every file is
-        pruned). Records the PRIMARY KEY's surviving file count in
+        hold: ONE collect over a union of reads of the files whose
+        zone maps overlap each set's key bounds, the match pushed down
+        to the scan (no job when every file is pruned). Records the
+        PRIMARY KEY's surviving file count in
         ``andb.last_pk_probe_files``, as the staged probe does.
 
         Returns (holders, rows): with ``rows_of`` (a key set's index)
         the same collect also returns that set's holders as rows,
         ``rows[key]`` listing (``_metadata.file_path``, row index,
         pre-image row) — what a deletion-vector upsert replaces."""
-        holders: list[dict[tuple, set[str]]] = [{} for _ in keysets]
+        holders: list[set[tuple]] = [set() for _ in keysets]
         held_rows: dict[tuple, list] = {}
         distinct: list[list[tuple]] = []
         scans = []
@@ -7152,10 +7166,7 @@ class AnalyticsEngine:
                     if isinstance(lo, datetime.date):  # zones hold ISO text
                         lo, hi = lo.isoformat(), hi.isoformat()
                     bounds[c] = (lo, hi)
-            files = (
-                self._zone_overlap_entries(name, entries, bounds)
-                if uniq else []
-            )
+            files = self._zone_entries(name, entries, [bounds]) if uniq else []
             if is_pk:
                 self.session_vars["andb.last_pk_probe_files"] = len(files)
             if not files:
@@ -7173,12 +7184,14 @@ class AnalyticsEngine:
             else:
                 match = " OR ".join(f"({c})" for c in conds)
             which = " ".join(f"WHEN {c} THEN {j}" for j, c in enumerate(conds))
-            extra = ["input_file_name() AS _f"]
+            extra = []
             if rows_of is not None:
-                extra = ["__file AS _f"] + (
-                    ["__pos AS _p", f"struct({row_cols}) AS _r"]
+                extra = (
+                    ["__file AS _f", "__pos AS _p",
+                     f"struct({row_cols}) AS _r"]
                     if i == rows_of
-                    else ["CAST(NULL AS BIGINT) AS _p",
+                    else ["CAST(NULL AS STRING) AS _f",
+                          "CAST(NULL AS BIGINT) AS _p",
                           f"CAST(NULL AS {row_type}) AS _r"]
                 )
             exact = [
@@ -7193,7 +7206,7 @@ class AnalyticsEngine:
                 self._read_files(
                     name,
                     [os.path.join(self.warehouse, name, e) for e in files],
-                    positions=rows_of is not None, dnf=exact,
+                    positions=i == rows_of, dnf=exact,
                 )
                 .filter(match)
                 .selectExpr(f"{i} AS _i", f"CASE {which} END AS _j", *extra)
@@ -7201,9 +7214,7 @@ class AnalyticsEngine:
         if scans:
             for r in functools.reduce(DataFrame.union, scans).collect():
                 key = distinct[r["_i"]][r["_j"]]
-                holders[r["_i"]].setdefault(key, set()).add(
-                    self._uri_path(r["_f"])
-                )
+                holders[r["_i"]].add(key)
                 if r["_i"] == rows_of:
                     held_rows.setdefault(key, []).append(
                         (r["_f"], r["_p"], r["_r"])
@@ -13546,9 +13557,8 @@ class AnalyticsEngine:
             DO NOTHING keeps the first row per key.
           - One ``_key_holders`` collect finds the conflict keys that
             match (DO UPDATE: with the matched rows' pre-images and
-            positions) and, for every other key set, which existing
-            rows hold the batch's keys (rows of rewritten files keep
-            theirs, so every current file is asked).
+            positions) and, for every other key set, which of the
+            batch's keys existing rows hold.
           - DO NOTHING, or no match: the unmatched rows are a literal
             append, decided from those holders with no further job.
           - Otherwise the driver first decides the inserted rows'
@@ -13561,11 +13571,10 @@ class AnalyticsEngine:
           - A small change then commits deletion vectors for the
             matched rows plus one arrow segment of their post-images
             and the inserted rows (``_dv_upsert``: no further job).
-          - A broad one (``_dv_hits``) takes one staged write that
-            rewrites the files holding matched keys (their rows
-            left-joined to the matched literal rows, SET applied) plus
-            the inserted rows; the staged probe takes the remaining
-            CHECKs, ``changed`` naming only their SET targets."""
+            A broad one (``_dv_hits``), or a column type the driver
+            cannot round-trip, goes to the MERGE lowering: the VALUES
+            text already has its sequences substituted, so the
+            lowering draws no further ``nextval``."""
         schema = self._schema(target)
         by_lower = {f_.name.lower(): f_.name for f_ in schema.fields}
         if any(c.lower() not in by_lower for c in collist):
@@ -13665,7 +13674,7 @@ class AnalyticsEngine:
             if re.fullmatch(rf"excluded\.{re.escape(c)}", e, re.I)
         }
         names = list(by_lower)
-        conds, probe = [], set()
+        conds = []
         for chk in meta.get("checks") or []:
             refs = self._check_refs(chk, names)
             if not refs & set_low:
@@ -13673,8 +13682,6 @@ class AnalyticsEngine:
                     conds.append(f"(__ins AND NOT coalesce(({chk}), true))")
             elif refs <= same:
                 conds.append(f"NOT coalesce(({chk}), true)")
-            else:
-                probe |= refs & set_low
         if conds:
             import pyarrow as pa
 
@@ -13689,50 +13696,17 @@ class AnalyticsEngine:
                 " OR ".join(conds)
             ).limit(1).collect():
                 return None
-        n_matched = sum(len(files) for files in matched.values())
-        pre = [h for t in matched for h in held[t]]
+        pre = [h for hs in held.values() for h in hs]
         hits = (
             self._dv_hits(target, [(f, p) for f, p, _ in pre])
             if self._driver_rows_ok(schema) else None
         )
-        if hits is not None:
-            return self._dv_upsert(
-                target, schema, table, cols, conflict, pre, inserted,
-                hits, set_sql, keysets[arbiter][0],
-            )
-        keep, affected = self._split_hit_files(
-            target, set().union(*matched.values()), n_matched
+        if hits is None:
+            return None
+        return self._dv_upsert(
+            target, schema, table, cols, conflict, pre, inserted,
+            hits, set_sql, keysets[arbiter][0],
         )
-        view = f"_upsert_{uuid.uuid4().hex[:8]}"
-        src = self._values_relation(
-            T.StructType([schema[c] for c in cols]),
-            self._take(
-                table.select(cols),
-                [r for r, t in enumerate(conflict) if t in matched],
-            ),
-        ).withColumn("__m", F.lit(1)).alias(view)
-        cond = " and ".join(f"{target}.{k} = {view}.{k}" for k in keys)
-        out = self._merge_update_branch(
-            self._read_files(target, affected).alias(target).join(
-                src, F.expr(cond), "left"
-            ),
-            target, schema,
-            self._parse_update_set(
-                target, list(by_lower.values()),
-                self._sub_outside_literals(
-                    set_sql, "excluded.", f"{view}."
-                ),
-            ),
-        )
-        if inserted:
-            out = out.unionByName(
-                self._values_relation(schema, self._take(table, inserted))
-            )
-        out = self._enforce_constraints(target, out)
-        self._stage_version(target, out, base=keep, changed=probe)
-        self._commit_staged(target)
-        self._maybe_auto_refresh(target)
-        return Result(effect_rows=n_matched + len(inserted))
 
     def _dv_upsert(
         self, target: str, schema: T.StructType, table, cols: list[str],
@@ -13749,7 +13723,7 @@ class AnalyticsEngine:
         segment committed with the hit files' DVs. The caller has
         decided the inserted rows' keys and the CHECKs it can decide
         from the literal rows; NOT NULL and the remaining CHECKs (the
-        staged probe's share on the copy-on-write path) are decided
+        MERGE lowering's staged probe would decide them) are decided
         over the post-images on the driver, with the staged probe's
         messages."""
         import pyarrow as pa
@@ -14649,9 +14623,9 @@ class AnalyticsEngine:
         if update_set or matched_delete:
             n_matched, keep, affected = self._split_by_matches(
                 target,
-                self._tagged_table(target).alias(target).join(
-                    s, jcond, "left_semi"
-                ),
+                self._read_files(
+                    target, self._segment_paths(target), positions=True
+                ).alias(target).join(s, jcond, "left_semi"),
             )
             if affected:
                 t_affected = self._read_files(target, affected).alias(target)
@@ -14844,36 +14818,6 @@ class AnalyticsEngine:
         n = self._append(name, src)
         return Result(effect_rows=n)
 
-    def _cow_split(
-        self, name: str, condition, cond_text: str | None = None
-    ) -> tuple[int, list[str], list[str]]:
-        """Copy-on-write planning for a targeted UPDATE/DELETE too
-        broad for deletion vectors (its ``_dv_collect`` hit the cap):
-        ONE scan finds the files containing rows matching ``condition``
-        (per-file matched counts via input_file_name — the parquet
-        footer/row-group pruning Catalyst already does applies, so
-        files the predicate statically excludes are never read).
-
-        Returns (n_matched, keep_entries, affected_paths):
-        keep_entries are manifest entries re-referencing every untouched
-        file verbatim — they carry ZERO write I/O into the new version —
-        and affected_paths are the absolute paths that must rewrite.
-        At 100 TB a low-selectivity DELETE/UPDATE rewrites only the
-        files it touches, not the table.
-
-        ``cond_text`` (the raw WHERE text, when available) enables
-        ZONE-MAP pruning: segments whose manifest [min, max] stats are
-        disjoint from the predicate's bounds are excluded from the hit
-        scan entirely — the planning scan never opens their footers. A
-        predicate statically disjoint from EVERY segment returns with
-        zero Spark jobs."""
-        scan_entries = self._zone_scan_entries(name, cond_text)
-        if not scan_entries:  # every segment zone-pruned: no matches
-            return 0, self._segments_of(self._meta(name)), []
-        return self._split_by_matches(
-            name, self._cow_matched(name, condition, scan_entries)
-        )
-
     @staticmethod
     def _stat_disjoint(st: dict, col: str, lo, hi) -> bool:
         """True iff the segment's zone for ``col`` provably misses
@@ -14913,42 +14857,26 @@ class AnalyticsEngine:
             # a date column): never prune on it
             return False
 
-    def _zone_overlap_entries(
-        self, name: str, entries: list[str],
-        bounds: dict[str, tuple],
-    ) -> list[str]:
-        """Manifest entries whose per-segment zones OVERLAP every
-        [lo, hi] key bound — the PK/UNIQUE staged probes' prefilter
-        (r11 verdict #3): a key-disjoint append proves absence from
-        the METADATA and reads zero base files instead of the whole
-        table. Entries without stats always scan (prune = provably
-        disjoint only)."""
-        seg_stats = self._stats_of(name)
-        keep: list[str] = []
-        for e in entries:
-            st = seg_stats.get(e.split("/", 1)[0], {})
-            if st.get("__rows") == 0:
-                continue
-            if any(
-                self._stat_disjoint(st, c, lo, hi)
-                for c, (lo, hi) in bounds.items()
-                if lo is not None and hi is not None
-            ):
-                continue
-            keep.append(e)
-        return keep
-
     def _zone_scan_entries(
         self, name: str, cond_text: str | None
     ) -> list[str]:
         """Manifest entries the predicate could possibly match, per the
-        per-segment zone maps harvested at write time. Entries without
-        stats (or predicates outside the conservative parser's subset)
-        always scan — pruning can only ever skip provably-disjoint
-        segments."""
-        meta = self._meta(name)
-        entries = self._segments_of(meta)
-        dnf = _zone_dnf(cond_text)
+        per-segment zone maps harvested at write time."""
+        return self._zone_entries(
+            name, self._segments_of(self._meta(name)), _zone_dnf(cond_text)
+        )
+
+    def _zone_entries(
+        self, name: str, entries: list[str], dnf: list[dict] | None
+    ) -> list[str]:
+        """Those of the manifest ``entries`` whose zones a row
+        satisfying the ``_zone_dnf`` predicate ``dnf`` could be in.
+        Entries without stats (or a predicate outside the conservative
+        parser's subset, ``dnf`` None) always scan — pruning can only
+        ever skip provably-disjoint segments. The PK/UNIQUE probes
+        pass their batch's key bounds as one disjunct: a key-disjoint
+        append proves absence from the METADATA and reads zero base
+        files."""
         if not dnf:
             return entries
         seg_stats = self._stats_of(name)
@@ -14973,49 +14901,19 @@ class AnalyticsEngine:
             for m in dnf
         )
 
-    def _cow_matched(
-        self, name: str, condition, entries: list[str] | None = None
-    ) -> DataFrame:
-        """Matched rows tagged with their source file. The filter goes
-        BELOW the input_file_name projection: Catalyst will not push a
-        predicate through a non-deterministic projection, so tagging
-        first would force a full-table scan; filtering first keeps the
-        predicate in PushedFilters where parquet row-group min/max
-        skipping serves it (pinned by the copy-on-write scan pushdown
-        test in tests/test_manifest_writes.py)."""
-        if entries is None:
-            paths = self._segment_paths(name)
-        else:
-            base = os.path.join(self.warehouse, name)
-            paths = [os.path.join(base, e) for e in entries]
-        return (
-            self._read_files(name, paths)
-            .filter(condition)
-            .withColumn("__file", F.input_file_name())
-        )
-
-    def _tagged_table(self, name: str) -> DataFrame:
-        """Current table plus a ``__file`` lineage column projected
-        directly on the scan — input_file_name cannot be evaluated
-        above a join of two file sources, so join-driven CoW planners
-        (upsert, MERGE) tag the target BEFORE joining anything to it.
-        Filter-driven DML uses ``_cow_matched`` instead (pushdown)."""
-        return self._read_table(name).withColumn(
-            "__file", F.input_file_name()
-        )
-
     def _split_by_matches(
         self, name: str, matched: DataFrame
     ) -> tuple[int, list[str], list[str]]:
-        """Shared CoW planner: given the matched rows of a
-        ``_tagged_table`` (a filter or join), find the files they live
-        in (one scan, grouped on the lineage column) and split the
-        manifest. Used by the join-driven writers (MERGE, its UPDATE
-        ... FROM / DELETE ... USING lowerings, ``_upsert``) and by
-        ``_cow_split``; filter-driven UPDATE/DELETE find their hit
-        files in their ``_dv_collect`` instead. The tagged table reads
-        through the current deletion vectors, so a DV-deleted row
-        never matches and a rewritten file stays without it."""
+        """The one copy-on-write planner: given the matched rows of a
+        ``_read_files(..., positions=True)`` frame (a filter or join),
+        find the files they live in (one scan, grouped on its
+        ``__file`` lineage column) and split the manifest. Used by the
+        join-driven writers (MERGE, its UPDATE ... FROM / DELETE ...
+        USING lowerings, ``_upsert``) and by UPDATE/DELETE past
+        ``_DV_CAP`` matches (``_cow_of_hits``); smaller UPDATE/DELETE
+        name their hit files from their ``_dv_collect``. The frame
+        reads through the current deletion vectors, so a DV-deleted
+        row never matches and a rewritten file stays without it."""
         per_file = (
             matched.groupBy(F.col("__file").alias("_f"))
             .agg(F.count(F.lit(1)).alias("_n"))
@@ -15028,7 +14926,7 @@ class AnalyticsEngine:
 
     @staticmethod
     def _uri_path(uri: str) -> str:
-        """Local path of an ``input_file_name()`` URI."""
+        """Local path of a ``_metadata.file_path`` URI."""
         return urllib.parse.unquote(urllib.parse.urlparse(uri).path)
 
     def _split_hit_files(
@@ -15038,15 +14936,8 @@ class AnalyticsEngine:
         matched rows (``_partition_entries``) into (keep entries,
         affected paths)."""
         keep_entries, affected = self._partition_entries(name, hit)
-        # Broad-change fallback: when the change touches nearly every
-        # file, file-granular bookkeeping buys nothing — the rewrite is
-        # table-sized either way, and a manifest of individual surviving
-        # files would only bloat the catalog. Route to a plain full
-        # rewrite (keep = nothing, rewrite everything).
-        if affected:
-            all_files = self._data_files(name)
-            if len(affected) >= 0.8 * len(all_files):
-                keep_entries, affected = [], all_files
+        if affected and self._broad_change(name, len(affected)):
+            keep_entries, affected = [], self._data_files(name)
         if n_matched and not affected:
             # Matched rows MUST map to manifest files; anything else is
             # a path-mapping bug that would otherwise surface as silent
@@ -15096,20 +14987,25 @@ class AnalyticsEngine:
         extra_meta: dict[str, dict] | None = None,
     ) -> int:
         """Key-based UPSERT through copy-on-write: rewrite only the
-        files holding rows whose key appears in ``df``, re-reference
+        files holding rows whose key appears in ``df`` (found by
+        ``_split_by_matches`` over the positions frame), re-reference
         every other file, and land ``df`` itself in the same new
         segment. O(changed files + batch) — the streaming-rollup sink
         (streaming/windows.py::stream_into_table) commits each
         micro-batch's re-aggregated keys this way, with any extra
         metadata (the batch high-water mark) in the SAME atomic
-        catalog save."""
+        catalog save. The commit then refreshes the table's
+        materialized views under ``andb.matview_autorefresh``, as
+        every other base commit does; it runs outside ``execute()``,
+        so it is the statement scope of the helper views those
+        refreshes bind."""
         current = self._read_table(name)
         key_df = df.select(*keys).distinct()
         n_hit, keep, affected = self._split_by_matches(
             name,
-            self._tagged_table(name).join(
-                F.broadcast(key_df), keys, "left_semi"
-            ),
+            self._read_files(
+                name, self._segment_paths(name), positions=True
+            ).join(F.broadcast(key_df), keys, "left_semi"),
         )
         incoming = df.select(*current.columns)
         if affected:
@@ -15119,6 +15015,11 @@ class AnalyticsEngine:
             incoming = survivors.unionByName(incoming)
         n = self._stage_version(name, incoming, base=keep)
         self._commit_staged(name, extra_meta=extra_meta)
+        vmark = len(self._stmt_views)
+        try:
+            self._maybe_auto_refresh(name)
+        finally:
+            self._release_views(vmark)
         return n
 
     def _delete(self, stmt: str) -> Result:
@@ -15127,13 +15028,15 @@ class AnalyticsEngine:
         A conditioned DELETE runs ONE Spark job: a collect, over the
         manifest entries zone maps cannot rule out, of the matched
         rows' (``_metadata.file_path``, ``_metadata.row_index``)
-        pairs, at most ``_DV_CAP + 1`` of them (``_dv_collect``). The
-        commit is those positions merged into the hit files' deletion
-        vectors — no data file is written, and ``effect_rows`` is the
-        number of collected pairs. A broad change (``_dv_hits``: past
-        the cap, >= 80 % of the files, or a file more than half
-        deleted) takes copy-on-write instead: the hit files rewrite
-        without the matched rows, which folds their DVs away.
+        pairs, at most ``_DV_CAP + 1`` of them (``_dv_matches``,
+        ``_dv_collect``). The commit is those positions merged into
+        the hit files' deletion vectors — no data file is written, and
+        ``effect_rows`` is the number of collected pairs. A broad
+        change (``_dv_hits``: past the cap, >= 80 % of the files, or a
+        file more than half deleted) takes copy-on-write instead: the
+        hit files rewrite without the matched rows, which folds their
+        DVs away. Past the cap, the same matches frame grouped by file
+        names the hit files (``_cow_of_hits``).
         RETURNING projects the pre-image: the collected rows on the DV
         path, the old affected files on the copy-on-write path. An
         unconditioned DELETE commits one empty segment; DELETE ...
@@ -15213,11 +15116,8 @@ class AnalyticsEngine:
         schema = self._schema(name)
         # ONE zone-pruned collect finds the matches (with their
         # pre-images when RETURNING needs them, built on the driver)
-        scan = self._zone_scan_entries(name, cond)
-        rows = (
-            self._dv_collect(name, condition, scan, _zone_dnf(cond))
-            if scan else []
-        )
+        matches = self._dv_matches(name, condition, cond)
+        rows = self._dv_collect(name, matches)
         if not rows:
             if _returning is not None:
                 return self._returning_result(
@@ -15240,7 +15140,7 @@ class AnalyticsEngine:
             n_matched = len(rows)
         else:
             n_matched, keep, affected = self._cow_of_hits(
-                name, found, condition, cond
+                name, found, matches
             )
             if _returning is not None:
                 # pre-image of the deleted rows, planned over the old
@@ -15270,8 +15170,10 @@ class AnalyticsEngine:
         old rows' deletion vectors plus a ``_stage_arrow`` segment of
         the post-images. SET on a key column, a broad change
         (``_dv_hits``) or a column type the driver cannot round-trip
-        takes copy-on-write: the hit files rewrite with SET applied to
-        the matched rows and are probed by ``_stage_version``.
+        takes copy-on-write: the hit files (named by the collect, or
+        past the cap by the matches frame grouped by file,
+        ``_cow_of_hits``) rewrite with SET applied to the matched rows
+        and are probed by ``_stage_version``.
         RETURNING projects the post-image. UPDATE ... FROM lowers onto
         MERGE (copy-on-write)."""
         stmt, _returning = self._split_returning(stmt)
@@ -15397,11 +15299,8 @@ class AnalyticsEngine:
 
         if cond:
             matched = F.coalesce(condition, F.lit(False))
-            scan = self._zone_scan_entries(name, cond)
-            rows = (
-                self._dv_collect(name, matched, scan, _zone_dnf(cond))
-                if scan else []
-            )
+            matches = self._dv_matches(name, matched, cond)
+            rows = self._dv_collect(name, matches)
             if not rows:
                 if _returning is not None:
                     return self._returning_result(
@@ -15445,9 +15344,7 @@ class AnalyticsEngine:
                     )
                 return Result(effect_rows=len(rows))
             # copy-on-write: rewrite only files containing matched rows
-            n_hit, keep, affected = self._cow_of_hits(
-                name, found, matched, cond
-            )
+            n_hit, keep, affected = self._cow_of_hits(name, found, matches)
             df = self._read_files(name, affected)
             # post-image of the UPDATED rows for RETURNING, planned
             # over the old affected files and their DVs before the

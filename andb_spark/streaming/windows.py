@@ -169,7 +169,9 @@ def stream_into_table(
     only re-aggregated keys, and only the parquet files holding those
     keys rewrite — compute AND commit I/O per batch are proportional
     to changed keys, never to accumulated table size (state lives in
-    the streaming state store, bounded by the watermark)."""
+    the streaming state store, bounded by the watermark). With
+    ``andb.matview_autorefresh`` on, each commit refreshes the
+    materialized views over the table, as any other base commit does."""
     # Shared sid-keyed replay guard (dedup_ingest): the mark must be
     # keyed on the checkpoint identity or a fresh checkpoint (batch ids
     # restarting at 0) silently discards every new batch.

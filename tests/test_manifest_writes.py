@@ -314,10 +314,10 @@ def test_chained_cow_over_file_entries(engine):
 
 
 def test_relative_warehouse_path_cow_still_matches(spark, tmp_path, monkeypatch):
-    """Regression (r3 review): input_file_name() URIs are absolute, so
-    a cwd-relative warehouse must be canonicalized or every CoW file
-    comparison silently misses (UPDATE reported success but changed
-    nothing)."""
+    """Regression (r3 review): ``_metadata.file_path`` URIs are
+    absolute, so a cwd-relative warehouse must be canonicalized or
+    every file comparison silently misses (UPDATE reported success but
+    changed nothing)."""
     monkeypatch.chdir(tmp_path)
     eng = AnalyticsEngine("wh_rel", spark=spark)
     e = eng.execute
@@ -355,19 +355,62 @@ def test_dv_filter_matches_percent_encoded_file_uris(spark, tmp_path):
     assert e("select count(*) from pe where k between 50 and 52").rows == [
         (1,)
     ]
+    # every copy-on-write writer names the files it rewrites by the
+    # same URIs: UPDATE and DELETE past the DV cap, a user MERGE, the
+    # streaming upsert and a broad literal ON CONFLICT (which takes
+    # the MERGE lowering)
+    cap = eng._DV_CAP
+    want = {k: 0 for k in range(100)}
+    want.pop(51)
+    want.pop(52)
+    want[50] = 9
+    e(f"insert into pe select id, 0 from range(100, {3 * cap})")
+    want.update({k: 0 for k in range(100, 3 * cap)})
+    assert e("update pe set v = 1 where k >= 1000").effect_rows == (
+        3 * cap - 1000
+    )
+    want.update({k: 1 for k in range(1000, 3 * cap)})
+    assert e("delete from pe where k >= 2000").effect_rows == 3 * cap - 2000
+    for k in range(2000, 3 * cap):
+        want.pop(k)
+    e("create table src (k int, v int)")
+    e("insert into src values (5, 55), (1500, 15), (5000, 50)")
+    assert e(
+        "merge into pe using src on pe.k = src.k"
+        " when matched then update set v = src.v"
+        " when not matched then insert values (src.k, src.v)"
+    ).effect_rows == 3
+    want.update({5: 55, 1500: 15, 5000: 50})
+    batch = spark.createDataFrame([(7, 70), (6000, 60)], "k int, v int")
+    eng._upsert("pe", batch, ["k"])
+    want.update({7: 70, 6000: 60})
+    assert e("select k, v from pe order by k").rows == sorted(want.items())
+    assert "dvs" not in eng._meta("pe")
+    e("create table pk (k int primary key, v int)")
+    for k in (1, 2, 3, 4):
+        e(f"insert into pk values ({k}, {k})")
+    assert e(
+        "insert into pk values (1, 10), (2, 20), (3, 30), (4, 40), (5, 50)"
+        " on conflict (k) do update set v = excluded.v"
+    ).effect_rows == 5
+    assert len(eng._segments_of(eng._meta("pk"))) == 1
+    assert e("select k, v from pk order by k").rows == [
+        (k, 10 * k) for k in range(1, 6)
+    ]
 
 
 def test_cow_planning_scan_pushes_predicate(engine):
-    """The hit-file discovery scan must push the DML predicate into the
-    parquet scan (PushedFilters), so row-group min/max skipping applies
-    — at scale CoW planning reads only row groups the predicate can
+    """The matches frame an UPDATE/DELETE past the DV cap groups by
+    file must push the DML predicate into the parquet scan
+    (PushedFilters), so row-group min/max skipping applies — at scale
+    copy-on-write planning reads only row groups the predicate can
     touch, not the table."""
     from pyspark.sql import functions as F
 
     e = engine.execute
     e("create table pp (k int, v int)")
     e("insert into pp select id, id from range(0, 10000)")
-    tagged = engine._cow_matched("pp", F.col("k") == 12)
+    tagged = engine._dv_matches("pp", F.col("k") == 12, "k = 12")
     tagged.collect()
     plan = tagged._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan

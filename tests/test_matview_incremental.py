@@ -418,6 +418,30 @@ def test_autorefresh_outside_a_statement_drops_its_delta_view(engine):
     assert _mv_rows(e) == _full_rows(e)
 
 
+def test_stream_upsert_refreshes_matviews(engine):
+    """The streaming rollup sink commits through ``_upsert`` outside
+    execute(); under autorefresh that commit must refresh the base's
+    views like every other base commit, and drop the helper views
+    the refresh binds."""
+    e = engine.execute
+    e("create table ro (k int, total int)")
+    e("insert into ro select id, id from range(0, 100)")
+    e("create materialized view mv as"
+      " select count(*) as n, sum(total) as s from ro")
+    e("set andb.matview_autorefresh = on")
+    spark = engine.spark
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    batch = spark.createDataFrame([(5, 500), (100, 1000)], "k int, total int")
+    engine._upsert("ro", batch, ["k"])
+    assert e("select n, s from mv").rows == [(101, 4950 - 5 + 500 + 1000)]
+    assert e("select count(*), sum(total) from ro").rows == [(101, 6445)]
+    assert temp_views() == before
+
+
 def test_plan_parser_rejects_nondeterministic_expressions():
     """Time-dependent / random expressions make delta-only re-runs
     unsound (history rows were filtered with yesterday's current_date):

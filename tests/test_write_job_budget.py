@@ -118,6 +118,20 @@ def test_integer_key_append_runs_no_job(spark, engine):
     assert e("select count(*), max(k) from ik").rows == [(2001, 5000)]
 
 
+def test_append_past_32_manifest_entries_runs_no_job(spark, engine):
+    """A read names every manifest entry as a root path: past Spark's
+    default listing threshold (32 paths) it would list them with a
+    job, so a 1-row append after 40 others would submit one."""
+    e = engine.execute
+    e("create table ma (k bigint primary key, v double)")
+    for k in range(40):
+        e(f"insert into ma values ({k}, 0.5)")
+    assert len(engine._segments_of(engine._meta("ma"))) > 32
+    sql = "insert into ma values (40, 0.5)"
+    assert statement_jobs(spark, lambda: e(sql)) == 0
+    assert e("select count(*), sum(k) from ma").rows == [(41, 820)]
+
+
 @pytest.mark.parametrize(
     "setlist, where, match",
     [
