@@ -38,6 +38,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
+from andb_spark.sql.scan import split_items
+
 log = logging.getLogger(__name__)
 
 
@@ -109,48 +111,11 @@ def scan_signatures(df: DataFrame) -> list[ScanSignature]:
         opt = leaf.metadata().get("PushedFilters")
         raw = opt.get() if opt.isDefined() else "[]"
         # "[IsNotNull(a), In(b, [1,2])]" -> split on top-level commas
-        flt = tuple(
-            sorted(
-                f.strip()
-                for f in _split_filters(raw.strip().removeprefix("[").removesuffix("]"))
-                if f.strip()
-            )
-        )
+        flt = tuple(sorted(split_items(
+            raw.strip().removeprefix("[").removesuffix("]")
+        )))
         out.append(ScanSignature(table, cols, flt, version))
     return out
-
-
-def _split_filters(s: str) -> list[str]:
-    """Split a PushedFilters rendering on top-level commas, tracking
-    bracket depth and quoted strings — a lookahead regex mis-splits
-    nested parens and literal lists like ``In(c, [1,2])`` or
-    ``StringContains(c, "x,y")``."""
-    parts: list[str] = []
-    cur: list[str] = []
-    depth = 0
-    quote: str | None = None
-    for ch in s:
-        if quote:
-            cur.append(ch)
-            if ch == quote:
-                quote = None
-        elif ch in "([":
-            depth += 1
-            cur.append(ch)
-        elif ch in ")]":
-            depth -= 1
-            cur.append(ch)
-        elif ch in "'\"":
-            quote = ch
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur))
-    return parts
 
 
 def analyze_workload(

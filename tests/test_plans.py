@@ -313,16 +313,17 @@ def test_reuse_advisor_finds_shared_scans_and_projections(spark, sf_dir):
 
 
 def test_reuse_filter_splitter_handles_nesting_and_strings():
-    from andb_spark.plans.reuse import _split_filters
+    # the reuse advisor splits PushedFilters with the shared splitter
+    from andb_spark.sql.scan import split_items
 
-    assert _split_filters("IsNotNull(a), GreaterThan(b,3)") == [
-        "IsNotNull(a)", " GreaterThan(b,3)"
+    assert split_items("IsNotNull(a), GreaterThan(b,3)") == [
+        "IsNotNull(a)", "GreaterThan(b,3)"
     ]
     # literal lists and quoted strings must not fragment
-    assert _split_filters('In(c, [1,2,3]), StringContains(d, "x,y")') == [
-        "In(c, [1,2,3])", ' StringContains(d, "x,y")'
+    assert split_items('In(c, [1,2,3]), StringContains(d, "x,y")') == [
+        "In(c, [1,2,3])", 'StringContains(d, "x,y")'
     ]
-    assert _split_filters("Or(And(Eq(a,1),Eq(b,2)), IsNull(c))") == [
+    assert split_items("Or(And(Eq(a,1),Eq(b,2)), IsNull(c))") == [
         "Or(And(Eq(a,1),Eq(b,2)), IsNull(c))"
     ]
 
