@@ -5633,10 +5633,15 @@ class AnalyticsEngine:
     # Spark has no ASOF JOIN; the clause is rewritten onto the
     # union+window operator (operators/asof.py) materialized as a
     # per-statement temp view — the same pattern as VERSION AS OF.
+    # The two join keywords are written once: the subquery-source
+    # lift, each rewrite's catch-all, the engine-subquery lift's
+    # depth-0 test and the CTE binder all read these.
+    _ASOF_KW = re.compile(r"\basof\s+(?P<left>left\s+)?join\b", re.I)
+    _POSITIONAL_KW = re.compile(r"\bpositional\s+join\b", re.I)
     _ASOF_RE = re.compile(
-        r"\bfrom\s+(?P<lt>\w+)(?:\s+(?!asof\b)(?P<la>\w+))?"
-        r"\s+asof\s+(?P<left>left\s+)?join\s+"
-        r"(?P<rt>\w+)(?:\s+(?!on\b)(?P<ra>\w+))?"
+        r"\bfrom\s+(?P<lt>\w+)(?:\s+(?!asof\b)(?P<la>\w+))?\s+"
+        + _ASOF_KW.pattern
+        + r"\s+(?P<rt>\w+)(?:\s+(?!on\b)(?P<ra>\w+))?"
         r"\s+on\s+(?P<conds>.+?)"
         r"(?=\s+(?:where|group|order|limit)\b|\s*$)",
         re.I | re.S,
@@ -6863,10 +6868,8 @@ class AnalyticsEngine:
                     # asof ON-parser ran past the closing paren)
                     or any(
                         paren_depth_at(ib, am.start()) == 0
-                        for am in re.finditer(
-                            r"\b(?:asof\s+(?:left\s+)?"
-                            r"|positional\s+)join\b", ib, re.I
-                        )
+                        for kw in (self._ASOF_KW, self._POSITIONAL_KW)
+                        for am in kw.finditer(ib)
                     )
                     # USING SAMPLE at the content's own top
                     # level: the depth-0 sample rewrite refuses
@@ -7483,6 +7486,14 @@ class AnalyticsEngine:
             stmt[: m.end()] + new_sel + " from " + "".join(rebuilt_tail)
         )
 
+    # A select-list star-REPLACE anywhere (after SELECT or a comma, so
+    # a multiplication by the replace() string function — `a *
+    # replace(b, 'x', 'y')` — can never match); scan literal-blanked.
+    _STAR_REPLACE_RE = re.compile(
+        r"(?:\bselect\s+(?:distinct\s+)?|,\s*)(?:\w+\s*\.\s*)?"
+        r"\*\s+replace\s*\(", re.I,
+    )
+
     def _rewrite_select_replace(self, stmt: str) -> str:
         """``SELECT [DISTINCT] * REPLACE (expr AS col [, ...]) FROM
         ...`` (DuckDB star-REPLACE; Spark has EXCEPT but no REPLACE).
@@ -7507,15 +7518,8 @@ class AnalyticsEngine:
         if not m:
             # catch-all: star-REPLACE anywhere else (subquery, after
             # DISTINCT ON, qualified `t.*`) is unsupported — fail by
-            # name, not as Spark's raw parse error. Anchored to a
-            # select-list star (after SELECT or a comma) so a
-            # multiplication by the replace() string function —
-            # `a * replace(b, 'x', 'y')` — can never false-match.
-            if re.search(
-                r"(?:\bselect\s+(?:distinct\s+)?|,\s*)(?:\w+\s*\.\s*)?"
-                r"\*\s+replace\s*\(",
-                re.sub(r"'(?:[^']|'')*'", "''", stmt), re.I,
-            ):
+            # name, not as Spark's raw parse error.
+            if self._STAR_REPLACE_RE.search(blank_literals(stmt)):
                 raise EngineError(
                     "SELECT * REPLACE is only supported as the"
                     " statement's own select list — rewrite nested"
@@ -7582,34 +7586,27 @@ class AnalyticsEngine:
         range filter — different asymptotics). Fires ONLY on the exact
         shape `FROM p [pa] [INNER] JOIN i [ia] ON <eq AND>*
         pa.ts BETWEEN ia.lo AND ia.hi`; anything else is returned
-        unchanged for Spark to plan. The statement's alias qualifiers
-        are stripped after substitution (view columns are unqualified),
-        exactly as in _rewrite_asof."""
+        unchanged for Spark to plan. The view splices in through
+        ``_splice_join_views``, as the ASOF and POSITIONAL views do."""
         from andb_spark.operators.rangejoin import bucketed_interval_join
 
-        quals: set[str] = set()
-        shadowed: list[tuple[set[str], set[str]]] = []
-
-        def _sub(m: re.Match) -> str:
-            pt, it = m.group("pt"), m.group("it")
-            pa = m.group("pa") or pt
-            ia = m.group("ia") or it
-            eqs: list[tuple[str, str]] = []
-            conds_str = m.group("conds").strip()
+        def _shape(conds: str, pa: str, ia: str):
+            """(equality column pairs, (point, lo, hi) columns) of a
+            supported ON clause, else None."""
             # Extract the BETWEEN condition FIRST: its own "AND"
             # (between lo AND hi) must not feed the conjunct split.
             bm = re.search(
                 r"(\w+)\.(\w+)\s+between\s+(\w+)\.(\w+)"
                 r"\s+and\s+(\w+)\.(\w+)",
-                conds_str, re.I,
+                conds, re.I,
             )
             if not bm:
-                return m.group(0)
+                return None
             p_al, p_col, lo_al, lo_col, hi_al, hi_col = bm.groups()
             if p_al != pa or lo_al != ia or hi_al != ia:
-                return m.group(0)  # not the supported shape
-            rng = (p_col, lo_col, hi_col)
-            remainder = conds_str[: bm.start()] + conds_str[bm.end():]
+                return None  # not the supported shape
+            eqs: list[tuple[str, str]] = []
+            remainder = conds[: bm.start()] + conds[bm.end():]
             for cond in re.split(r"\s+and\s+", remainder, flags=re.I):
                 if not cond.strip():
                     continue  # remnant of the excised BETWEEN
@@ -7617,16 +7614,28 @@ class AnalyticsEngine:
                     r"^\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*$", cond
                 )
                 if not em:
-                    return m.group(0)
+                    return None
                 a_al, a_col, b_al, b_col = em.groups()
                 if (a_al, b_al) == (pa, ia):
                     eqs.append((a_col, b_col))
                 elif (a_al, b_al) == (ia, pa):
                     eqs.append((b_col, a_col))
                 else:
-                    return m.group(0)
-            p_col, lo_col, hi_col = rng
+                    return None
+            return eqs, (p_col, lo_col, hi_col)
 
+        joins: list = []
+        hidden: set[tuple[str, str]] = set()
+        for m in self._RANGE_RE.finditer(blank_literals(stmt)):
+            pt, it = m.group("pt"), m.group("it")
+            pa = m.group("pa") or pt
+            ia = m.group("ia") or it
+            shape = _shape(
+                stmt[m.start("conds"): m.end("conds")].strip(), pa, ia
+            )
+            if shape is None:
+                continue
+            eqs, (p_col, lo_col, hi_col) = shape
             points = self.spark.table(pt)
             intervals = self.spark.table(it)
             keys = []
@@ -7653,8 +7662,10 @@ class AnalyticsEngine:
             # the point column after stripping; only OTHER collisions
             # are genuine shadowing and must error
             eq_icols = {ic.lower() for _, ic in eqs}
-            dropped_cols = {
-                c.lower() for c in intervals.columns
+            hidden |= {
+                (q.lower(), c.lower())
+                for q in (it, ia)
+                for c in intervals.columns
                 if c.lower() in taken and c.lower() not in keys_l
                 and c.lower() not in eq_icols
             }
@@ -7667,113 +7678,117 @@ class AnalyticsEngine:
                 keys=keys, bucket_seconds=bucket_s,
             ).drop(*keys)
             view = self._scoped_view(out, "_rj_")
-            quals.update({pt, it, pa, ia})
-            shadowed.append(({ia.lower(), it.lower()}, dropped_cols))
-            return f"from {view}"
+            joins.append((m.span(), view, (pt, pa), (it, ia)))
+        return self._splice_join_views(
+            stmt, joins, hidden,
+            "range join: column {ref} is shadowed by a same-named"
+            " point-side column and is not exposed — alias it before"
+            " the join",
+        )
 
-        new_stmt = self._RANGE_RE.sub(_sub, stmt)
-        for aliases, dropped in shadowed:
-            for qm in re.finditer(r"\b(\w+)\.(\w+)", new_stmt):
-                if (
-                    qm.group(1).lower() in aliases
-                    and qm.group(2).lower() in dropped
-                ):
-                    raise EngineError(
-                        f"range join: column {qm.group(0)} is"
-                        " shadowed by a same-named point-side"
-                        " column and is not exposed — alias it"
-                        " before the join"
-                    )
-        for q in quals:
-            new_stmt = re.sub(rf"\b{re.escape(q)}\.", "", new_stmt,
-                              flags=re.I)
-        return new_stmt
+    # a word after a subquery side that is a clause, not its alias
+    _NOT_AN_ALIAS = frozenset((
+        "on", "asof", "positional", "where", "group", "having",
+        "qualify", "window", "order", "limit", "offset", "union",
+        "intersect", "except",
+    ))
 
-    def _lift_asof_subquery_sources(self, stmt: str) -> str:
-        """Bind parenthesized subquery sources that DIRECTLY
-        participate in an ASOF JOIN to per-statement temp views, so
-        the asof rewrite can resolve them via ``spark.table()`` (r7
-        verdict #7 — CTE sides landed in r7; this is the same lazy
-        move for ``ASOF JOIN (SELECT ...) x``). Temp views are named
-        logical plans — nothing materializes here, so lifting costs
-        no execution at any scale. Any OTHER derived table in the
-        statement is left for Spark to plan natively (it could be
-        correlated — e.g. LATERAL — where a standalone view would not
-        resolve). Subquery bodies run the whole surface pipeline
-        (``_rewrite_surfaces``), so nested ASOF / QUALIFY / DISTINCT
-        ON inside the source compose."""
-        _blank = blank_literals
-
-        def _bind_body(body: str) -> str:
-            b = self._rewrite_surfaces(body)
-            return self._scoped_view(self.spark.sql(b), "_sq_")
-
-        changed = True
-        while changed:
-            changed = False
-            b = _blank(stmt)
-            if not re.search(
-                r"\basof\s+(?:left\s+)?join\b", b, re.I
-            ):
-                break
-            # right side: ASOF [LEFT] JOIN ( SELECT ... ) alias
-            for m in re.finditer(
-                r"\basof\s+(?:left\s+)?join\s*\(", b, re.I
-            ):
-                op = m.end() - 1
-                cp = match_bracket(stmt, op)
-                inner = stmt[op + 1: cp]
-                if not re.match(r"\s*select\b", inner, re.I):
-                    continue
-                am = re.match(
-                    r"\s*(?:as\s+)?(\w+)", stmt[cp + 1:], re.I
-                )
-                if not am or am.group(1).lower() == "on":
-                    raise EngineError(
-                        "ASOF JOIN: a subquery source needs an"
-                        " alias (asof join (select ...) x on ...)"
-                    )
-                view = _bind_body(inner)
-                # leading space: a zero-space spelling like
-                # `asof join(select...)` would otherwise glue the
-                # view onto the keyword (r8 ADVICE #4)
-                stmt = (
-                    stmt[: op]
-                    + f" {view} {am.group(1)}"
-                    + stmt[cp + 1 + am.end():]
-                )
-                changed = True
-                break
-            if changed:
+    def _lift_subquery_sources(self, stmt: str, kw: re.Pattern) -> str:
+        """Bind each aliased ``(SELECT ...)`` side of a ``kw`` join —
+        ``FROM (SELECT ...) a <kw> ...`` or ``<kw> (SELECT ...) b`` —
+        to a fresh per-statement ``_sq_`` view planned through the full
+        pipeline (``_plan_engine_select``: nested engine-only SQL
+        composes), so the join rewrite resolves the side via
+        ``spark.table()``. The alias stays the side's alias: no table or
+        view the session owns can collide with the view's name. Views
+        are named logical plans, so lifting runs no job. Any OTHER
+        derived table is left for Spark (it could be correlated — e.g.
+        LATERAL — where a standalone view would not resolve)."""
+        b = blank_literals(stmt)
+        side = re.compile(rf"(?:(?P<kw>{kw.pattern})|\bfrom)\s*\(", re.I)
+        alias = re.compile(r"\s*(?:as\s+)?(\w+)", re.I)
+        joined = re.compile(alias.pattern + r"\s+" + kw.pattern, re.I)
+        out: list[str] = []
+        last = 0
+        for m in side.finditer(b):
+            op = m.end() - 1
+            if op < last:
+                continue  # inside a side lifted already
+            cp = match_bracket(b, op)
+            if not re.match(r"\s*select\b", b[op + 1: cp], re.I):
                 continue
-            # left side: FROM ( SELECT ... ) alias ASOF [LEFT] JOIN
-            for m in re.finditer(r"\bfrom\s*\(", b, re.I):
-                op = m.end() - 1
-                cp = match_bracket(stmt, op)
-                inner = stmt[op + 1: cp]
-                if not re.match(r"\s*select\b", inner, re.I):
-                    continue
-                am = re.match(
-                    r"\s*(?:as\s+)?(\w+)(\s+asof\s+(?:left\s+)?join\b)",
-                    b[cp + 1:], re.I,
-                )
+            if m.group("kw"):
+                am = alias.match(b, cp + 1)
+                if not am or am.group(1).lower() in self._NOT_AN_ALIAS:
+                    raise EngineError(
+                        f"{m.group('kw').split()[0].upper()} JOIN: a"
+                        " subquery source needs an alias"
+                        f" ({m.group('kw')} (select ...) x)"
+                    )
+            else:
+                am = joined.match(b, cp + 1)
                 if not am:
-                    continue
-                view = _bind_body(inner)
-                stmt = (
-                    stmt[: op]
-                    + f" {view} {am.group(1)}"
-                    + stmt[cp + 1 + am.end(1):]
+                    continue  # a derived table outside the join
+            view = self._scoped_view(
+                self._plan_engine_select(stmt[op + 1: cp]), "_sq_"
+            )
+            # leading space: a zero-space spelling like
+            # `asof join(select...)` would otherwise glue the view
+            # onto the keyword (r8 ADVICE #4)
+            out += [stmt[last: op], f" {view} {am.group(1)}"]
+            last = am.end(1)
+        return "".join(out) + stmt[last:] if out else stmt
+
+    def _splice_join_views(
+        self,
+        stmt: str,
+        joins: list[tuple[tuple[int, int], str, tuple[str, str],
+                          tuple[str, str]]],
+        hidden: set[tuple[str, str]],
+        shadowed: str,
+    ) -> str:
+        """Replace each join's span — matched on the literal-blanked
+        twin, so offsets index ``stmt`` — with ``from <view>``. A join
+        is ``(span, view, (left table, alias), (right table, alias))``.
+        The rest of the statement then reads the view's flat,
+        unqualified columns: an alias-qualified reference to a column
+        the view does not expose (``hidden``: lower-cased (qualifier,
+        column) pairs) raises ``shadowed`` formatted with the
+        reference, rather than silently resolving to the other side's
+        same-named column, and each side's qualifier is stripped: its
+        alias, else its table name (an aliased table's own name is out
+        of scope, as in DuckDB). Both scans skip string literals. Two sides carrying one alias
+        are refused, as DuckDB refuses a duplicate alias: the strip
+        would merge them."""
+        if not joins:
+            return stmt
+        quals: set[str] = set()
+        for (start, end), view, (lt, la), (rt, ra) in reversed(joins):
+            if la.lower() == ra.lower():
+                raise EngineError(
+                    f"join alias {la!r} collides: both sides of the"
+                    " join carry it — give each side its own alias"
                 )
-                changed = True
-                break
-        return stmt
+            stmt = stmt[:start] + f"from {view}" + stmt[end:]
+            quals |= {la, ra}
+        for qm in re.finditer(
+            r"(?<!\w)(\w+)\s*\.\s*(\w+)", blank_literals(stmt)
+        ):
+            if (qm.group(1).lower(), qm.group(2).lower()) in hidden:
+                raise EngineError(shadowed.format(ref=qm.group(0)))
+        return sub_outside_literals(
+            re.compile(
+                r"(?<!\w)(?:" + "|".join(map(re.escape, quals)) + r")\.",
+                re.I,
+            ),
+            "", stmt,
+        )
 
     _POSJOIN_RE = re.compile(
         r"\bfrom\s+(?P<lt>\w+)"
-        r"(?:\s+(?:as\s+)?(?!positional\b)(?P<la>\w+))?"
-        r"\s+positional\s+join\s+"
-        r"(?P<rt>\w+)(?:\s+(?:as\s+)?(?P<ra>\w+))?"
+        r"(?:\s+(?:as\s+)?(?!positional\b)(?P<la>\w+))?\s+"
+        + _POSITIONAL_KW.pattern
+        + r"\s+(?P<rt>\w+)(?:\s+(?:as\s+)?(?P<ra>\w+))?"
         r"(?=\s+(?:where|group|having|qualify|window|order|limit"
         r"|offset|positional|union|intersect|except)\b|\s*$|\s*\))",
         re.I | re.S,
@@ -8151,27 +8166,12 @@ class AnalyticsEngine:
         scan order. Chains left-associatively; subquery sides lift
         to views first (full pipeline, so engine-only SQL composes
         inside them)."""
-        blanked = blank_literals(stmt)
-        if not re.search(r"\bpositional\s+join\b", blanked, re.I):
+        if not self._POSITIONAL_KW.search(blank_literals(stmt)):
             return stmt
-        stmt = self._lift_positional_subquery_sources(stmt)
-        while True:
-            # match on the literal-blanked copy (same length):
-            # the keyword inside a string must never rewrite
-            # (review r11 #2)
-            m = self._POSJOIN_RE.search(blank_literals(stmt))
-            if not m:
-                if re.search(
-                    r"\bpositional\s+join\b",
-                    blank_literals(stmt), re.I,
-                ):
-                    raise EngineError(
-                        "POSITIONAL JOIN: unsupported source"
-                        " shape — need `FROM <table|(subquery)"
-                        " alias> POSITIONAL JOIN <table|"
-                        "(subquery) alias>`"
-                    )
-                break
+        stmt = self._lift_subquery_sources(stmt, self._POSITIONAL_KW)
+        # match on the literal-blanked copy (same length): the keyword
+        # inside a string must never rewrite (review r11 #2)
+        while m := self._POSJOIN_RE.search(blank_literals(stmt)):
             lt, la = m.group("lt"), m.group("la") or m.group("lt")
             rt, ra = m.group("rt"), m.group("ra") or m.group("rt")
             try:
@@ -8181,28 +8181,6 @@ class AnalyticsEngine:
                 raise EngineError(
                     f"POSITIONAL JOIN: cannot resolve sources: {e}"
                 ) from e
-            # alias-qualified references to DUP-NAMED columns
-            # cannot survive the single-view splice (the
-            # qualifier strip below would leave them ambiguous —
-            # review r11 #3): refuse by name
-            dups = {
-                c.lower() for c in left.columns
-            } & {c.lower() for c in right.columns}
-            if dups:
-                rest_b = blank_literals(stmt)
-                for al in {la.lower(), ra.lower()}:
-                    for d in dups:
-                        if re.search(
-                            rf"\b{re.escape(al)}\s*\.\s*"
-                            rf"{re.escape(d)}\b", rest_b, re.I,
-                        ):
-                            raise EngineError(
-                                "POSITIONAL JOIN: qualified"
-                                f" reference {al}.{d} to a"
-                                " column present on BOTH sides"
-                                " — rename it inside a subquery"
-                                " side first"
-                            )
             # positional rename around the join: an intermediate
             # zip view of a CHAIN can itself carry duplicate
             # names, which name-based selection cannot address
@@ -8226,90 +8204,27 @@ class AnalyticsEngine:
             ).sortWithinPartitions("_pj_ord").drop("_pj_ord").toDF(
                 *left.columns, *right.columns
             )
-            view = self._scoped_view(out, "_pj_")
-            stmt = stmt[: m.start()] + f"from {view}" + stmt[m.end():]
-            for al in {la, ra}:
-                stmt = sub_outside_literals(
-                    re.compile(rf"(?<!\w){re.escape(al)}\.", re.I), "", stmt
-                )
-        return stmt
-
-    def _lift_positional_subquery_sources(self, stmt: str) -> str:
-        """Bind parenthesized subquery sides of a POSITIONAL JOIN to
-        per-statement views named AS their alias (the same lazy move
-        as ASOF's subquery sides) — bodies plan through the full
-        pipeline, so ORDER BY / engine-only SQL inside them compose."""
-
-        def _bind(op: int) -> tuple[str, int] | None:
-            """Bind the subquery opening at ``op`` to a view named as
-            its trailing alias; returns (alias, end-of-alias index in
-            stmt) or None when the group is not a SELECT."""
-            cp = match_bracket(stmt, op)
-            if not re.match(r"\s*select\b", stmt[op + 1: cp], re.I):
-                return None
-            am = re.match(r"\s*(?:as\s+)?(\w+)\b", stmt[cp + 1:], re.I)
-            if not am or am.group(1).lower() in (
-                # a following clause keyword is NOT an alias (review
-                # r11 #6: DuckDB allows unaliased subquery sides; we
-                # require the alias, and the refusal must say so)
-                "positional", "where", "group", "having", "qualify",
-                "window", "order", "limit", "offset", "union",
-                "intersect", "except", "on",
-            ):
-                raise EngineError(
-                    "POSITIONAL JOIN: a subquery source needs an alias"
-                )
-            alias = am.group(1)
-            # job-free existence probe (see _bind_inline_source note)
-            if self.spark.catalog.tableExists(alias):
-                raise EngineError(
-                    f"POSITIONAL JOIN: subquery alias {alias!r}"
-                    " collides with an existing table/view"
-                )
-            df = self._plan_engine_select(stmt[op + 1: cp])
-            df.createOrReplaceTempView(alias)
-            self._stmt_views.append(alias)
-            return alias, cp + 1 + am.end()
-
-        changed = True
-        while changed:
-            changed = False
-            b = blank_literals(stmt)
-            # right side: POSITIONAL JOIN ( SELECT ... ) alias
-            for m in re.finditer(
-                r"\bpositional\s+join\s*\(", b, re.I
-            ):
-                bound = _bind(m.end() - 1)
-                if bound is None:
-                    continue
-                alias, end = bound
-                stmt = (
-                    stmt[: m.start()]
-                    + f"positional join {alias} " + stmt[end:]
-                )
-                changed = True
-                break
-            if changed:
-                continue
-            # left side: FROM ( SELECT ... ) alias POSITIONAL JOIN
-            for m in re.finditer(r"\bfrom\s*\(", b, re.I):
-                op = m.end() - 1
-                cp = match_bracket(stmt, op)
-                if not re.match(
-                    r"\s*(?:as\s+)?\w+\s+positional\s+join\b",
-                    b[cp + 1:], re.I,
-                ):
-                    continue
-                bound = _bind(op)
-                if bound is None:
-                    continue
-                alias, end = bound
-                stmt = (
-                    stmt[: m.start()] + f"from {alias} "
-                    + stmt[end:]
-                )
-                changed = True
-                break
+            # a qualified reference to a column present on both sides
+            # would be ambiguous once the qualifiers are stripped
+            # (review r11 #3)
+            dups = {c.lower() for c in left.columns} & {
+                c.lower() for c in right.columns
+            }
+            stmt = self._splice_join_views(
+                stmt,
+                [(m.span(), self._scoped_view(out, "_pj_"),
+                  (lt, la), (rt, ra))],
+                {(q.lower(), d) for q in (lt, la, rt, ra) for d in dups},
+                "POSITIONAL JOIN: qualified reference {ref} to a"
+                " column present on BOTH sides — rename it inside a"
+                " subquery side first",
+            )
+        if self._POSITIONAL_KW.search(blank_literals(stmt)):
+            raise EngineError(
+                "POSITIONAL JOIN: unsupported source shape — need"
+                " `FROM <table|(subquery) alias> POSITIONAL JOIN"
+                " <table|(subquery) alias>`"
+            )
         return stmt
 
     def _rewrite_asof(self, stmt: str) -> str:
@@ -8334,14 +8249,13 @@ class AnalyticsEngine:
         both behaviors side by side."""
         from andb_spark.operators.asof import asof_join
 
+        if not self._ASOF_KW.search(blank_literals(stmt)):
+            return stmt
         # parenthesized subquery sources become lazy temp views first
-        # (every _rewrite_asof call site gets the composition for
-        # free)
-        stmt = self._lift_asof_subquery_sources(stmt)
-        quals: set[str] = set()
-        shadowed: list[tuple[set[str], set[str]]] = []
-
-        def _sub(m: re.Match) -> str:
+        stmt = self._lift_subquery_sources(stmt, self._ASOF_KW)
+        joins: list = []
+        hidden: set[tuple[str, str]] = set()
+        for m in self._ASOF_RE.finditer(blank_literals(stmt)):
             lt, rt = m.group("lt"), m.group("rt")
             la = m.group("la") or lt
             ra = m.group("ra") or rt
@@ -8350,8 +8264,8 @@ class AnalyticsEngine:
             # ((minuend alias, col), (subtrahend alias, col), literal)
             tol: tuple[tuple[str, str], tuple[str, str], str] | None = None
             flip = {">=": "<=", "<=": ">=", ">": "<", "<": ">", "=": "="}
-            for cond in re.split(r"\s+and\s+", m.group("conds").strip(),
-                                 flags=re.I):
+            conds = stmt[m.start("conds"): m.end("conds")].strip()
+            for cond in re.split(r"\s+and\s+", conds, flags=re.I):
                 # tolerance conjunct (DuckDB-compatible spelling):
                 # backward `p.t - r.rt <= N`, forward `r.rt - p.t <= N`
                 # — validated against the time inequality after the
@@ -8482,32 +8396,30 @@ class AnalyticsEngine:
                 # marker (payload values may be legitimately NULL)
                 out = out.filter(F.col(marker).isNotNull())
             out = out.drop(marker)
-            view = self._scoped_view(out, "_asof_")
             # right columns NOT exposed (name collision with the left
             # side): a statement that still references them through the
             # right alias must fail loudly, not silently resolve to the
             # LEFT side's same-named column after qualifier stripping
-            dropped = {
-                c.lower() for c in right_df.columns
+            hidden |= {
+                (q.lower(), c.lower())
+                for q in (rt, ra)
+                for c in right_df.columns
                 if c.lower() in taken
                 or c.lower() in (key.lower(), marker.lower())
             }
-            shadowed.append(({ra.lower(), rt.lower()}, dropped))
-            quals.update({lt, rt, la, ra})
-            return f"from {view}"
-
-        new_stmt = self._ASOF_RE.sub(_sub, stmt)
+            view = self._scoped_view(out, "_asof_")
+            joins.append((m.span(), view, (lt, la), (rt, ra)))
+        stmt = self._splice_join_views(
+            stmt, joins, hidden,
+            "ASOF JOIN: column {ref} is shadowed by a same-named"
+            " left-side column and is not exposed — alias it on the"
+            " right side before the join",
+        )
         # catch-all for unmatched ASOF shapes: Spark has no ASOF
-        # JOIN syntax, so anything the rewrite didn't consume —
-        # e.g. a parenthesized subquery source — would otherwise
-        # surface as Spark's raw parse error. Refuse by name with
-        # the working alternative (r6 verdict #4). String literals
-        # are blanked first so data can't false-positive; the
-        # pattern treats '' as an escaped quote INSIDE a literal
-        # (r7 verdict #3 — '[^']*' mis-scanned 'it''s asof join'
-        # as two literals with live text between them).
-        blanked = re.sub(r"'(?:[^']|'')*'", "''", new_stmt)
-        if re.search(r"\basof\s+(left\s+)?join\b", blanked, re.I):
+        # JOIN syntax, so anything the rewrite didn't consume would
+        # otherwise surface as Spark's raw parse error. Refuse by
+        # name with the working alternative (r6 verdict #4).
+        if self._ASOF_KW.search(blank_literals(stmt)):
             raise EngineError(
                 "ASOF JOIN: unsupported source shape — sides must"
                 " be plain table/view/CTE names or aliased"
@@ -8515,25 +8427,7 @@ class AnalyticsEngine:
                 " (VALUES lists, unaliased subqueries, comma"
                 " joins) into a WITH clause first"
             )
-        for aliases, dropped in shadowed:
-            for qm in re.finditer(r"\b(\w+)\.(\w+)", new_stmt):
-                if (
-                    qm.group(1).lower() in aliases
-                    and qm.group(2).lower() in dropped
-                ):
-                    raise EngineError(
-                        f"ASOF JOIN: column {qm.group(0)} is"
-                        " shadowed by a same-named left-side column"
-                        " and is not exposed — alias it on the"
-                        " right side before the join"
-                    )
-        # view columns are unqualified: strip the join aliases
-        # (and base-table qualifiers) from the remaining statement
-        for q in quals:
-            new_stmt = re.sub(
-                rf"\b{re.escape(q)}\.", "", new_stmt, flags=re.I
-            )
-        return new_stmt
+        return stmt
 
     @staticmethod
     def _sub_ident(text: str, name: str, repl: str) -> str:
@@ -8677,6 +8571,27 @@ class AnalyticsEngine:
             i += 1
         return "".join(out)
 
+    # Surfaces whose rewrites resolve sources via spark.table() or plan
+    # statement text standalone (ASOF / POSITIONAL joins, FROM-first
+    # subqueries, quantified comparisons, UNION BY NAME, star-REPLACE,
+    # COLUMNS()): a CTE they reference must already be a view, wherever
+    # they appear. Scanned literal-blanked.
+    _BIND_SURFACES_RE = re.compile(
+        "|".join((
+            _ASOF_KW.pattern,
+            _POSITIONAL_KW.pattern,
+            r"\(\s*from\b",
+            r"(?:>=|<=|<>|!=|=|>|<)\s*(?:any|some|all)\s*\(\s*select\b",
+            r"\bunion\s+(?:all\s+)?by\s+name\b",
+            _STAR_REPLACE_RE.pattern,
+            r"\bcolumns\s*\(",
+        )),
+        re.I,
+    )
+    _QUALIFY_OR_DISTINCT_ON_RE = re.compile(
+        r"\bqualify\b|\bselect\s+distinct\s+on\s*\(", re.I
+    )
+
     def _bind_ctes_for_surfaces(self, stmt: str) -> str:
         """Bind WITH-clause CTEs to per-statement temp views when —
         and only when — the main body uses an engine SQL surface that
@@ -8698,40 +8613,15 @@ class AnalyticsEngine:
             return stmt
         if re.match(r"^\s*with\s+recursive\b", stmt, re.I):
             return stmt
-        # ''-escape-aware blanking (r7 verdict #3): '[^']*' treated
-        # 'it''s asof join' as two literals with live text between
-        # them, so keyword detection could fire inside a string.
-        blanked = re.sub(r"'(?:[^']|'')*'", "''", stmt)
-        # bind when the statement uses an engine surface Spark can't
-        # parse: ASOF/range anywhere, or QUALIFY / DISTINCT ON inside
-        # a CTE body (r7 ADVICE #4 — those are rewritten at depth 0
-        # by the main pipeline, but inside a WITH body they sit at
-        # paren depth > 0 and previously died as raw parse errors).
-        # `distinct on` is only a surface when select-adjacent —
-        # a bare column named distinct_on can't match (\b excludes _).
-        if not (
-            re.search(
-                r"\basof\s+(left\s+)?join\b|\bpositional\s+join\b",
-                blanked, re.I,
-            )
-            # a FROM-first CTE body / subquery (`( from ...`): Spark
-            # cannot parse the spelling, so the body must bind and
-            # normalize through the pipeline
-            or re.search(r"\(\s*from\b", blanked, re.I)
+        blanked = blank_literals(stmt)
+        surfaces = bool(
+            self._BIND_SURFACES_RE.search(blanked)
             or self._RANGE_RE.search(stmt)
-            or re.search(r"\bqualify\b", blanked, re.I)
-            or re.search(r"\bcolumns\s*\(", blanked, re.I)
-            or re.search(r"\bselect\s+distinct\s+on\s*\(", blanked, re.I)
-            or re.search(
-                r"(?:>=|<=|<>|!=|=|>|<)\s*(?:any|some|all)\s*\(\s*select\b",
-                blanked, re.I,
-            )
-            or re.search(r"\bunion\s+(all\s+)?by\s+name\b", blanked, re.I)
-            or re.search(
-                r"(?:\bselect\s+(?:distinct\s+)?|,\s*)(?:\w+\s*\.\s*)?"
-                r"\*\s+replace\s*\(", blanked, re.I,
-            )
-        ):
+        )
+        # QUALIFY / DISTINCT ON bind only where the depth-0 rewrites
+        # cannot reach them (decided below, once the bodies are split
+        # out); a statement with neither and no surface stays as is
+        if not (surfaces or self._QUALIFY_OR_DISTINCT_ON_RE.search(blanked)):
             return stmt
         # parse: with name as ( body ) [, name2 as ( body2 )]* main
         pos = re.match(r"^\s*with\s+", stmt, re.I).end()
@@ -8755,79 +8645,28 @@ class AnalyticsEngine:
                 continue
             main = stmt[i:].strip()
             break
-        # QUALIFY only forces binding when it sits in a CTE BODY: at
-        # the main statement its keyword-scan rewrite handles the
-        # whole WITH statement natively. DISTINCT ON also binds when
-        # the MAIN statement IS a distinct-on select (r10 probe: its
-        # rewrite is anchored at ^SELECT, so a WITH prefix slipped
-        # through to Spark's parser as a raw UNRESOLVED_ROUTINE `on`
-        # error where DuckDB executes). ASOF/range force binding
-        # wherever they appear (their rewrites resolve sources via
-        # spark.table()).
-        # quantified comparisons bind like ASOF wherever they appear:
-        # their rewrite spark.sql's the subquery text standalone, so a
-        # CTE referenced inside it must already be a view
+        # QUALIFY / DISTINCT ON bind when they sit in a CTE body (r7
+        # ADVICE #4: at paren depth > 0 the depth-0 rewrites never
+        # reach them), nested at depth > 0 in main (the engine-subquery
+        # lift plans those groups standalone, r10 review #3), or when
+        # main IS a DISTINCT ON select (its rewrite is anchored at
+        # ^SELECT, r10 probe) or a FROM-first one (bind, unwrap, and
+        # let the post-binder FROM-first pass normalize it). A
+        # top-level QUALIFY in main rewrites the whole WITH statement.
+        mb = blank_literals(main)
         if not (
-            re.search(
-                r"\basof\s+(left\s+)?join\b|\bpositional\s+join\b",
-                blanked, re.I,
-            )
-            # a FROM-first CTE body / subquery (`( from ...`): Spark
-            # cannot parse the spelling, so the body must bind and
-            # normalize through the pipeline
-            or re.search(r"\(\s*from\b", blanked, re.I)
-            or self._RANGE_RE.search(stmt)
+            surfaces
             or re.search(
-                r"(?:>=|<=|<>|!=|=|>|<)\s*(?:any|some|all)\s*\(\s*select\b",
-                blanked, re.I,
-            )
-            # UNION BY NAME and star-REPLACE bind like ASOF wherever
-            # they appear: both rewrites plan statement text
-            # standalone (branch queries / the FROM list), so a CTE
-            # referenced there must already be a view
-            or re.search(r"\bunion\s+(all\s+)?by\s+name\b", blanked, re.I)
-            or re.search(
-                r"(?:\bselect\s+(?:distinct\s+)?|,\s*)(?:\w+\s*\.\s*)?"
-                r"\*\s+replace\s*\(", blanked, re.I,
-            )
-            # COLUMNS() binds like ASOF wherever it appears: its
-            # rewrite (and the subquery lift) resolves the FROM list
-            # standalone, so a CTE referenced there must be a view
-            or re.search(r"\bcolumns\s*\(", blanked, re.I)
-            # main-statement spellings handled AFTER this binder by
-            # the ^SELECT-anchored rewrites or the generic subquery
-            # lift (r10): an anchored DISTINCT ON main, or QUALIFY /
-            # DISTINCT ON nested at paren depth > 0 anywhere in main
-            # (the lift plans those groups standalone, so any CTE
-            # they reference must already be a view — depth-aware so
-            # a top-level QUALIFY alongside a nested one still binds,
-            # r10 review #3). One blank of main shared by all three
-            # (the r9 review-#7 no-hand-rolled-twins rule).
-            or (
-                (mb := blank_literals(main))
-                and (
-                    re.match(
-                        r"^\s*select\s+distinct\s+on\s*\(", mb, re.I
-                    )
-                    # FROM-first main: bind, unwrap, and let the
-                    # caller's post-binder rewrite normalize it
-                    or re.match(r"^\s*from\b", mb, re.I)
-                    or any(
-                        paren_depth_at(mb, qm.start()) > 0
-                        for qm in re.finditer(r"\bqualify\b", mb, re.I)
-                    )
-                    or re.search(
-                        r"\(\s*select\s+distinct\s+on\s*\(", mb, re.I
-                    )
-                )
+                r"^\s*from\b|(?:^|\()\s*select\s+distinct\s+on\s*\(",
+                mb, re.I,
             )
             or any(
-                re.search(r"\bqualify\b", bb, re.I)
-                or re.search(r"\bselect\s+distinct\s+on\s*\(", bb, re.I)
-                for bb in (
-                    re.sub(r"'(?:[^']|'')*'", "''", b)
-                    for _n, b in ctes
-                )
+                paren_depth_at(mb, qm.start()) > 0
+                for qm in re.finditer(r"\bqualify\b", mb, re.I)
+            )
+            or any(
+                self._QUALIFY_OR_DISTINCT_ON_RE.search(blank_literals(b))
+                for _n, b in ctes
             )
         ):
             return stmt
@@ -12741,9 +12580,12 @@ def _matview_plan(sql: str) -> dict | None:
             # `(.+)` is greedy: a compound item like `sum(a)/count(*)
             # as r` fullmatches with inner = `a)/count(*` — merging
             # such a value with SUM would silently corrupt the view.
-            # Only a parenthesis-BALANCED inner is a single aggregate
-            # call; anything else falls back to full refresh.
-            if not _paren_balanced(inner):
+            # Only a call whose own paren closes the item is a single
+            # aggregate; anything else falls back to full refresh.
+            try:
+                if match_bracket(item, am.start(2) - 1) != am.end(2):
+                    return None
+            except EngineError:  # unbalanced
                 return None
             if re.match(r"\s*distinct\b", inner, re.I):
                 return None  # COUNT(DISTINCT) is not self-maintainable
@@ -12802,27 +12644,6 @@ def _pid_alive(pid: int) -> bool:
     except (ProcessLookupError, OverflowError, ValueError, TypeError):
         return False  # no such process / unrepresentable pid
     return True
-
-
-def _paren_balanced(s: str) -> bool:
-    """True iff parentheses in ``s`` nest properly (depth never goes
-    negative and ends at 0) — quote-aware so `')'` literals don't
-    break the scan."""
-    depth, quote = 0, None
-    for ch in s:
-        if quote:
-            if ch == quote:
-                quote = None
-            continue
-        if ch in "'\"":
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < 0:
-                return False
-    return depth == 0
 
 
 def _derive_visible(df: DataFrame, plan: dict) -> DataFrame:

@@ -8,8 +8,9 @@ or needs a Spark session."""
 
 from __future__ import annotations
 
+import itertools
 import re
-import uuid
+from collections.abc import Iterator
 
 from andb_spark.sql.scan import (
     EngineError,
@@ -110,6 +111,11 @@ _TRIGGER_RE = re.compile(r"[\[{]|" + _calls(_FUNCTIONS).pattern, re.I)
 _TEMPLATED_RE = _calls(n for n, to in _FUNCTIONS.items() if to is None)
 _RENAMED_RE = _calls(n for n, to in _FUNCTIONS.items() if to)
 _BARE_VARCHAR_RE = re.compile(r"\bvarchar\b(?!\s*\()", re.I)
+# Lambda variables the templates introduce are this reserved prefix
+# plus a counter local to one normalize() call: the output is the same
+# on every call, and a user column cannot be shadowed unless its name
+# takes the prefix.
+_LAMBDA_PREFIX = "__lv"
 
 
 def normalize(stmt: str) -> str:
@@ -211,7 +217,7 @@ def _rewrite_collections(stmt: str) -> str:
         _refuse_ambiguous_operators(stmt)
         return stmt
     _refuse_ambiguous_operators(stmt)
-    out = _map_list_functions(stmt)
+    out = _map_list_functions(stmt, itertools.count())
     pos = 0
     for _ in range(5000):  # bounded: each pass resolves one site
         b = blank_literals(out)
@@ -474,7 +480,7 @@ def _top_level_colon(blanked: str) -> int | None:
     return None
 
 
-def _map_list_functions(stmt: str) -> str:
+def _map_list_functions(stmt: str, fresh: Iterator[int]) -> str:
     """DuckDB's list_* function spellings onto Spark natives —
     probed semantics per mapping: list_extract/array_extract OOB
     → NULL (try_element_at), list_position missing → 0 on BOTH
@@ -497,7 +503,8 @@ def _map_list_functions(stmt: str) -> str:
     DuckDB's FIRST-ONLY default (a regexp_instr + substr splice;
     Spark replaces all) with the 'g' option mapping to Spark's
     position form; backreference spellings differ (\\1 vs $1) and
-    translate for literal replacements."""
+    translate for literal replacements. ``fresh`` numbers the lambda
+    variables the templates introduce (``_LAMBDA_PREFIX``)."""
     out = stmt
     spos = 0  # already-Spark forms pass through: search beyond
     pend_flt = None  # (call offset, " filter (...)", predicate)
@@ -802,7 +809,7 @@ def _map_list_functions(stmt: str) -> str:
             w = f" over {out[j:oend]}"
             if len(args) != 1:
                 raise EngineError(f"{fn} expects one argument")
-            ax = f"({_map_list_functions(args[0].strip())})"
+            ax = f"({_map_list_functions(args[0].strip(), fresh)})"
             if fpred is not None:
                 # window FILTER: Spark has none at all — the
                 # case-wrap is exact for these NULL-skipping
@@ -865,7 +872,7 @@ def _map_list_functions(stmt: str) -> str:
             # verified numerically against both engines. The
             # replacement embeds the Spark call, so the scan
             # jumps past it (the argument pre-maps recursively).
-            ax = f"({_map_list_functions(args[0].strip())})"
+            ax = f"({_map_list_functions(args[0].strip(), fresh)})"
             n2 = f"(count({ax}){flt})"
             if fn == "skewness":
                 repl = (
@@ -887,7 +894,7 @@ def _map_list_functions(stmt: str) -> str:
         if fn == "product":
             if len(args) != 1:
                 raise EngineError("product expects one argument")
-            v2 = "_" + uuid.uuid4().hex[:4]
+            v2 = f"{_LAMBDA_PREFIX}{next(fresh)}"
             ax2 = f"({args[0].strip()})"
             # collect_list drops NULLs, so an empty/all-NULL
             # group would yield the 1.0 seed — DuckDB's product
@@ -920,7 +927,7 @@ def _map_list_functions(stmt: str) -> str:
                 + out[cp + 1:]
             )
             continue
-        v = "_" + uuid.uuid4().hex[:4]
+        v = f"{_LAMBDA_PREFIX}{next(fresh)}"
         if fn == "struct_pack":
             # struct_pack(a := 1, b := 'x') → named_struct
             fields = []
@@ -1182,7 +1189,7 @@ def _map_list_functions(stmt: str) -> str:
             # HUGEINT/DECIMAL — README boundary
             if len(args) != 1:
                 raise EngineError(f"{fn} expects one argument")
-            v2 = "_" + uuid.uuid4().hex[:4]
+            v2 = f"{_LAMBDA_PREFIX}{next(fresh)}"
             fl = (
                 f"filter(({args[0].strip()}),"
                 f" {v2}f -> {v2}f is not null)"

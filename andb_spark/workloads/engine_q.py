@@ -351,7 +351,7 @@ def u_asof_tolerance_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def u_asof_subquery_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ASOF JOIN over PARENTHESIZED SUBQUERY sources (r7 verdict #7,
-    api.py::_lift_asof_subquery_sources): both sides are derived
+    api.py::_lift_subquery_sources): both sides are derived
     tables bound to lazy temp views before the asof rewrite resolves
     them — no CTAS, no WITH clause, the spelling a user reaches for
     first. Graded against DuckDB's native derived-table ASOF JOIN on

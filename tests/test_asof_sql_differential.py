@@ -242,6 +242,13 @@ _SHAPES = [
         " on p.k = r.rk and p.t <= r.rt and r.rt - p.t <= 7"
         " order by pid",
     ),
+    # a string literal spelling the join's qualifiers is data: the
+    # qualifier strip must leave it as written
+    (
+        "literal_spelling_qualifiers",
+        "select pid, 'p.t r.rt' as lbl from probes p asof join refs r"
+        " on p.k = r.rk and p.t >= r.rt order by pid",
+    ),
 ]
 
 
@@ -298,15 +305,24 @@ def test_asof_subquery_without_alias_raises_named_error(asof_engines):
     """Subquery sources are bound since r8 — but one WITHOUT an alias
     has nothing the ON clause could reference, and must be refused by
     name (not Spark's raw parse error), leaking no per-statement
-    views."""
+    views. So is one whose alias the other side carries too (DuckDB's
+    "Duplicate alias")."""
     from andb_spark.api import EngineError
 
-    eng, _con = asof_engines
+    eng, con = asof_engines
     with pytest.raises(EngineError, match="alias"):
         eng.execute(
             "select pid, rid from probes p"
             " asof join (select * from refs) on p.t >= rt"
         )
+    sql = (
+        "select pid from probes p asof join (select * from refs) p"
+        " on p.k = p.rk and p.t >= p.rt"
+    )
+    with pytest.raises(EngineError, match="collides"):
+        eng.execute(sql)
+    with pytest.raises(duckdb.Error, match="Duplicate alias"):
+        con.execute(sql)
     leaks = [
         v.name for v in eng.spark.catalog.listTables()
         if v.name.startswith(("_cte_", "_asof_", "_sq_"))
@@ -353,6 +369,13 @@ def test_asof_mixed_case_collision_drops_and_warns(asof_engines):
             "select pid, r.T from probes p asof left join refs_mc r"
             " on p.k = r.rk and p.t >= r.rt"
         )
+    # ...but a literal spelling the hidden column is data, not a
+    # reference: it runs
+    sql = (
+        "select pid, 'r.T' as lbl from probes p asof left join refs_mc r"
+        " on p.k = r.rk and p.t >= r.rt order by pid"
+    )
+    assert eng.execute(sql).rows == con.execute(sql).fetchall()
 
 
 def test_escaped_quote_literal_does_not_trigger_binding(asof_engines):
@@ -452,6 +475,12 @@ _RANGE_SHAPES = [
         " on p.u = i.iu and p.t between i.lo and i.hi"
         " group by pid order by pid",
     ),
+    (
+        "literal_spelling_qualifiers",
+        "select pid, iid, 'p.t iv.lo' as lbl from rpts p join rivs iv"
+        " on p.u = iv.iu and p.t between iv.lo and iv.hi"
+        " order by pid, iid",
+    ),
 ]
 
 
@@ -464,6 +493,23 @@ def test_range_join_sql_matches_duckdb(range_engines, label, sql):
     buckets) and DuckDB (native IEJoin)."""
     eng, con = range_engines
     assert eng.execute(sql).rows == con.execute(sql).fetchall(), label
+
+
+def test_range_join_duplicate_alias_collides(range_engines):
+    """One alias on both sides is DuckDB's "Duplicate alias" binder
+    error; the rewrite refuses it by name rather than merging the
+    sides' qualifiers."""
+    from andb_spark.api import EngineError
+
+    eng, con = range_engines
+    sql = (
+        "select pid from rpts p join rivs p"
+        " on p.u = p.iu and p.t between p.lo and p.hi"
+    )
+    with pytest.raises(EngineError, match="collides"):
+        eng.execute(sql)
+    with pytest.raises(duckdb.Error, match="Duplicate alias"):
+        con.execute(sql)
 
 
 _WINDOW_SHAPES = [

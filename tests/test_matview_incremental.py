@@ -256,6 +256,18 @@ def test_global_aggregate_view_incremental(engine):
         "incremental"
     )
     assert e("select * from mv").rows == [(3, 13, 10)]
+    # a ')' inside a literal leaves the aggregate one call: the view
+    # stays incrementally maintained
+    e(
+        "create materialized view mvp as select count(*) as n,"
+        " sum(case when g = ')' then v else 0 end) as closed from base"
+    )
+    e("insert into base values (')', 4)")
+    e("refresh materialized view mvp")
+    assert engine.catalog["tables"]["mvp"]["matview_last_refresh"] == (
+        "incremental"
+    )
+    assert e("select * from mvp").rows == [(4, 4)]
 
 
 # ---------------------------------------------------------- fuzz arm --

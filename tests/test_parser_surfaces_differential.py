@@ -2220,6 +2220,17 @@ def test_positional_join_matches_duckdb(spark, tmp_path):
         ours = eng.execute(sql)
         drows = con.execute(sql).fetchall()
         assert sorted(map(str, ours.rows)) == sorted(map(str, drows)), sql
+    # a subquery side's alias is only an alias: an unrelated table of
+    # that name neither collides with it nor is shadowed by it
+    for run in (eng.execute, con.execute):
+        run("create table iv (z int)")
+        run("insert into iv values (0), (0)")
+    sql = (
+        "select a, c, (select count(*) from iv) as n"
+        " from pl positional join (select c from pr) iv"
+        " order by a nulls last"
+    )
+    assert eng.execute(sql).rows == con.execute(sql).fetchall(), sql
     # duplicate column names survive like DuckDB's
     ours = eng.execute("select * from pl positional join pr3")
     duck = con.execute("select * from pl positional join pr3")
@@ -2229,6 +2240,15 @@ def test_positional_join_matches_duckdb(spark, tmp_path):
         eng.execute(
             "select * from pl positional join (select c from pr) pl"
         )
+    # ...as is an unaliased self-join (DuckDB: "Duplicate alias")
+    with pytest.raises(EngineError, match="collides"):
+        eng.execute("select * from pl positional join pl")
+    # an aliased side's table name is out of scope, as in DuckDB
+    sql = "select pl.a from pl x positional join pr"
+    with pytest.raises(Exception, match="pl"):
+        eng.execute(sql)
+    with pytest.raises(duckdb.Error, match="pl"):
+        con.execute(sql)
     leaks = [
         v.name for v in spark.catalog.listTables()
         if v.name.startswith("_pj_")

@@ -69,3 +69,38 @@ def test_list_sort_orders_nulls_last_without_engine():
 def test_caret_refuses_without_engine():
     with pytest.raises(EngineError, match="differs between dialects"):
         dialect.normalize("select 2 ^ 3 as x")
+
+
+def test_lambda_names_are_deterministic_without_engine():
+    for stmt in (
+        "select product(x) from t group by k",
+        "select list_sum(xs) from t",
+        "select struct_pack(a := 1, b := list_sum(xs)) as s from t",
+    ):
+        out = dialect.normalize(stmt)
+        assert "->" in out, out
+        assert dialect.normalize(stmt) == out, stmt
+
+
+def test_lambda_names_never_shadow_a_user_column(spark, tmp_path):
+    """A column named like an underscore-prefixed four-hex lambda
+    variable is read, not captured, inside the lambdas the templates
+    build around it."""
+    import duckdb
+
+    from andb_spark.api import AnalyticsEngine
+
+    eng = AnalyticsEngine(str(tmp_path / "whlv"), spark=spark)
+    con = duckdb.connect()
+    for run in (eng.execute, con.execute):
+        run("create table lv (_a1b2 int[], ys int[])")
+        run(
+            "insert into lv values ([1, 2], [1]), ([3], [2, null]),"
+            " ([4], null)"
+        )
+    sql = (
+        "select list_has_all(_a1b2, ys) as h, list_sum(_a1b2) as s"
+        " from lv order by s"
+    )
+    assert eng.execute(sql).rows == con.execute(sql).fetchall()
+    eng.close()
